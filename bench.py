@@ -140,10 +140,10 @@ builder = (SparkSession.builder.master("local[" + cpus + "]")
            .config("spark.ui.enabled", "false"))
 try:  # the TREE under test supplies its static confs (absent in old trees)
     from sheetreader_duckdb_spark.session import static_builder_confs
-    for _k, _v in static_builder_confs().items():
-        builder = builder.config(_k, _v)
-except Exception:
-    pass
+except ImportError:
+    static_builder_confs = dict
+for _k, _v in static_builder_confs().items():
+    builder = builder.config(_k, _v)
 spark = builder.getOrCreate()
 spark.sparkContext.setLogLevel("ERROR")
 from sheetreader_duckdb_spark.session import configure_session

@@ -66,8 +66,8 @@ def main() -> None:
         retrofit_sec = round(time.perf_counter() - t0, 2)
     with zipfile.ZipFile(path) as zf:
         pts = SI.decode_split_index(zf, "xl/worksheets/sheet1.xml")
-        st = SI.decode_interval_stats(zf, "xl/worksheets/sheet1.xml", pts)
-    assert st and "A" in st, "stats missing"
+        secs = SI.decode_interval_sections(zf, "xl/worksheets/sheet1.xml", pts)
+    assert "A" in secs.get("st", {}), "stats missing"
 
     spark = (
         SparkSession.builder.master(f"local[{CPUS}]")
@@ -115,7 +115,7 @@ def main() -> None:
     )
     skips = _plan_interval_skips(
         (GreaterThan(("id",), cutoff),), schema,
-        ["id", "qty", "price", "flag"], st, False,
+        ["id", "qty", "price", "flag"], secs, False,
     )
     inflated = len(pts) - len(skips)
     out = {

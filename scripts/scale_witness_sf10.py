@@ -169,11 +169,10 @@ def _skip_fraction(path: str, filters, schema) -> tuple[int, int]:
 
     with XlsxWorkbook(path) as wb:
         pts = SI.decode_split_index(wb.zf, SHEET)
-        st = SI.decode_interval_stats(wb.zf, SHEET, pts)
-        sv = SI.decode_interval_string_stats(wb.zf, SHEET, pts)
+        secs = SI.decode_interval_sections(wb.zf, SHEET, pts, keys=("st", "sv"))
         skips = _plan_interval_skips(
-            filters, schema, [f.name for f in schema.fields], st,
-            wb.date1904, ivstr=sv,
+            filters, schema, [f.name for f in schema.fields], secs,
+            wb.date1904,
         )
         return len(skips), len(pts)
 

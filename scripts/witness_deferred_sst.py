@@ -139,9 +139,8 @@ def stage_measure() -> dict:
 
     with zipfile.ZipFile(IDX) as zf:
         pts = SI.decode_split_index(zf, SHEET)
-        sv = SI.decode_interval_string_stats(zf, SHEET, pts)
-        st = SI.decode_interval_stats(zf, SHEET, pts)
-        nc = SI.decode_interval_null_counts(zf, SHEET, pts)
+        secs = SI.decode_interval_sections(zf, SHEET, pts, keys=("st", "sv", "nc"))
+        st, sv, nc = secs.get("st"), secs.get("sv"), secs.get("nc")
     assert sv is not None and "B" in sv and "A" not in sv
     assert st is not None and nc is not None
     res["sections"] = {
@@ -165,7 +164,7 @@ def stage_measure() -> dict:
     with zipfile.ZipFile(IDX) as zf:
         skips = DS._plan_interval_skips(
             [EqualTo(("status",), "s03")], schema,
-            ["key", "status", "val"], st, False, ivstr=sv, ivnc=nc,
+            ["key", "status", "val"], secs, False,
         )
     res["status_eq_skips"] = {
         "skipped": len(skips), "of": len(pts),

@@ -127,9 +127,8 @@ def stage_measure() -> dict:
 
     with zipfile.ZipFile(IDX) as zf:
         pts = SI.decode_split_index(zf, SHEET)
-        st = SI.decode_interval_stats(zf, SHEET, pts)
-        sv = SI.decode_interval_string_stats(zf, SHEET, pts)
-        nc = SI.decode_interval_null_counts(zf, SHEET, pts)
+        secs = SI.decode_interval_sections(zf, SHEET, pts, keys=("st", "sv", "nc"))
+        st, sv, nc = secs.get("st"), secs.get("sv"), secs.get("nc")
     assert nc is not None and {"A", "B", "D"} <= set(nc), sorted(nc or [])
     res["sections"] = {
         "intervals": len(pts), "st_cols": sorted(st or []),
@@ -146,7 +145,7 @@ def stage_measure() -> dict:
 
     def plan(filters):
         return DS._plan_interval_skips(
-            list(filters), schema, names, st, False, ivstr=sv, ivnc=nc
+            list(filters), schema, names, secs, False
         )
 
     notnull_skips = plan([IsNotNull(("sparse",))])

@@ -37,13 +37,16 @@ def static_builder_confs() -> dict:
     a driver needs anyway — and the value is workload-shaped (number of
     distinct operators run per process), not cluster-shaped, so one default
     serves local[32] and a production driver alike. Env-overridable for
-    memory-constrained drivers.
+    memory-constrained drivers (``SPARK_GRAFT_CODEGEN_CACHE``, an integer).
     """
-    return {
-        "spark.sql.codegen.cache.maxEntries": os.environ.get(
-            "SPARK_GRAFT_CODEGEN_CACHE", "10000"
-        ),
-    }
+    raw = os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "10000")
+    try:
+        entries = int(raw)
+    except ValueError:
+        raise ValueError(
+            f"SPARK_GRAFT_CODEGEN_CACHE must be an integer, got {raw!r}"
+        ) from None
+    return {"spark.sql.codegen.cache.maxEntries": str(entries)}
 
 
 # -- deferred cache release ---------------------------------------------------

@@ -39,7 +39,10 @@ from __future__ import annotations
 import glob as _glob
 import operator as _op
 import os
+import zipfile
+import zlib
 from dataclasses import dataclass
+from xml.etree.ElementTree import ParseError
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -74,6 +77,15 @@ _SPARK_TO_SQL = {
     "boolean": "BOOLEAN",
     "date": "DATE",
 }
+
+# What opening a corrupt or non-XLSX file raises during shard planning
+# (zip container, member inflate, workbook XML, sheet lookup). Planning
+# then keeps its size-based shard count and the read raises the real
+# error; anything else — a planner bug — propagates.
+_UNREADABLE_WORKBOOK = (
+    zipfile.BadZipFile, zlib.error, ParseError, EOFError,
+    NotImplementedError, OSError, KeyError, ValueError,
+)
 
 # 64k rows/batch: the dense fast path appends ~54k rows per 4 MB chunk,
 # so at 8k the rolling raw_cols tail was re-sliced ~7× per chunk (an
@@ -184,41 +196,57 @@ def supported_pushdown_filter(f, schema: StructType) -> bool:
     return _filter_mask_builder([f], schema) is not None
 
 
-def _has_null_filter(filters) -> bool:
-    """True when the pushed set contains IsNull/IsNotNull — the only
-    consumers of the nc section; planning skips its decode otherwise
-    (r13 review: the validation walk is per-column work every task
-    would pay for nothing on plain comparison filters)."""
-    from pyspark.sql.datasource import IsNotNull, IsNull
+def _sections_consulted(filters) -> set:
+    """Keys of the stats sections planning decodes for ``filters``: the
+    bound sections for any filter set, the count sections only when a
+    filter can use them — ``nc`` for IsNull / IsNotNull, ``bt`` for
+    EqualTo / In over boolean literals (r13 review: validating a section
+    no filter reads is per-column work every task would pay for
+    nothing)."""
+    from pyspark.sql.datasource import EqualTo, In, IsNotNull, IsNull
 
-    return any(isinstance(f, (IsNull, IsNotNull)) for f in filters)
-
-
-def _has_bool_eq_filter(filters) -> bool:
-    """True when the pushed set contains an EqualTo/In over BOOLEAN
-    literal value(s) — the only consumers of the bt section (r15); same
-    decode-gating rationale as ``_has_null_filter``."""
-    from pyspark.sql.datasource import EqualTo, In
-
+    if not filters:
+        return set()
+    keys = {"st", "sv"}
     for f in filters:
-        if isinstance(f, EqualTo) and isinstance(f.value, bool):
-            return True
-        if isinstance(f, In) and any(isinstance(v, bool) for v in f.value):
-            return True
-    return False
+        if isinstance(f, (IsNull, IsNotNull)):
+            keys.add("nc")
+        elif (isinstance(f, EqualTo) and isinstance(f.value, bool)) or (
+            isinstance(f, In) and any(isinstance(v, bool) for v in f.value)
+        ):
+            keys.add("bt")
+    return keys
 
 
-def _plan_interval_skips(filters, schema, file_names, ivstats, date1904,
-                         ivstr=None, ivnc=None, ivbv=None):
+def _interval_skips(wb, sheet_path, points, filters, schema, file_names):
+    """Interval ordinals the split index's stats sections prove empty of
+    rows matching ``filters`` (``_plan_interval_skips``), or None when no
+    section those filters consult decodes — the one decode-and-plan step
+    shared by shard planning and both read paths."""
+    keys = _sections_consulted(filters)
+    if not points or not keys:
+        return None
+    sections = SI.decode_interval_sections(wb.zf, sheet_path, points, keys=keys)
+    if not sections:
+        return None
+    return _plan_interval_skips(
+        filters, schema, file_names, sections, wb.date1904
+    )
+
+
+def _plan_interval_skips(filters, schema, file_names, sections, date1904):
     """Interval ordinals provably EMPTY of matching rows under the ANDed
     pushed filters, per the split index's per-interval min/max stats
     (r11 — the parquet row-group-pruning pattern for XLSX: a selective
     filter skips whole intervals before inflating a byte).
 
+    ``sections`` is the decoded ``{key: {letter: [claim per interval]}}``
+    map (splitindex.decode_interval_sections).
+
     Comparison/equality/In filters on DOUBLE and DATE columns prune
     against the numeric ``st`` section; the same shapes plus
     StringStartsWith on STRING columns prune against the truncated
-    (lo, hi) bounds of the ``sv`` section (r12 — ``ivstr``). String
+    (lo, hi) bounds of the ``sv`` section (r12). String
     bounds are BOUNDS, not exact extrema (lo <= min, hi >= max by the
     over-keep-only truncation rule), and every predicate below is stated
     against bounds, so truncation can only cost pruning opportunities,
@@ -235,7 +263,7 @@ def _plan_interval_skips(filters, schema, file_names, ivstats, date1904,
 
     ``IsNull`` / ``IsNotNull`` (r13 — the predicate class Spark pushes
     around every comparison) prune against the value-count ``nc``
-    section (``ivnc``): per interval, the stride GROUP's non-null cell
+    section: per interval, the stride GROUP's non-null cell
     count for the column's type FAMILY (plain numeric feeds DOUBLE,
     date-styled numeric feeds DATE — split because decode NULLs across
     the style boundary — string feeds VARCHAR, boolean feeds BOOLEAN;
@@ -254,8 +282,8 @@ def _plan_interval_skips(filters, schema, file_names, ivstats, date1904,
     same honest-writer trust boundary as the bounds sections).
 
     ``EqualTo`` / ``In`` over BOOLEAN literals (r15 — VERDICT r13
-    task 2) prune against the boolean value-count ``bt`` section
-    (``ivbv``): per interval, the stride group's (n_true, n_false) over
+    task 2) prune against the boolean value-count ``bt`` section: per
+    interval, the stride group's (n_true, n_false) over
     the column's ``t="b"`` cells, truth decided exactly as the reader
     decodes. The group skips when EVERY requested value's count is 0 —
     sound because non-boolean cells decode NULL for a BOOLEAN column and
@@ -296,10 +324,9 @@ def _plan_interval_skips(filters, schema, file_names, ivstats, date1904,
 
     out_type = {f.name: f.dataType.typeName() for f in schema.fields}
     n_iv = len(next(
-        next(iter(src.values()))
-        for src in (ivstats, ivstr, ivnc, ivbv)
-        if src
+        next(iter(cols.values())) for cols in sections.values() if cols
     ))
+    ivnc, ivbv = sections.get("nc"), sections.get("bt")
     skips: set = set()
 
     def envelope(v, t):
@@ -375,7 +402,7 @@ def _plan_interval_skips(filters, schema, file_names, ivstats, date1904,
             continue
         if t not in ("double", "date", "string"):
             continue
-        src = ivstr if t == "string" else ivstats
+        src = sections.get("sv" if t == "string" else "st")
         col = src.get(letters) if src else None
         if col is None:
             continue
@@ -1025,7 +1052,8 @@ class SheetReaderReader(DataSourceReader):
                         # skips are recomputed per partition and own
                         # correctness); applied only without a `columns`
                         # option, where output names map to file columns
-                        # by position. Any failure keeps the size-based n.
+                        # by position. An unreadable file keeps the
+                        # size-based n.
                         if (
                             self._staged_filters
                             and self.opts.columns is None
@@ -1036,46 +1064,15 @@ class SheetReaderReader(DataSourceReader):
                                 self.opts.sheet_name, self.opts.sheet_index
                             )
                             pts = SI.decode_split_index(wb.zf, sheet.path)
-                            st = (
-                                SI.decode_interval_stats(
-                                    wb.zf, sheet.path, pts
-                                )
-                                if pts
-                                else None
+                            skips = _interval_skips(
+                                wb, sheet.path, pts, self._staged_filters,
+                                self.schema,
+                                [f.name for f in self.schema.fields],
                             )
-                            sv = (
-                                SI.decode_interval_string_stats(
-                                    wb.zf, sheet.path, pts
-                                )
-                                if pts
-                                else None
-                            )
-                            nc = (
-                                SI.decode_interval_null_counts(
-                                    wb.zf, sheet.path, pts
-                                )
-                                if pts
-                                and _has_null_filter(self._staged_filters)
-                                else None
-                            )
-                            bv = (
-                                SI.decode_interval_bool_counts(
-                                    wb.zf, sheet.path, pts
-                                )
-                                if pts
-                                and _has_bool_eq_filter(self._staged_filters)
-                                else None
-                            )
-                            if st or sv or nc or bv:
-                                skips = _plan_interval_skips(
-                                    self._staged_filters, self.schema,
-                                    [f.name for f in self.schema.fields],
-                                    st, wb.date1904, ivstr=sv, ivnc=nc,
-                                    ivbv=bv,
-                                )
+                            if skips is not None:
                                 n = max(1, min(n, len(pts) - len(skips)))
-                except Exception:
-                    pass  # unreadable zip fails later with a real error
+                except _UNREADABLE_WORKBOOK:
+                    pass  # the read of this file fails with the real error
             parts.extend(
                 _SheetPartition(p, shard=i, n_shards=n, filters=self._staged_filters)
                 for i in range(n)
@@ -1219,32 +1216,10 @@ class SheetReaderReader(DataSourceReader):
             # string cells carry no claims at all (the ADVICE r12
             # withhold rule).
             if filters and not opts.coerce_to_string:
-                pts0 = SI.decode_split_index(wb.zf, sheet.path)
-                ivstats = (
-                    SI.decode_interval_stats(wb.zf, sheet.path, pts0)
-                    if pts0
-                    else None
-                )
-                ivstr = (
-                    SI.decode_interval_string_stats(wb.zf, sheet.path, pts0)
-                    if pts0
-                    else None
-                )
-                ivnc = (
-                    SI.decode_interval_null_counts(wb.zf, sheet.path, pts0)
-                    if pts0 and _has_null_filter(filters)
-                    else None
-                )
-                ivbv = (
-                    SI.decode_interval_bool_counts(wb.zf, sheet.path, pts0)
-                    if pts0 and _has_bool_eq_filter(filters)
-                    else None
-                )
-                if ivstats or ivstr or ivnc or ivbv:
-                    skip_ivals = _plan_interval_skips(
-                        filters, self.schema, file_schema.names, ivstats,
-                        wb.date1904, ivstr=ivstr, ivnc=ivnc, ivbv=ivbv,
-                    )
+                skip_ivals = _interval_skips(
+                    wb, sheet.path, SI.decode_split_index(wb.zf, sheet.path),
+                    filters, self.schema, file_schema.names,
+                ) or frozenset()
             cb = (1 << 20) if n_shards > 1 else (4 << 20)
             for cells in wb.iter_rows(
                 sheet, skip_rows=file_schema.skip_rows,
@@ -1383,7 +1358,7 @@ class SheetReaderReader(DataSourceReader):
                                 pc.is_valid(s),
                                 pc.is_in(
                                     pc.utf8_trim_whitespace(s),
-                                    value_set=pa.array(["1", "true", "TRUE"]),
+                                    value_set=pa.array(P.BOOL_TRUE_TEXTS),
                                 ),
                                 pa.scalar(None, type=pa.bool_()),
                             )
@@ -1689,31 +1664,10 @@ class SheetReaderReader(DataSourceReader):
             # the global row ordinal). The downstream Arrow mask would
             # have dropped every row in them anyway; the stats only
             # decide WHERE the dropping happens (before the byte level).
-            skip_ivals: frozenset = frozenset()
-            if split_pts and filters:
-                ivstats = SI.decode_interval_stats(wb.zf, sheet.path, split_pts)
-                ivnc = (
-                    SI.decode_interval_null_counts(
-                        wb.zf, sheet.path, split_pts
-                    )
-                    if _has_null_filter(filters)
-                    else None
-                )
-                ivstr = SI.decode_interval_string_stats(
-                    wb.zf, sheet.path, split_pts
-                )
-                ivbv = (
-                    SI.decode_interval_bool_counts(
-                        wb.zf, sheet.path, split_pts
-                    )
-                    if _has_bool_eq_filter(filters)
-                    else None
-                )
-                if ivstats or ivstr or ivnc or ivbv:
-                    skip_ivals = _plan_interval_skips(
-                        filters, self.schema, file_schema.names, ivstats,
-                        wb.date1904, ivstr=ivstr, ivnc=ivnc, ivbv=ivbv,
-                    )
+            skip_ivals = _interval_skips(
+                wb, sheet.path, split_pts, filters, self.schema,
+                file_schema.names,
+            ) or frozenset()
             if split_pts and n_shards == 1 and not skip_ivals:
                 # Single-shard with nothing to prune: the sequential scan
                 # reads the same bytes without per-interval seeks.

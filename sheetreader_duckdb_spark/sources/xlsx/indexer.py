@@ -43,11 +43,14 @@ import zipfile
 from .parser import (
     _SST_PFX_RE,
     XlsxWorkbook,
+    bool_cell,
     count_row_starts,
     detect_row_prefix,
     prefix_res,
 )
 from .splitindex import (
+    SECTION_KEYS,
+    SECTIONS,
     SST_ENTRY,
     member_data_offset,
     strip_count_entry,
@@ -149,11 +152,9 @@ class _IntervalStatsCollector:
         self._buf: list = []
         self._size = 0
         self._cum = 0
-        # [(cum_rows_at_interval_end,
-        #   {letters: (mn, mx)} | None,          numeric claims
-        #   {letters: (lo, hi)} | None,          string-bound claims
-        #   {letters: (n,s,b,d) | None} | None,  value-count claims
-        #   {letters: (n_true, n_false) | None} | None)]  bool values
+        # [(cum_rows_at_interval_end, {section key: claims | None})] with
+        # claims per letter: st (mn, mx), sv (lo, hi), nc (n, s, b, d) |
+        # None, bt (n_true, n_false) | None; None withholds the section
         self.fine: list = []
         self.dead = False
 
@@ -200,7 +201,7 @@ class _IntervalStatsCollector:
         """Fold one interval's analysis into collector state, in stream
         order (cum accumulation + deferred-ref bookkeeping live HERE, on
         the parent side, so pooled and serial runs build byte-identical
-        claims). Returns the fine tuple for slot ``fi``, or None after
+        claims). Returns the fine record for slot ``fi``, or None after
         marking the collector dead."""
         if r is None:
             # a pooled worker failed analysing this interval: claims are
@@ -209,7 +210,7 @@ class _IntervalStatsCollector:
             self.fine = []
             self._defer_refs = []
             return None
-        rows_in, stats, sstats, nc, bv, drefs = r
+        rows_in, claims, drefs = r
         self._cum += rows_in
         if drefs:
             for col, arr in drefs.items():
@@ -220,7 +221,7 @@ class _IntervalStatsCollector:
                     self._defer_counts.get(col, 0) + int(arr.size)
                 )
             self._enforce_defer_budget()
-        return (self._cum, stats, sstats, nc, bv)
+        return (self._cum, claims)
 
     def _drain(self, max_pending: int) -> None:
         """Realize pooled results from the head of ``fine`` — completed
@@ -276,38 +277,38 @@ class _IntervalStatsCollector:
         (observability: index_xlsx reports them)."""
         return sorted(self._defer_dead)
 
-    def aligned(
-        self, points: "list | None", total_rows: int
-    ) -> "tuple[dict | None, dict | None, dict | None, dict | None]":
-        """(numeric, string, counts, bool-values) per-column arrays
-        aligned to the SURVIVING points (the encode payload shapes —
-        flat [lo, hi, ...] pairs for the bound kinds, one
-        ``None | [n, s, b, d]`` entry per interval for the count kind,
-        ``None | [n_true, n_false]`` for the bool-value kind); each side
-        is None when collection died / misaligned / nothing to claim."""
+    def aligned(self, points: "list | None", total_rows: int) -> dict:
+        """``{section key: {letter: array}}`` aligned to the SURVIVING
+        points, in the encode shapes (splitindex module doc). A section
+        is absent when collection died, realignment failed, or it has
+        nothing to claim."""
         if self.dead or points is None:
-            return None, None, None, None  # nothing to align
+            return {}
         self.flush_realize()
-        if self.dead or points is None:
-            return None, None, None, None
+        if self.dead:
+            return {}
         if self._defer and self._defer_refs and not self._defer_resolved:
             raise RuntimeError(
                 "deferred string bounds not resolved — run "
                 "_resolve_deferred_strings over the heap first"
             )
         bounds = [cum for _, cum in points] + [total_rows]
-        outs: list = []
-        for kind in (1, 2, 3, 4):  # numeric, string, counts, bool values
-            # kinds 3/4 are COUNT kinds (element-wise sum, zero default);
-            # 1/2 are BOUND kinds (envelope merge, absence claims nothing)
-            zero = (0, 0, 0, 0) if kind == 3 else (0, 0)
+        out: dict = {}
+        for spec in SECTIONS:
+            key = spec.key
+            # Bound sections (lo, hi pairs) merge by envelope and an
+            # absent letter claims nothing; count sections merge by
+            # element-wise SUM and an absent letter is a true zero (the
+            # interval holds no cells of that column). A per-column None
+            # (style-undecidable / duplicate guard) poisons that column
+            # for the group.
+            pairs = spec.width == 2
             letters_all = sorted(
-                {k for rec in self.fine if rec[kind] for k in rec[kind]}
+                {k for _, c in self.fine if c[key] for k in c[key]}
             )
             if not letters_all:
-                outs.append(None)
                 continue
-            out = {k: [] for k in letters_all}
+            cols = {k: [] for k in letters_all}
             fi = 0
             ok = True
             for b in bounds:
@@ -315,36 +316,24 @@ class _IntervalStatsCollector:
                 at = None
                 took = False
                 while fi < len(self.fine) and self.fine[fi][0] <= b:
-                    rec = self.fine[fi]
-                    at, st = rec[0], rec[kind]
+                    at, claims = self.fine[fi]
+                    st = claims[key]
                     fi += 1
                     took = True
                     if merged is None or st is None:
                         merged = None
                         continue
-                    if kind in (3, 4):
-                        # element-wise SUM; a letter ABSENT from a valid
-                        # record is a true zero (the interval holds no
-                        # cells of that column — all-null), unlike the
-                        # bound kinds where absence claims nothing. A
-                        # per-column None (style-undecidable / duplicate
-                        # guard) poisons that column for the group.
-                        for k, t in st.items():
-                            got = merged.get(k, zero)
-                            if t is None or got is None:
-                                merged[k] = None
-                            else:
-                                merged[k] = tuple(
-                                    x + y for x, y in zip(got, t)
-                                )
-                    else:
-                        for k, (mn, mx) in st.items():
-                            got = merged.get(k)
-                            merged[k] = (
-                                (mn, mx)
-                                if got is None
-                                else (min(got[0], mn), max(got[1], mx))
-                            )
+                    for k, t in st.items():
+                        if k not in merged:
+                            merged[k] = t
+                            continue
+                        got = merged[k]
+                        if got is None or t is None:
+                            merged[k] = None
+                        elif pairs:
+                            merged[k] = (min(got[0], t[0]), max(got[1], t[1]))
+                        else:
+                            merged[k] = tuple(x + y for x, y in zip(got, t))
                 if took and at != b:
                     ok = False  # fine/survivor cum mismatch: claim nothing
                     break
@@ -355,24 +344,17 @@ class _IntervalStatsCollector:
                 # stats for such files. (For counts an all-zero claim on
                 # a zero-row interval is vacuously true.)
                 for k in letters_all:
-                    if kind in (3, 4):
-                        got = (
-                            merged.get(k, zero)
-                            if merged is not None
-                            else None
-                        )
-                        out[k].append(
-                            strip_count_entry(got) if got is not None
-                            else None
-                        )
-                    else:
+                    if pairs:
                         got = (merged or {}).get(k)
-                        if got is None:
-                            out[k].extend((None, None))
-                        else:
-                            out[k].extend(got)
-            outs.append(out if ok else None)
-        return outs[0], outs[1], outs[2], outs[3]
+                        cols[k].extend(got if got is not None else (None, None))
+                    else:
+                        got = merged.get(k, ()) if merged is not None else None
+                        cols[k].append(
+                            None if got is None else strip_count_entry(got)
+                        )
+            if ok:
+                out[key] = cols
+        return out
 
 
 # Eager shared-strings heap for POOLED interval analysis: set in the
@@ -388,15 +370,16 @@ def _analyze_interval(
 ):
     """Pure per-interval analysis (the collector's old ``_close`` body,
     extracted so a forked worker can run it on raw bytes): returns
-    ``(rows_in, stats, sstats, nc, bv, defer_refs)`` where the claim
-    slots are None for withheld intervals and ``defer_refs`` maps column
-    letters to unique sst ref arrays (deferred mode only). All honesty
-    rules documented on _IntervalStatsCollector live here."""
+    ``(rows_in, claims, defer_refs)`` where ``claims`` maps every section
+    key to its per-letter claims, or to None throughout for a withheld
+    interval, and ``defer_refs`` maps column letters to unique sst ref
+    arrays (deferred mode only). All honesty rules documented on
+    _IntervalStatsCollector live here."""
     import numpy as np
 
     pr = prefix_res(pfx)
     rows_in = count_row_starts(data, pfx)
-    withheld = (rows_in, None, None, None, None, None)
+    withheld = (rows_in, dict.fromkeys(SECTION_KEYS), None)
     ms = pr.cell_re.findall(data)
     if len(ms) != len(pr.cell_count_re.findall(data)):
         # unseen cells: no claims
@@ -423,14 +406,10 @@ def _analyze_interval(
     # which is exactly the claim.
     ncounts: dict = {}
     # Boolean VALUE counts per letter (r15, the `bt` section):
-    # [n_true, n_false] over the interval's t="b" cells, truth decided
-    # exactly as the reader decodes: the vectorized path trims UNICODE
-    # whitespace (pc.utf8_trim_whitespace) before the {"1","true","TRUE"}
-    # test, and Python's str.strip() matches it on every BMP codepoint
-    # (swept exhaustively, r15 review — bytes.strip() does NOT: it is
-    # ASCII-only, so an NBSP-prefixed "true" counted false here while
-    # the reader decoded it True, and an EqualTo(True) probe pruned the
-    # row away). An undecodable payload withholds the column's claim.
+    # [n_true, n_false] over the interval's t="b" cells, truth decided by
+    # the reader's own rule (parser.bool_cell). A payload that is not
+    # UTF-8 makes every read tier raise, so — error parity, as for an
+    # unparseable number — the whole interval is withheld.
     bcounts: dict = {}
     for letters, s_attr, t_attr, v in ms:
         if v and (not t_attr or t_attr == b"n"):
@@ -454,14 +433,11 @@ def _analyze_interval(
             fam = 1
         elif v and t_attr == b"b":
             fam = 2
-            bt = bcounts.setdefault(letters, [0, 0])
-            if bt is not None:
-                try:
-                    truth = v.decode("utf-8").strip() in ("1", "true", "TRUE")
-                except UnicodeDecodeError:
-                    bcounts[letters] = None  # unreproducible decode: no claim
-                else:
-                    bt[0 if truth else 1] += 1
+            try:
+                truth = bool_cell(v.decode("utf-8"))
+            except UnicodeDecodeError:
+                return withheld
+            bcounts.setdefault(letters, [0, 0])[0 if truth else 1] += 1
         else:
             continue
         got = ncounts.setdefault(letters, [0, 0, 0, 0])
@@ -587,7 +563,7 @@ def _analyze_interval(
         k.decode(): (tuple(v) if v is not None else None)
         for k, v in bcounts.items()
     }
-    return rows_in, stats, sstats, nc, bv, drefs
+    return rows_in, {"st": stats, "sv": sstats, "nc": nc, "bt": bv}, drefs
 
 
 def _analyze_interval_pooled(data, pfx, date_styles, defer, dead_cols):
@@ -966,21 +942,16 @@ def index_xlsx(
                 shed_cols = sorted(
                     {col for c in deferred for col in c.defer_shed}
                 )
-            ivstats, ivsv, ivnc, ivbv = (
-                coll_p.aligned(pts, nrows)
-                if coll_p is not None
-                else (None, None, None, None)
+            sections = (
+                coll_p.aligned(pts, nrows) if coll_p is not None else None
             )
             extra: dict = {}
             for entry2, pts2, n2, coll2 in extra_raw:
-                st2, sv2, nc2, bv2 = (
-                    coll2.aligned(pts2, n2)
-                    if coll2 is not None
-                    else (None, None, None, None)
-                )
                 extra[entry2] = {
-                    "n": n2, "points": pts2, "stats": st2,
-                    "sstats": sv2, "ncounts": nc2, "bcounts": bv2,
+                    "n": n2, "points": pts2,
+                    "sections": (
+                        coll2.aligned(pts2, n2) if coll2 is not None else None
+                    ),
                 }
             with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as zout:
                 for info in infos:
@@ -998,8 +969,7 @@ def index_xlsx(
                 # sheets, if the comment would exceed the 64 KB ceiling).
                 _publish_index(
                     zout, sheet.path, pts, nrows, nrows, spts, n_si, n_si,
-                    stats=ivstats, sstats=ivsv, ncounts=ivnc, bcounts=ivbv,
-                    extra_sheets=extra or None,
+                    sections=sections, extra_sheets=extra or None,
                 )
                 published = bool(zout.comment)
             if not published:
@@ -1235,10 +1205,10 @@ def _resolve_deferred_strings(collectors, entries, expected_n=None):
                 # raises (IndexError / Arrow surrogate), so NO section
                 # may keep a claim that could prune the error away
                 cum = coll.fine[fi][0]
-                coll.fine[fi] = (cum, None, None, None, None)
+                coll.fine[fi] = (cum, dict.fromkeys(SECTION_KEYS))
         for g, (coll, fi, col) in enumerate(groups):
             if not err[g] and not dead[g] and lo[g] is not None:
-                sv_slot = coll.fine[fi][2]
+                sv_slot = coll.fine[fi][1]["sv"]
                 if sv_slot is not None:
                     sv_slot[col] = (lo[g], hi[g])
     for coll in collectors:
@@ -1363,21 +1333,20 @@ def describe_index(path: str) -> dict:
                 "stride": sq[0] if sq else None,
             }
             coverage: dict = {}
-            for key, decode in (
-                ("numeric", SI.decode_interval_stats),
-                ("string", SI.decode_interval_string_stats),
-                ("count", SI.decode_interval_null_counts),
-                ("bool", SI.decode_interval_bool_counts),
-            ):
-                got = decode(zf, entry, pts, payload=payload)
-                cols = sorted(got) if got else []
-                rec[f"{key}_stat_cols"] = cols
+            decoded = SI.decode_interval_sections(
+                zf, entry, pts, payload=payload
+            )
+            for spec in SI.SECTIONS:
+                got = decoded.get(spec.key)
+                rec[f"{spec.label}_stat_cols"] = sorted(got) if got else []
                 if got:
                     slots = sum(len(v) for v in got.values())
                     claims = sum(
                         1 for v in got.values() for e in v if e is not None
                     )
-                    coverage[key] = round(claims / slots, 3) if slots else 0.0
+                    coverage[spec.label] = (
+                        round(claims / slots, 3) if slots else 0.0
+                    )
             rec["claim_coverage"] = coverage
             out["sheets"][entry] = rec
         spts = SI.decode_sst_index(zf, payload=payload)

@@ -46,6 +46,19 @@ T_ERROR = 5
 # sharedStrings heap.
 T_STRING_LIT = 6
 
+# Boolean truth rule, the one copy every scan tier, the vectorized reader
+# (as an Arrow value set) and the ``bt`` stats author use: a t="b"
+# payload is true when, stripped of UNICODE whitespace, it is one of
+# these. str.strip() matches pc.utf8_trim_whitespace on every BMP code
+# point (swept, r15 review); bytes.strip() is ASCII-only and decoded an
+# NBSP-prefixed "true" as False.
+BOOL_TRUE_TEXTS = ("1", "true", "TRUE")
+
+
+def bool_cell(text: str) -> bool:
+    return text.strip() in BOOL_TRUE_TEXTS
+
+
 # Tag matching is namespace-insensitive: real-world writers vary the
 # namespace (the reference's own demo file uses .../primary/spreadsheetml/...)
 def _local(tag: str) -> str:
@@ -1182,7 +1195,7 @@ class XlsxWorkbook:
                         serial = float(v_text)
                         cells.append((cur_col, T_DATE, serial_to_epoch_secs(serial, self.date1904)))
                     elif cur_type == T_BOOLEAN:
-                        cells.append((cur_col, T_BOOLEAN, v_text.strip() in ("1", "true", "TRUE")))
+                        cells.append((cur_col, T_BOOLEAN, bool_cell(v_text)))
                     elif cur_type == T_ERROR:
                         cells.append((cur_col, T_ERROR, None))
                     el.clear()
@@ -1491,17 +1504,15 @@ def _scan_chunk(
                     cells.append((col, T_STRING_REF, int(v)))
             elif t_attr == b"b":
                 if v:
-                    # Unicode strip, matching the vectorized reader's
-                    # pc.utf8_trim_whitespace (str.strip() is equivalent on
-                    # every BMP codepoint — swept, r15 review). bytes.strip()
-                    # is ASCII-only and decoded an NBSP-prefixed "true" as
-                    # False here while the vectorized path read True.
-                    cells.append((
-                        col,
-                        T_BOOLEAN,
-                        v.decode("utf-8", "replace").strip()
-                        in ("1", "true", "TRUE"),
-                    ))
+                    # Strict decode: a non-UTF-8 payload is malformed XML,
+                    # which every other tier rejects too.
+                    try:
+                        text = v.decode("utf-8")
+                    except UnicodeDecodeError as e:
+                        raise ValueError(
+                            f"sheetreader: malformed sheet XML fragment: {e}"
+                        ) from e
+                    cells.append((col, T_BOOLEAN, bool_cell(text)))
             elif t_attr == b"e":
                 cells.append((col, T_ERROR, None))
             elif t_attr in (b"str", b"inlineStr"):
@@ -1622,7 +1633,7 @@ def _fragment_rows(
                 elif cur_type == T_DATE:
                     cells.append((cur_col, T_DATE, serial_to_epoch_secs(float(v_text), date1904)))
                 elif cur_type == T_BOOLEAN:
-                    cells.append((cur_col, T_BOOLEAN, v_text.strip() in ("1", "true", "TRUE")))
+                    cells.append((cur_col, T_BOOLEAN, bool_cell(v_text)))
                 elif cur_type == T_ERROR:
                     cells.append((cur_col, T_ERROR, None))
                 el.clear()

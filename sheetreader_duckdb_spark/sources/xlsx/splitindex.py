@@ -30,6 +30,34 @@ validates structure/monotonicity and the consuming scan additionally
 checks each interval's parsed row count against the recorded one,
 failing loudly on any mismatch rather than returning silently wrong
 rows (a corrupt-but-well-formed index cannot pass both).
+
+Interval statistics (the parquet row-group pattern): a filtered read
+skips whole intervals the comment proves empty of matches. Each kind of
+claim is one row of the ordered ``SECTIONS`` table — its comment key, the
+validator for one stride group's encoded entry, whether that validator
+needs the group's row total, the stride-coarsening step, the
+``describe_index`` label and the shedding rank — and every layer (stats
+author, publisher, decoder, planner, ``describe_index``) loops over that
+table instead of naming sections. A section maps column LETTERS to one
+array per column:
+
+* ``st`` — flat ``[lo0, hi0, lo1, hi1, ...]`` min/max over the raw numeric
+  cell values (date serials raw), null pairs where nothing is claimed;
+* ``sv`` — the same shape over RESOLVED shared-string values, truncated
+  to ``STR_STAT_BYTES`` with the over-keep-only rule (lo <= min,
+  hi >= max);
+* ``nc`` — one ``None | [n_numeric_plain, n_string, n_boolean,
+  n_date_styled]`` value-count entry per group (``_NC_FAMILIES``),
+  trailing zeros stripped; the planner derives nulls from the group's
+  row total;
+* ``bt`` — one ``None | [n_true, n_false]`` entry per group over the
+  ``t="b"`` cells, truth decided by ``parser.bool_cell``.
+
+A letter may appear in several sections (mixed-type columns); the planner
+consults whichever matches the schema type it filters. Under the 64 KB
+ceiling the publisher first doubles the stride ``q`` (one entry per ``q``
+consecutive intervals: envelopes for the bounds, sums for the counts —
+claims only widen), then sheds columns largest-first.
 """
 
 from __future__ import annotations
@@ -37,6 +65,9 @@ from __future__ import annotations
 import json
 import struct
 import zipfile
+from dataclasses import dataclass
+from itertools import zip_longest
+from typing import Callable, Collection
 
 MAGIC = b"SRSX1:"
 
@@ -122,13 +153,6 @@ def truncated_string_bounds(mn: str, mx: str) -> "tuple[str, str] | None":
 _NC_FAMILIES = 4
 
 
-def _pad4(t) -> "tuple[int, int, int, int]":
-    return (t[0] if len(t) > 0 else 0,
-            t[1] if len(t) > 1 else 0,
-            t[2] if len(t) > 2 else 0,
-            t[3] if len(t) > 3 else 0)
-
-
 def strip_count_entry(t) -> list:
     """Encode-side minimal form of one count entry: trailing zeros drop
     ([5,0,0] → [5]; all-zero → [] — a TRUE claim that every row in the
@@ -154,13 +178,115 @@ def coarsen_count_groups(arr: list) -> list:
             if a is None or b is None:
                 out.append(None)
             else:
-                pa, pb = _pad4(a), _pad4(b)
                 out.append(strip_count_entry(
-                    tuple(x + y for x, y in zip(pa, pb))
+                    x + y for x, y in zip_longest(a, b, fillvalue=0)
                 ))
         else:
             out.append(a)
     return out
+
+
+def coarsen_stat_pairs(arr: list) -> list:
+    """One stride-doubling step over a flat [lo0, hi0, lo1, hi1, ...]
+    stats array: merge adjacent (lo, hi) pairs into their envelope —
+    None-absorbing (a group containing an unknown claims nothing), last
+    odd pair carried as-is (ceil semantics, composing with the decoder's
+    ``i // q`` group mapping). Works for numeric and string bounds alike
+    (min/max are the Python comparisons both prune with)."""
+    out: list = []
+    for j in range(0, len(arr), 4):
+        lo0, hi0 = arr[j], arr[j + 1]
+        if j + 2 < len(arr):
+            lo1, hi1 = arr[j + 2], arr[j + 3]
+            if lo0 is None or lo1 is None:
+                out.extend((None, None))
+            else:
+                out.extend((min(lo0, lo1), max(hi0, hi1)))
+        else:
+            out.extend((lo0, hi0))
+    return out
+
+
+# Entry validators, one per section row: each takes one stride group's
+# ``width`` encoded slots (plus the group's row total where the row asks
+# for it) and returns the decoded claim, None for "no claim", or raises
+# ValueError/TypeError on garbage — which drops that section only.
+def _float_pair(e: list, rows) -> "tuple[float, float] | None":
+    lo, hi = e
+    if lo is None or hi is None:
+        return None
+    lo, hi = float(lo), float(hi)
+    if not (lo <= hi):  # also rejects NaN
+        raise ValueError("numeric bounds out of order")
+    return lo, hi
+
+
+def _str_pair(e: list, rows) -> "tuple[str, str] | None":
+    # Bounds may hold lone surrogates (increment_str can land on one), so
+    # the size check counts chars instead of UTF-8-encoding.
+    lo, hi = e
+    if lo is None and hi is None:
+        return None
+    if (not isinstance(lo, str) or not isinstance(hi, str)
+            or max(len(lo), len(hi)) > _STR_STAT_MAX_CHARS or lo > hi):
+        raise ValueError("bad string bounds")
+    return lo, hi
+
+
+def _counts(slots: int, with_rows: bool):
+    def check(slot: list, rows: int) -> "tuple | None":
+        (e,) = slot
+        if e is None:
+            return None
+        if not isinstance(e, list) or len(e) > slots or any(
+            not isinstance(x, int) or isinstance(x, bool) or x < 0 for x in e
+        ):
+            raise ValueError("bad count entry")
+        t = tuple(e) + (0,) * (slots - len(e))
+        if sum(t) > rows:
+            raise ValueError("counts exceed the group's rows")  # forged
+        return t + (rows,) if with_rows else t
+
+    return check
+
+
+@dataclass(frozen=True)
+class Section:
+    """One interval-statistics section of the comment (module doc)."""
+
+    key: str          # comment key
+    label: str        # describe_index name: ``<label>_stat_cols``
+    rank: int         # shedding tie-break between equal-size columns
+    width: int        # encoded slots per stride group
+    check: Callable   # entry validator (above)
+    group_rows: bool  # check needs the group's row total
+    coarsen: Callable  # one stride-doubling step over a column's array
+
+
+# Ordered: encode writes the keys in this order, so it is part of the
+# byte format. ``rank`` reproduces the publisher's historical shedding
+# order among equal-size columns (numeric, string, count, bool).
+SECTIONS = (
+    Section("st", "numeric", 3, 2, _float_pair, False, coarsen_stat_pairs),
+    Section("sv", "string", 2, 2, _str_pair, False, coarsen_stat_pairs),
+    Section("nc", "count", 1, 1, _counts(_NC_FAMILIES, True), True,
+            coarsen_count_groups),
+    Section("bt", "bool", 0, 1, _counts(2, False), True,
+            coarsen_count_groups),
+)
+SECTION_KEYS = tuple(s.key for s in SECTIONS)
+SECTION_BY_KEY = {s.key: s for s in SECTIONS}
+
+
+def _put_sections(out: dict, sections: "dict | None", stride: int) -> None:
+    present = False
+    for spec in SECTIONS:
+        cols = sections.get(spec.key) if sections else None
+        if cols:
+            out[spec.key] = cols
+            present = True
+    if present and stride > 1:
+        out["q"] = stride
 
 
 def _deltas(points: list) -> "tuple[list, list]":
@@ -179,12 +305,9 @@ def encode_split_index(
     total_rows: int,
     sst_points: "list[tuple[int, int]] | None" = None,
     sst_total: int = 0,
-    stats: "dict[str, list] | None" = None,
+    sections: "dict[str, dict] | None" = None,
+    stride: int = 1,
     extra_sheets: "dict[str, dict] | None" = None,
-    sstats: "dict[str, list] | None" = None,
-    stats_stride: int = 1,
-    ncounts: "dict[str, list] | None" = None,
-    bcounts: "dict[str, list] | None" = None,
 ) -> bytes:
     """Comment bytes for one indexed worksheet entry (+ optionally the
     shared-strings heap). ``points`` are (compressed offset relative to
@@ -193,56 +316,20 @@ def encode_split_index(
     well under the 64 KB comment ceiling. ``sst_points`` carry the same
     shape for ``xl/sharedStrings.xml`` with cumulative ENTRY counts —
     sharded readers then inflate only the heap intervals their own rows
-    reference instead of the whole heap per task. ``stats`` (r11) maps a
-    column LETTER to a flat per-interval ``[lo0, hi0, lo1, hi1, ...]``
-    min/max array over the column's raw numeric cell values (date serials
-    included raw) with null pairs for statless intervals — the parquet
-    row-group-stats pattern: a selective filter skips whole intervals
-    before inflating a byte (interval pruning, datasource side).
-    ``sstats`` (r12) is the same shape for STRING columns under the
-    ``sv`` key: truncated (lo, hi) bounds over the column's RESOLVED
-    shared-string values (see ``truncated_string_bounds`` — lo <= true
-    min, hi >= true max, so pruning can only over-keep). A letter may
-    appear in both ``st`` and ``sv`` (mixed-type columns): the planner
-    consults whichever matches the schema type it is filtering.
-    ``ncounts`` (r13) is the per-interval VALUE-COUNT section under the
-    ``nc`` key — the null_count leg of the parquet row-group pattern,
-    type-family-resolved (module comment at ``_NC_FAMILIES``): a column
-    LETTER maps to a list with one entry per interval (or per stride
-    group), each entry ``None`` (no claim) or a trailing-zero-stripped
-    ``[n_numeric_plain, n_string, n_boolean, n_date_styled]`` over the
-    interval's cells. The
-    planner prunes ``IsNotNull`` when the filtered type's family count
-    is 0 and ``IsNull`` when it equals the group's row count; both tests
-    stay exact under the stride's group-summation, so coarsening only
-    loses granularity, never soundness.
-    ``bcounts`` (r15) is the BOOLEAN VALUE-COUNT section under the ``bt``
-    key — the boolean leg of EqualTo/In pruning (VERDICT r13 task 2): a
-    column LETTER maps to one entry per interval (or stride group), each
-    ``None`` (no claim) or a trailing-zero-stripped ``[n_true, n_false]``
-    over the interval's ``t="b"`` cells (truth per the reader's decode:
-    UNICODE-whitespace-stripped payload in ``("1", "true", "TRUE")`` —
-    str.strip(), which matches pc.utf8_trim_whitespace on every BMP
-    codepoint; NOT bytes.strip(), which is ASCII-only). The planner prunes
-    ``EqualTo(col, v)`` / ``In`` on a BOOLEAN schema column when every
-    requested value's count is 0 in the group (non-boolean cells decode
-    NULL and never match EqualTo). Zero-counts stay exact under the
-    stride's group-summation, same argument as ``nc``.
-    ``stats_stride`` (r12, the ``q`` key when > 1): stats arrays may be
-    COARSENED — one (lo, hi) pair per ``q`` consecutive intervals
-    (length ``2*ceil(n_iv/q)``), each pair the envelope of its group.
-    Publication prefers doubling the stride over dropping whole columns
-    against the 64 KB ceiling (the SF10 witness lost ALL string pruning
-    to column shedding at 1038 points); the decoder re-expands by
-    replication, so consumers stay per-interval and claims only widen —
-    conservative by construction.
-    ``extra_sheets`` (r11) carries sections for ADDITIONAL worksheet
-    members of a multi-sheet workbook under the ``m`` key —
-    ``{entry: {"n": total, "points": [...], "stats": {...} | None,
-    "sstats": {...} | None}}`` — so every big sheet is splittable, not
-    just the one the default scan resolves; the primary sheet stays in
-    the top-level keys for compatibility with indexes written before
-    this field existed."""
+    reference instead of the whole heap per task.
+
+    ``sections`` maps a ``SECTIONS`` key to ``{column letter: encoded
+    array}`` (module doc); keys are written in table order and empty
+    sections are omitted. ``stride`` (the ``q`` key, written when > 1
+    and any section is present) says how many consecutive intervals
+    each encoded group covers.
+
+    ``extra_sheets`` carries ADDITIONAL worksheet members of a
+    multi-sheet workbook under the ``m`` key — ``{entry: {"n": total,
+    "points": [...], "sections": {...} | None, "stride": q}}`` — so every
+    big sheet is splittable, not just the one the default scan resolves;
+    the primary sheet stays in the top-level keys for compatibility with
+    indexes written before this field existed."""
     coffs, rows = _deltas(points)
     payload = {"e": entry, "n": total_rows, "c": coffs, "r": rows}
     if sst_points:
@@ -250,32 +337,13 @@ def encode_split_index(
         payload["sc"] = sc
         payload["sr"] = sr
         payload["sn"] = sst_total
-    if stats:
-        payload["st"] = stats
-    if sstats:
-        payload["sv"] = sstats
-    if ncounts:
-        payload["nc"] = ncounts
-    if bcounts:
-        payload["bt"] = bcounts
-    if (stats or sstats or ncounts or bcounts) and stats_stride > 1:
-        payload["q"] = stats_stride
+    _put_sections(payload, sections, stride)
     if extra_sheets:
         m = {}
         for entry2, sec in extra_sheets.items():
             c2, r2 = _deltas(sec["points"])
             s2 = {"n": sec["n"], "c": c2, "r": r2}
-            if sec.get("stats"):
-                s2["st"] = sec["stats"]
-            if sec.get("sstats"):
-                s2["sv"] = sec["sstats"]
-            if sec.get("ncounts"):
-                s2["nc"] = sec["ncounts"]
-            if sec.get("bcounts"):
-                s2["bt"] = sec["bcounts"]
-            if (s2.get("st") or s2.get("sv") or s2.get("nc")
-                    or s2.get("bt")) and sec.get("q", 1) > 1:
-                s2["q"] = sec["q"]
+            _put_sections(s2, sec.get("sections"), sec.get("stride", 1))
             m[entry2] = s2
         payload["m"] = m
     out = MAGIC + json.dumps(payload, separators=(",", ":")).encode("ascii")
@@ -348,8 +416,7 @@ def decode_split_index(
     falls back to the sequential scan, results identical either way).
     Resolves additional-sheet sections (``m``) as well as the primary.
     ``payload`` short-circuits the comment re-parse when the caller
-    already holds it (describe_index decodes five sections per sheet —
-    one json.loads each was the dominant audit cost on big comments)."""
+    already holds it."""
     if payload is None:
         payload = _payload(zf)
     if payload is None:
@@ -376,27 +443,6 @@ def decode_sst_index(
     return _decode_points(zf, SST_ENTRY, payload, "sc", "sr", "sn")
 
 
-def coarsen_stat_pairs(arr: list) -> list:
-    """One stride-doubling step over a flat [lo0, hi0, lo1, hi1, ...]
-    stats array: merge adjacent (lo, hi) pairs into their envelope —
-    None-absorbing (a group containing an unknown claims nothing), last
-    odd pair carried as-is (ceil semantics, composing with the decoder's
-    ``i // q`` group mapping). Works for numeric and string bounds alike
-    (min/max are the Python comparisons both prune with)."""
-    out: list = []
-    for j in range(0, len(arr), 4):
-        lo0, hi0 = arr[j], arr[j + 1]
-        if j + 2 < len(arr):
-            lo1, hi1 = arr[j + 2], arr[j + 3]
-            if lo0 is None or lo1 is None:
-                out.extend((None, None))
-            else:
-                out.extend((min(lo0, lo1), max(hi0, hi1)))
-        else:
-            out.extend((lo0, hi0))
-    return out
-
-
 def _section_stride(sec: dict, n_iv: int) -> "tuple[int, int] | None":
     """Validated (stride, coarse pair count) for a section's stats arrays
     — q=1 when absent; None on a forged/garbage stride."""
@@ -406,239 +452,65 @@ def _section_stride(sec: dict, n_iv: int) -> "tuple[int, int] | None":
     return q, (n_iv + q - 1) // q
 
 
-def decode_interval_stats(
+def decode_interval_sections(
     zf: zipfile.ZipFile, entry: str, points: list,
+    keys: "Collection[str]" = SECTION_KEYS,
     payload: "dict | None" = None,
-) -> "dict[str, list] | None":
-    """Validated per-interval ``[(lo, hi) | None]`` stats per column
-    letter for ``entry`` (the ``st`` section), aligned with the decoded
-    ``points`` (terminal included → ``len(points)`` intervals). Untrusted
-    like the rest of the comment: wrong array length, non-numeric
-    entries, NaN, or lo > hi drops ALL stats — pruning is an
-    optimization, the unpruned scan is the semantics. (Unlike the row
-    counts, stats on a pruned interval are never re-validated by parsing
-    — the same honest-writer trust model as parquet row-group stats;
-    interval 0 is always materialized and count-checked, which catches
-    whole-file staleness loudly.)"""
+) -> "dict[str, dict[str, list]]":
+    """Validated interval statistics for ``entry``: ``{key: {letter:
+    [claim | None per interval]}}`` for each requested section in
+    ``keys`` that is present and valid, aligned with the decoded
+    ``points`` (terminal included → ``len(points)`` intervals). Claims
+    are ``(lo, hi)`` for the bound sections, the group's family counts
+    plus its row total for ``nc``, and ``(n_true, n_false)`` for ``bt``.
+
+    The comment is untrusted: a wrong array length, a non-string key or
+    any entry its row's validator rejects drops THAT section — garbage
+    in one section never costs the others — and a garbage stride drops
+    them all. Pruning is an optimization, the unpruned scan is the
+    semantics. Claims on a pruned interval are never re-validated by
+    parsing (the parquet row-group trust model); interval 0 is always
+    materialized and count-checked, which catches whole-file staleness.
+    A stride group's claim is replicated to each of its intervals, so
+    claims only ever widen. ``payload`` skips the comment re-parse when
+    the caller already holds it."""
     if payload is None:
         payload = _payload(zf)
-    if payload is None:
-        return None
-    sec = _section_for(payload, entry)
-    if sec is None:
-        return None
-    st = sec.get("st")
-    if not isinstance(st, dict) or not st:
-        return None
-    n_iv = len(points)
-    sq = _section_stride(sec, n_iv)
+    sec = _section_for(payload, entry) if payload is not None else None
+    sq = _section_stride(sec, len(points)) if sec is not None else None
     if sq is None:
-        return None
+        return {}
     q, m = sq
-    out: dict = {}
-    try:
-        for k, arr in st.items():
-            if not isinstance(k, str) or not isinstance(arr, list):
-                return None
-            if len(arr) != 2 * m:
-                return None
-            coarse: list = []
-            for j in range(m):
-                lo, hi = arr[2 * j], arr[2 * j + 1]
-                if lo is None or hi is None:
-                    coarse.append(None)
-                    continue
-                lo, hi = float(lo), float(hi)
-                if not (lo <= hi):  # also rejects NaN
-                    return None
-                coarse.append((lo, hi))
-            # stride re-expansion (r12): interval i claims its group's
-            # envelope — wider than per-interval stats, never narrower
-            out[k] = [coarse[i // q] for i in range(n_iv)]
-    except (TypeError, ValueError):
-        return None
-    return out
-
-
-def decode_interval_string_stats(
-    zf: zipfile.ZipFile, entry: str, points: list,
-    payload: "dict | None" = None,
-) -> "dict[str, list] | None":
-    """Validated per-interval ``[(lo, hi) | None]`` STRING bounds per
-    column letter for ``entry`` (the ``sv`` section, r12), aligned with
-    the decoded ``points``. Same untrusted-input discipline as the
-    numeric ``st`` decode: wrong array length, non-string entries,
-    half-null pairs, lo > hi, or oversized bounds (an honest bound fits
-    in STR_STAT_BYTES UTF-8 bytes) drop the WHOLE section — pruning is
-    an optimization, the unpruned scan is the semantics. Validation is
-    independent of ``st``: garbage in one section never costs the other.
-    Bounds may contain lone surrogates (increment_str can land on one —
-    JSON carries them fine); validation therefore never UTF-8-encodes,
-    it bounds by char count."""
-    if payload is None:
-        payload = _payload(zf)
-    if payload is None:
-        return None
-    sec = _section_for(payload, entry)
-    if sec is None:
-        return None
-    sv = sec.get("sv")
-    if not isinstance(sv, dict) or not sv:
-        return None
     n_iv = len(points)
-    sq = _section_stride(sec, n_iv)
-    if sq is None:
-        return None
-    q, m = sq
+    rows_g: "list[int] | None" = None
     out: dict = {}
-    for k, arr in sv.items():
-        if not isinstance(k, str) or not isinstance(arr, list):
-            return None
-        if len(arr) != 2 * m:
-            return None
-        coarse: list = []
-        for j in range(m):
-            lo, hi = arr[2 * j], arr[2 * j + 1]
-            if lo is None and hi is None:
-                coarse.append(None)
-                continue
-            if not isinstance(lo, str) or not isinstance(hi, str):
-                return None
-            if len(lo) > _STR_STAT_MAX_CHARS or len(hi) > _STR_STAT_MAX_CHARS:
-                return None
-            if lo > hi:
-                return None
-            coarse.append((lo, hi))
-        out[k] = [coarse[i // q] for i in range(n_iv)]
-    return out
-
-
-def decode_interval_null_counts(
-    zf: zipfile.ZipFile, entry: str, points: list,
-    payload: "dict | None" = None,
-) -> "dict[str, list] | None":
-    """Validated per-interval value counts per column letter for
-    ``entry`` (the ``nc`` section, r13), aligned with the decoded
-    ``points``: each interval maps to ``None`` (no claim) or a tuple
-    ``(n_num, n_str, n_bool, n_date, rows_in_group)`` — its stride
-    GROUP's family totals plus the group's total row count derived from
-    the points themselves. The planner's two tests are stated at group
-    granularity (family == 0 → no interval in the group holds a
-    non-null; family == rows → no interval holds a null), so replicating
-    group values per interval is sound by construction. Untrusted like
-    every other section: wrong array length, non-int entries, negatives,
-    more than four families, or family totals exceeding the group's row
-    count drop the WHOLE section — pruning is an optimization, the
-    unpruned scan is the semantics. Validation is independent of
-    ``st``/``sv``: garbage in one section never costs the others."""
-    if payload is None:
-        payload = _payload(zf)
-    if payload is None:
-        return None
-    sec = _section_for(payload, entry)
-    if sec is None:
-        return None
-    nc = sec.get("nc")
-    if not isinstance(nc, dict) or not nc:
-        return None
-    n_iv = len(points)
-    sq = _section_stride(sec, n_iv)
-    if sq is None:
-        return None
-    q, m = sq
-    # Rows per stride group, from the validated points (terminal
-    # included): count_in(i) = cum(i) - cum(i-1), summed over the group.
-    rows_g = [0] * m
-    prev = 0
-    for i in range(n_iv):
-        rows_g[i // q] += points[i][1] - prev
-        prev = points[i][1]
-    out: dict = {}
-    for k, arr in nc.items():
-        if not isinstance(k, str) or not isinstance(arr, list):
-            return None
-        if len(arr) != m:
-            return None
-        coarse: list = []
-        for j in range(m):
-            e = arr[j]
-            if e is None:
-                coarse.append(None)
-                continue
-            if not isinstance(e, list) or len(e) > _NC_FAMILIES:
-                return None
-            for x in e:
-                if not isinstance(x, int) or isinstance(x, bool) or x < 0:
-                    return None
-            fams = _pad4(e)
-            if sum(fams) > rows_g[j]:
-                return None  # counts a group's rows can't hold: forged
-            coarse.append(fams + (rows_g[j],))
-        out[k] = [coarse[i // q] for i in range(n_iv)]
-    return out
-
-
-def decode_interval_bool_counts(
-    zf: zipfile.ZipFile, entry: str, points: list,
-    payload: "dict | None" = None,
-) -> "dict[str, list] | None":
-    """Validated per-interval boolean value counts per column letter for
-    ``entry`` (the ``bt`` section, r15), aligned with the decoded
-    ``points``: each interval maps to ``None`` (no claim) or a tuple
-    ``(n_true, n_false)`` — its stride GROUP's counts of ``t="b"`` cells
-    decoding true/false. The planner's test is zero-counts only
-    (``EqualTo(col, v)`` matches nothing when v's count is 0 in the
-    group), which stays exact under the stride's group-summation; forged
-    INFLATION can only prevent a skip (conservative), and deflation is
-    the same honest-writer trust boundary every section carries.
-    Untrusted like the rest: wrong array length, non-int entries,
-    negatives, more than two slots, or totals exceeding the group's row
-    count drop the WHOLE section — pruning is an optimization, the
-    unpruned scan is the semantics. Validation is independent of
-    ``st``/``sv``/``nc``: garbage in one section never costs the
-    others."""
-    if payload is None:
-        payload = _payload(zf)
-    if payload is None:
-        return None
-    sec = _section_for(payload, entry)
-    if sec is None:
-        return None
-    bt = sec.get("bt")
-    if not isinstance(bt, dict) or not bt:
-        return None
-    n_iv = len(points)
-    sq = _section_stride(sec, n_iv)
-    if sq is None:
-        return None
-    q, m = sq
-    rows_g = [0] * m
-    prev = 0
-    for i in range(n_iv):
-        rows_g[i // q] += points[i][1] - prev
-        prev = points[i][1]
-    out: dict = {}
-    for k, arr in bt.items():
-        if not isinstance(k, str) or not isinstance(arr, list):
-            return None
-        if len(arr) != m:
-            return None
-        coarse: list = []
-        for j in range(m):
-            e = arr[j]
-            if e is None:
-                coarse.append(None)
-                continue
-            if not isinstance(e, list) or len(e) > 2:
-                return None
-            for x in e:
-                if not isinstance(x, int) or isinstance(x, bool) or x < 0:
-                    return None
-            t = (e[0] if len(e) > 0 else 0, e[1] if len(e) > 1 else 0)
-            if t[0] + t[1] > rows_g[j]:
-                return None  # counts a group's rows can't hold: forged
-            coarse.append(t)
-        out[k] = [coarse[i // q] for i in range(n_iv)]
+    for spec in SECTIONS:
+        raw = sec.get(spec.key) if spec.key in keys else None
+        if not isinstance(raw, dict) or not raw:
+            continue
+        if spec.group_rows and rows_g is None:
+            # rows per stride group, from the validated points
+            rows_g = [0] * m
+            prev = 0
+            for i, (_, cum) in enumerate(points):
+                rows_g[i // q] += cum - prev
+                prev = cum
+        w = spec.width
+        cols: dict = {}
+        try:
+            for k, arr in raw.items():
+                if (not isinstance(k, str) or not isinstance(arr, list)
+                        or len(arr) != w * m):
+                    raise ValueError("bad column array")
+                coarse = [
+                    spec.check(arr[w * j:w * j + w],
+                               rows_g[j] if spec.group_rows else None)
+                    for j in range(m)
+                ]
+                cols[k] = [coarse[i // q] for i in range(n_iv)]
+        except (TypeError, ValueError, OverflowError):
+            continue
+        out[spec.key] = cols
     return out
 
 

@@ -276,9 +276,8 @@ def _write_sheet_member(
 
 def _publish_index(
     zf, name: str, pts, nrows: int, expected_rows: int,
-    spts, n_si: int, expected_si: int, stats: "dict | None" = None,
-    extra_sheets: "dict | None" = None, sstats: "dict | None" = None,
-    ncounts: "dict | None" = None, bcounts: "dict | None" = None,
+    spts, n_si: int, expected_si: int, sections: "dict | None" = None,
+    extra_sheets: "dict | None" = None,
 ) -> None:
     """Set the archive comment for whichever validated sections exist —
     shared by both writers and the retrofit indexer (r10 review: the two
@@ -288,133 +287,81 @@ def _publish_index(
     the file itself is still fine, it just loses the optimization). An
     sst-only comment is valid (heap-dominated workbooks whose tiny sheet
     never reaches one interval still get interval heaps + the planner's
-    cap lift); ``extra_sheets`` carry additional worksheets of a
-    multi-sheet workbook (r11). Size discipline against the 64 KB comment
-    ceiling, most valuable sections last to go: stats STRIDE doubles
-    first — one (lo, hi) envelope per 2/4/…/16 intervals, all sheets and
-    both kinds in lockstep (r12: the SF10 witness showed column-dropping
-    silently killed ALL string pruning at 1038 points; coarser claims
-    keep every column pruning at reduced granularity) — then stats
-    columns drop largest-first (across all sheets and kinds), then whole
+    cap lift); ``extra_sheets`` (``{entry: {"n", "points", "sections"}}``)
+    carry additional worksheets of a multi-sheet workbook (r11).
+    ``sections`` is the ``{key: {letter: array}}`` stats map
+    (splitindex.SECTIONS). Size discipline against the 64 KB comment
+    ceiling, most valuable sections last to go: the stats STRIDE doubles
+    first — one entry per 2/4/…/16 intervals, every sheet and section in
+    lockstep (r12: the SF10 witness showed column-dropping silently
+    killed ALL string pruning at 1038 points; coarser claims keep every
+    column pruning at reduced granularity) — then stats columns drop
+    largest-first (across all sheets and sections), then whole
     extra-sheet sections largest-first, then the sst section, and the
     primary worksheet section is kept alone as the floor."""
     import json as _json
 
-    from .splitindex import coarsen_count_groups, coarsen_stat_pairs
+    from .splitindex import SECTION_BY_KEY
 
     if pts and nrows != expected_rows:
         pts = None
     if spts and n_si != expected_si:
         spts = None
-    # Deep-copy every stats dict before the shedding loop below may
-    # mutate it (`del tgt[col]`): a shallow `dict(v)` shares the inner
-    # stats mapping with the CALLER, so overflow retries would silently
-    # edit the dicts the caller passed in (ADVICE r12).
+
+    def own(secs) -> dict:
+        # Copy each section's column map: shedding below deletes columns,
+        # which must never edit the dicts the caller passed in (ADVICE r12).
+        return {k: dict(cols) for k, cols in (secs or {}).items() if cols}
+
     extra = {
-        k: {
-            **v,
-            "stats": dict(v["stats"]) if v.get("stats") else None,
-            "sstats": dict(v["sstats"]) if v.get("sstats") else None,
-            "ncounts": dict(v["ncounts"]) if v.get("ncounts") else None,
-            "bcounts": dict(v["bcounts"]) if v.get("bcounts") else None,
-        }
+        k: {**v, "sections": own(v.get("sections"))}
         for k, v in (extra_sheets or {}).items()
     }
     if not pts and not spts and not extra:
         return
-    stats = dict(stats) if (stats and pts) else None
-    sstats = dict(sstats) if (sstats and pts) else None
-    ncounts = dict(ncounts) if (ncounts and pts) else None
-    bcounts = dict(bcounts) if (bcounts and pts) else None
+    # every sheet's stats map, keyed by sheet ("" = the primary)
+    owned = {"": own(sections) if pts else {}}
+    owned.update((en, sec["sections"]) for en, sec in extra.items())
     q = 1  # stats stride, lockstep across every section (format's `q`)
     while True:
-        for sec in extra.values():
-            if (sec.get("stats") or sec.get("sstats") or sec.get("ncounts")
-                    or sec.get("bcounts")):
-                sec["q"] = q
         try:
             zf.comment = encode_split_index(
                 name, pts or [], nrows if pts else 0,
                 sst_points=spts, sst_total=expected_si if spts else 0,
-                stats=stats, sstats=sstats, ncounts=ncounts,
-                bcounts=bcounts,
-                extra_sheets=extra or None,
-                stats_stride=q,
+                sections=owned[""], stride=q,
+                extra_sheets={
+                    en: {**sec, "stride": q} for en, sec in extra.items()
+                } or None,
             )
             return
         except ValueError:
-            sections = []
-            if stats:
-                sections.append(("", "stats", stats))
-            if sstats:
-                sections.append(("", "sstats", sstats))
-            if ncounts:
-                sections.append(("", "ncounts", ncounts))
-            if bcounts:
-                sections.append(("", "bcounts", bcounts))
-            for en, sec in extra.items():
-                for kind in ("stats", "sstats", "ncounts", "bcounts"):
-                    if sec.get(kind):
-                        sections.append((en, kind, sec[kind]))
-            if sections and q < 16:
-                # halve resolution before amputating columns; counts
-                # coarsen by group-sum (their own sound merge), bounds
-                # by envelope
+            if any(owned.values()) and q < 16:
+                # halve resolution before amputating columns; each
+                # section coarsens by its own sound merge
                 q *= 2
-                if stats:
-                    stats = {k: coarsen_stat_pairs(v) for k, v in stats.items()}
-                if sstats:
-                    sstats = {
-                        k: coarsen_stat_pairs(v) for k, v in sstats.items()
-                    }
-                if ncounts:
-                    ncounts = {
-                        k: coarsen_count_groups(v) for k, v in ncounts.items()
-                    }
-                if bcounts:
-                    bcounts = {
-                        k: coarsen_count_groups(v) for k, v in bcounts.items()
-                    }
-                for sec in extra.values():
-                    for kind in ("stats", "sstats"):
-                        if sec.get(kind):
-                            sec[kind] = {
-                                k: coarsen_stat_pairs(v)
-                                for k, v in sec[kind].items()
-                            }
-                    for kind in ("ncounts", "bcounts"):
-                        if sec.get(kind):
-                            sec[kind] = {
-                                k: coarsen_count_groups(v)
-                                for k, v in sec[kind].items()
-                            }
+                for secs in owned.values():
+                    for key, cols in secs.items():
+                        step = SECTION_BY_KEY[key].coarsen
+                        secs[key] = {k: step(v) for k, v in cols.items()}
                 continue
-            if sections:
-                _, en, kind, col = max(
-                    (len(_json.dumps(stt[k])), en, kind, k)
-                    for en, kind, stt in sections
-                    for k in stt
+            if any(owned.values()):
+                # largest column first; ties keep the historical order
+                # (sheet name, then the section's rank, then the letter)
+                _, en, _, col, key = max(
+                    (len(_json.dumps(arr)), en, SECTION_BY_KEY[key].rank,
+                     col, key)
+                    for en, secs in owned.items()
+                    for key, cols in secs.items()
+                    for col, arr in cols.items()
                 )
-                if en == "":
-                    tgt = {"stats": stats, "sstats": sstats,
-                           "ncounts": ncounts, "bcounts": bcounts}[kind]
-                else:
-                    tgt = extra[en][kind]
-                del tgt[col]
-                if not tgt:
-                    if en == "" and kind == "stats":
-                        stats = None
-                    elif en == "" and kind == "sstats":
-                        sstats = None
-                    elif en == "" and kind == "ncounts":
-                        ncounts = None
-                    elif en == "":
-                        bcounts = None
-                    else:
-                        extra[en][kind] = None
+                secs = owned[en]
+                del secs[key][col]
+                if not secs[key]:
+                    del secs[key]
                 continue
             if extra:
-                del extra[max(extra, key=lambda e: len(extra[e]["points"]))]
+                drop = max(extra, key=lambda e: len(extra[e]["points"]))
+                del extra[drop], owned[drop]
                 continue
             if spts:
                 spts = None
@@ -740,15 +687,11 @@ class IncrementalXlsxWriter:
                 spts, n_si = _write_indexed_member(
                     zf, "xl/sharedStrings.xml", _sst_chunks(), b"</si>", b"<si>"
                 )
-                st, sv, nc, bv = (
-                    coll.aligned(pts, nrows) if coll
-                    else (None, None, None, None)
-                )
                 _publish_index(
                     zf, "xl/worksheets/sheet1.xml",
                     pts, nrows, self.n_rows,
                     spts, n_si, len(self._sst),
-                    stats=st, sstats=sv, ncounts=nc, bcounts=bv,
+                    sections=coll.aligned(pts, nrows) if coll else None,
                 )
         finally:
             self._spool.close()

@@ -12,6 +12,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from sheetreader_duckdb_spark.session import static_builder_confs
 
 
@@ -25,6 +27,12 @@ def test_static_builder_confs_env_override(monkeypatch):
     assert (
         static_builder_confs()["spark.sql.codegen.cache.maxEntries"] == "256"
     )
+
+
+def test_static_builder_confs_rejects_non_int_override(monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_CODEGEN_CACHE", "lots")
+    with pytest.raises(ValueError, match="SPARK_GRAFT_CODEGEN_CACHE"):
+        static_builder_confs()
 
 
 def test_get_spark_applies_codegen_cache(spark):

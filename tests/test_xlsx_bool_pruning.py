@@ -151,7 +151,7 @@ def _collect(path, filters, threads=4, schema=SCHEMA):
 def test_bt_section_present_and_exact(bool_xlsx):
     with zipfile.ZipFile(bool_xlsx) as zf:
         pts = SI.decode_split_index(zf, SHEET)
-        bv = SI.decode_interval_bool_counts(zf, SHEET, pts)
+        bv = SI.decode_interval_sections(zf, SHEET, pts).get("bt")
     assert bv is not None and "B" in bv
     assert "A" not in bv and "C" not in bv  # non-boolean columns
     assert len(bv["B"]) == len(pts)
@@ -243,7 +243,7 @@ def test_forged_bt_counts_are_dropped_not_trusted(bool_xlsx, tmp_path):
         ).encode("ascii")
     with zipfile.ZipFile(p) as zf:
         pts = SI.decode_split_index(zf, SHEET)
-        assert SI.decode_interval_bool_counts(zf, SHEET, pts) is None
+        assert SI.decode_interval_sections(zf, SHEET, pts).get("bt") is None
     got = sorted(_collect(p, [EqualTo(("flag",), True)]), key=str)
     want = sorted(
         (r for r in _collect(bool_xlsx, []) if r[1] is True), key=str
@@ -279,9 +279,7 @@ def test_planner_unit_bool_matrix():
     names = ["id", "flag", "name"]
 
     def plan(f):
-        return DS._plan_interval_skips(
-            [f], SCHEMA, names, None, False, ivbv=ivbv
-        )
+        return DS._plan_interval_skips([f], SCHEMA, names, {"bt": ivbv}, False)
 
     assert plan(EqualTo(("flag",), True)) == frozenset({1, 5})
     assert plan(EqualTo(("flag",), False)) == frozenset({2, 5})

@@ -129,8 +129,9 @@ def _read_rows(path, filters):
 
 def _decoded_meta(path):
     """What the planner would actually see in ``path``'s comment:
-    (points, st, sv, nc) via the real decoders, or None when the
-    worksheet index is unusable (the reader then runs unindexed)."""
+    (points, stats sections, sst points) via the real decoders, or None
+    when the worksheet index is unusable (the reader then runs
+    unindexed)."""
     with zipfile.ZipFile(path) as zf:
         pts = SI.decode_split_index(zf, "xl/worksheets/sheet1.xml")
         if pts is None:
@@ -138,9 +139,7 @@ def _decoded_meta(path):
         entry = "xl/worksheets/sheet1.xml"
         return (
             pts,
-            SI.decode_interval_stats(zf, entry, pts),
-            SI.decode_interval_string_stats(zf, entry, pts),
-            SI.decode_interval_null_counts(zf, entry, pts),
+            SI.decode_interval_sections(zf, entry, pts),
             SI.decode_sst_index(zf),
         )
 
@@ -263,9 +262,9 @@ def test_any_comment_corruption_is_exact_or_loud(pristine, tmp_path, data):
             # retype/byte-flip landed on a stats bound and produced a
             # plausible narrower claim) — the documented honest-writer
             # trust boundary, same as parquet row-group stats. Classify
-            # with the real decoders: pristine vs mutated (pts, st, sv,
-            # nc). Identical-or-dead metadata with different rows is a
-            # soundness bug and fails.
+            # with the real decoders: pristine vs mutated (pts, stats
+            # sections, sst). Identical-or-dead metadata with different
+            # rows is a soundness bug and fails.
             assert _decoded_meta(victim) not in (
                 _decoded_meta(path), None
             ), ("corrupted comment changed the row set without forging "

@@ -120,10 +120,10 @@ def test_deferred_publishes_honest_sv(twin_retrofits):
     eager, deferred = twin_retrofits
     with zipfile.ZipFile(eager) as zf:
         pts_e = SI.decode_split_index(zf, SHEET)
-        sv_e = SI.decode_interval_string_stats(zf, SHEET, pts_e)
+        sv_e = SI.decode_interval_sections(zf, SHEET, pts_e).get("sv")
     with zipfile.ZipFile(deferred) as zf:
         pts_d = SI.decode_split_index(zf, SHEET)
-        sv_d = SI.decode_interval_string_stats(zf, SHEET, pts_d)
+        sv_d = SI.decode_interval_sections(zf, SHEET, pts_d).get("sv")
     assert pts_e == pts_d  # staging bytes independent of stats mode
     assert sv_e is not None and sv_d is not None
     assert set(sv_d) == set(sv_e)
@@ -132,12 +132,10 @@ def test_deferred_publishes_honest_sv(twin_retrofits):
     assert sv_d == sv_e
     # numeric and count sections unaffected by the string mode
     with zipfile.ZipFile(eager) as ze, zipfile.ZipFile(deferred) as zd:
-        assert SI.decode_interval_stats(
-            ze, SHEET, pts_e
-        ) == SI.decode_interval_stats(zd, SHEET, pts_d)
-        assert SI.decode_interval_null_counts(
-            ze, SHEET, pts_e
-        ) == SI.decode_interval_null_counts(zd, SHEET, pts_d)
+        sec_e = SI.decode_interval_sections(ze, SHEET, pts_e)
+        sec_d = SI.decode_interval_sections(zd, SHEET, pts_d)
+    assert sec_e.get("st") == sec_d.get("st")
+    assert sec_e.get("nc") == sec_d.get("nc")
 
 
 def test_deferred_pruned_reads_bit_equal(twin_retrofits, monkeypatch):
@@ -169,7 +167,7 @@ def test_budget_sheds_only_the_wide_column(tmp_path, monkeypatch):
     assert out["string_stats_shed"] == ["A"]
     with zipfile.ZipFile(p) as zf:
         pts = SI.decode_split_index(zf, SHEET)
-        sv = SI.decode_interval_string_stats(zf, SHEET, pts)
+        sv = SI.decode_interval_sections(zf, SHEET, pts).get("sv")
     assert sv is not None and "A" not in sv and "B" in sv
     # the surviving low-cardinality column's bounds are exact
     for rng in sv["B"][1:]:
@@ -242,7 +240,7 @@ def test_resolver_withholds_on_count_mismatch():
         b"</sheetData>"
     )
     _resolve_deferred_strings([coll], iter(["x", "y"]), expected_n=3)
-    assert coll.fine[0][2] == {}  # mismatch → no string claims
+    assert coll.fine[0][1]["sv"] == {}  # mismatch → no string claims
     assert coll._defer_resolved
 
 
@@ -262,7 +260,7 @@ def test_resolver_parity_rules():
     )
     _resolve_deferred_strings([coll], iter(["ok", "bad\ud800"]),
                               expected_n=2)
-    assert coll.fine[0][1:] == (None, None, None, None)
+    assert coll.fine[0][1] == dict.fromkeys(SI.SECTION_KEYS)
     # ref beyond the heap: same full withhold
     coll = _deferred_coll(
         b'<sheetData><row r="1">'
@@ -271,7 +269,7 @@ def test_resolver_parity_rules():
         b"</row></sheetData>"
     )
     _resolve_deferred_strings([coll], iter(["ok"]), expected_n=1)
-    assert coll.fine[0][1:] == (None, None, None, None)
+    assert coll.fine[0][1] == dict.fromkeys(SI.SECTION_KEYS)
     # U+10FFFF-prefixed max: no honest bound — THAT column claims
     # nothing, everything else keeps its claims
     coll = _deferred_coll(
@@ -283,11 +281,11 @@ def test_resolver_parity_rules():
     )
     big = chr(0x10FFFF) * 20
     _resolve_deferred_strings([coll], iter(["ok", big]), expected_n=2)
-    sv = coll.fine[0][2]
+    sv = coll.fine[0][1]["sv"]
     assert sv.get("A") == ("ok", "ok")
     assert "B" not in sv
-    assert coll.fine[0][1] == {"D": (5.0, 5.0)}
-    assert coll.fine[0][3]["A"] == (0, 1, 0, 0)
+    assert coll.fine[0][1]["st"] == {"D": (5.0, 5.0)}
+    assert coll.fine[0][1]["nc"]["A"] == (0, 1, 0, 0)
 
 
 def test_resolver_truncates_long_entries_honestly():
@@ -300,7 +298,7 @@ def test_resolver_truncates_long_entries_honestly():
     _resolve_deferred_strings(
         [coll], iter([long_min, long_max]), expected_n=2
     )
-    lo, hi = coll.fine[0][2]["A"]
+    lo, hi = coll.fine[0][1]["sv"]["A"]
     assert lo <= long_min and hi >= long_max
     assert len(lo.encode()) <= SI.STR_STAT_BYTES
     assert len(hi) <= SI.STR_STAT_BYTES + 1
@@ -330,8 +328,8 @@ def test_pooled_and_deferred_compose(tmp_path, monkeypatch):
     assert h(a) == h(b)
     with zipfile.ZipFile(b) as zf:
         pts = SI.decode_split_index(zf, SHEET)
-        assert SI.decode_interval_string_stats(zf, SHEET, pts) is not None
-        assert SI.decode_interval_null_counts(zf, SHEET, pts) is not None
+        secs = SI.decode_interval_sections(zf, SHEET, pts)
+    assert secs.get("sv") is not None and secs.get("nc") is not None
 
 
 def test_tail_only_string_column_defers_cleanly(tmp_path, monkeypatch):
@@ -353,7 +351,7 @@ def test_tail_only_string_column_defers_cleanly(tmp_path, monkeypatch):
     assert out["indexed"], out
     with zipfile.ZipFile(f) as zf:
         pts = SI.decode_split_index(zf, SHEET)
-        sv = SI.decode_interval_string_stats(zf, SHEET, pts)
+        sv = SI.decode_interval_sections(zf, SHEET, pts).get("sv")
     assert sv is not None and "B" in sv
     # the tail interval carries the claim; earlier pure-numeric
     # intervals claim nothing for B... (header interval 0 does: the

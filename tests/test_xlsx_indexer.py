@@ -229,7 +229,7 @@ def test_retrofit_prefixed_document(tmp_path):
     # interval stats collect through the PREFIXED cell regex too
     with zipfile.ZipFile(p) as zf:
         pts = SI.decode_split_index(zf, "xl/worksheets/sheet1.xml")
-        st = SI.decode_interval_stats(zf, "xl/worksheets/sheet1.xml", pts)
+        st = SI.decode_interval_sections(zf, "xl/worksheets/sheet1.xml", pts).get("st")
     assert st is not None and "A" in st and "B" in st
     assert st["A"][0] is not None and st["A"][0][0] == 1.0
 
@@ -440,7 +440,7 @@ def test_retrofit_multi_sheet_sections(tmp_path):
         pts2 = SI2.decode_split_index(zf, "xl/worksheets/sheet2.xml")
         assert pts1 is not None and pts1[-1][1] == n1 + 1
         assert pts2 is not None and pts2[-1][1] == n2 + 1
-        st2 = SI2.decode_interval_stats(zf, "xl/worksheets/sheet2.xml", pts2)
+        st2 = SI2.decode_interval_sections(zf, "xl/worksheets/sheet2.xml", pts2).get("st")
         assert st2 is not None and "A" in st2  # numeric col on sheet 2
 
     schema2 = StructType(
@@ -557,12 +557,13 @@ def test_stats_survive_final_flush_on_last_row():
 
     coll = _IntervalStatsCollector(b"")
     coll.fine = [
-        (10, {"A": (0.0, 9.0)}, {"B": ("a", "c")}, {"A": (10, 0, 0, 0)},
-         {"C": (4, 6)}),
-        (20, {"A": (10.0, 19.0)}, {"B": ("d", "f")}, {"A": (10, 0, 0, 0)},
-         {"C": (0, 10)}),
+        (10, {"st": {"A": (0.0, 9.0)}, "sv": {"B": ("a", "c")},
+              "nc": {"A": (10, 0, 0, 0)}, "bt": {"C": (4, 6)}}),
+        (20, {"st": {"A": (10.0, 19.0)}, "sv": {"B": ("d", "f")},
+              "nc": {"A": (10, 0, 0, 0)}, "bt": {"C": (0, 10)}}),
     ]
-    out, sv, nc, bv = coll.aligned([(100, 10), (200, 20)], 20)
+    got = coll.aligned([(100, 10), (200, 20)], 20)
+    out, sv, nc, bv = (got.get(k) for k in SI.SECTION_KEYS)
     assert out == {"A": [0.0, 9.0, 10.0, 19.0, None, None]}
     assert sv == {"B": ["a", "c", "d", "f", None, None]}
     # counts: the zero-row terminal interval claims all-zero (vacuously
@@ -727,10 +728,10 @@ def test_retrofit_survives_lone_surrogate_shared_strings(tmp_path):
     assert out["indexed"], out  # no UnicodeEncodeError from the retrofit
     with zipfile.ZipFile(p) as zf:
         pts = SI2.decode_split_index(zf, "xl/worksheets/sheet1.xml")
-        sv = SI2.decode_interval_string_stats(
+        secs = SI2.decode_interval_sections(
             zf, "xl/worksheets/sheet1.xml", pts
         )
-        st = SI2.decode_interval_stats(zf, "xl/worksheets/sheet1.xml", pts)
+    sv, st = secs.get("sv"), secs.get("st")
     assert st is not None and "B" in st  # numeric claims unaffected
     assert pts is not None and pts[-1][1] == N_ROWS + 1
     del sv  # shape validated by decode; surrogate column's claims optional

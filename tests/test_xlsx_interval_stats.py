@@ -117,7 +117,7 @@ def _collect(path, filters, threads=4, schema=SCHEMA):
 def test_stats_present_and_exact(stats_xlsx):
     with zipfile.ZipFile(stats_xlsx) as zf:
         pts = SI.decode_split_index(zf, SHEET)
-        st = SI.decode_interval_stats(zf, SHEET, pts)
+        st = SI.decode_interval_sections(zf, SHEET, pts).get("st")
     assert st is not None and "A" in st and "C" in st
     assert "B" not in st  # string column: no numeric stats
     assert len(st["A"]) == len(pts)
@@ -168,7 +168,7 @@ def test_pruning_never_drops_null_or_edge_rows(stats_xlsx):
     # boundary equality at an interval edge: take an actual interval hi
     with zipfile.ZipFile(stats_xlsx) as zf:
         pts = SI.decode_split_index(zf, SHEET)
-        st = SI.decode_interval_stats(zf, SHEET, pts)
+        st = SI.decode_interval_sections(zf, SHEET, pts).get("st")
     edge = st["A"][0][1]
     got = _collect(stats_xlsx, [EqualTo(("id",), edge)])
     assert [r[0] for r in got] == [edge]
@@ -219,7 +219,7 @@ def test_garbage_stats_are_ignored_not_trusted(stats_xlsx, tmp_path):
             zf.comment = SI.MAGIC + json.dumps(payload2).encode()
         with zipfile.ZipFile(p) as zf:
             pts = SI.decode_split_index(zf, SHEET)
-            assert SI.decode_interval_stats(zf, SHEET, pts) is None
+            assert SI.decode_interval_sections(zf, SHEET, pts).get("st") is None
         assert _collect(p, [LessThan(("id",), 1000.0)]) == base
 
 
@@ -265,7 +265,7 @@ def test_stats_overflow_coarsens_stride_before_dropping_columns(tmp_path):
         zf.writestr("x", b"")
         _publish_index(
             zf, SHEET, pts, 10 * n_pts, 10 * n_pts, None, 0, 0,
-            stats=big, sstats=sbig,
+            sections={"st": big, "sv": sbig},
         )
         comment = zf.comment
     assert comment.startswith(SI.MAGIC)
@@ -297,7 +297,7 @@ def test_writer_files_without_stats_still_read(stats_xlsx, tmp_path):
     with zipfile.ZipFile(p) as zf:
         pts = SI.decode_split_index(zf, SHEET)
         assert pts is not None
-        assert SI.decode_interval_stats(zf, SHEET, pts) is None
+        assert SI.decode_interval_sections(zf, SHEET, pts).get("st") is None
     got = _collect(p, [LessThan(("id",), 10.0)])
     assert sorted(r[0] for r in got) == [float(i) for i in range(10)]
 
@@ -329,7 +329,7 @@ def test_sink_index_stats_option(spark, tmp_path):
     part = glob.glob(out + "/*.xlsx")[0]
     with zipfile.ZipFile(part) as zf:
         pts = SI.decode_split_index(zf, SHEET)
-        st = SI.decode_interval_stats(zf, SHEET, pts)
+        st = SI.decode_interval_sections(zf, SHEET, pts).get("st")
     assert st is not None and "A" in st
     schema = StructType(
         [StructField("id", DoubleType()), StructField("txt", StringType())]
@@ -365,6 +365,53 @@ def test_prune_aware_partition_planning(stats_xlsx):
         for batch in reader.read(part):
             rows.extend(zip(*[c.to_pylist() for c in batch.columns]))
     assert [r[0] for r in rows] == [77_777.0]
+
+
+def _padded_workbook(path: str) -> str:
+    """A valid workbook past the 4-shard auto threshold: a small sheet
+    plus a 6 MB stored member, so planning opens it and plans."""
+    from sheetreader_duckdb_spark.sources.xlsx.writer import write_xlsx
+
+    write_xlsx(path, {"Sheet1": [["id"]] + [[float(i)] for i in range(50)]})
+    with zipfile.ZipFile(path, "a") as zf:
+        zf.writestr("xl/media/pad.bin", bytes(6 << 20), zipfile.ZIP_STORED)
+    return path
+
+
+def test_planning_keeps_shards_for_corrupt_file_and_read_fails_loudly(
+    tmp_path,
+):
+    p = str(tmp_path / "corrupt.xlsx")
+    with open(p, "wb") as f:
+        f.write(bytes(6 << 20))  # not a zip at all
+    schema = StructType([StructField("id", DoubleType())])
+    reader = DS.SheetReaderReader(
+        {"path": p, "filter_pushdown": "true"}, schema
+    )
+    assert reader.pushFilters([EqualTo(("id",), 7.0)]) == []
+    parts = reader.partitions()
+    assert len(parts) > 1  # size-based plan, no silent single shard
+    with pytest.raises(zipfile.BadZipFile):
+        for _ in reader.read(parts[0]):
+            pass
+
+
+def test_planner_bug_is_not_swallowed(tmp_path, monkeypatch):
+    p = _padded_workbook(str(tmp_path / "padded.xlsx"))
+    schema = StructType([StructField("id", DoubleType())])
+    reader = DS.SheetReaderReader(
+        {"path": p, "filter_pushdown": "true"}, schema
+    )
+    assert reader.pushFilters([EqualTo(("id",), 7.0)]) == []
+    assert len(reader.partitions()) > 4  # planning reaches the probe
+
+    def boom(*a, **k):
+        raise RuntimeError("planner bug")
+
+    monkeypatch.setattr(DS, "_interval_skips", boom)
+    assert reader.pushFilters([EqualTo(("id",), 7.0)]) == []
+    with pytest.raises(RuntimeError, match="planner bug"):
+        reader.partitions()
 
 
 def test_row_count_served_from_index(stats_xlsx, monkeypatch):

@@ -157,7 +157,8 @@ def test_collector_family_split_and_withholds():
     )
     coll = _IntervalStatsCollector(b"", sst=["s"], date_styles=frozenset({1}))
     coll.on_piece(xml, True)
-    cum, st, sv, nc, _bv = coll.fine[0]
+    cum, claims = coll.fine[0]
+    st, sv, nc = (claims[k] for k in ("st", "sv", "nc"))
     assert cum == 2
     assert nc == {
         "A": (2, 0, 0, 0),
@@ -178,7 +179,7 @@ def test_collector_family_split_and_withholds():
     )
     coll2 = _IntervalStatsCollector(b"", date_styles=frozenset())
     coll2.on_piece(dup, True)
-    _, _, _, nc2, _bv2 = coll2.fine[0]
+    nc2 = coll2.fine[0][1]["nc"]
     assert nc2["A"] is None and nc2["B"] == (1, 0, 0, 0)
 
     # unknown style mapping (date_styles=None): a STYLED numeric cell's
@@ -190,7 +191,7 @@ def test_collector_family_split_and_withholds():
         b'<c r="B1"><v>2</v></c></row></sheetData>',
         True,
     )
-    _, _, _, nc3, _bv3 = coll3.fine[0]
+    nc3 = coll3.fine[0][1]["nc"]
     assert nc3["A"] is None and nc3["B"] == (1, 0, 0, 0)
 
 
@@ -204,7 +205,7 @@ def test_collector_error_cells_withhold_counts_too():
         b"</sheetData>",
         True,
     )
-    assert coll.fine[0][1:] == (None, None, None, None)
+    assert coll.fine[0][1] == dict.fromkeys(SI.SECTION_KEYS)
 
 
 # ------------------------------------------------------------- authoring
@@ -213,7 +214,7 @@ def test_collector_error_cells_withhold_counts_too():
 def test_nc_published_and_decodes(nullstats_xlsx):
     with zipfile.ZipFile(nullstats_xlsx) as zf:
         pts = SI.decode_split_index(zf, SHEET)
-        nc = SI.decode_interval_null_counts(zf, SHEET, pts)
+        nc = SI.decode_interval_sections(zf, SHEET, pts).get("nc")
     assert nc is not None
     assert set(nc) >= {"A", "B", "C", "D"}
     assert all(len(v) == len(pts) for v in nc.values())
@@ -321,7 +322,7 @@ def test_mixed_style_column_isnull_never_overskips(tmp_path, monkeypatch):
     w.close()
     with zipfile.ZipFile(p) as zf:
         pts = SI.decode_split_index(zf, SHEET)
-        nc = SI.decode_interval_null_counts(zf, SHEET, pts)
+        nc = SI.decode_interval_sections(zf, SHEET, pts).get("nc")
     assert nc is not None and "A" in nc
     e = nc["A"][1]
     assert e is not None and e[0] > 0 and e[3] > 0  # both families seen
@@ -369,9 +370,10 @@ def test_garbled_nc_drops_to_unpruned_scan(nullstats_xlsx, tmp_path):
             zf.comment = SI.MAGIC + json.dumps(payload2).encode()
         with zipfile.ZipFile(p) as zf:
             pts = SI.decode_split_index(zf, SHEET)
-            assert SI.decode_interval_null_counts(zf, SHEET, pts) is None, bad_nc
-            # independent sections unharmed
-            assert SI.decode_interval_stats(zf, SHEET, pts) is not None
+            secs = SI.decode_interval_sections(zf, SHEET, pts)
+        assert secs.get("nc") is None, bad_nc
+        # independent sections unharmed
+        assert secs.get("st") is not None
         got = sorted(_collect(p, [IsNotNull(("sparse_num",))]), key=str)
         assert got == base, bad_nc
 
@@ -409,7 +411,7 @@ def test_nc_stride_roundtrip_group_sums():
     pts = [(100, 10), (200, 25), (300, 40)]
     nc = {"A": [[10], [0, 30]]}  # 2 groups over 4 intervals (q=2)
     comment = SI.encode_split_index(
-        SHEET, pts, 55, ncounts=nc, stats_stride=2
+        SHEET, pts, 55, sections={"nc": nc}, stride=2
     )
     import hashlib
 
@@ -426,7 +428,7 @@ def test_nc_stride_roundtrip_group_sums():
         # patch compress sizes realism: decode only needs monotone offsets
         pts2 = SI.decode_split_index(zf, SHEET)
         assert pts2 is not None
-        out = SI.decode_interval_null_counts(zf, SHEET, pts2)
+        out = SI.decode_interval_sections(zf, SHEET, pts2).get("nc")
     assert out is not None
     # group 0 = intervals 0,1 (rows 10+15=25); group 1 = intervals 2,3
     # (rows 15+15=30)
@@ -446,7 +448,7 @@ def test_sink_stats_authors_nc_and_prunes(tmp_path, monkeypatch):
     w.close()
     with zipfile.ZipFile(p) as zf:
         pts = SI.decode_split_index(zf, SHEET)
-        nc = SI.decode_interval_null_counts(zf, SHEET, pts)
+        nc = SI.decode_interval_sections(zf, SHEET, pts).get("nc")
     assert nc is not None and "A" in nc
     schema = StructType(
         [StructField("a", DoubleType()), StructField("b", StringType())]
@@ -478,7 +480,7 @@ def test_unparseable_values_withhold_whole_interval():
             b'<c r="B1"><v>7</v></c></row></sheetData>',
             True,
         )
-        assert coll.fine[0][1:] == (None, None, None, None), bad
+        assert coll.fine[0][1] == dict.fromkeys(SI.SECTION_KEYS), bad
     # NaN is NOT an error in the reader (float('nan') parses): the
     # column skips its bounds claim but counts stay — and other
     # columns' claims survive
@@ -488,7 +490,7 @@ def test_unparseable_values_withhold_whole_interval():
         b'<c r="B1"><v>7</v></c></row></sheetData>',
         True,
     )
-    _, st, sv, nc, _bv = coll.fine[0]
+    st, sv, nc = (coll.fine[0][1][k] for k in ("st", "sv", "nc"))
     assert "A" not in st and st["B"] == (7.0, 7.0)
     assert nc["A"] == (1, 0, 0, 0) and nc["B"] == (1, 0, 0, 0)
 
@@ -509,19 +511,19 @@ def test_exotic_string_refs_withhold_interval_not_crash():
            b'<c r="B1"><v>7</v></c></row></sheetData>'
     coll = _IntervalStatsCollector(b"", sst=["x"], date_styles=frozenset())
     coll.on_piece(huge, True)  # must not raise
-    assert coll.fine[0][1:] == (None, None, None, None)
+    assert coll.fine[0][1] == dict.fromkeys(SI.SECTION_KEYS)
 
     noheap = b'<sheetData><row r="1"><c r="A1" t="s"><v>0</v></c>'\
              b'<c r="B1"><v>7</v></c></row></sheetData>'
     coll = _IntervalStatsCollector(b"", sst=None, date_styles=frozenset())
     coll.on_piece(noheap, True)
-    assert coll.fine[0][1:] == (None, None, None, None)
+    assert coll.fine[0][1] == dict.fromkeys(SI.SECTION_KEYS)
 
     oor = b'<sheetData><row r="1"><c r="A1" t="s"><v>5</v></c>'\
           b'<c r="B1"><v>7</v></c></row></sheetData>'
     coll = _IntervalStatsCollector(b"", sst=["only"], date_styles=frozenset())
     coll.on_piece(oor, True)
-    assert coll.fine[0][1:] == (None, None, None, None)
+    assert coll.fine[0][1] == dict.fromkeys(SI.SECTION_KEYS)
 
     # negative ref WRAPS in the reader (no error): bounds stay faithful
     # to the wrapped value, claims survive
@@ -529,7 +531,7 @@ def test_exotic_string_refs_withhold_interval_not_crash():
           b'<c r="B1"><v>7</v></c></row></sheetData>'
     coll = _IntervalStatsCollector(b"", sst=["w", "z"], date_styles=frozenset())
     coll.on_piece(neg, True)
-    _, st, sv, nc, _bv = coll.fine[0]
+    st, sv, nc = (coll.fine[0][1][k] for k in ("st", "sv", "nc"))
     assert sv["A"] == ("z", "z") and st["B"] == (7.0, 7.0)
 
     # ADVICE r14 medium: a negative ref whose MAGNITUDE exceeds the heap
@@ -541,7 +543,7 @@ def test_exotic_string_refs_withhold_interval_not_crash():
              b'<c r="B1"><v>7</v></c></row></sheetData>'
     coll = _IntervalStatsCollector(b"", sst=["w", "z"], date_styles=frozenset())
     coll.on_piece(negoor, True)  # must not raise
-    assert coll.fine[0][1:] == (None, None, None, None)
+    assert coll.fine[0][1] == dict.fromkeys(SI.SECTION_KEYS)
 
     # ADVICE r14 low: a lone-surrogate heap entry strictly BETWEEN the
     # min/max entries used to leave eager claims standing (only the two
@@ -556,7 +558,7 @@ def test_exotic_string_refs_withhold_interval_not_crash():
         b"", sst=["a", "m\ud800m", "z"], date_styles=frozenset()
     )
     coll.on_piece(midsur, True)
-    assert coll.fine[0][1:] == (None, None, None, None)
+    assert coll.fine[0][1] == dict.fromkeys(SI.SECTION_KEYS)
 
 
 def test_deferred_negative_ref_withholds_interval():
@@ -577,7 +579,7 @@ def test_deferred_negative_ref_withholds_interval():
                                    defer_strings=True)
     coll.on_piece(neg, True)
     _resolve_deferred_strings([coll], iter(["w", "z"]))
-    assert coll.fine[0][1:] == (None, None, None, None)
+    assert coll.fine[0][1] == dict.fromkeys(SI.SECTION_KEYS)
 
     ok_iv = b'<sheetData><row r="1"><c r="A1" t="s"><v>1</v></c>'\
             b'<c r="B1"><v>7</v></c></row></sheetData>'
@@ -585,5 +587,5 @@ def test_deferred_negative_ref_withholds_interval():
                                    defer_strings=True)
     coll.on_piece(ok_iv, True)
     _resolve_deferred_strings([coll], iter(["w", "z"]))
-    _, st, sv, nc, _bv = coll.fine[0]
+    st, sv, nc = (coll.fine[0][1][k] for k in ("st", "sv", "nc"))
     assert sv["A"] == ("z", "z") and st["B"] == (7.0, 7.0)

@@ -35,9 +35,13 @@ def _read(spark, path, **options):
 
 
 # -- S1/S7/S13: byte-for-byte replay of the reference's demo golden output
-#    (/root/reference/docker-demo/README.md:44-58) --
+#    (docker-demo/README.md:44-58) over a hand-built copy of its workbook
+#    (tests/fixtures/build_demo_fixture.py) --
+DEMO_XLSX = os.path.join(os.path.dirname(__file__), "fixtures", "demo_test.xlsx")
+
+
 def test_demo_replay(sr):
-    df = _read(sr, "/root/reference/docker-demo/test.xlsx")
+    df = _read(sr, DEMO_XLSX)
     assert [(f.name, f.dataType.simpleString()) for f in df.schema.fields] == [
         ("Name", "string"),
         ("Age", "double"),

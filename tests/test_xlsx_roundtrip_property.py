@@ -306,7 +306,7 @@ def test_retrofit_and_pruning_roundtrip_property(
     with zipfile.ZipFile(path) as zf:
         pts = SI.decode_split_index(zf, "xl/worksheets/sheet1.xml")
         assert pts is not None and pts[-1][1] == n_rows + 1
-        stats = SI.decode_interval_stats(zf, "xl/worksheets/sheet1.xml", pts)
+        stats = SI.decode_interval_sections(zf, "xl/worksheets/sheet1.xml", pts).get("st")
 
     P._SST_LAZY_CACHE.clear()
     _, single = _read_all_opts(path, threads="1")

@@ -92,7 +92,7 @@ def test_stats_withheld_for_intervals_with_inline_string_cells(strcell_xlsx):
     column even though the cell regex can parse it (ADVICE r12)."""
     with zipfile.ZipFile(strcell_xlsx) as zf:
         pts = SI.decode_split_index(zf, SHEET)
-        st = SI.decode_interval_stats(zf, SHEET, pts)
+        st = SI.decode_interval_sections(zf, SHEET, pts).get("st")
     assert st is not None and "A" in st
     # Exactly the interval(s) containing row 100001 claim nothing; the
     # early, clean intervals still carry stats (pruning stays useful).
@@ -126,7 +126,7 @@ def test_publish_index_shedding_does_not_mutate_caller_dicts():
         "xl/worksheets/sheet2.xml": {
             "n": 999,
             "points": [(50, 5), (100, 10)],
-            "stats": {"A": [1.0, 2.0, 3.0, 4.0, 5.0, 6.0]},
+            "sections": {"st": {"A": [1.0, 2.0, 3.0, 4.0, 5.0, 6.0]}},
         }
     }
     stats_before = copy.deepcopy(stats)
@@ -136,7 +136,7 @@ def test_publish_index_shedding_does_not_mutate_caller_dicts():
         zf.writestr("x", b"")
         _publish_index(
             zf, SHEET, pts, 20_000, 20_000, None, 0, 0,
-            stats=stats, extra_sheets=extra,
+            sections={"st": stats}, extra_sheets=extra,
         )
         assert zf.comment.startswith(SI.MAGIC)  # shedding succeeded
     assert stats == stats_before

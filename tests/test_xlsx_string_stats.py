@@ -145,8 +145,8 @@ def test_bound_helpers():
 def test_sv_present_ordered_and_truncated(strstats_xlsx):
     with zipfile.ZipFile(strstats_xlsx) as zf:
         pts = SI.decode_split_index(zf, SHEET)
-        sv = SI.decode_interval_string_stats(zf, SHEET, pts)
-        st = SI.decode_interval_stats(zf, SHEET, pts)
+        secs = SI.decode_interval_sections(zf, SHEET, pts)
+    sv, st = secs.get("sv"), secs.get("st")
     assert sv is not None and "A" in sv and "B" in sv and "C" in sv
     assert st is not None and "D" in st  # numeric claims coexist
     assert len(sv["A"]) == len(pts)
@@ -283,9 +283,10 @@ def test_garbage_sv_ignored_independently_of_st(strstats_xlsx, tmp_path):
             zf.comment = SI.MAGIC + json.dumps(payload2).encode()
         with zipfile.ZipFile(p) as zf:
             pts = SI.decode_split_index(zf, SHEET)
-            assert SI.decode_interval_string_stats(zf, SHEET, pts) is None
-            # numeric section survives sv garbage untouched
-            assert SI.decode_interval_stats(zf, SHEET, pts) is not None
+            secs = SI.decode_interval_sections(zf, SHEET, pts)
+        assert secs.get("sv") is None
+        # numeric section survives sv garbage untouched
+        assert secs.get("st") is not None
         got = sorted(_collect(p, [LessThan(("key",), "k0000800")]), key=str)
         assert got == base
 
@@ -336,7 +337,7 @@ def test_sink_authors_string_stats(spark, tmp_path):
     part = glob.glob(out + "/*.xlsx")[0]
     with zipfile.ZipFile(part) as zf:
         pts = SI.decode_split_index(zf, SHEET)
-        sv = SI.decode_interval_string_stats(zf, SHEET, pts)
+        sv = SI.decode_interval_sections(zf, SHEET, pts).get("sv")
     assert sv is not None and "A" in sv
     df = read_xlsx(spark, part, where="uid = 'u00149000'")
     rows = df.collect()
@@ -375,8 +376,8 @@ def test_stride_coarsened_stats_read_exact_and_still_prune(
 
     with zipfile.ZipFile(p) as zf:
         pts = SI.decode_split_index(zf, SHEET)
-        sv = SI.decode_interval_string_stats(zf, SHEET, pts)
-        st = SI.decode_interval_stats(zf, SHEET, pts)
+        secs = SI.decode_interval_sections(zf, SHEET, pts)
+    sv, st = secs.get("sv"), secs.get("st")
     assert sv is not None and len(sv["A"]) == len(pts)  # re-expanded
     assert st is not None and len(st["D"]) == len(pts)
 
@@ -399,8 +400,8 @@ def test_stride_coarsened_stats_read_exact_and_still_prune(
             zf.comment = SI.MAGIC + json.dumps(payload3).encode()
         with zipfile.ZipFile(p) as zf:
             pts = SI.decode_split_index(zf, SHEET)
-            assert SI.decode_interval_string_stats(zf, SHEET, pts) is None, bad_q
-            assert SI.decode_interval_stats(zf, SHEET, pts) is None, bad_q
+            secs = SI.decode_interval_sections(zf, SHEET, pts)
+        assert secs.get("sv") is None and secs.get("st") is None, bad_q
         got = sorted(
             _collect(p, [EqualTo(("key",), f"k{N - 500:07d}")]), key=str
         )
