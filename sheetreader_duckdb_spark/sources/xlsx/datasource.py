@@ -1145,15 +1145,10 @@ class SheetReaderReader(DataSourceReader):
                 return
             except P._FastPathUnsupported:
                 pass
-        # Row path (expat / coerce / inline strings): chunk round-robin
-        # sharded like the columnar path (VERDICT r8 task 2) — each shard
-        # cell-parses only its assigned chunks and row-counts the rest.
-        # Namespace-prefixed documents shard too since r10 (per-prefix
-        # compiled patterns); tier-3 documents shard namespace-
-        # agnostically since r11 (see XlsxWorkbook.iter_rows). Interval
-        # pruning applies here too (r11): the typed inline-strings read
-        # skips stats-proven-empty intervals; coerce reads are
-        # all-VARCHAR, where numeric pruning can't apply by construction.
+        # Row path (expat / coerce / inline strings): sharded through the
+        # same chunk protocol as the columnar path (XlsxWorkbook.iter_rows).
+        # The typed inline-strings read skips stats-proven-empty
+        # intervals; coerce reads are never pruned (see _read_rows).
         yield from self._read_rows(
             partition.path, file_schema, keep,
             partition.shard, partition.n_shards, partition.filters,
@@ -1200,11 +1195,9 @@ class SheetReaderReader(DataSourceReader):
                 arrays = [pa.array(columns[i], type=arrow_type[col_types[i]]) for i in range(n_cols)]
                 return pa.RecordBatch.from_arrays(arrays, names=[f.name for f in self.schema.fields])
 
-            # Smaller chunks when sharded → even round-robin load balance
-            # (same policy as _read_columnar). Interval pruning mirrors
-            # the columnar path: stats-proven-empty intervals are never
-            # inflated (only reachable with typed columns, i.e. the
-            # inline-strings read — coerce output is all VARCHAR).
+            # Interval pruning mirrors the columnar path: stats-proven-
+            # empty intervals are never inflated (only reachable with
+            # typed columns, i.e. the inline-strings read).
             skip_ivals: frozenset = frozenset()
             # Coerce reads are excluded from pruning entirely (r12):
             # under coerce_to_string NUMERIC/BOOL/DATE cells decode to
@@ -1220,11 +1213,9 @@ class SheetReaderReader(DataSourceReader):
                     wb, sheet.path, SI.decode_split_index(wb.zf, sheet.path),
                     filters, self.schema, file_schema.names,
                 ) or frozenset()
-            cb = (1 << 20) if n_shards > 1 else (4 << 20)
             for cells in wb.iter_rows(
                 sheet, skip_rows=file_schema.skip_rows,
-                chunk_bytes=cb, shard=shard, n_shards=n_shards,
-                skip_intervals=skip_ivals,
+                shard=shard, n_shards=n_shards, skip_intervals=skip_ivals,
             ):
                 current_row += 1
                 row = [None] * n_cols
@@ -1275,10 +1266,13 @@ class SheetReaderReader(DataSourceReader):
     ):
         """Regex-scan chunks into per-column raw byte lists; type with Arrow.
 
-        Cell semantics identical to _read_rows (SURVEY.md §1.4): absent /
-        T_NONE / T_ERROR / type-mismatched cells → NULL. Irregular chunks
-        (formulas, attr reordering) are parsed with the expat fragment
-        fallback and converted row-wise, then emitted as their own batch —
+        The chunks come from ``XlsxWorkbook._drive_chunks``, the chunk
+        protocol ``_read_rows`` uses too; this method supplies only the
+        per-chunk ``step``. Cell semantics identical to _read_rows
+        (SURVEY.md §1.4): absent / T_NONE / T_ERROR / type-mismatched
+        cells → NULL. Irregular chunks and rows (formulas, attr
+        reordering) go through the expat walker (``parser._fragment_rows``)
+        and are converted row-wise, then emitted as their own batch —
         correctness never depends on the fast path matching.
 
         ``keep`` maps file column index → output slot (None = pruned). A
@@ -1352,14 +1346,23 @@ class SheetReaderReader(DataSourceReader):
                     elif code == 1:  # DOUBLE
                         arrays.append(s.cast(pa.float64()))
                     elif code == 2:  # BOOLEAN (b-cell payload: 1/0/true/false)
+                        truth = pc.is_in(
+                            pc.utf8_trim_whitespace(s),
+                            value_set=pa.array(P.BOOL_TRUE_TEXTS),
+                        )
+                        if pc.any(pc.match_substring(s, "&")).as_py():
+                            # Entity-encoded payloads take the scalar rule.
+                            truth = pa.array(
+                                [
+                                    P._bool_payload(v) if v and b"&" in v else t
+                                    for v, t in zip(raw_cols[i], truth.to_pylist())
+                                ],
+                                type=pa.bool_(),
+                            )
                         # is_in maps null→false; if_else restores the nulls.
                         arrays.append(
                             pc.if_else(
-                                pc.is_valid(s),
-                                pc.is_in(
-                                    pc.utf8_trim_whitespace(s),
-                                    value_set=pa.array(P.BOOL_TRUE_TEXTS),
-                                ),
+                                pc.is_valid(s), truth,
                                 pa.scalar(None, type=pa.bool_()),
                             )
                         )
@@ -1382,7 +1385,7 @@ class SheetReaderReader(DataSourceReader):
 
             def fragment_batch(work: bytes):
                 """Slow-path conversion of one irregular chunk."""
-                rows = P._fragment_rows(work, colmap, date_styles, wb.date1904)
+                rows = P._fragment_rows(work, date_styles, wb.date1904)
                 typed_cols: list[list] = [[] for _ in range(n_cols)]
                 shared = wb.shared_strings
                 for cells in rows:
@@ -1416,186 +1419,124 @@ class SheetReaderReader(DataSourceReader):
             skip_n = file_schema.skip_rows
             batch_rows = 0
             raw_cols: list[list] = [[] for _ in range(n_cols)]
-            chunk_idx = 0
-            rows_seen = 0  # global row ordinal, identical across all shards
-            pfx = None  # element prefix, detected from the worksheet opener
-            pr = None
 
-            def _process(work: bytes):
-                """Parse one row-aligned chunk (identical semantics for the
-                sequential and the split-index acquisition below); yields
-                finished Arrow batches and mutates the enclosing scan state.
-                """
-                nonlocal batch_rows, raw_cols, chunk_idx, rows_seen, dense
-                assigned = (chunk_idx % n_shards) == shard
+            def flush():
+                nonlocal batch_rows, raw_cols
+                out = finalize(raw_cols)
+                raw_cols = [[] for _ in range(n_cols)]
+                batch_rows = 0
+                return out
+
+            def take_dense(dm):
+                """Append dense-row matches (tuples already in column
+                order) to the raw columns; yield every full batch."""
+                nonlocal batch_rows, raw_cols
+                slots = dense[1]
+                if len(slots) == 1:
+                    raw_cols[slots[0]].extend(dm)
+                else:
+                    # Column extract via itemgetter, NOT zip(*dm):
+                    # unpacking a million-tuple argument list measured
+                    # 3.5× slower than the per-column C-speed map
+                    # (partsupp 1T profile, r10).
+                    for j, out in enumerate(slots):
+                        raw_cols[out].extend(map(_op.itemgetter(j), dm))
+                batch_rows += len(dm)
+                while batch_rows >= opts.batch_size:
+                    take = opts.batch_size
+                    head = [c[:take] for c in raw_cols]
+                    raw_cols = [c[take:] for c in raw_cols]
+                    batch_rows -= take
+                    yield finalize(head)
+
+            def step(work: bytes, pr, first: bool, assigned: bool, ordinal: int):
+                """One row-aligned chunk into the raw columns: the chunk
+                step of ``XlsxWorkbook._drive_chunks``. Yields finished
+                Arrow batches, returns the chunk's row count."""
+                nonlocal batch_rows, dense
+                pfx = pr.pfx
                 # Dense-row fast path (parser.build_dense_row_re): one
-                # findall per chunk, tuples already in column order —
-                # no per-row regex, no per-cell Python. Only when the
-                # chunk's match count equals its row count (so any row
-                # deviating from the template shape falls back to the
-                # generic scan below, which produces identical cells).
+                # findall per chunk, tuples already in column order — no
+                # per-row regex, no per-cell Python. Only when the chunk's
+                # match count equals its row count, so any row deviating
+                # from the template falls back to the generic scan below,
+                # which produces identical cells.
                 if (
-                    assigned and dense and chunk_idx > 0
-                    and rows_seen >= skip_n
+                    dense and not first and ordinal >= skip_n
                     and not P.foreign_row_evidence(work, pfx)
                 ):
                     # One memchr pass in the steady case: every dense
-                    # match starts "<row " / "<row>", which cannot
-                    # match "<rowBreaks", so matches ≤ true rows ≤ the
-                    # raw "<row" prefix count — equality with the raw
-                    # count proves no rowBreaks AND all rows matched.
-                    # Only on mismatch pay the second pass to subtract
-                    # rowBreaks before deciding fallback. The
-                    # foreign_row_evidence guard (r11) keeps rows under
-                    # ANOTHER prefix from hiding behind that equality
-                    # (they match neither count) — evidence chunks fall
-                    # to the generic scan, which recounts exactly and
-                    # fragments.
+                    # match starts "<row " / "<row>", which cannot match
+                    # "<rowBreaks", so matches ≤ true rows ≤ the raw
+                    # "<row" prefix count — equality with the raw count
+                    # proves no rowBreaks AND all rows matched. Only on
+                    # mismatch pay the second pass to subtract rowBreaks.
+                    # The foreign_row_evidence guard keeps rows under
+                    # ANOTHER prefix from hiding behind that equality.
                     n_raw = work.count(pr.row_start)
                     dm = dense[0].findall(work)
-                    n_rows_chunk = (
+                    n = (
                         n_raw
                         if len(dm) == n_raw
                         else n_raw - work.count(pr.rowb_start)
                     )
-                    if len(dm) == n_rows_chunk:
-                        chunk_idx += 1
-                        rows_seen += n_rows_chunk
-                        if len(dense[1]) == 1:
-                            raw_cols[dense[1][0]].extend(dm)
-                        else:
-                            # Column extract via itemgetter, NOT
-                            # zip(*dm): unpacking a million-tuple
-                            # argument list measured 3.5× slower
-                            # than the per-column C-speed map
-                            # (partsupp 1T profile, r10).
-                            for j, out in enumerate(dense[1]):
-                                raw_cols[out].extend(
-                                    map(_op.itemgetter(j), dm)
-                                )
-                        batch_rows += len(dm)
-                        while batch_rows >= opts.batch_size:
-                            take = opts.batch_size
-                            head = [c[:take] for c in raw_cols]
-                            raw_cols = [c[take:] for c in raw_cols]
-                            batch_rows -= take
-                            yield finalize(head)
-                        return
-                if assigned or chunk_idx == 0:
-                    # Chunk 0 is checked by EVERY shard so the whole-file
-                    # fallback decision is consistent across shards.
-                    row_matches = pr.row_re.findall(work)
-                    n_rows_chunk = len(pr.row_count_re.findall(work))
-                    if P.foreign_row_evidence(work, pfx):
-                        # Mixed-prefix chunk (r11): the exact any-prefix
-                        # count routes it to the fragment parser (mid-
-                        # file) or tier 3 (chunk 0) instead of silently
-                        # dropping the foreign-prefix rows.
-                        n_rows_chunk = P.count_any_row_starts(work)
-                    if chunk_idx == 0 and (
-                        len(row_matches) != n_rows_chunk
-                        or (
-                            not row_matches
-                            and P._ANY_ROW_RE.search(work)
-                        )
+                    if len(dm) == n:
+                        yield from take_dense(dm)
+                        return n
+                row_matches = pr.row_re.findall(work)
+                # Mixed-prefix chunks get the exact any-prefix count, which
+                # routes them to the fragment walk (mid-file) or tier 3
+                # (chunk 0) instead of silently dropping foreign rows.
+                n = P._chunk_rows(work, pfx)
+                if first:
+                    if len(row_matches) != n or (
+                        not row_matches and P._ANY_ROW_RE.search(work)
                     ):
                         # Second arm: row tags exist but the detected
                         # prefix's scanner sees none (mixed/undetected
-                        # prefixes) — without the check such documents
-                        # silently read as EMPTY (r9 fix, generalized
-                        # for prefix support in r10; mirrored in
-                        # parser._scan_chunk). Deterministic across
-                        # shards: every shard scans chunk 0.
+                        # prefixes) — without it such documents would
+                        # silently read as EMPTY (mirrored in
+                        # parser._scan_chunk).
                         raise P._FastPathUnsupported
-                    chunk_regular = len(row_matches) == n_rows_chunk
-                    if chunk_idx == 0 and chunk_regular:
-                        # Template = chunk 0's last non-empty row (every
-                        # shard sees chunk 0, so the decision — and the
-                        # compiled pattern — is identical across shards).
-                        tmpl = next(
-                            (b for b in reversed(row_matches) if b), b""
-                        )
-                        dense = P.build_dense_row_re(
-                            tmpl, keep, exp_codes, date_styles, pfx
-                        )
-                        # Dense-extract chunk 0 itself (only the owning
-                        # shard emits it): findall from the first kept
-                        # row's byte offset, so the ~chunk-size head of
-                        # the file skips the per-row cell regex too.
-                        # Guard and fallback are the same as any other
-                        # chunk — a non-matching row (e.g. a mid-chunk
-                        # irregular one) drops to the per-row loop
-                        # below, which produces identical cells.
-                        if assigned and dense and skip_n < n_rows_chunk:
-                            if skip_n:
-                                it = pr.row_count_re.finditer(work)
-                                for _ in range(skip_n):
-                                    next(it)
-                                off = next(it).start()
-                            else:
-                                off = 0
-                            dm = dense[0].findall(work, off)
-                            if len(dm) == n_rows_chunk - skip_n:
-                                chunk_idx += 1
-                                rows_seen += n_rows_chunk
-                                if len(dense[1]) == 1:
-                                    raw_cols[dense[1][0]].extend(dm)
-                                else:
-                                    # itemgetter, not zip(*dm) — see
-                                    # the steady-state dense site.
-                                    for j, out in enumerate(dense[1]):
-                                        raw_cols[out].extend(
-                                            map(_op.itemgetter(j), dm)
-                                        )
-                                batch_rows += len(dm)
-                                while batch_rows >= opts.batch_size:
-                                    take = opts.batch_size
-                                    head = [c[:take] for c in raw_cols]
-                                    raw_cols = [c[take:] for c in raw_cols]
-                                    batch_rows -= take
-                                    yield finalize(head)
-                                return
-                else:
-                    if P.foreign_row_evidence(work, pfx):
-                        n_rows_chunk = P.count_any_row_starts(work)
-                    else:
-                        n_rows_chunk = P.count_row_starts(work, pfx)
-                    row_matches = []
-                    chunk_regular = True
-                chunk_idx += 1
-
+                    # Template = chunk 0's last non-empty row (every shard
+                    # sees chunk 0, so the compiled pattern is identical
+                    # across shards).
+                    tmpl = next((b for b in reversed(row_matches) if b), b"")
+                    dense = P.build_dense_row_re(
+                        tmpl, keep, exp_codes, date_styles, pfx
+                    )
+                    # Dense-extract chunk 0 itself (only the owning shard
+                    # emits it): findall from the first kept row's byte
+                    # offset. A non-matching row drops to the per-row
+                    # loop below, which produces identical cells.
+                    if assigned and dense and skip_n < n:
+                        off = 0
+                        if skip_n:
+                            it = pr.row_count_re.finditer(work)
+                            for _ in range(skip_n):
+                                next(it)
+                            off = next(it).start()
+                        dm = dense[0].findall(work, off)
+                        if len(dm) == n - skip_n:
+                            yield from take_dense(dm)
+                            return n
                 if not assigned:
-                    rows_seen += n_rows_chunk
-                    return
-
-                if not chunk_regular:
+                    return n
+                if len(row_matches) != n:
                     # Irregular mid-file chunk owned by this shard.
                     if batch_rows:
-                        yield finalize(raw_cols)
-                        raw_cols = [[] for _ in range(n_cols)]
-                        batch_rows = 0
+                        yield flush()
                     frag, n_frag = fragment_batch(work)
-                    drop = min(max(0, skip_n - rows_seen), n_frag)
-                    rows_seen += n_rows_chunk
-                    part = frag.slice(drop)
+                    part = frag.slice(min(max(0, skip_n - ordinal), n_frag))
                     if part.num_rows:
                         yield part
-                    return
-
-                for body in row_matches:
-                    ordinal = rows_seen
-                    rows_seen += 1
-                    if ordinal < skip_n:
-                        continue
+                    return n
+                for body in row_matches[max(0, skip_n - ordinal):]:
                     ms = pr.cell_re.findall(body)
                     if len(ms) != len(pr.cell_count_re.findall(body)):
-                        # Irregular row: flush and defer the whole chunk's
-                        # remainder to the fragment path is overkill —
-                        # handle just this row via fragment parse.
+                        # Irregular row: fragment-parse just this row.
                         if batch_rows:
-                            yield finalize(raw_cols)
-                            raw_cols = [[] for _ in range(n_cols)]
-                            batch_rows = 0
+                            yield flush()
                         frag, _n = fragment_batch(
                             b"<" + pfx + b"row>" + body + b"</" + pfx + b"row>"
                         )
@@ -1637,117 +1578,24 @@ class SheetReaderReader(DataSourceReader):
                         raw_cols[i].append(row[i])
                     batch_rows += 1
                     if batch_rows >= opts.batch_size:
-                        yield finalize(raw_cols)
-                        raw_cols = [[] for _ in range(n_cols)]
-                        batch_rows = 0
+                        yield flush()
+                return n
 
-            # Split-index acquisition (splitindex module doc): when our
-            # writer left Z_FULL_FLUSH points + the offset/row index in the
-            # archive comment, each shard seeks straight to its intervals
-            # and inflates ONLY those — total decompression returns to 1x
-            # the file instead of n_shards x (the one per-shard fixed cost
-            # of the chunk round-robin design that did not divide). The
-            # index is untrusted input: decode validates structure, and
-            # every materialized interval's parsed row count is checked
-            # against the recorded one — a lying index fails loudly, never
-            # silently wrong. Single-shard reads keep the sequential scan
-            # (same bytes, no seek benefit).
-            split_pts = (
-                SI.decode_split_index(wb.zf, sheet.path)
-                if (n_shards > 1 or filters)
-                else None
+            # Interval pruning: intervals the split index's stats
+            # prove empty of matches are never inflated. The downstream
+            # Arrow mask would have dropped every row in them anyway.
+            skip_ivals: frozenset = frozenset()
+            if filters:
+                skip_ivals = _interval_skips(
+                    wb, sheet.path, SI.decode_split_index(wb.zf, sheet.path),
+                    filters, self.schema, file_schema.names,
+                ) or frozenset()
+            yield from wb._drive_chunks(
+                sheet, step, shard, n_shards, skip_ivals
             )
-            # Interval pruning (r11): when the index carries per-interval
-            # min/max stats and this query pushed filters, intervals the
-            # stats prove empty of matches are never inflated — treated
-            # exactly like unassigned intervals (the recorded count keeps
-            # the global row ordinal). The downstream Arrow mask would
-            # have dropped every row in them anyway; the stats only
-            # decide WHERE the dropping happens (before the byte level).
-            skip_ivals = _interval_skips(
-                wb, sheet.path, split_pts, filters, self.schema,
-                file_schema.names,
-            ) or frozenset()
-            if split_pts and n_shards == 1 and not skip_ivals:
-                # Single-shard with nothing to prune: the sequential scan
-                # reads the same bytes without per-interval seeks.
-                split_pts = None
-            if split_pts:
-                for i, work, rows_in in SI.iter_intervals(
-                    wb.path, wb.zf, sheet.path, split_pts, shard, n_shards,
-                    skip=skip_ivals,
-                ):
-                    if work is None:
-                        # Unassigned interval: bytes untouched — the
-                        # recorded count keeps the global row ordinal.
-                        rows_seen += rows_in
-                        chunk_idx += 1
-                        continue
-                    if i == 0:
-                        pfx = P.detect_row_prefix(work)
-                        if pfx is None:
-                            raise P._FastPathUnsupported
-                        pr = P.prefix_res(pfx)
-                    before_seen = rows_seen
-                    yield from _process(work)
-                    if rows_seen - before_seen != rows_in:
-                        raise ValueError(
-                            "sheetreader: split-index row count mismatch"
-                            f" in {sheet.path} interval {i} (parsed"
-                            f" {rows_seen - before_seen}, index says"
-                            f" {rows_in}) — the archive comment is stale"
-                            " or corrupt; remove it or rewrite the file"
-                        )
-            else:
-                # Smaller chunks when sharded → even round-robin load balance.
-                chunk_bytes = (1 << 20) if n_shards > 1 else (4 << 20)
-                with wb.zf.open(sheet.path) as f:
-                    buf = b""
-                    while True:
-                        data = f.read(chunk_bytes)
-                        if data:
-                            buf += data
-                            if pfx is None:
-                                # Prefixed worksheets (<x:row>) scan and shard
-                                # on this same columnar tier (r10; previously
-                                # they defeated to the single-stream whole-file
-                                # walk — the reference parallelizes every
-                                # document shape). Stream-deterministic: every
-                                # shard reads the same head bytes.
-                                pfx = P.detect_row_prefix(buf)
-                                if pfx is None:
-                                    if len(buf) < (64 << 20):
-                                        continue
-                                    raise P._FastPathUnsupported
-                                pr = P.prefix_res(pfx)
-                            cut = buf.rfind(pr.row_end)
-                            if cut == -1:
-                                if len(buf) < (64 << 20):
-                                    continue
-                                if rows_seen:
-                                    # Batches may already be downstream; falling
-                                    # back would re-parse from the start and
-                                    # duplicate rows — hard error instead.
-                                    raise ValueError(
-                                        "sheetreader: row exceeds 64MB without a "
-                                        f"</row> boundary mid-file in {sheet.path}"
-                                    )
-                                raise P._FastPathUnsupported  # stream-deterministic:
-                                # every shard sees the same bytes → same decision
-                            end = cut + len(pr.row_end)
-                            work, buf = buf[:end], buf[end:]
-                        else:
-                            if pfx is None:
-                                pfx = P.detect_row_prefix(buf) or b""
-                                pr = P.prefix_res(pfx)
-                            work, buf = buf, b""
-
-
-                        yield from _process(work)
-                        if not data:
-                            break
             if batch_rows:
                 yield finalize(raw_cols)
+
 
 class SheetReaderStreamReader(SimpleDataSourceStreamReader):
     """File-arrival streaming ingest of spreadsheets (SURVEY.md §7 PR6).
@@ -1876,9 +1724,10 @@ def row_count(
         # self-validates (r11 review: an unvalidated comment could go
         # stale while remaining structurally decodable): interval 0 is
         # inflated and its parsed row count checked against the recorded
-        # one — the same check every sharded read applies — and ANY
-        # disagreement (count, zlib error, anything) falls back to the
-        # exact streaming count.
+        # one — the same check every sharded read applies — and a
+        # disagreement (count mismatch, inflate failure, unreadable local
+        # header) falls back to the exact streaming count. Any other
+        # error is a bug and propagates.
         pts = SI.decode_split_index(wb.zf, sheet.path)
         if pts is not None:
             try:
@@ -1888,7 +1737,7 @@ def row_count(
                     if P.count_any_row_starts(work) != rows_in:
                         raise ValueError("interval-0 count mismatch")
                 return max(0, pts[-1][1] - schema.skip_rows)
-            except Exception:
+            except (ValueError, OSError):
                 pass  # stale/corrupt index: the streaming count is exact
         return max(0, wb.count_rows(sheet) - schema.skip_rows)
 

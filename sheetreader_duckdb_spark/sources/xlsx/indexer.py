@@ -43,7 +43,7 @@ import zipfile
 from .parser import (
     _SST_PFX_RE,
     XlsxWorkbook,
-    bool_cell,
+    _bool_payload,
     count_row_starts,
     detect_row_prefix,
     prefix_res,
@@ -407,7 +407,7 @@ def _analyze_interval(
     ncounts: dict = {}
     # Boolean VALUE counts per letter (r15, the `bt` section):
     # [n_true, n_false] over the interval's t="b" cells, truth decided by
-    # the reader's own rule (parser.bool_cell). A payload that is not
+    # the reader's own rule (parser._bool_payload). A payload that is not
     # UTF-8 makes every read tier raise, so — error parity, as for an
     # unparseable number — the whole interval is withheld.
     bcounts: dict = {}
@@ -434,7 +434,7 @@ def _analyze_interval(
         elif v and t_attr == b"b":
             fam = 2
             try:
-                truth = bool_cell(v.decode("utf-8"))
+                truth = _bool_payload(v)
             except UnicodeDecodeError:
                 return withheld
             bcounts.setdefault(letters, [0, 0])[0 if truth else 1] += 1

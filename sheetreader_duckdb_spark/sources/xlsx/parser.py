@@ -24,6 +24,7 @@ ECMA-376 §18.17.4.1) → int(secs/86400).
 
 from __future__ import annotations
 
+import itertools
 import os
 import re
 import zipfile
@@ -57,6 +58,14 @@ BOOL_TRUE_TEXTS = ("1", "true", "TRUE")
 
 def bool_cell(text: str) -> bool:
     return text.strip() in BOOL_TRUE_TEXTS
+
+
+def _bool_payload(raw: bytes) -> bool:
+    """``bool_cell`` for a raw t="b" ``<v>`` span, as the byte scanners
+    and the ``bt`` author see it: strict UTF-8 (UnicodeDecodeError on
+    malformed bytes) and entities decoded as expat decodes them, so
+    ``&#160;true`` is true here exactly as in the expat walker."""
+    return bool_cell(_unescape(raw) if b"&" in raw else raw.decode("utf-8"))
 
 
 # Tag matching is namespace-insensitive: real-world writers vary the
@@ -804,7 +813,7 @@ class XlsxWorkbook:
                     buf += data
                     pfx = detect_row_prefix(buf)
                     if pfx is None:
-                        if len(buf) < (64 << 20):
+                        if len(buf) < _MAX_ROW_BYTES:
                             continue  # keep buffering until the opener shows
                         # No worksheet opener in 64 MB (malformed /
                         # truncated document): stop accumulating — and
@@ -829,7 +838,7 @@ class XlsxWorkbook:
         self,
         sheet: SheetInfo,
         skip_rows: int = 0,
-        chunk_bytes: int = 4 << 20,
+        chunk_bytes: int | None = None,
         shard: int = 0,
         n_shards: int = 1,
         skip_intervals: "frozenset[int]" = frozenset(),
@@ -842,126 +851,111 @@ class XlsxWorkbook:
         Empty rows between data rows yield empty lists; absent cells are
         simply not present (NULL semantics, SURVEY.md §1.4).
 
-        Three-tier parse (fastest applicable wins, identical cell semantics —
-        the Spark answer to the reference core's specialized C++ scanner,
+        Three tiers, fastest applicable first, one set of cell semantics
+        (the Spark answer to the reference core's specialized C++ scanner,
         SURVEY.md §4.2):
-        1. regex scan over decompressed chunks — conventional attribute order
-           (r, s, t), cells with only ``<v>`` children; C-speed scanning.
-           Namespace-PREFIXED worksheets (``<x:row>``) scan on this same
-           tier through per-prefix compiled patterns (r10; the prefix is
-           detected once from the worksheet opener — previously these
-           defeated to tier 3 and lost all intra-file parallelism, while
-           the reference parallelizes every document shape,
-           sheetreader_extension.cpp:775);
-        2. per-chunk expat fallback for irregular fragments (formulas,
-           reordered attributes, inline strings — the latter still raise the
-           reference's error); mid-file fragments get synthetic xmlns
-           declarations for any prefixes they carry;
-        3. whole-file expat fallback when the document shape defeats chunked
-           scanning entirely (mixed prefixes, no detectable opener).
+        1. ``_scan_chunk``'s regex scan over the ``</row>``-aligned chunks
+           of ``_drive_chunks`` — conventional attribute order (r, s, t),
+           cells with only ``<v>`` children, any single element prefix
+           (``<x:row>`` scans through per-prefix compiled patterns);
+        2. inside a chunk the regex cannot read (formulas, reordered
+           attributes, inline strings, rows under a second prefix), the
+           expat walker ``_walk_cells`` over that chunk as a fragment;
+        3. when chunk 0 defeats the regex scan (mixed prefixes, no
+           detectable opener), ``_iter_rows_expat_sharded``: the same
+           walker over namespace-agnostic chunks, or over the whole member
+           when sequential.
 
-        ``shard``/``n_shards`` (VERDICT r8 task 2): chunk round-robin
-        sharding for the row path — this shard cell-parses only its
-        assigned ``</row>``-aligned chunks and row-COUNTS the rest
-        (memchr-speed), so the union of shards is exactly the file's rows
-        and skip_rows stays globally consistent. Tier 3 documents shard
-        too (r11): the same chunk protocol with NAMESPACE-AGNOSTIC
-        machinery — chunks cut at any-prefix row ends, assigned chunks
-        expat-parsed as wrapped fragments (local-name keyed), unassigned
-        chunks row-counted with the any-prefix pattern. Only a document
-        with no findable sheetData opener still parses whole-file on
-        shard 0. The fallback DECISION is deterministic: every shard
-        scans chunk 0 / the same head bytes, so all shards agree.
-
-        ``skip_intervals`` (r11): split-index interval ordinals the
-        caller's filter statistics prove empty — treated exactly like
-        unassigned intervals on the split acquisition (never inflated;
-        ordinals advance by the recorded counts). Ignored when the scan
-        is sequential (no usable index).
+        ``shard``/``n_shards``: chunk round-robin sharding. This shard
+        cell-parses only its assigned chunks and row-counts the rest, so
+        the union of shards is exactly the file's rows and ``skip_rows``
+        stays globally consistent. ``skip_intervals`` holds split-index
+        interval ordinals the caller's filter statistics prove empty;
+        ``_drive_chunks`` treats them like unassigned intervals.
         """
+        date_styles = self.date_styles
+        colmap: dict[bytes, int] = {}
+
+        def step(work, pr, first, assigned, ordinal):
+            rows = _scan_chunk(
+                work, colmap, date_styles, first, self.date1904,
+                self.allow_inline, pr.pfx,
+            )
+            if assigned:
+                yield from rows[max(0, skip_rows - ordinal):]
+            return len(rows)
+
         try:
-            yield from self._iter_rows_fast(
-                sheet, skip_rows, chunk_bytes, shard, n_shards,
-                skip_intervals,
+            yield from self._drive_chunks(
+                sheet, step, shard, n_shards, skip_intervals, chunk_bytes
             )
             return
         except _FastPathUnsupported:
             pass  # raised only before the first row is yielded
         yield from self._iter_rows_expat_sharded(
-            sheet, skip_rows, chunk_bytes, shard, n_shards
+            sheet, skip_rows, chunk_bytes or _chunk_bytes(n_shards), shard,
+            n_shards,
         )
 
-    # -- tier 1/2: chunked regex scan with per-chunk expat fragments --------
-    def _iter_rows_fast(
+    def _drive_chunks(
         self,
         sheet: SheetInfo,
-        skip_rows: int,
-        chunk_bytes: int = 4 << 20,
+        step,
         shard: int = 0,
         n_shards: int = 1,
         skip_intervals: "frozenset[int]" = frozenset(),
-    ) -> Iterator[list[tuple[int, int, object]]]:
-        date_styles = self.date_styles
-        colmap: dict[bytes, int] = {}
-        first_chunk = True
-        yielded = False
+        chunk_bytes: int | None = None,
+    ):
+        """The chunk protocol of the fast tiers, written once: cut the
+        worksheet into ``</row>``-aligned chunks, hand chunk 0 and this
+        shard's chunks to ``step``, row-count the others, and yield what
+        ``step`` yields.
+
+        ``step(work, pr, first, assigned, ordinal)`` is a generator over
+        one chunk: ``pr`` is the document's ``_PrefixRes``, ``first`` marks
+        chunk 0 (scanned by EVERY shard, so the fallback decision and any
+        template built from it agree across shards), ``ordinal`` is the
+        global row ordinal at the chunk start, and its ``return`` value is
+        the chunk's parsed row count. It raises ``_FastPathUnsupported``
+        only on chunk 0; so does this method, only before the first row.
+
+        Acquisition: with a split index in the archive comment and either
+        several shards or intervals to prune, each shard seeks and
+        inflates only interval 0 and its own unpruned intervals
+        (``splitindex.iter_intervals``); skipped intervals advance the
+        ordinal by their recorded count. The index is untrusted: every
+        materialized interval's parsed count must equal the recorded one.
+        Otherwise the member streams sequentially in ``chunk_bytes``
+        reads (``_chunk_bytes`` by default), cut at the detected prefix's
+        last ``</row>``."""
         chunk_idx = 0
-        row_ord = 0  # global row ordinal, identical across all shards
-        pfx: bytes | None = None
+        ordinal = 0  # global row ordinal, identical across all shards
         pr: _PrefixRes | None = None
 
-        def _row_chunk(work: bytes):
-            """Scan one row-aligned chunk (identical semantics for both
-            acquisitions below); yields this shard's rows, counts all."""
-            nonlocal first_chunk, yielded, chunk_idx, row_ord
-            assigned = (chunk_idx % n_shards) == shard
+        def run(work: bytes):
+            nonlocal chunk_idx, ordinal
+            first = chunk_idx == 0
+            assigned = chunk_idx % n_shards == shard
             chunk_idx += 1
-            if not assigned and not first_chunk:
-                # Unassigned chunk: count rows only (memchr-speed) so
-                # skip_rows accounting matches the owning shard's view.
-                # Mixed-prefix chunks need the exact any-prefix count —
-                # ordinals must agree with the owning shard's fragment
-                # parse (r11).
-                if foreign_row_evidence(work, pfx or b""):
-                    row_ord += count_any_row_starts(work)
-                else:
-                    row_ord += count_row_starts(work, pfx)
-                return
-            # Chunk 0 is scanned by EVERY shard so the whole-file
-            # fallback decision (_FastPathUnsupported from chunk 0's
-            # shape) is consistent across shards; only the owning
-            # shard yields its rows.
-            rows = _scan_chunk(
-                work, colmap, date_styles, first_chunk, self.date1904,
-                self.allow_inline, pfx,
-            )
-            first_chunk = False
-            for cells in rows:
-                ordinal = row_ord
-                row_ord += 1
-                if ordinal < skip_rows or not assigned:
-                    continue
-                yielded = True
-                yield cells
+            if assigned or first:
+                n = yield from step(work, pr, first, assigned, ordinal)
+            else:
+                n = _chunk_rows(work, pr.pfx)
+            ordinal += n
+            return n
 
-        # Split-index acquisition (splitindex module doc): seek straight
-        # to this shard's intervals and inflate only those — the same
-        # 1x-total-decompression win the columnar tier gets, here for the
-        # coerce / user-typed / inline row paths. Untrusted-index
-        # discipline identical: structural validation on decode plus a
-        # per-interval parsed-vs-recorded row-count check.
-        split_pts = None
+        points = None
         if n_shards > 1 or skip_intervals:
             from sheetreader_duckdb_spark.sources.xlsx import splitindex as SI
 
-            split_pts = SI.decode_split_index(self.zf, sheet.path)
-        if split_pts:
+            points = SI.decode_split_index(self.zf, sheet.path)
+        if points:
             for i, work, rows_in in SI.iter_intervals(
-                self.path, self.zf, sheet.path, split_pts, shard, n_shards,
+                self.path, self.zf, sheet.path, points, shard, n_shards,
                 skip=skip_intervals,
             ):
                 if work is None:
-                    row_ord += rows_in
+                    ordinal += rows_in
                     chunk_idx += 1
                     continue
                 if i == 0:
@@ -969,64 +963,57 @@ class XlsxWorkbook:
                     if pfx is None:
                         raise _FastPathUnsupported
                     pr = prefix_res(pfx)
-                before = row_ord
-                yield from _row_chunk(work)
-                if row_ord - before != rows_in:
+                n = yield from run(work)
+                if n != rows_in:
                     raise ValueError(
                         "sheetreader: split-index row count mismatch"
-                        f" in {sheet.path} interval {i} (parsed"
-                        f" {row_ord - before}, index says {rows_in})"
-                        " — the archive comment is stale or corrupt;"
-                        " remove it or rewrite the file"
+                        f" in {sheet.path} interval {i} (parsed {n},"
+                        f" index says {rows_in}) — the archive comment is"
+                        " stale or corrupt; remove it or rewrite the file"
                     )
             return
+        chunk_bytes = chunk_bytes or _chunk_bytes(n_shards)
         with self.zf.open(sheet.path) as f:
             buf = b""
             while True:
                 data = f.read(chunk_bytes)
                 if data:
                     buf += data
-                    if pfx is None:
-                        # Detect the element prefix ONCE from the
-                        # worksheet opener (first read in practice):
-                        # prefixed documents (<x:row>) now scan and SHARD
-                        # on this same fast tier instead of defeating to
-                        # the single-stream whole-file walk (r10; the
-                        # reference parallelizes every document shape,
-                        # sheetreader_extension.cpp:775). Deterministic
-                        # across shards — same bytes, same answer.
+                    if pr is None:
+                        # The element prefix, detected once from the
+                        # worksheet opener: same bytes on every shard,
+                        # same answer.
                         pfx = detect_row_prefix(buf)
                         if pfx is None:
-                            if len(buf) < (64 << 20):
+                            if len(buf) < _MAX_ROW_BYTES:
                                 continue
-                            raise _FastPathUnsupported  # no opener in 64MB
+                            raise _FastPathUnsupported  # no opener
                         pr = prefix_res(pfx)
                     cut = buf.rfind(pr.row_end)
                     if cut == -1:
-                        if len(buf) < (64 << 20):
+                        if len(buf) < _MAX_ROW_BYTES:
                             continue
-                        if yielded or row_ord:
-                            # Falling back now would re-parse from the start
-                            # and duplicate already-consumed rows — hard error.
+                        if ordinal:
+                            # Falling back now would re-parse from the
+                            # start and duplicate rows already emitted.
                             raise ValueError(
                                 "sheetreader: row exceeds 64MB without a </row> "
                                 f"boundary mid-file in {sheet.path}"
                             )
-                        raise _FastPathUnsupported  # no row boundary in 64MB
-                    work, buf = buf[: cut + len(pr.row_end)], buf[cut + len(pr.row_end):]
+                        raise _FastPathUnsupported  # no row boundary
+                    end = cut + len(pr.row_end)
+                    work, buf = buf[:end], buf[end:]
                 else:
-                    if pfx is None:
-                        # Tiny sheet fully buffered before detection (or
-                        # an empty one): resolve now; no opener at all
-                        # means no rows under any prefix.
-                        pfx = detect_row_prefix(buf) or b""
-                        pr = prefix_res(pfx)
+                    if pr is None:
+                        # Tiny sheet fully buffered before detection, or
+                        # no opener at all: no rows under any prefix.
+                        pr = prefix_res(detect_row_prefix(buf) or b"")
                     work, buf = buf, b""
-                yield from _row_chunk(work)
+                yield from run(work)
                 if not data:
                     return
 
-    # -- tier 3 sharded: namespace-agnostic chunk protocol (r11) -------------
+    # -- tier 3: the expat walker, sharded over namespace-agnostic chunks ---
     def _iter_rows_expat_sharded(
         self,
         sheet: SheetInfo,
@@ -1035,23 +1022,15 @@ class XlsxWorkbook:
         shard: int = 0,
         n_shards: int = 1,
     ) -> Iterator[list[tuple[int, int, object]]]:
-        """Tier 3 with intra-file parallelism (VERDICT r10 task 4): the
-        mixed/undetectable-prefix documents that defeat the regex tiers
-        previously parsed ENTIRELY on shard 0 — the last single-stream
-        parse path, while the reference core parallelizes every document
-        shape (sheetreader_extension.cpp:775). Here the same chunk
-        round-robin protocol as the fast tier runs with namespace-AGNOSTIC
-        machinery: chunks cut at any-prefix row ends (``_ANY_ROW_END_RE``),
-        unassigned chunks row-counted with ``_ANY_ROW_RE``, and assigned
-        chunks expat-parsed as namespace-wrapped fragments
-        (``_fragment_rows`` keys on local names — identical cell semantics
-        to the whole-file walk by shared code). Chunk 0's preamble (XML
-        prolog + worksheet opener, illegal inside a wrapper element) is
-        consumed up to the sheetData opener; trailing content after the
-        sheetData close is stripped per assigned chunk (rows cannot live
-        there). Single-shard calls keep the original whole-file walk —
-        zero drift for sequential reads; a document with no findable
-        sheetData opener (schema-invalid) falls back to it on shard 0."""
+        """Tier 3 for the documents that defeat the regex scan (mixed or
+        undetectable prefixes). Sharded reads run the round-robin chunk
+        protocol with namespace-AGNOSTIC machinery: chunks cut at
+        any-prefix row ends (``_ANY_ROW_END_RE``), unassigned chunks
+        row-counted under any prefix, assigned chunks walked as wrapped
+        fragments (``_fragment_rows``). Chunk 0's preamble (XML prolog and
+        worksheet opener, illegal inside the wrapper) is consumed up to
+        the sheetData opener. Sequential reads, and a document with no
+        findable sheetData opener (on shard 0), walk the whole member."""
         if n_shards <= 1:
             yield from self._iter_rows_expat(sheet, skip_rows)
             return
@@ -1072,7 +1051,7 @@ class XlsxWorkbook:
                 if not opened:
                     m = _SHEETDATA_OPEN_RE.search(buf)
                     if m is None:
-                        if not eof and len(buf) < (64 << 20):
+                        if not eof and len(buf) < _MAX_ROW_BYTES:
                             continue
                         # No sheetData opener (schema-invalid document
                         # that still carries rows, or >64MB preamble):
@@ -1089,7 +1068,7 @@ class XlsxWorkbook:
                     for mm in _ANY_ROW_END_RE.finditer(buf):
                         last = mm
                     if last is None:
-                        if len(buf) < (64 << 20):
+                        if len(buf) < _MAX_ROW_BYTES:
                             continue
                         raise ValueError(
                             "sheetreader: row exceeds 64MB without a </row> "
@@ -1101,111 +1080,25 @@ class XlsxWorkbook:
                 assigned = (chunk_idx % n_shards) == shard
                 chunk_idx += 1
                 if assigned:
-                    mc = _SHEETDATA_CLOSE_RE.search(work)
-                    if mc is not None:
-                        work = work[: mc.start()]
                     for cells in _fragment_rows(
-                        work, {}, date_styles, self.date1904, self.allow_inline
+                        work, date_styles, self.date1904, self.allow_inline
                     ):
                         ordinal = row_ord
                         row_ord += 1
                         if ordinal >= skip_rows:
                             yield cells
                 else:
-                    row_ord += len(_ANY_ROW_RE.findall(work))
+                    row_ord += count_any_row_starts(work)
                 if eof and not buf:
                     return
 
-    # -- tier 3: original streaming expat parse (namespace-insensitive) -----
+    # -- tier 3 sequential: the expat walker streaming the whole member -----
     def _iter_rows_expat(self, sheet: SheetInfo, skip_rows: int = 0) -> Iterator[list[tuple[int, int, object]]]:
-        date_styles = self.date_styles
-        emitted = 0
-        skipped = 0
-        last_row_num = 0
         with self.zf.open(sheet.path) as f:
-            cells: list[tuple[int, int, object]] = []
-            cur_type: int | None = None
-            cur_col = -1
-            cur_style_is_date = False
-            v_text: str | None = None
-            lit_parts: list[str] = []
-            rph_depth = 0
-            in_v = False
-            for event, el in iterparse(f, events=("start", "end")):
-                tag = _local(el.tag)
-                if event == "start":
-                    if tag == "c":
-                        ref = el.get("r")
-                        cur_col = column_index(ref) if ref else cur_col + 1
-                        t = el.get("t")
-                        s = el.get("s")
-                        cur_style_is_date = s is not None and int(s) in date_styles
-                        if t is None or t == "n":
-                            cur_type = T_DATE if cur_style_is_date else T_NUMERIC
-                        elif t == "s":
-                            cur_type = T_STRING_REF
-                        elif t == "b":
-                            cur_type = T_BOOLEAN
-                        elif t == "e":
-                            cur_type = T_ERROR
-                        elif t in ("str", "inlineStr"):
-                            if not self.allow_inline:
-                                # reference: src/sheetreader_extension.cpp:572-575
-                                raise ValueError(UNSUPPORTED_STRING_ERROR)
-                            cur_type = T_STRING_LIT
-                            lit_parts = []
-                            rph_depth = 0
-                        else:
-                            cur_type = T_NONE
-                        v_text = None
-                    elif tag == "v":
-                        in_v = True
-                    elif tag in ("rPh", "phoneticPr") and cur_type == T_STRING_LIT:
-                        rph_depth += 1  # phonetic (furigana) runs: not cell text
-                    elif tag == "row":
-                        cells = []
-                        cur_col = -1
-                        row_num = int(el.get("r", last_row_num + 1))
-                        last_row_num = row_num
-                    continue
-                # end events
-                if tag == "v":
-                    v_text = el.text
-                    in_v = False
-                elif tag in ("rPh", "phoneticPr") and cur_type == T_STRING_LIT:
-                    rph_depth -= 1
-                elif tag == "t" and cur_type == T_STRING_LIT:
-                    if rph_depth == 0:
-                        lit_parts.append(el.text or "")  # <is><t> runs (rich text)
-                elif tag == "c":
-                    if cur_type == T_STRING_LIT:
-                        lit = v_text if v_text is not None else ("".join(lit_parts) if lit_parts else None)
-                        if lit is not None:
-                            cells.append((cur_col, T_STRING_LIT, _xstring(lit)))
-                    elif v_text is None:
-                        pass  # empty cell → absent → NULL
-                    elif cur_type == T_STRING_REF:
-                        cells.append((cur_col, T_STRING_REF, int(v_text)))
-                    elif cur_type == T_NUMERIC:
-                        cells.append((cur_col, T_NUMERIC, float(v_text)))
-                    elif cur_type == T_DATE:
-                        # Excel serial → seconds since unix epoch (workbook
-                        # date system + 1900 leap quirk honored), exactly the
-                        # shape the reference core hands the extension.
-                        serial = float(v_text)
-                        cells.append((cur_col, T_DATE, serial_to_epoch_secs(serial, self.date1904)))
-                    elif cur_type == T_BOOLEAN:
-                        cells.append((cur_col, T_BOOLEAN, bool_cell(v_text)))
-                    elif cur_type == T_ERROR:
-                        cells.append((cur_col, T_ERROR, None))
-                    el.clear()
-                elif tag == "row":
-                    if skipped < skip_rows:
-                        skipped += 1
-                    else:
-                        emitted += 1
-                        yield cells
-                    el.clear()
+            yield from itertools.islice(
+                _walk_cells(f, self.date_styles, self.date1904, self.allow_inline),
+                skip_rows, None,
+            )
 
 
 class _FastPathUnsupported(Exception):
@@ -1226,6 +1119,17 @@ _ROW_COUNT_RE = re.compile(rb"<row[ \t\r\n/>]")
 # count_rows' stream chunk size — a module constant so boundary tests can
 # shrink it and sweep real chunk-edge alignments (ADVICE r12 item 1).
 _COUNT_CHUNK = 4 << 20
+# Buffering bound of every chunked scan: past this many bytes without a
+# worksheet opener or a row end, a scan stops accumulating and falls back
+# (before its first row) or fails loudly (after it).
+_MAX_ROW_BYTES = 64 << 20
+
+
+def _chunk_bytes(n_shards: int) -> int:
+    """Stream read size of a chunked scan: smaller when sharded, so the
+    round-robin chunk assignment balances load across shards."""
+    return (1 << 20) if n_shards > 1 else (4 << 20)
+
 _CELL_COUNT_RE = re.compile(rb"<c[ />]")
 # Conventional writer attribute order: r, then s, then t (Excel, openpyxl,
 # our writer, the reference demo file). Anything else fails the per-row cell
@@ -1355,6 +1259,15 @@ def count_row_starts(work: bytes, pfx: bytes = b"") -> int:
     return work.count(b"<row") - work.count(b"<rowB")
 
 
+def _chunk_rows(work: bytes, pfx: bytes) -> int:
+    """Row count of one ``</row>``-aligned chunk under the detected prefix,
+    exact under ANY prefix when rows of another prefix hide in it — the
+    count every shard agrees on, whether it owns the chunk or not."""
+    if foreign_row_evidence(work, pfx):
+        return count_any_row_starts(work)
+    return count_row_starts(work, pfx)
+
+
 def build_dense_row_re(
     body: bytes,
     keep: list,
@@ -1448,10 +1361,9 @@ def _scan_chunk(
 
     Regex fast path with a per-chunk expat fragment fallback; on the first
     chunk an unscannable shape raises _FastPathUnsupported instead (the
-    caller restarts with the whole-file expat parser). ``pfx`` is the
-    document's detected element prefix (r10): prefixed worksheets scan
-    with the same machinery through per-prefix compiled patterns instead
-    of defeating to the single-stream whole-file walk."""
+    caller restarts on tier 3). ``pfx`` is the document's detected
+    element prefix: prefixed worksheets scan through per-prefix compiled
+    patterns."""
     pr = prefix_res(pfx)
     row_matches = pr.row_re.findall(work)
     if first_chunk and not row_matches and _ANY_ROW_RE.search(work):
@@ -1462,17 +1374,13 @@ def _scan_chunk(
         # A false positive (a row-shaped marker inside an inline string)
         # only costs the expat parse — results are identical either way.
         raise _FastPathUnsupported
-    n_rows_chunk = len(pr.row_count_re.findall(work))
-    if foreign_row_evidence(work, pfx):
-        # Rows under ANOTHER prefix hide in this chunk (r11): the exact
-        # any-prefix count makes the regularity check fail, routing the
-        # chunk to the namespace-agnostic fragment parser (mid-file) or
-        # the sharded tier-3 walk (chunk 0) — never a silent drop.
-        n_rows_chunk = count_any_row_starts(work)
-    if len(row_matches) != n_rows_chunk:
+    # Rows under ANOTHER prefix make the exact any-prefix count
+    # disagree with the matches, routing the chunk to the fragment walk
+    # (mid-file) or the sharded tier-3 walk (chunk 0) — never a silent drop.
+    if len(row_matches) != _chunk_rows(work, pfx):
         if first_chunk:
             raise _FastPathUnsupported
-        return _fragment_rows(work, colmap, date_styles, date1904, allow_inline)
+        return _fragment_rows(work, date_styles, date1904, allow_inline)
     rows: list[list[tuple[int, int, object]]] = []
     for body in row_matches:
         cell_matches = pr.cell_re.findall(body)
@@ -1486,7 +1394,7 @@ def _scan_chunk(
                 # FIRST ROW took this branch and a later irregular row
                 # in chunk 0 crashed the fragment parse).
                 raise _FastPathUnsupported
-            return _fragment_rows(work, colmap, date_styles, date1904, allow_inline)
+            return _fragment_rows(work, date_styles, date1904, allow_inline)
         cells: list[tuple[int, int, object]] = []
         for letters, s_attr, t_attr, v in cell_matches:
             col = colmap.get(letters)
@@ -1504,15 +1412,15 @@ def _scan_chunk(
                     cells.append((col, T_STRING_REF, int(v)))
             elif t_attr == b"b":
                 if v:
-                    # Strict decode: a non-UTF-8 payload is malformed XML,
-                    # which every other tier rejects too.
+                    # A non-UTF-8 payload is malformed XML, which every
+                    # other tier rejects too.
                     try:
-                        text = v.decode("utf-8")
+                        truth = _bool_payload(v)
                     except UnicodeDecodeError as e:
                         raise ValueError(
                             f"sheetreader: malformed sheet XML fragment: {e}"
                         ) from e
-                    cells.append((col, T_BOOLEAN, bool_cell(text)))
+                    cells.append((col, T_BOOLEAN, truth))
             elif t_attr == b"e":
                 cells.append((col, T_ERROR, None))
             elif t_attr in (b"str", b"inlineStr"):
@@ -1548,14 +1456,95 @@ def _fragment_ns_wrap(work: bytes) -> bytes:
     return b"<R" + decls + b">" + work + b"</R>"
 
 
+def _walk_cells(
+    source,
+    date_styles: frozenset[int],
+    date1904: bool = False,
+    allow_inline: bool = False,
+) -> Iterator[list[tuple[int, int, object]]]:
+    """The expat cell walker: yield the rows of a SpreadsheetML byte
+    stream as lists of (col, ctype, value), with the cell semantics of the
+    regex scanner. Tags are matched by local name, so any namespace
+    prefix (or a mix of them) reads alike. Callers: ``_fragment_rows``
+    (one chunk) and ``XlsxWorkbook._iter_rows_expat`` (a whole member)."""
+    cells: list[tuple[int, int, object]] = []
+    cur_type: int | None = None
+    cur_col = -1
+    v_text: str | None = None
+    lit_parts: list[str] = []
+    rph_depth = 0
+    for event, el in iterparse(source, events=("start", "end")):
+        tag = _local(el.tag)
+        if event == "start":
+            if tag == "c":
+                ref = el.get("r")
+                cur_col = column_index(ref) if ref else cur_col + 1
+                t = el.get("t")
+                s = el.get("s")
+                if t is None or t == "n":
+                    cur_type = T_DATE if (s is not None and int(s) in date_styles) else T_NUMERIC
+                elif t == "s":
+                    cur_type = T_STRING_REF
+                elif t == "b":
+                    cur_type = T_BOOLEAN
+                elif t == "e":
+                    cur_type = T_ERROR
+                elif t in ("str", "inlineStr"):
+                    if not allow_inline:
+                        # reference: src/sheetreader_extension.cpp:572-575
+                        raise ValueError(UNSUPPORTED_STRING_ERROR)
+                    cur_type = T_STRING_LIT
+                    lit_parts = []
+                    rph_depth = 0
+                else:
+                    cur_type = T_NONE
+                v_text = None
+            elif tag in ("rPh", "phoneticPr") and cur_type == T_STRING_LIT:
+                rph_depth += 1  # phonetic (furigana) runs: not cell text
+            elif tag == "row":
+                cells = []
+                cur_col = -1
+            continue
+        if tag == "v":
+            v_text = el.text
+        elif tag in ("rPh", "phoneticPr") and cur_type == T_STRING_LIT:
+            rph_depth -= 1
+        elif tag == "t" and cur_type == T_STRING_LIT:
+            if rph_depth == 0:
+                lit_parts.append(el.text or "")  # <is><t> runs (rich text)
+        elif tag == "c":
+            if cur_type == T_STRING_LIT:
+                lit = v_text if v_text is not None else ("".join(lit_parts) if lit_parts else None)
+                if lit is not None:
+                    cells.append((cur_col, T_STRING_LIT, _xstring(lit)))
+            elif v_text is None:
+                pass  # empty cell → absent → NULL
+            elif cur_type == T_STRING_REF:
+                cells.append((cur_col, T_STRING_REF, int(v_text)))
+            elif cur_type == T_NUMERIC:
+                cells.append((cur_col, T_NUMERIC, float(v_text)))
+            elif cur_type == T_DATE:
+                # Excel serial → seconds since unix epoch (workbook date
+                # system + 1900 leap quirk honored), exactly the shape the
+                # reference core hands the extension.
+                cells.append((cur_col, T_DATE, serial_to_epoch_secs(float(v_text), date1904)))
+            elif cur_type == T_BOOLEAN:
+                cells.append((cur_col, T_BOOLEAN, bool_cell(v_text)))
+            elif cur_type == T_ERROR:
+                cells.append((cur_col, T_ERROR, None))
+            el.clear()
+        elif tag == "row":
+            yield cells
+            el.clear()
+
+
 def _fragment_rows(
     work: bytes,
-    colmap: dict[bytes, int],
     date_styles: frozenset[int],
     date1904: bool = False,
     allow_inline: bool = False,
 ) -> list[list[tuple[int, int, object]]]:
-    """Expat-parse a `</row>`-aligned XML fragment (irregular chunk fallback).
+    """Walk a `</row>`-aligned XML fragment (irregular chunk fallback).
 
     The FINAL chunk of a worksheet carries the document trailer
     (``</sheetData></worksheet>`` + any post-sheetData members) — close
@@ -1572,77 +1561,13 @@ def _fragment_rows(
     mc = _SHEETDATA_CLOSE_RE.search(work)
     if mc is not None:
         work = work[: mc.start()]
-
-    rows: list[list[tuple[int, int, object]]] = []
-    cells: list[tuple[int, int, object]] = []
-    cur_type: int | None = None
-    cur_col = -1
-    v_text: str | None = None
-    lit_parts: list[str] = []
-    rph_depth = 0
     try:
-        for event, el in iterparse(io.BytesIO(_fragment_ns_wrap(work)), events=("start", "end")):
-            tag = _local(el.tag)
-            if event == "start":
-                if tag == "c":
-                    ref = el.get("r")
-                    cur_col = column_index(ref) if ref else cur_col + 1
-                    t = el.get("t")
-                    s = el.get("s")
-                    if t is None or t == "n":
-                        cur_type = T_DATE if (s is not None and int(s) in date_styles) else T_NUMERIC
-                    elif t == "s":
-                        cur_type = T_STRING_REF
-                    elif t == "b":
-                        cur_type = T_BOOLEAN
-                    elif t == "e":
-                        cur_type = T_ERROR
-                    elif t in ("str", "inlineStr"):
-                        if not allow_inline:
-                            raise ValueError(UNSUPPORTED_STRING_ERROR)
-                        cur_type = T_STRING_LIT
-                        lit_parts = []
-                        rph_depth = 0
-                    else:
-                        cur_type = T_NONE
-                    v_text = None
-                elif tag in ("rPh", "phoneticPr") and cur_type == T_STRING_LIT:
-                    rph_depth += 1
-                elif tag == "row":
-                    cells = []
-                    cur_col = -1
-                continue
-            if tag == "v":
-                v_text = el.text
-            elif tag in ("rPh", "phoneticPr") and cur_type == T_STRING_LIT:
-                rph_depth -= 1
-            elif tag == "t" and cur_type == T_STRING_LIT:
-                if rph_depth == 0:
-                    lit_parts.append(el.text or "")
-            elif tag == "c":
-                if cur_type == T_STRING_LIT:
-                    lit = v_text if v_text is not None else ("".join(lit_parts) if lit_parts else None)
-                    if lit is not None:
-                        cells.append((cur_col, T_STRING_LIT, _xstring(lit)))
-                elif v_text is None:
-                    pass
-                elif cur_type == T_STRING_REF:
-                    cells.append((cur_col, T_STRING_REF, int(v_text)))
-                elif cur_type == T_NUMERIC:
-                    cells.append((cur_col, T_NUMERIC, float(v_text)))
-                elif cur_type == T_DATE:
-                    cells.append((cur_col, T_DATE, serial_to_epoch_secs(float(v_text), date1904)))
-                elif cur_type == T_BOOLEAN:
-                    cells.append((cur_col, T_BOOLEAN, bool_cell(v_text)))
-                elif cur_type == T_ERROR:
-                    cells.append((cur_col, T_ERROR, None))
-                el.clear()
-            elif tag == "row":
-                rows.append(cells)
-                el.clear()
+        return list(_walk_cells(
+            io.BytesIO(_fragment_ns_wrap(work)), date_styles, date1904,
+            allow_inline,
+        ))
     except ParseError as e:
         raise ValueError(f"sheetreader: malformed sheet XML fragment: {e}") from e
-    return rows
 
 
 def epoch_seconds_to_days(secs: float) -> int:

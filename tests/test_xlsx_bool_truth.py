@@ -1,9 +1,11 @@
-"""One boolean truth rule (parser.bool_cell / BOOL_TRUE_TEXTS) across every
-reader tier and the ``bt`` stats author.
+"""One boolean truth rule (parser.bool_cell / BOOL_TRUE_TEXTS, and
+parser._bool_payload for raw bytes) across every reader tier and the
+``bt`` stats author.
 
 A generated set of t="b" payloads — the truth-set spellings and their
 false counterparts wrapped in Unicode whitespace, plus ZERO WIDTH SPACE,
-which is not whitespace and must not be trimmed — decodes identically
+which is not whitespace and must not be trimmed, plus entity-encoded
+spellings (``&#160;true``, ``&#x31;``, ``&amp;true``) — decodes identically
 through the whole-file expat tier, the regex chunk scanner, the expat
 fragment parser, the columnar Arrow path and the indexer's interval
 counts. A payload that is not UTF-8 raises in every reader tier, and the
@@ -25,11 +27,21 @@ from sheetreader_duckdb_spark.sources.xlsx.indexer import _analyze_interval
 
 _CORES = ("1", "0", "true", "TRUE", "false")
 _SPACES = (" ", "\xa0", "\u2028", "\u3000")  # ASCII, NBSP, LS, ideographic
+# Raw XML spellings with character references, decoded before the rule
+# applies; an escaped ampersand is literal text and never true.
+_ENTITY_CASES = (
+    ("&#160;true", True),
+    ("&#x31;", True),
+    ("&#49;", True),
+    ("true&#x3000;", True),
+    ("&amp;true", False),
+)
 
 
 def _cases() -> list:
     """(payload, truth): each spelling bare and wrapped in whitespace on
-    either or both sides, plus a ZWSP-prefixed form that stays false."""
+    either or both sides, plus a ZWSP-prefixed form that stays false, plus
+    the entity-encoded spellings."""
     out = []
     for core in _CORES:
         truth = core in ("1", "true", "TRUE")
@@ -38,7 +50,7 @@ def _cases() -> list:
             out += [(ws + core, truth), (core + ws, truth),
                     (ws + core + ws, truth)]
         out.append(("\u200b" + core, False))  # ZWSP: no trim, never true
-    return out
+    return out + list(_ENTITY_CASES)
 
 
 PAYLOADS, WANT = map(list, zip(*_cases()))
@@ -95,7 +107,7 @@ def test_truth_rule_agrees_across_tiers_and_author(tmp_path):
     with P.XlsxWorkbook(path) as wb:
         expat = _values(wb._iter_rows_expat(wb.resolve_sheet(None, None)))
     scan = _values(P._scan_chunk(rows, {}, frozenset(), first_chunk=False))
-    fragment = _values(P._fragment_rows(rows, {}, frozenset()))
+    fragment = _values(P._fragment_rows(rows, frozenset()))
     columnar = _read(path, StructType([StructField("f", BooleanType())]))
     author = []
     for p in PAYLOADS:
@@ -119,7 +131,7 @@ def test_scan_chunk_rejects_non_utf8_boolean_payload():
     with pytest.raises(ValueError, match="malformed sheet XML"):
         P._scan_chunk(BAD, {}, frozenset(), first_chunk=False)
     with pytest.raises(ValueError):
-        P._fragment_rows(BAD, {}, frozenset())
+        P._fragment_rows(BAD, frozenset())
 
 
 def test_every_read_tier_raises_on_non_utf8_boolean_payload(tmp_path):

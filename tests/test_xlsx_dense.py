@@ -845,11 +845,11 @@ def test_fragment_parses_prefixed_attributes_without_scope():
         b'<row r="5" spans="1:2" x14ac:dyDescent="0.25">'
         b'<c r="A5"><v>1.5</v></c><c r="B5" t="b"><v>1</v></c></row>'
     )
-    assert P._fragment_rows(frag, {}, frozenset()) == [
+    assert P._fragment_rows(frag, frozenset()) == [
         [(0, P.T_NUMERIC, 1.5), (1, P.T_BOOLEAN, True)]
     ]
     frag2 = b'<row r="6"><c r="A6"><f>SUM(A1:A5)</f><v>7.5</v></c></row>'
-    assert P._fragment_rows(frag2, {}, frozenset()) == [[(0, P.T_NUMERIC, 7.5)]]
+    assert P._fragment_rows(frag2, frozenset()) == [[(0, P.T_NUMERIC, 7.5)]]
 
 
 # ---- split-index (splittable-XLSX) path -----------------------------------
@@ -921,10 +921,14 @@ def test_split_index_garbage_comment_ignored(big_xlsx, tmp_path):
         assert sorted(got, key=key) == sorted(base, key=key)
 
 
-def test_split_index_lying_rowcount_fails_loudly(big_xlsx, tmp_path):
+@pytest.mark.parametrize(
+    "extra", [{}, {"coerce_to_string": "true"}], ids=["columnar", "row"]
+)
+def test_split_index_lying_rowcount_fails_loudly(big_xlsx, tmp_path, extra):
     """A well-formed index whose row counts disagree with the actual sheet
     must raise, never return silently wrong data: every materialized
-    interval's parsed count is checked against the recorded one."""
+    interval's parsed count is checked against the recorded one — on the
+    columnar tier and on the row tier (coerce) alike."""
     import shutil
     import zipfile
 
@@ -939,7 +943,7 @@ def test_split_index_lying_rowcount_fails_loudly(big_xlsx, tmp_path):
     with zipfile.ZipFile(p, "a") as zf:
         zf.comment = SI.encode_split_index("xl/worksheets/sheet1.xml", bad, total)
     with pytest.raises(ValueError, match="split-index row count mismatch"):
-        _collect({"path": p, "threads": "4"})
+        _collect({"path": p, "threads": "4", **extra})
 
 
 def test_split_index_row_path_coerce_sharded_equals_single(big_xlsx):

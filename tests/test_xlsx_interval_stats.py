@@ -426,6 +426,19 @@ def test_row_count_served_from_index(stats_xlsx, monkeypatch):
     assert DS.row_count(stats_xlsx) == N  # header consumed by inference
 
 
+def test_row_count_self_check_bug_is_not_swallowed(stats_xlsx, monkeypatch):
+    """Only a stale or corrupt index (ValueError / OSError) falls back to
+    the streaming count; any other error in the interval-0 self-check
+    propagates."""
+
+    def boom(*a, **k):
+        raise RuntimeError("self-check bug")
+
+    monkeypatch.setattr(SI, "iter_intervals", boom)
+    with pytest.raises(RuntimeError, match="self-check bug"):
+        DS.row_count(stats_xlsx)
+
+
 def test_columns_pruning_composes_with_interval_pruning(spark, stats_xlsx):
     """`read_xlsx(columns=…, where=…)`: reader-side column pruning and
     stats-driven interval pruning on the SAME sharded read — including a
