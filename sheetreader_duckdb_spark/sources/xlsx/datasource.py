@@ -39,10 +39,7 @@ from __future__ import annotations
 import glob as _glob
 import operator as _op
 import os
-import zipfile
-import zlib
 from dataclasses import dataclass
-from xml.etree.ElementTree import ParseError
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -77,15 +74,6 @@ _SPARK_TO_SQL = {
     "boolean": "BOOLEAN",
     "date": "DATE",
 }
-
-# What opening a corrupt or non-XLSX file raises during shard planning
-# (zip container, member inflate, workbook XML, sheet lookup). Planning
-# then keeps its size-based shard count and the read raises the real
-# error; anything else — a planner bug — propagates.
-_UNREADABLE_WORKBOOK = (
-    zipfile.BadZipFile, zlib.error, ParseError, EOFError,
-    NotImplementedError, OSError, KeyError, ValueError,
-)
 
 # 64k rows/batch: the dense fast path appends ~54k rows per 4 MB chunk,
 # so at 8k the rolling raw_cols tail was re-sliced ~7× per chunk (an
@@ -1071,7 +1059,7 @@ class SheetReaderReader(DataSourceReader):
                             )
                             if skips is not None:
                                 n = max(1, min(n, len(pts) - len(skips)))
-                except _UNREADABLE_WORKBOOK:
+                except P._UNREADABLE_WORKBOOK:
                     pass  # the read of this file fails with the real error
             parts.extend(
                 _SheetPartition(p, shard=i, n_shards=n, filters=self._staged_filters)
@@ -1312,7 +1300,13 @@ class SheetReaderReader(DataSourceReader):
                 """Raw bytes-or-None columns → typed Arrow RecordBatch."""
                 arrays = []
                 for i, code in enumerate(exp_codes):
-                    s = pa.array(raw_cols[i], type=pa.binary()).cast(pa.string())
+                    s = pa.array(raw_cols[i], type=pa.binary())
+                    # b"" is a cell the dense row pattern found absent
+                    # (the generic scan appends None): NULL either way.
+                    absent = pc.equal(pc.binary_length(s), 0)
+                    if pc.any(absent).as_py():
+                        s = pc.if_else(absent, pa.scalar(None, pa.binary()), s)
+                    s = s.cast(pa.string())
                     if code == 0:  # VARCHAR ← shared-string index
                         # Selective decode: unique refs in THIS batch →
                         # small local heap → vectorized index_in + take
@@ -1498,13 +1492,13 @@ class SheetReaderReader(DataSourceReader):
                         # silently read as EMPTY (mirrored in
                         # parser._scan_chunk).
                         raise P._FastPathUnsupported
-                    # Template = chunk 0's last non-empty row (every shard
-                    # sees chunk 0, so the compiled pattern is identical
-                    # across shards).
-                    tmpl = next((b for b in reversed(row_matches) if b), b"")
-                    dense = P.build_dense_row_re(
-                        tmpl, keep, exp_codes, date_styles, pfx
-                    )
+                    # Template = chunk 0's last row that compiles (every
+                    # shard sees chunk 0, so the compiled pattern is
+                    # identical across shards).
+                    dense = next(filter(None, (
+                        P.build_dense_row_re(b, keep, exp_codes, date_styles, pfx)
+                        for b in reversed(row_matches)
+                    )), None)
                     # Dense-extract chunk 0 itself (only the owning shard
                     # emits it): findall from the first kept row's byte
                     # offset. A non-matching row drops to the per-row

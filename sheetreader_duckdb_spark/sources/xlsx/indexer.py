@@ -42,6 +42,7 @@ import zipfile
 
 from .parser import (
     _SST_PFX_RE,
+    _UNREADABLE_WORKBOOK,
     XlsxWorkbook,
     _bool_payload,
     count_row_starts,
@@ -187,29 +188,19 @@ class _IntervalStatsCollector:
             ))
             self._drain(max_pending=2 * self._pool_size)
         else:
-            rec = self._finish_record(
+            self.fine.append(self._finish_record(
                 _analyze_interval(
                     data, self._pfx, self._date_styles, self._sst,
                     self._defer, dead_cols=self._defer_dead_b,
                 ),
                 len(self.fine),
-            )
-            if rec is not None:
-                self.fine.append(rec)
+            ))
 
     def _finish_record(self, r, fi: int):
         """Fold one interval's analysis into collector state, in stream
         order (cum accumulation + deferred-ref bookkeeping live HERE, on
         the parent side, so pooled and serial runs build byte-identical
-        claims). Returns the fine record for slot ``fi``, or None after
-        marking the collector dead."""
-        if r is None:
-            # a pooled worker failed analysing this interval: claims are
-            # an optimization — die quietly, the index itself is fine
-            self.dead = True
-            self.fine = []
-            self._defer_refs = []
-            return None
+        claims). Returns the fine record for slot ``fi``."""
         rows_in, claims, drefs = r
         self._cum += rows_in
         if drefs:
@@ -236,10 +227,8 @@ class _IntervalStatsCollector:
                 continue
             if len(self.fine) - self._head <= max_pending and not rec.ready():
                 break
-            made = self._finish_record(rec.get(), self._head)
-            if made is None:
-                return  # dead: fine already cleared
-            self.fine[self._head] = made
+            # A worker's exception re-raises here, as on the serial path.
+            self.fine[self._head] = self._finish_record(rec.get(), self._head)
             self._head += 1
 
     def flush_realize(self) -> None:
@@ -285,8 +274,6 @@ class _IntervalStatsCollector:
         if self.dead or points is None:
             return {}
         self.flush_realize()
-        if self.dead:
-            return {}
         if self._defer and self._defer_refs and not self._defer_resolved:
             raise RuntimeError(
                 "deferred string bounds not resolved — run "
@@ -571,16 +558,12 @@ def _analyze_interval_pooled(data, pfx, date_styles, defer, dead_cols):
     _POOL_HEAP global; ``dead_cols`` is the parent's shed-column
     snapshot at submit time (workers stop collecting refs for them —
     the parent drops late arrivals regardless, so staleness only costs
-    cycles). Any failure returns None (the parent then drops ALL claims
-    for the member — stats are an optimization, never worth an error
-    the serial path wouldn't raise)."""
-    try:
-        return _analyze_interval(
-            data, pfx, date_styles,
-            None if defer else _POOL_HEAP, defer, dead_cols=dead_cols,
-        )
-    except Exception:  # noqa: BLE001 — worker must never poison the pool
-        return None
+    cycles). A failure propagates through ``AsyncResult.get()``, so a
+    pooled retrofit raises exactly where a serial one would."""
+    return _analyze_interval(
+        data, pfx, date_styles,
+        None if defer else _POOL_HEAP, defer, dead_cols=dead_cols,
+    )
 
 
 # One boundary algorithm, one home (r12 consolidation): the any-prefix
@@ -1026,7 +1009,7 @@ def _stats_sst(wb):
         return _DEFER_SST
     try:
         return wb.shared_strings
-    except Exception:
+    except _UNREADABLE_WORKBOOK:
         return None  # undecodable heap: the read will error, not the stats
 
 

@@ -28,9 +28,10 @@ import itertools
 import os
 import re
 import zipfile
+import zlib
 from collections.abc import Iterator
 from dataclasses import dataclass
-from xml.etree.ElementTree import iterparse
+from xml.etree.ElementTree import ParseError, iterparse
 
 # Cell "types" mirroring the reference core's CellType enum.
 T_NONE = 0
@@ -46,6 +47,15 @@ T_ERROR = 5
 # a beyond-reference extension for third-party writers that skip the
 # sharedStrings heap.
 T_STRING_LIT = 6
+
+# What opening a corrupt or non-XLSX file raises (zip container, member
+# inflate, workbook or heap XML, sheet lookup). Shard planning and the
+# stats author's heap load catch exactly these; anything else — a bug —
+# propagates.
+_UNREADABLE_WORKBOOK = (
+    zipfile.BadZipFile, zlib.error, ParseError, EOFError,
+    NotImplementedError, OSError, KeyError, ValueError,
+)
 
 # Boolean truth rule, the one copy every scan tier, the vectorized reader
 # (as an Arrow value set) and the ``bt`` stats author use: a t="b"
@@ -1275,13 +1285,16 @@ def build_dense_row_re(
     date_styles: frozenset[int],
     pfx: bytes = b"",
 ):
-    """Compile an exact whole-row pattern from a template row body, for the
-    DENSE common case: every column present, in order, with the template's
-    exact (s, t) attributes and a non-empty ``<v>``. Returns
-    ``(regex, out_slots)`` — ``out_slots[j]`` is the output column of the
-    j-th capture group — or ``None`` when the template row can't promise
-    the schema's cell semantics (absent cells, unexpected types, inline
-    strings).
+    """Compile a whole-row pattern from a template row body, for the
+    common case: cells in column order, each with the template's exact
+    (s, t) attributes and a non-empty ``<v>``. The template itself must be
+    fully dense (every column present); each of its cells is OPTIONAL in
+    the pattern, so rows that omit cells still match, and an absent cell
+    captures ``b""`` — NULL, like the generic scan's empty-cell rule.
+    Returns ``(regex, out_slots)`` — ``out_slots[j]`` is the output column
+    of the j-th capture group — or ``None`` when the template row can't
+    promise the schema's cell semantics (absent cells, unexpected types,
+    inline strings).
 
     Why: the generic scan pays three Python passes per chunk (row findall,
     per-row cell findall, per-cell type dispatch). This profile-driven
@@ -1289,11 +1302,14 @@ def build_dense_row_re(
     was 16.7 s of a 28.9 s sf1 single-shard parse) replaces them with ONE
     findall per chunk whose tuples are already the row's kept values in
     column order — ``zip(*matches)`` then hands whole columns to the Arrow
-    casts. Rows that deviate from the template (styles, absent cells,
-    empty rows) make the chunk's match count disagree with its row count,
-    and the caller falls back to the generic scan for that chunk — the
-    fast path can never change results, only skip work.
+    casts. Rows whose present cells deviate from the template (styles,
+    types, order, ``<v></v>`` or self-closing cells, extra columns) make
+    the chunk's match count disagree with its row count, and the caller
+    falls back to the generic scan for that chunk — the fast path can
+    never change results, only skip work.
     """
+    if all(out is None for out in keep):
+        return None  # nothing to capture
     pr = prefix_res(pfx)
     ms = pr.cell_re.findall(body)
     if not ms or len(ms) != len(pr.cell_count_re.findall(body)):
@@ -1333,10 +1349,8 @@ def build_dense_row_re(
         else:
             cell += rb"><" + ep + rb"v>([^<]+)</" + ep + rb"v></" + ep + rb"c>"
             out_slots.append(out)
-        parts.append(cell)
+        parts.append(b"(?:" + cell + b")?")  # absent cell: empty capture
     parts.append(b"</" + ep + b"row>")
-    if not out_slots:
-        return None
     return re.compile(b"".join(parts)), out_slots
 
 

@@ -1,12 +1,14 @@
 """Dense-row fast path (parser.build_dense_row_re + datasource wiring).
 
-The dense path only engages from the second 4 MB chunk of a file, so these
-tests build a workbook big enough to span several chunks, plant rows that
-deviate from the template shape (absent cells, empty rows) in later chunks,
-and pin that (a) results are byte-identical to the row-path implementation
-(a fully independent scan: iter_rows + per-cell dispatch), and (b) the
-planted irregular rows keep exact NULL semantics. No SparkSession needed —
-the reader API is driven directly.
+The columnar reader compiles a row pattern from a template row of chunk 0
+and extracts every chunk whose rows all match it, chunk 0's own rows
+included, with one findall. These tests build workbooks big enough to
+span several chunks, plant rows that omit cells (which must stay on the
+fast path) and rows whose present cells deviate from the template (which
+must fall back), and pin that (a) results are identical to the row-path
+implementation (a fully independent scan: iter_rows + per-cell dispatch),
+and (b) absent cells and empty rows keep exact NULL semantics. No
+SparkSession needed for most of them — the reader API is driven directly.
 """
 
 from __future__ import annotations
@@ -77,6 +79,13 @@ def test_dense_engages_on_this_shape(big_xlsx):
         b'<row r="9"><c r="A9" t="s"><v>7</v></c><c r="B9"><v>8.5</v></c>'
         b'<c r="C9"><v>9.5</v></c></row>'
     ) == [(b"7", b"8.5", b"9.5")]
+    # Absent cells are optional (an empty capture, read as NULL); a
+    # present cell still needs a value.
+    assert regex.findall(
+        b'<row r="9"><c r="A9" t="s"><v>7</v></c><c r="C9"><v>9.5</v></c>'
+        b'</row><row r="10"></row>'
+    ) == [(b"7", b"", b"9.5"), (b"", b"", b"")]
+    assert regex.findall(b'<row r="9"><c r="A9" t="s"><v></v></c></row>') == []
 
 
 def test_dense_matches_row_path_and_null_semantics(big_xlsx):
@@ -1347,3 +1356,220 @@ def test_mixed_prefix_full_type_matrix_sharded(tmp_path, spark):
     assert ("gamma", 2.5, False, d) in r1  # an unprefixed one (i=2, 2%3=2)
     assert (None, None, None, None) in r1  # the self-closing foreign rows
     assert sum(1 for r in r1 if r[0] is None) == n // 7
+
+
+# -- Sparse rows on the dense path ------------------------------------------
+# A foreign-shaped sheet (stdlib zipfile, shared strings, a date style) in
+# which about 5% of the cells of every type family are absent. An absent
+# cell is optional in the compiled row pattern, so such chunks must stay on
+# the one-findall path; rows whose PRESENT cells deviate from the template
+# must still fall back to the generic scan.
+
+SPARSE_ROWS = 30_000  # ~6 MB of sheet XML: 2 chunks at 4 MB, ~6 at 1 MB
+SPARSE_BATCH = 1000
+SPARSE_E_GAP = range(6000, 9000)  # E absent for three whole batches
+_SPARSE_STRINGS = [*"ABCDEF", *(f"w{j} &amp; {j % 7}" for j in range(50))]
+_NS = "http://schemas.openxmlformats.org/spreadsheetml/2006/main"
+
+
+def _sparse_workbook(path, plants=None, trailing_gap=False):
+    """Columns A (t="s"), B (number), C (date style), D (t="b"),
+    E (number), F (t="s"). Past the two rows the schema probe reads, each
+    cell is absent with probability 0.05, E is absent in SPARSE_E_GAP and
+    every 2,500th row is an empty ``<row r="n"></row>``. ``plants`` maps
+    a data row index to replacement row XML (``{r}`` = row number);
+    ``trailing_gap`` drops F from every row past the probe rows, so the
+    last row of chunk 0 cannot serve as the template."""
+    import random
+    import zipfile
+
+    rng = random.Random(7)
+    rows = ['<row r="1">' + "".join(
+        f'<c r="{c}1" t="s"><v>{i}</v></c>' for i, c in enumerate("ABCDEF")
+    ) + "</row>"]
+    for i in range(SPARSE_ROWS):
+        r = i + 2
+        if plants and i in plants:
+            rows.append(plants[i].format(r=r))
+            continue
+        if i % 2500 == 1234:
+            rows.append(f'<row r="{r}"></row>')
+            continue
+        cells = {
+            "A": f' t="s"><v>{6 + rng.randrange(50)}</v>',
+            "B": f"><v>{rng.randrange(1000)}.5</v>",
+            "C": f' s="1"><v>{34700 + rng.randrange(2500)}</v>',
+            "D": f' t="b"><v>{rng.randrange(2)}</v>',
+            "E": f"><v>{rng.randrange(10**6) / 4}</v>",
+            "F": f' t="s"><v>{6 + rng.randrange(50)}</v>',
+        }
+        absent = {c for c in cells if rng.random() < 0.05}
+        if i in SPARSE_E_GAP:
+            absent.add("E")
+        if trailing_gap:
+            absent.add("F")
+        if i < 2:
+            absent = set()
+        rows.append(f'<row r="{r}">' + "".join(
+            f'<c r="{c}{r}"{v}</c>' for c, v in cells.items() if c not in absent
+        ) + "</row>")
+    ct, rels, _, _ = _prefixed_workbook_parts()
+    rel = "http://schemas.openxmlformats.org/officeDocument/2006/relationships"
+    with zipfile.ZipFile(path, "w", zipfile.ZIP_DEFLATED) as z:
+        z.writestr("[Content_Types].xml", ct)
+        z.writestr("_rels/.rels", rels)
+        z.writestr("xl/workbook.xml", (
+            f'<workbook xmlns="{_NS}" xmlns:r="{rel}"><sheets>'
+            '<sheet name="S" sheetId="1" r:id="rId1"/></sheets></workbook>'
+        ))
+        z.writestr("xl/_rels/workbook.xml.rels", (
+            '<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">'
+            f'<Relationship Id="rId1" Type="{rel}/worksheet" Target="worksheets/sheet1.xml"/>'
+            f'<Relationship Id="rId2" Type="{rel}/sharedStrings" Target="sharedStrings.xml"/>'
+            f'<Relationship Id="rId3" Type="{rel}/styles" Target="styles.xml"/>'
+            "</Relationships>"
+        ))
+        z.writestr("xl/styles.xml", (
+            f'<styleSheet xmlns="{_NS}"><cellXfs count="3"><xf numFmtId="0"/>'
+            '<xf numFmtId="14" applyNumberFormat="1"/>'
+            '<xf numFmtId="2" applyNumberFormat="1"/></cellXfs></styleSheet>'
+        ))
+        z.writestr("xl/sharedStrings.xml", (
+            f'<sst xmlns="{_NS}" count="{len(_SPARSE_STRINGS)}" '
+            f'uniqueCount="{len(_SPARSE_STRINGS)}">'
+            + "".join(f"<si><t>{s}</t></si>" for s in _SPARSE_STRINGS)
+            + "</sst>"
+        ))
+        z.writestr("xl/worksheets/sheet1.xml", (
+            f'<worksheet xmlns="{_NS}"><dimension ref="A1:F{SPARSE_ROWS + 1}"/>'
+            "<sheetData>" + "".join(rows) + "</sheetData></worksheet>"
+        ))
+    return path
+
+
+# Rows whose present cells deviate from the template, one per 1 MB chunk.
+_DEVIATING = {
+    4_000: '<row r="{r}"><c r="A{r}" t="s"/><c r="B{r}"><v>1.5</v></c></row>',
+    10_000: '<row r="{r}"><c r="A{r}" t="s"><v>7</v></c><c r="B{r}"><v></v></c>'
+            '<c r="F{r}" t="s"><v>8</v></c></row>',
+    16_000: '<row r="{r}"><c r="B{r}" s="2"><v>2.25</v></c>'
+            '<c r="E{r}"><v>3</v></c></row>',
+    22_000: '<row r="{r}"><c r="B{r}"><v>4.5</v></c><c r="A{r}" t="s"><v>9</v></c>'
+            '<c r="D{r}" t="b"><v>1</v></c></row>',
+}
+
+
+@pytest.fixture(scope="module")
+def sparse_books(tmp_path_factory):
+    from sheetreader_duckdb_spark.sources.xlsx.indexer import index_xlsx
+
+    d = tmp_path_factory.mktemp("sparse")
+    books = {
+        "sparse": _sparse_workbook(str(d / "sparse.xlsx")),
+        "trailing_gap": _sparse_workbook(str(d / "gap.xlsx"), trailing_gap=True),
+        "deviating": _sparse_workbook(str(d / "dev.xlsx"), plants=_DEVIATING),
+        "extra_column": _sparse_workbook(
+            str(d / "extra.xlsx"),
+            plants={20_000: '<row r="{r}"><c r="G{r}"><v>1</v></c></row>'},
+        ),
+    }
+    books["indexed"] = str(d / "indexed.xlsx")
+    assert index_xlsx(books["sparse"], out_path=books["indexed"])["indexed"]
+    return books
+
+
+def _read(path, **opts):
+    """(rows, batches) of a schema-inferring read, partitions in order."""
+    opts = {"path": path, "batch_size": str(SPARSE_BATCH), **opts}
+    src = DS.SheetReaderDataSource(opts)
+    reader = src.reader(src.schema())
+    batches = [b for part in reader.partitions() for b in reader.read(part)]
+    rows = [r for b in batches for r in zip(*[c.to_pylist() for c in b.columns])]
+    return rows, batches
+
+
+def _row_scans(monkeypatch):
+    """Count the columnar reader's per-row cell scans (its generic path):
+    calls of the unprefixed cell regex made from the datasource module.
+    Template compilation and the schema probe scan in the parser."""
+    import sys
+
+    n = [0]
+    pr = P.prefix_res(b"")
+    cell_re = pr.cell_re
+
+    class Counting:
+        def findall(self, *a):
+            n[0] += sys._getframe(1).f_globals["__name__"] == DS.__name__
+            return cell_re.findall(*a)
+
+    monkeypatch.setattr(pr, "cell_re", Counting())
+    return lambda: n[0]
+
+
+@pytest.mark.parametrize("threads", ["1", "4"])
+def test_sparse_rows_match_row_path(sparse_books, threads):
+    rows, batches = _read(sparse_books["sparse"], threads=threads)
+    want, _ = _read(sparse_books["sparse"], threads=threads, inline_strings="true")
+    assert len(rows) == SPARSE_ROWS
+    assert rows == want
+    # every family has absent cells, in leading, middle and trailing
+    # columns, and they read as NULL next to present values
+    for j in range(6):
+        assert 0 < sum(r[j] is None for r in rows) < SPARSE_ROWS // 2
+    assert rows.count((None,) * 6) >= SPARSE_ROWS // 2500  # empty <row></row>
+    # a whole batch of one column absent (an all-empty raw column)
+    assert any(b.column(4).null_count == b.num_rows for b in batches)
+    if threads == "1":  # file order
+        assert rows[1234] == (None,) * 6
+        assert all(r[4] is None for r in rows[SPARSE_E_GAP.start:SPARSE_E_GAP.stop])
+        assert None not in rows[0] + rows[1]
+
+
+@pytest.mark.parametrize("threads", ["1", "4"])
+@pytest.mark.parametrize("book", ["sparse", "trailing_gap"])
+def test_sparse_rows_take_dense_path(sparse_books, monkeypatch, threads, book):
+    """Guard: sparse chunks stay on the one-findall path — no per-row cell
+    scan at all — so the differential tests above exercise it. The
+    trailing_gap book also pins the template choice: chunk 0's last row
+    lacks F, so the template is an earlier row that compiles."""
+    want, _ = _read(sparse_books[book], threads=threads, inline_strings="true")
+    scans = _row_scans(monkeypatch)
+    rows, _ = _read(sparse_books[book], threads=threads)
+    assert scans() == 0
+    assert rows == want
+
+
+@pytest.mark.parametrize("threads", ["1", "4"])
+def test_sparse_indexed_copy_and_pruned_read(sparse_books, threads):
+    want, _ = _read(sparse_books["sparse"], threads="1", inline_strings="true")
+    got, _ = _read(sparse_books["indexed"], threads=threads)
+    assert sorted(got, key=repr) == sorted(want, key=repr)
+    pruned, _ = _read(sparse_books["sparse"], threads=threads, columns="F,A,D")
+    assert sorted(pruned, key=repr) == sorted(
+        ((r[5], r[0], r[3]) for r in want), key=repr
+    )
+
+
+@pytest.mark.parametrize("threads", ["1", "4"])
+def test_sparse_deviating_rows_fall_back(sparse_books, threads):
+    """Self-closing and ``<v></v>`` cells, a second style id in a numeric
+    column and out-of-order cells defeat the row pattern; their chunks
+    take the generic scan and read exactly like the row path."""
+    rows, _ = _read(sparse_books["deviating"], threads=threads)
+    want, _ = _read(sparse_books["deviating"], threads=threads, inline_strings="true")
+    assert rows == want
+    s = [t.replace("&amp;", "&") for t in _SPARSE_STRINGS]
+    for planted in (
+        (None, 1.5, None, None, None, None),
+        (s[7], None, None, None, None, s[8]),
+        (None, 2.25, None, None, 3.0, None),
+        (s[9], 4.5, None, True, None, None),
+    ):
+        assert planted in rows
+
+
+@pytest.mark.parametrize("threads", ["1", "4"])
+def test_sparse_cell_past_template_still_raises(sparse_books, threads):
+    with pytest.raises(ValueError, match="more columns"):
+        _read(sparse_books["extra_column"], threads=threads)

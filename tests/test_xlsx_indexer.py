@@ -591,6 +591,52 @@ def test_flush_unavailable_reports_unavailable_not_mixed(foreign_xlsx, tmp_path,
     assert open(p, "rb").read() == raw
 
 
+@pytest.mark.parametrize("workers", [1, 4])
+def test_stats_analysis_error_is_loud(foreign_xlsx, tmp_path, monkeypatch, workers):
+    """An unexpected error while analysing an interval fails the retrofit
+    on the serial path (workers=1) and the pooled one (workers=4) alike —
+    the pooled worker used to return None and drop every claim silently
+    — and the failure leaves no staging files behind."""
+    from sheetreader_duckdb_spark.sources.xlsx import indexer as IX
+
+    def boom(*a, **k):
+        raise RuntimeError("interval analysis bug (simulated)")
+
+    monkeypatch.setattr(IX, "_analyze_interval", boom)
+    out = str(tmp_path / "out.xlsx")
+    with pytest.raises(RuntimeError, match="interval analysis bug"):
+        index_xlsx(foreign_xlsx, out_path=out, workers=workers)
+    assert not os.path.exists(out)
+    assert not [f for f in os.listdir(tmp_path) if ".idx-tmp" in f]
+
+
+@pytest.mark.parametrize("exc", [ValueError, RuntimeError])
+def test_stats_heap_error_sheds_only_undecodable(foreign_xlsx, tmp_path, monkeypatch, exc):
+    """An undecodable shared-strings heap (ValueError) costs only the
+    statistics: the file still indexes, without an ``sv`` section (an
+    interval with string cells withholds every claim, since its read
+    would raise). Any other error from the heap load is a bug and
+    propagates."""
+    from sheetreader_duckdb_spark.sources.xlsx import parser as P
+
+    def heap(self):
+        raise exc("heap decode (simulated)")
+
+    monkeypatch.setattr(P.XlsxWorkbook, "shared_strings", property(heap))
+    out = str(tmp_path / "out.xlsx")
+    if exc is RuntimeError:
+        with pytest.raises(RuntimeError, match="heap decode"):
+            index_xlsx(foreign_xlsx, out_path=out)
+        assert not os.path.exists(out)
+        return
+    assert index_xlsx(foreign_xlsx, out_path=out)["indexed"]
+    with zipfile.ZipFile(out) as zf:
+        sheet = "xl/worksheets/sheet1.xml"
+        pts = SI.decode_split_index(zf, sheet)
+        assert pts is not None and pts[-1][1] == N_ROWS + 1
+        assert "sv" not in SI.decode_interval_sections(zf, sheet, pts)
+
+
 def test_stream_counters_match_whole_buffer_property():
     """Property: the chunked-stream counters agree with their whole-
     buffer ground truth under ADVERSARIAL chunkings — every split point,
