@@ -1585,7 +1585,7 @@ class SheetReaderReader(DataSourceReader):
                     filters, self.schema, file_schema.names,
                 ) or frozenset()
             yield from wb._drive_chunks(
-                sheet, step, shard, n_shards, skip_ivals
+                sheet, step, shard, n_shards, skip_ivals, skip_rows=skip_n
             )
             if batch_rows:
                 yield finalize(raw_cols)

@@ -39,16 +39,20 @@ from __future__ import annotations
 import os
 import struct
 import zipfile
+from collections import Counter
+from operator import itemgetter
 
 from .parser import (
     _SST_PFX_RE,
     _UNREADABLE_WORKBOOK,
     XlsxWorkbook,
     _bool_payload,
+    build_dense_row_re,
     count_row_starts,
     detect_row_prefix,
     prefix_res,
 )
+from .rowstream import MixedAwareRowCounter, foreign_row_evidence
 from .splitindex import (
     SECTION_KEYS,
     SECTIONS,
@@ -57,17 +61,19 @@ from .splitindex import (
     strip_count_entry,
     truncated_string_bounds,
 )
-from .writer import _col_letter, _publish_index, _write_indexed_member
+from .writer import _publish_index, _write_indexed_member
 
 
 class _IntervalStatsCollector:
     """Per-interval min/max per column letter, collected from the
     retrofit pass's own bytes (VERDICT r11 task 2 — the parquet
     row-group-stats pattern for XLSX): buffers one interval's uncompressed
-    XML at a time, parses its cells with the same prefix-compiled cell
-    regex the reader scans with, and folds raw ``<v>`` values of untyped /
-    ``t="n"`` cells (date serials stay raw — the reader converts filter
-    dates to serial envelopes). With an ``sst`` resolver (r12), STRING
+    XML at a time and sees its cells through the reader's own scans — the
+    dense row pattern (``parser.build_dense_row_re``) when every row
+    matches it, else the prefix-compiled cell regex — then folds raw
+    ``<v>`` values of untyped / ``t="n"`` cells column by column (date
+    serials stay raw — the reader converts filter dates to serial
+    envelopes). With an ``sst`` resolver (r12), STRING
     cells (``t="s"``) additionally fold to truncated (lo, hi) bounds over
     the RESOLVED shared-string values — resolution order cannot matter
     because min/max commute, and the stored bounds use the over-keep-only
@@ -115,10 +121,7 @@ class _IntervalStatsCollector:
         defer_strings: bool = False,
         pool=None, pool_size: int = 0,
     ):
-        pr = prefix_res(pfx)
         self._pfx = pfx
-        self._cell_re = pr.cell_re
-        self._cell_count_re = pr.cell_count_re
         self._sst = sst
         # Optional fork Pool (r13): interval analysis runs in worker
         # PROCESSES (the regex/fold slices are GIL-bound and were the
@@ -350,6 +353,34 @@ class _IntervalStatsCollector:
 # pool uses the fork context explicitly). None in deferred/no-heap runs.
 _POOL_HEAP: "list[str] | None" = None
 
+_TEMPLATE_TAIL = 64 << 10  # interval tail searched for a template row
+
+
+def _dense_columns(data: bytes, pr, rows_in: int):
+    """An interval's non-empty ``<v>`` values per (letters, s, t) column
+    from ONE findall of the reader's dense row pattern
+    (``parser.build_dense_row_re``) on a template row — the widest, then
+    last, tail row that compiles; None if none does or a row deviates. A
+    match of every row proves each holds only template cells, in order,
+    with the template's exact s/t and a non-empty ``<v>`` or no cell: no
+    unseen cells, no ``t="str"``/``inlineStr``, no repeated ref."""
+    tail = pr.row_re.findall(data, max(0, len(data) - _TEMPLATE_TAIL))
+    rows = [(pr.cell_re.findall(body), body) for body in reversed(tail)]
+    for cells, body in sorted(rows, key=lambda r: -len(r[0])):  # stable
+        keep = list(range(len(cells)))
+        built = build_dense_row_re(body, keep, None, frozenset(), pr.pfx)
+        if built is not None:
+            break
+    else:
+        return None
+    dm = built[0].findall(data)
+    if len(dm) != rows_in or foreign_row_evidence(data, pr.pfx):
+        return None
+    if len(cells) == 1:  # one group: findall returns bytes, not tuples
+        return {cells[0][:3]: list(filter(None, dm))}
+    return {c[:3]: list(filter(None, map(itemgetter(j), dm)))
+            for j, c in enumerate(cells)}
+
 
 def _analyze_interval(
     data: bytes, pfx: bytes, date_styles, sst, defer: bool,
@@ -367,20 +398,26 @@ def _analyze_interval(
     pr = prefix_res(pfx)
     rows_in = count_row_starts(data, pfx)
     withheld = (rows_in, dict.fromkeys(SECTION_KEYS), None)
-    ms = pr.cell_re.findall(data)
-    if len(ms) != len(pr.cell_count_re.findall(data)):
-        # unseen cells: no claims
-        return withheld
-    if any(t in (b"str", b"inlineStr") for _l, _s, t, _v in ms):
-        # Cells the default reader REFUSES (formula/inline strings →
-        # UNSUPPORTED_STRING_ERROR): claiming stats here would let a
-        # pruned filtered read silently succeed where the unfiltered
-        # read of the same file errors — withhold the whole interval
-        # so it always inflates and raises identically (ADVICE r12).
-        # (Most such cells already land in the count-mismatch branch
-        # above — their <is>/<f> children defeat the cell regex — but
-        # a bare `<c t="str"><v>…</v></c>` matches and needs this.)
-        return withheld
+    cols = _dense_columns(data, pr, rows_in)
+    if cols is None:
+        ms = pr.cell_re.findall(data)
+        if len(ms) != len(pr.cell_count_re.findall(data)):
+            # unseen cells: no claims
+            return withheld
+        if any(t in (b"str", b"inlineStr") for _l, _s, t, _v in ms):
+            # Cells the default reader REFUSES (formula/inline strings →
+            # UNSUPPORTED_STRING_ERROR): claiming stats here would let a
+            # pruned filtered read silently succeed where the unfiltered
+            # read of the same file errors — withhold the whole interval
+            # so it always inflates and raises identically (ADVICE r12).
+            # (Most such cells already land in the count-mismatch branch
+            # above — their <is>/<f> children defeat the cell regex — but
+            # a bare `<c t="str"><v>…</v></c>` matches and needs this.)
+            return withheld
+        cols = {}
+        for letters, s_attr, t_attr, v in ms:
+            if v:
+                cols.setdefault((letters, s_attr, t_attr), []).append(v)
     per: dict = {}
     per_s: dict = {}
     # Value counts per letter (r13, the `nc` section): how many cells
@@ -398,38 +435,40 @@ def _analyze_interval(
     # UTF-8 makes every read tier raise, so — error parity, as for an
     # unparseable number — the whole interval is withheld.
     bcounts: dict = {}
-    for letters, s_attr, t_attr, v in ms:
-        if v and (not t_attr or t_attr == b"n"):
-            per.setdefault(letters, []).append(v)
+    for (letters, s_attr, t_attr), vals in cols.items():
+        if not t_attr or t_attr == b"n":
+            per.setdefault(letters, []).extend(vals)
             if not s_attr:
                 fam = 0
             elif date_styles is None:
-                # style mapping unknown: this cell's decode family is
+                # style mapping unknown: these cells' decode family is
                 # undecidable — the column claims no counts here
                 ncounts[letters] = None
                 continue
             else:
                 fam = 3 if int(s_attr) in date_styles else 0
-        elif v and t_attr == b"s":
+        elif t_attr == b"s":
             # collected for EVERY mode — even budget-shed columns and
             # no-heap files — because the parse-check below is an
             # error-parity obligation, not a claims step (r13 review
             # pass 2: a garbage ref in a shed column must still
             # withhold the interval)
-            per_s.setdefault(letters, []).append(v)
+            per_s.setdefault(letters, []).extend(vals)
             fam = 1
-        elif v and t_attr == b"b":
+        elif t_attr == b"b":
             fam = 2
-            try:
-                truth = _bool_payload(v)
-            except UnicodeDecodeError:
-                return withheld
-            bcounts.setdefault(letters, [0, 0])[0 if truth else 1] += 1
+            bc = bcounts.setdefault(letters, [0, 0])
+            for payload, n in Counter(vals).items():
+                try:
+                    truth = _bool_payload(payload)
+                except UnicodeDecodeError:
+                    return withheld
+                bc[0 if truth else 1] += n
         else:
             continue
         got = ncounts.setdefault(letters, [0, 0, 0, 0])
         if got is not None:
-            got[fam] += 1
+            got[fam] += len(vals)
     # Duplicate-ref guard: ECMA-376 requires unique cell refs per row,
     # but the count claims (unlike min/max, which duplicates cannot
     # widen) could be INFLATED by a malformed file repeating a ref —
@@ -564,12 +603,6 @@ def _analyze_interval_pooled(data, pfx, date_styles, defer, dead_cols):
         data, pfx, date_styles,
         None if defer else _POOL_HEAP, defer, dead_cols=dead_cols,
     )
-
-
-# One boundary algorithm, one home (r12 consolidation): the any-prefix
-# stream counter now lives in rowstream with the other stream counters;
-# the old name stays importable for its call/test sites.
-from .rowstream import AnyRowStreamCounter as _AnyRowStreamCounter  # noqa: E402
 
 
 def _strip_zip64_extra(extra: bytes) -> bytes:
@@ -845,8 +878,10 @@ def index_xlsx(
             # deadlock) — and inherit any eager heap via copy-on-write
             # (_POOL_HEAP set just before construction). Single big
             # sheets gain too: consecutive intervals of one stream
-            # analyze concurrently. Any pool-setup failure falls back
-            # to the serial in-thread path, claims identical.
+            # analyze concurrently. A box without fork or under resource
+            # limits (OSError / ValueError from pool setup) falls back to
+            # the serial in-thread path, claims identical; any other
+            # error is a bug and raises.
             global _POOL_HEAP
             eff_workers = (
                 workers if workers is not None
@@ -866,7 +901,7 @@ def index_xlsx(
                         processes=eff_workers
                     )
                     pool_size = eff_workers
-                except Exception:  # noqa: BLE001 — serial fallback
+                except (OSError, ValueError):
                     stats_pool = None
                     pool_size = 0
                 finally:
@@ -1201,13 +1236,14 @@ def _resolve_deferred_strings(collectors, entries, expected_n=None):
 def _index_one_sheet(zout, wb, src_path, info, pfx, want_stats, sst=None,
                      pool=None, pool_size=0):
     """Re-deflate one worksheet member with flush points and the full
-    honesty kit: any-prefix stream count (mixed detection) + optional
-    interval statistics. Returns (points, n_rows, collector, mixed) —
+    honesty kit: the reader's own row count (``count_rows``' engine,
+    exact under any prefix, for mixed detection) + optional interval
+    statistics. Returns (points, n_rows, collector, mixed) —
     the caller aligns the collector AFTER any deferred string-bound
     resolution (r13: big heaps stream once post-staging), so the
     collector rides out of the staging worker instead of its aligned
     arrays."""
-    anyctr = _AnyRowStreamCounter()
+    anyctr = MixedAwareRowCounter(pfx, prefix_res(pfx).row_count_re)
 
     def _counted(chunks):
         for c in chunks:

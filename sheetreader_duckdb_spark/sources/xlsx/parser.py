@@ -877,9 +877,10 @@ class XlsxWorkbook:
            when sequential.
 
         ``shard``/``n_shards``: chunk round-robin sharding. This shard
-        cell-parses only its assigned chunks and row-counts the rest, so
-        the union of shards is exactly the file's rows and ``skip_rows``
-        stays globally consistent. ``skip_intervals`` holds split-index
+        cell-parses only its assigned chunks and row-counts the others
+        until ``skip_rows`` is passed, so the union of shards is exactly
+        the file's rows and ``skip_rows`` stays globally consistent.
+        ``skip_intervals`` holds split-index
         interval ordinals the caller's filter statistics prove empty;
         ``_drive_chunks`` treats them like unassigned intervals.
         """
@@ -897,7 +898,8 @@ class XlsxWorkbook:
 
         try:
             yield from self._drive_chunks(
-                sheet, step, shard, n_shards, skip_intervals, chunk_bytes
+                sheet, step, shard, n_shards, skip_intervals, chunk_bytes,
+                skip_rows,
             )
             return
         except _FastPathUnsupported:
@@ -915,19 +917,22 @@ class XlsxWorkbook:
         n_shards: int = 1,
         skip_intervals: "frozenset[int]" = frozenset(),
         chunk_bytes: int | None = None,
+        skip_rows: int = 0,
     ):
         """The chunk protocol of the fast tiers, written once: cut the
         worksheet into ``</row>``-aligned chunks, hand chunk 0 and this
-        shard's chunks to ``step``, row-count the others, and yield what
-        ``step`` yields.
+        shard's chunks to ``step``, row-count the others while the count
+        is below ``skip_rows``, and yield what ``step`` yields.
 
         ``step(work, pr, first, assigned, ordinal)`` is a generator over
         one chunk: ``pr`` is the document's ``_PrefixRes``, ``first`` marks
         chunk 0 (scanned by EVERY shard, so the fallback decision and any
         template built from it agree across shards), ``ordinal`` is the
-        global row ordinal at the chunk start, and its ``return`` value is
-        the chunk's parsed row count. It raises ``_FastPathUnsupported``
-        only on chunk 0; so does this method, only before the first row.
+        global row ordinal at the chunk start — exact below ``skip_rows``;
+        past it, unowned chunks count 0, which skip arithmetic cannot
+        tell apart — and its ``return`` value is the chunk's parsed row
+        count. It raises ``_FastPathUnsupported`` only on chunk 0; so does
+        this method, only before the first row.
 
         Acquisition: with a split index in the archive comment and either
         several shards or intervals to prune, each shard seeks and
@@ -939,7 +944,7 @@ class XlsxWorkbook:
         reads (``_chunk_bytes`` by default), cut at the detected prefix's
         last ``</row>``."""
         chunk_idx = 0
-        ordinal = 0  # global row ordinal, identical across all shards
+        ordinal = 0  # global row ordinal: exact below skip_rows (doc above)
         pr: _PrefixRes | None = None
 
         def run(work: bytes):
@@ -950,7 +955,7 @@ class XlsxWorkbook:
             if assigned or first:
                 n = yield from step(work, pr, first, assigned, ordinal)
             else:
-                n = _chunk_rows(work, pr.pfx)
+                n = _chunk_rows(work, pr.pfx) if ordinal < skip_rows else 0
             ordinal += n
             return n
 
@@ -1003,7 +1008,7 @@ class XlsxWorkbook:
                     if cut == -1:
                         if len(buf) < _MAX_ROW_BYTES:
                             continue
-                        if ordinal:
+                        if chunk_idx:
                             # Falling back now would re-parse from the
                             # start and duplicate rows already emitted.
                             raise ValueError(
@@ -1281,7 +1286,7 @@ def _chunk_rows(work: bytes, pfx: bytes) -> int:
 def build_dense_row_re(
     body: bytes,
     keep: list,
-    exp_codes: list[int],
+    exp_codes: "list[int] | None",
     date_styles: frozenset[int],
     pfx: bytes = b"",
 ):
@@ -1294,7 +1299,8 @@ def build_dense_row_re(
     Returns ``(regex, out_slots)`` — ``out_slots[j]`` is the output column
     of the j-th capture group — or ``None`` when the template row can't
     promise the schema's cell semantics (absent cells, unexpected types,
-    inline strings).
+    inline strings). ``exp_codes=None`` means no schema to agree with:
+    the template's own cell types stand (the interval-stats author).
 
     Why: the generic scan pays three Python passes per chunk (row findall,
     per-row cell findall, per-cell type dispatch). This profile-driven
@@ -1336,7 +1342,7 @@ def build_dense_row_re(
         else:
             return None  # error / inline-string template: generic path
         out = keep[fcol]
-        if out is not None and exp_codes[out] != implied:
+        if out is not None and exp_codes is not None and exp_codes[out] != implied:
             return None  # schema disagrees (force_types): generic semantics
         cell = b"<" + ep + rb'c r="' + letters + rb'\d*"'
         if s_attr:

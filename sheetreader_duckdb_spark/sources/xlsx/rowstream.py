@@ -3,8 +3,9 @@
 Three call sites count XML row/entry openers over a chunked byte stream
 and must agree exactly with a whole-buffer count for ANY chunking of the
 same bytes: the sink writer's per-flush-point cumulative row counts
-(``writer._write_indexed_member``), the retrofit indexer's any-prefix
-mixed-detection count (``indexer``), and ``parser.count_rows``. Until
+(``writer._write_indexed_member``), ``parser.count_rows``, and the
+retrofit indexer's mixed-prefix guard, which runs ``count_rows``' own
+engine (``MixedAwareRowCounter``) beside the writer's needle count. Until
 r12 each carried its own copy of the carry/straddle algorithm — three
 variants of one subtle boundary computation, flagged by the r11 verdict
 as a divergence hazard. This module is the single implementation.
@@ -141,25 +142,6 @@ class _StreamTagCounter:
         return self._n
 
 
-class AnyRowStreamCounter(_StreamTagCounter):
-    """Exact any-prefix row-start count over a chunked byte stream.
-    Guards the retrofit against MIXED-prefix worksheets: the
-    detected-prefix row counts would disagree with what the reader
-    parses, so such files get no worksheet index section (sequential +
-    tier-3 sharded reads serve them exactly). Carry is viable-suffix-
-    derived — exact for any namespace prefix length (ADVICE r12)."""
-
-    __slots__ = ()
-
-    def _cut(self, buf: bytes) -> int:
-        return viable_row_cut(buf)
-
-    def _count_upto(self, buf: bytes, cut: int) -> int:
-        # findall(pos, endpos): matches must lie inside buf[:cut] — and
-        # every match starting before a viable cut does (class doc).
-        return len(_ANY_ROW_RE.findall(buf, 0, cut))
-
-
 class NeedleStreamCounter(_StreamTagCounter):
     """memchr-speed exact count of a fixed byte needle, optionally minus
     a longer prefix-colliding superstring (``<rowB`` out of ``<row``:
@@ -192,8 +174,9 @@ class NeedleStreamCounter(_StreamTagCounter):
 
 class MixedAwareRowCounter(_StreamTagCounter):
     """``parser.count_rows``'s engine once the document's prefix is
-    detected: detected-prefix regex count on clean buffers, exact
-    any-prefix recount whenever ``foreign_row_evidence`` fires. The
+    detected (also the retrofit's mixed-prefix guard): detected-prefix
+    regex count on clean buffers, exact any-prefix recount whenever
+    ``foreign_row_evidence`` fires. The
     viable-suffix cut closes ADVICE r12 item 1: a chunk ending mid
     foreign tag (``…<x:ro``) — where evidence CANNOT fire yet — now
     carries the whole partial tag, and the next round's recount sees it

@@ -72,7 +72,7 @@ def test_advice_r12_unbounded_prefix_every_boundary():
     want = R.count_any_row_starts(doc)
     assert want == 3
     for cs in range(1, len(doc) + 1):
-        assert _feed_chunked(R.AnyRowStreamCounter(), doc, cs) == want, cs
+        assert _feed_chunked(_mixed_counter(pfx), doc, cs) == want, cs
         assert _feed_chunked(_mixed_counter(b"r:"), doc, cs) == want, cs
 
 
@@ -91,7 +91,7 @@ def test_mixed_aware_random_soup_random_chunkings():
             cs = rng.randint(1, max(1, len(doc)))
             got = _feed_chunked(_mixed_counter(b""), doc, cs)
             assert got == want, (doc[:80], cs)
-            got2 = _feed_chunked(R.AnyRowStreamCounter(), doc, cs)
+            got2 = _feed_chunked(_mixed_counter(b"x:"), doc, cs)
             assert got2 == want, (doc[:80], cs)
 
 
@@ -113,7 +113,7 @@ def test_needle_counter_mid_stream_count_property():
 
 def test_any_row_counter_mid_stream_count_property():
     doc = ADVICE_REPRO * 3
-    ctr = R.AnyRowStreamCounter()
+    ctr = _mixed_counter(b"x:")
     fed = b""
     for i in range(0, len(doc), 7):
         piece = doc[i : i + 7]

@@ -1372,9 +1372,10 @@ _SPARSE_STRINGS = [*"ABCDEF", *(f"w{j} &amp; {j % 7}" for j in range(50))]
 _NS = "http://schemas.openxmlformats.org/spreadsheetml/2006/main"
 
 
-def _sparse_workbook(path, plants=None, trailing_gap=False):
-    """Columns A (t="s"), B (number), C (date style), D (t="b"),
-    E (number), F (t="s"). Past the two rows the schema probe reads, each
+def _sparse_workbook(path, plants=None, trailing_gap=False, n_rows=SPARSE_ROWS):
+    """A header row and ``n_rows`` data rows of columns A (t="s"),
+    B (number), C (date style), D (t="b"), E (number), F (t="s"). Past
+    the two rows the schema probe reads, each
     cell is absent with probability 0.05, E is absent in SPARSE_E_GAP and
     every 2,500th row is an empty ``<row r="n"></row>``. ``plants`` maps
     a data row index to replacement row XML (``{r}`` = row number);
@@ -1387,7 +1388,7 @@ def _sparse_workbook(path, plants=None, trailing_gap=False):
     rows = ['<row r="1">' + "".join(
         f'<c r="{c}1" t="s"><v>{i}</v></c>' for i, c in enumerate("ABCDEF")
     ) + "</row>"]
-    for i in range(SPARSE_ROWS):
+    for i in range(n_rows):
         r = i + 2
         if plants and i in plants:
             rows.append(plants[i].format(r=r))
@@ -1441,7 +1442,7 @@ def _sparse_workbook(path, plants=None, trailing_gap=False):
             + "</sst>"
         ))
         z.writestr("xl/worksheets/sheet1.xml", (
-            f'<worksheet xmlns="{_NS}"><dimension ref="A1:F{SPARSE_ROWS + 1}"/>'
+            f'<worksheet xmlns="{_NS}"><dimension ref="A1:F{n_rows + 1}"/>'
             "<sheetData>" + "".join(rows) + "</sheetData></worksheet>"
         ))
     return path

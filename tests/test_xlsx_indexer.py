@@ -610,6 +610,30 @@ def test_stats_analysis_error_is_loud(foreign_xlsx, tmp_path, monkeypatch, worke
     assert not [f for f in os.listdir(tmp_path) if ".idx-tmp" in f]
 
 
+@pytest.mark.parametrize("exc", [OSError, ValueError, RuntimeError])
+def test_stats_pool_setup_error(foreign_xlsx, tmp_path, monkeypatch, exc):
+    """Pool setup on a box without fork or under resource limits
+    (OSError, ValueError) falls back to the serial path with
+    byte-identical output; any other setup error propagates."""
+    import multiprocessing
+
+    class NoPool:
+        def Pool(self, *a, **k):
+            raise exc("pool setup (simulated)")
+
+    want = str(tmp_path / "want.xlsx")
+    assert index_xlsx(foreign_xlsx, out_path=want, workers=4)["indexed"]
+    monkeypatch.setattr(multiprocessing, "get_context", lambda method: NoPool())
+    out = str(tmp_path / "out.xlsx")
+    if exc is RuntimeError:
+        with pytest.raises(RuntimeError, match="pool setup"):
+            index_xlsx(foreign_xlsx, out_path=out, workers=4)
+        assert not os.path.exists(out)
+        return
+    assert index_xlsx(foreign_xlsx, out_path=out, workers=4)["indexed"]
+    assert open(out, "rb").read() == open(want, "rb").read()
+
+
 @pytest.mark.parametrize("exc", [ValueError, RuntimeError])
 def test_stats_heap_error_sheds_only_undecodable(foreign_xlsx, tmp_path, monkeypatch, exc):
     """An undecodable shared-strings heap (ValueError) costs only the
@@ -641,17 +665,17 @@ def test_stream_counters_match_whole_buffer_property():
     """Property: the chunked-stream counters agree with their whole-
     buffer ground truth under ADVERSARIAL chunkings — every split point,
     including mid-tag splits, for both the fixed-needle pair counter
-    (writer._StraddleCounter) and the any-prefix regex counter
-    (_AnyRowStreamCounter). This is the carry discipline the r11 review
-    flagged as subtle-and-triplicated; the property pins each variant."""
+    (writer._StraddleCounter) and the retrofit's mixed-prefix guard
+    (rowstream.MixedAwareRowCounter, exact under any prefix). This is the
+    carry discipline the r11 review flagged as subtle-and-triplicated;
+    the property pins each variant."""
     import itertools
     import random
 
-    from sheetreader_duckdb_spark.sources.xlsx.indexer import (
-        _AnyRowStreamCounter,
-    )
     from sheetreader_duckdb_spark.sources.xlsx.parser import (
+        MixedAwareRowCounter,
         count_any_row_starts,
+        prefix_res,
     )
     from sheetreader_duckdb_spark.sources.xlsx.writer import _StraddleCounter
 
@@ -679,7 +703,7 @@ def test_stream_counters_match_whole_buffer_property():
         if len(doc) <= 64:
             chunkings.append(list(range(1, len(doc) + 1)))  # 1-byte chunks
         for ends in chunkings:
-            a = _AnyRowStreamCounter()
+            a = MixedAwareRowCounter(b"", prefix_res(b"").row_count_re)
             s = _StraddleCounter(b"<row", b"<rowB")
             prev = 0
             for e in ends:
