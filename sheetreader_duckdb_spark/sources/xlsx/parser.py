@@ -883,6 +883,11 @@ class XlsxWorkbook:
         ``skip_intervals`` holds split-index
         interval ordinals the caller's filter statistics prove empty;
         ``_drive_chunks`` treats them like unassigned intervals.
+
+        Callers: the schema probe (``inference.infer_schema``), the
+        declared-schema fallback (``datasource._infer_or_declared``) and
+        the benchmark's layer probe. The partition reader drives
+        ``_drive_chunks`` itself and calls ``_scan_chunk`` directly.
         """
         date_styles = self.date_styles
         colmap: dict[bytes, int] = {}

@@ -89,7 +89,10 @@ def foreign_row_evidence(work: bytes, pfx: bytes = b"") -> bool:
     if work.count(b"<row") > work.count(b"<rowB"):
         return True  # unprefixed rows hiding in a prefixed document
     own = work.count(b"<" + pfx + b"row") - work.count(b"<" + pfx + b"rowB")
+    # Own ``</x:row>`` closers hold ``:row`` too; past them only foreign
+    # row tags (and text false positives) can make ``colon`` exceed ``own``.
     colon = work.count(b":row") - work.count(b":rowB")
+    colon -= work.count(b"</" + pfx + b"row>")
     return colon != own
 
 

@@ -202,3 +202,17 @@ def test_count_rows_mixed_prefix_chunk_boundaries(tmp_path, monkeypatch, chunk):
     with P.XlsxWorkbook(str(p)) as wb:
         sheet = wb.resolve_sheet(None, None)
         assert wb.count_rows(sheet) == 400
+
+
+def test_foreign_row_evidence_ignores_own_prefixed_closers():
+    """A clean ``x:`` chunk is no evidence (its ``</x:row>`` closers hold
+    ``:row`` too); a planted unprefixed or foreign-prefixed row is."""
+    clean = (
+        b'<x:row r="1"><x:c r="A1"><x:v>1</x:v></x:c></x:row><x:row r="2"/>'
+        b'<x:rowBreaks count="1"><x:brk id="1"/></x:rowBreaks>'
+        b'<x:row r="3"></x:row>'
+    )
+    assert not R.foreign_row_evidence(clean, b"x:")
+    for planted in (b'<row r="9"></row>', b'<y:row r="9"></y:row>', b'<y:row r="9"/>'):
+        assert R.foreign_row_evidence(clean + planted, b"x:")
+        assert R.foreign_row_evidence(planted + clean, b"x:")

@@ -5,9 +5,11 @@ and extracts every chunk whose rows all match it, chunk 0's own rows
 included, with one findall. These tests build workbooks big enough to
 span several chunks, plant rows that omit cells (which must stay on the
 fast path) and rows whose present cells deviate from the template (which
-must fall back), and pin that (a) results are identical to the row-path
-implementation (a fully independent scan: iter_rows + per-cell dispatch),
-and (b) absent cells and empty rows keep exact NULL semantics. No
+must fall back), and pin that (a) results are identical to an oracle
+written here (``_oracle``: ``XlsxWorkbook.iter_rows`` per partition plus
+a per-cell dispatch of the test's own), for typed, coerce and inline
+reads alike — all of which go through the one partition reader — and
+(b) absent cells and empty rows keep exact NULL semantics. No
 SparkSession needed for most of them — the reader API is driven directly.
 """
 
@@ -90,9 +92,7 @@ def test_dense_engages_on_this_shape(big_xlsx):
 
 def test_dense_matches_row_path_and_null_semantics(big_xlsx):
     dense = _collect({"path": big_xlsx, "threads": "1"})
-    # inline_strings routes through _read_rows (iter_rows + per-cell
-    # dispatch) — an independent implementation of the same semantics.
-    rowpath = _collect({"path": big_xlsx, "threads": "1", "inline_strings": "true"})
+    rowpath = _oracle(big_xlsx, threads="1")
     assert len(dense) == N_ROWS
     assert dense == rowpath
     assert dense[20_000] == ("r20000", None, 20000.25)
@@ -291,7 +291,7 @@ def test_auto_shard_cap_matrix(spark, tmp_path, monkeypatch):
 
 def test_coerce_sharded_read_equals_single_thread(spark, tmp_path):
     """VERDICT r8 task 2: coerce_to_string now shards like any other read
-    (chunk round-robin on the row path, lazy per-shard heap) — sharded
+    (chunk round-robin, lazy per-shard heap) — sharded
     rows must be exactly the single-thread rows, including the fixed-6
     float / TRUE-FALSE / ISO-date coercions."""
     from sheetreader_duckdb_spark.sources.xlsx.writer import IncrementalXlsxWriter
@@ -322,7 +322,7 @@ def test_coerce_sharded_read_equals_single_thread(spark, tmp_path):
 
 
 def test_row_path_sharded_skip_rows(spark, tmp_path):
-    """skip_rows accounting is GLOBAL across row-path shards: unassigned
+    """skip_rows accounting is GLOBAL across coerce-read shards: unassigned
     chunks are row-counted so every shard agrees on row ordinals."""
     from sheetreader_duckdb_spark.sources.xlsx.writer import IncrementalXlsxWriter
     from sheetreader_duckdb_spark import register
@@ -937,7 +937,7 @@ def test_split_index_lying_rowcount_fails_loudly(big_xlsx, tmp_path, extra):
     """A well-formed index whose row counts disagree with the actual sheet
     must raise, never return silently wrong data: every materialized
     interval's parsed count is checked against the recorded one — on the
-    columnar tier and on the row tier (coerce) alike."""
+    typed read and on the coerce read alike."""
     import shutil
     import zipfile
 
@@ -956,8 +956,8 @@ def test_split_index_lying_rowcount_fails_loudly(big_xlsx, tmp_path, extra):
 
 
 def test_split_index_row_path_coerce_sharded_equals_single(big_xlsx):
-    """The coerce/user-typed tier reads through iter_rows, whose sharded
-    acquisition also rides the split index — same rows as single-thread,
+    """A coerce read with user VARCHAR types, whose sharded acquisition
+    also rides the split index — same rows as single-thread,
     and as the stripped-comment scan (covered by the reader suites)."""
     schema = StructType(
         [
@@ -1489,14 +1489,67 @@ def _read(path, **opts):
     return rows, batches
 
 
-def _row_scans(monkeypatch):
+def _oracle(path, **opts):
+    """Rows of a schema-inferring read, by a path independent of the
+    reader's chunk step: ``XlsxWorkbook.iter_rows`` per partition (the
+    reader's own shard plan, so row order is exact) and the per-cell
+    dispatch below (NULL on type mismatch; under ``coerce_to_string`` a
+    VARCHAR cell formats numbers ``%.6f``, booleans TRUE/FALSE and dates
+    ISO)."""
+    import datetime as dt
+
+    opts = {"path": path, "batch_size": str(SPARSE_BATCH), **opts}
+    src = DS.SheetReaderDataSource(opts)
+    schema = src.schema()
+    reader = src.reader(schema)
+    o = reader.opts
+    names = [f.name for f in schema.fields]
+    day = lambda secs: dt.date(1970, 1, 1) + dt.timedelta(days=int(secs / 86400.0))  # noqa: E731
+    typed = {"DOUBLE": P.T_NUMERIC, "BOOLEAN": P.T_BOOLEAN, "DATE": P.T_DATE}
+
+    def cell(sql, ctype, val, heap):
+        if sql == "VARCHAR":
+            if ctype == P.T_STRING_REF:
+                return heap[val]
+            if ctype == P.T_STRING_LIT:
+                return val
+            if not o.coerce_to_string:
+                return None
+            if ctype == P.T_NUMERIC:
+                return "%.6f" % val
+            if ctype == P.T_BOOLEAN:
+                return "TRUE" if val else "FALSE"
+            return day(val).isoformat() if ctype == P.T_DATE else None
+        if ctype != typed[sql]:
+            return None
+        return day(val) if sql == "DATE" else val
+
+    rows = []
+    for part in reader.partitions():
+        fs = DS._infer_or_declared(part.path, o, names, reader.col_types)
+        cols = [fs.names.index(n) for n in names]
+        with P.XlsxWorkbook(part.path, allow_inline=o.inline_strings) as wb:
+            sheet = wb.resolve_sheet(o.sheet_name, o.sheet_index)
+            for cells in wb.iter_rows(
+                sheet, skip_rows=fs.skip_rows,
+                shard=part.shard, n_shards=part.n_shards,
+            ):
+                by_col = {c: (t, v) for c, t, v in cells}
+                rows.append(tuple(
+                    cell(sql, *by_col.get(c, (P.T_NONE, None)), wb.shared_strings)
+                    for sql, c in zip(reader.col_types, cols)
+                ))
+    return rows
+
+
+def _row_scans(monkeypatch, pfx=b""):
     """Count the columnar reader's per-row cell scans (its generic path):
-    calls of the unprefixed cell regex made from the datasource module.
+    calls of the ``pfx`` cell regex made from the datasource module.
     Template compilation and the schema probe scan in the parser."""
     import sys
 
     n = [0]
-    pr = P.prefix_res(b"")
+    pr = P.prefix_res(pfx)
     cell_re = pr.cell_re
 
     class Counting:
@@ -1511,7 +1564,7 @@ def _row_scans(monkeypatch):
 @pytest.mark.parametrize("threads", ["1", "4"])
 def test_sparse_rows_match_row_path(sparse_books, threads):
     rows, batches = _read(sparse_books["sparse"], threads=threads)
-    want, _ = _read(sparse_books["sparse"], threads=threads, inline_strings="true")
+    want = _oracle(sparse_books["sparse"], threads=threads)
     assert len(rows) == SPARSE_ROWS
     assert rows == want
     # every family has absent cells, in leading, middle and trailing
@@ -1531,10 +1584,10 @@ def test_sparse_rows_match_row_path(sparse_books, threads):
 @pytest.mark.parametrize("book", ["sparse", "trailing_gap"])
 def test_sparse_rows_take_dense_path(sparse_books, monkeypatch, threads, book):
     """Guard: sparse chunks stay on the one-findall path — no per-row cell
-    scan at all — so the differential tests above exercise it. The
+    scan at all — so the differential tests around it exercise it. The
     trailing_gap book also pins the template choice: chunk 0's last row
     lacks F, so the template is an earlier row that compiles."""
-    want, _ = _read(sparse_books[book], threads=threads, inline_strings="true")
+    want = _oracle(sparse_books[book], threads=threads)
     scans = _row_scans(monkeypatch)
     rows, _ = _read(sparse_books[book], threads=threads)
     assert scans() == 0
@@ -1543,7 +1596,7 @@ def test_sparse_rows_take_dense_path(sparse_books, monkeypatch, threads, book):
 
 @pytest.mark.parametrize("threads", ["1", "4"])
 def test_sparse_indexed_copy_and_pruned_read(sparse_books, threads):
-    want, _ = _read(sparse_books["sparse"], threads="1", inline_strings="true")
+    want = _oracle(sparse_books["sparse"], threads="1")
     got, _ = _read(sparse_books["indexed"], threads=threads)
     assert sorted(got, key=repr) == sorted(want, key=repr)
     pruned, _ = _read(sparse_books["sparse"], threads=threads, columns="F,A,D")
@@ -1558,7 +1611,7 @@ def test_sparse_deviating_rows_fall_back(sparse_books, threads):
     column and out-of-order cells defeat the row pattern; their chunks
     take the generic scan and read exactly like the row path."""
     rows, _ = _read(sparse_books["deviating"], threads=threads)
-    want, _ = _read(sparse_books["deviating"], threads=threads, inline_strings="true")
+    want = _oracle(sparse_books["deviating"], threads=threads)
     assert rows == want
     s = [t.replace("&amp;", "&") for t in _SPARSE_STRINGS]
     for planted in (
@@ -1574,3 +1627,286 @@ def test_sparse_deviating_rows_fall_back(sparse_books, threads):
 def test_sparse_cell_past_template_still_raises(sparse_books, threads):
     with pytest.raises(ValueError, match="more columns"):
         _read(sparse_books["extra_column"], threads=threads)
+
+
+# -- One partition reader ----------------------------------------------------
+# Coerce and inline reads go through the same chunk step as typed reads:
+# the dense template on regular chunks, ``parser._scan_chunk`` off it, and
+# tier 3 (``_iter_rows_expat_sharded``) when chunk 0 defeats the scan.
+# Every row-shaped result becomes Arrow through one builder.
+
+_FULL_ROW = (
+    '<row r="{r}"><c r="A{r}" t="s"><v>6</v></c><c r="B{r}"><v>1.5</v></c>'
+    '<c r="C{r}" s="1"><v>35000</v></c><c r="D{r}" t="b"><v>1</v></c>'
+    '<c r="E{r}"><v>2.25</v></c><c r="F{r}" t="s"><v>7</v></c></row>'
+)
+_INLINE_ROW = (
+    '<row r="{r}"><c r="A{r}" t="str"><v>lit {r} &amp; x</v></c>'
+    '<c r="B{r}"><v>2.5</v></c><c r="D{r}" t="b"><v>1</v></c>'
+    '<c r="F{r}" t="inlineStr"><is><t>in</t><t>l{r}</t></is></c></row>'
+)
+_INLINE_ROWS = 60_000  # ~12 MB of sheet XML: 3 chunks at 4 MB
+_INLINE_SKIPS = ("0", "501", "45001")  # none, inside chunk 0, past chunks
+_INLINE_AT = (22_000, 29_000, 41_000, 52_000)  # past chunk 0 at 4 MB
+
+
+def _prefixed_copy(src, dst):
+    """``src`` with every worksheet element under the ``x:`` prefix."""
+    import re
+    import zipfile
+
+    with zipfile.ZipFile(src) as zi, zipfile.ZipFile(dst, "w", zipfile.ZIP_DEFLATED) as zo:
+        for info in zi.infolist():
+            data = zi.read(info.filename)
+            if info.filename.startswith("xl/worksheets/"):
+                data = re.sub(
+                    rb"<(/?)([A-Za-z])", rb"<\1x:\2",
+                    data.replace(b'xmlns="', b'xmlns:x="', 1),
+                )
+            zo.writestr(info.filename, data)
+    return dst
+
+
+@pytest.fixture(scope="module")
+def reader_books(tmp_path_factory):
+    d = tmp_path_factory.mktemp("one_reader")
+    # Full rows where the skip_rows probes land (SPARSE_ROWS' random
+    # absent cells would fail the two-row schema probe).
+    full = {i: _FULL_ROW for s in _INLINE_SKIPS[1:] for i in (int(s) - 1, int(s))}
+    mid = {**full, **{i: _INLINE_ROW for i in _INLINE_AT}}
+    return {
+        "inline_mid": _sparse_workbook(
+            str(d / "inline_mid.xlsx"), plants=mid, n_rows=_INLINE_ROWS
+        ),
+        "inline_chunk0": _sparse_workbook(
+            str(d / "inline_c0.xlsx"), plants={**mid, 300: _INLINE_ROW},
+            n_rows=_INLINE_ROWS,
+        ),
+        "mixed_type": _sparse_workbook(str(d / "mixed_type.xlsx"), plants={
+            5_000: '<row r="{r}"><c r="A{r}"><v>3.25</v></c></row>',
+            12_000: '<row r="{r}"><c r="A{r}" t="b"><v>1</v></c></row>',
+            19_000: '<row r="{r}"><c r="A{r}" s="1"><v>40000</v></c></row>',
+            26_000: '<row r="{r}"><c r="A{r}" t="e"><v>#N/A</v></c></row>',
+        }),
+        "irregular": _sparse_workbook(str(d / "irregular.xlsx"), plants={
+            15_000: '<row r="{r}"><c r="A{r}" t="s"><v>9</v></c>'
+                    '<c r="B{r}"><f>1+1</f><v>2</v></c></row>',
+            22_000: '<x:row r="{r}"><x:c r="A{r}" t="s"><x:v>10</x:v></x:c>'
+                    '<x:c r="F{r}" t="s"><x:v>11</x:v></x:c></x:row>',
+        }),
+    }
+
+
+def _chunk_scans(monkeypatch):
+    """Count ``parser._scan_chunk`` calls past chunk 0."""
+    n = [0]
+    scan = P._scan_chunk
+
+    def counting(work, colmap, date_styles, first_chunk, *a):
+        n[0] += not first_chunk
+        return scan(work, colmap, date_styles, first_chunk, *a)
+
+    monkeypatch.setattr(P, "_scan_chunk", counting)
+    return lambda: n[0]
+
+
+@pytest.mark.parametrize("threads", ["1", "4"])
+@pytest.mark.parametrize("opt", ["coerce_to_string", "inline_strings"])
+@pytest.mark.parametrize("book", ["sparse", "deviating"])
+def test_coerce_and_inline_reads_take_dense_path(
+    sparse_books, monkeypatch, threads, opt, book
+):
+    """Regular chunks of coerce and inline reads stay on the dense
+    template: no ``_scan_chunk`` call past chunk 0. Chunks holding a
+    deviating row take ``_scan_chunk``, and both equal the oracle."""
+    want = _oracle(sparse_books[book], threads=threads, **{opt: "true"})
+    scans = _chunk_scans(monkeypatch)
+    rows, _ = _read(sparse_books[book], threads=threads, **{opt: "true"})
+    assert rows == want
+    if book == "sparse":
+        assert scans() == 0
+    else:
+        assert scans() > 0
+
+
+@pytest.mark.parametrize("skip", _INLINE_SKIPS)
+@pytest.mark.parametrize("threads", ["1", "4"])
+@pytest.mark.parametrize("book", ["inline_mid", "inline_chunk0"])
+def test_inline_book_reads_equal_oracle(reader_books, monkeypatch, book, threads, skip):
+    """``t="str"`` and ``inlineStr`` cells in several chunks read through
+    ``_scan_chunk``; one more in chunk 0 sends every shard to tier 3."""
+    want = _oracle(
+        reader_books[book], threads=threads, skip_rows=skip, inline_strings="true"
+    )
+    n = [0]
+    walk = P.XlsxWorkbook._iter_rows_expat_sharded
+
+    def counting(self, *a):
+        n[0] += 1
+        return walk(self, *a)
+
+    monkeypatch.setattr(P.XlsxWorkbook, "_iter_rows_expat_sharded", counting)
+    rows, _ = _read(
+        reader_books[book], threads=threads, skip_rows=skip, inline_strings="true"
+    )
+    assert rows == want
+    assert (n[0] > 0) is (book == "inline_chunk0")
+    if skip == "0":
+        assert ("lit 22002 & x", 2.5, None, True, None, "inl22002") in rows
+        with pytest.raises(ValueError, match="Inline & dynamic String"):
+            _read(reader_books[book], threads=threads)
+
+
+@pytest.mark.parametrize("opt", ["coerce_to_string", "inline_strings"])
+def test_skipped_irregular_row_sends_read_to_tier3(tmp_path, monkeypatch, opt):
+    """Rows before ``skip_rows`` lie outside the dense template's proof, so
+    chunk 0 checks them as ``iter_rows`` does: an irregular one (here a
+    formula) sends every shard to tier 3. On an indexed copy the fast
+    tier would shard by interval, so the partition order shows the tier."""
+    from sheetreader_duckdb_spark.sources.xlsx.indexer import index_xlsx
+
+    formula = (
+        '<row r="{r}"><c r="A{r}" t="s"><v>3</v></c>'
+        '<c r="B{r}"><f>1+1</f><v>2</v></c></row>'
+    )
+    src = _sparse_workbook(
+        str(tmp_path / "f.xlsx"), plants={1: formula, 2: _FULL_ROW, 3: _FULL_ROW}
+    )
+    path = str(tmp_path / "f_idx.xlsx")
+    assert index_xlsx(src, out_path=path)["indexed"]
+    opts = {"threads": "4", "skip_rows": "3", opt: "true"}
+    want = _oracle(path, **opts)
+    n = [0]
+    walk = P.XlsxWorkbook._iter_rows_expat_sharded
+
+    def counting(self, *a):
+        n[0] += 1
+        return walk(self, *a)
+
+    monkeypatch.setattr(P.XlsxWorkbook, "_iter_rows_expat_sharded", counting)
+    rows, _ = _read(path, **opts)
+    assert rows == want
+    # the schema probe, then each of the four partitions' probe and read
+    assert n[0] == 1 + 4 + 4
+
+
+@pytest.mark.parametrize("threads", ["1", "4"])
+def test_mixed_prefix_chunk0_drives_chunks_once(tmp_path, monkeypatch, threads):
+    """A document that defeats the scan on chunk 0 enters
+    ``_drive_chunks`` once per partition (plus the schema probe's own
+    ``iter_rows``), then reads through tier 3."""
+    import sys
+
+    p = str(tmp_path / "mixed.xlsx")
+    n_rows = _mixed_prefix_xlsx(p, 3000)
+    calls = [0]
+    drive = P.XlsxWorkbook._drive_chunks
+
+    def counting(self, *a, **k):
+        f = sys._getframe(1)
+        while f.f_globals["__name__"] == P.__name__:
+            f = f.f_back
+        calls[0] += f.f_globals["__name__"] == DS.__name__
+        return drive(self, *a, **k)
+
+    monkeypatch.setattr(P.XlsxWorkbook, "_drive_chunks", counting)
+    reader = DS.SheetReaderReader(
+        {"path": p, "threads": threads, "has_header": "false"}, MIXED_SCHEMA
+    )
+    parts = reader.partitions()
+    rows = [
+        r for part in parts for b in reader.read(part)
+        for r in zip(*[c.to_pylist() for c in b.columns])
+    ]
+    assert calls[0] == len(parts)
+    assert sorted(rows) == [(float(i), float(2 * i)) for i in range(1, n_rows + 1)]
+
+
+def test_sharded_typed_read_keeps_lazy_heap(reader_books, monkeypatch):
+    """A sharded typed read meeting an irregular row (a formula) and an
+    irregular chunk (a row under a second prefix) decodes strings from
+    the lazy heap, never the eager ``shared_strings`` property."""
+    path = reader_books["irregular"]
+    want = _oracle(path, threads="4")
+    frags = [0]
+    fragment_rows = P._fragment_rows
+
+    def counting(*a, **k):
+        frags[0] += 1
+        return fragment_rows(*a, **k)
+
+    def eager(self):
+        raise AssertionError("eager shared-strings heap touched")
+
+    monkeypatch.setattr(P, "_fragment_rows", counting)
+    monkeypatch.setattr(P.XlsxWorkbook, "shared_strings", property(eager))
+    rows, _ = _read(path, threads="4")
+    assert rows == want
+    assert frags[0] >= 2
+    s = [t.replace("&amp;", "&") for t in _SPARSE_STRINGS]
+    assert (s[9], 2.0, None, None, None, None) in rows
+    assert (s[10], None, None, None, None, s[11]) in rows
+
+
+@pytest.mark.parametrize("threads", ["1", "4"])
+def test_coerce_formats_mixed_type_varchar_column(reader_books, threads):
+    """A VARCHAR column holding numbers, booleans, dates and errors in
+    chunks past chunk 0: coerce formats them like the reference
+    (``%.6f``, TRUE/FALSE, ISO date, NULL), a typed read gives NULL."""
+    path = reader_books["mixed_type"]
+    rows, _ = _read(path, threads=threads, coerce_to_string="true")
+    assert rows == _oracle(path, threads=threads, coerce_to_string="true")
+    firsts = {r[0] for r in rows}
+    assert {"3.250000", "TRUE", "2009-07-06"} <= firsts
+    typed, _ = _read(path, threads=threads)
+    assert typed == _oracle(path, threads=threads)
+    assert not {"3.250000", "TRUE", "2009-07-06"} & {r[0] for r in typed}
+    assert sum(r[0] is None for r in typed) == sum(r[0] is None for r in rows) + 3
+
+
+@pytest.mark.parametrize("threads", ["1", "4"])
+def test_prefixed_copy_takes_dense_path_past_chunk0(sparse_books, tmp_path, monkeypatch, threads):
+    """An ``x:`` copy of a multi-chunk book: its own ``</x:row>`` closers
+    are not foreign-row evidence, so every chunk stays on the dense
+    template — no per-row cell scan."""
+    p = _prefixed_copy(sparse_books["sparse"], str(tmp_path / "x.xlsx"))
+    want = _oracle(p, threads=threads)
+    plain = _oracle(sparse_books["sparse"], threads=threads)
+    assert sorted(want, key=repr) == sorted(plain, key=repr)
+    scans = _row_scans(monkeypatch, b"x:")
+    rows, _ = _read(p, threads=threads)
+    assert scans() == 0
+    assert rows == want
+
+
+@pytest.mark.parametrize(
+    "opts",
+    [
+        {"columns": "c"},
+        {"columns": "b,a"},
+        {"coerce_to_string": "true", "types": "VARCHAR,VARCHAR,VARCHAR"},
+    ],
+    ids=["c", "b_a", "coerce"],
+)
+def test_stream_rows_equal_batch_rows(tmp_path, opts):
+    """The streaming source reads each new file through the batch reader:
+    a pruned or coerced stream gives the batch read's rows."""
+    import datetime as dt
+
+    from sheetreader_duckdb_spark.sources.xlsx.writer import write_xlsx
+
+    d = tmp_path / "in"
+    d.mkdir()
+    for i in range(2):
+        write_xlsx(str(d / f"f{i}.xlsx"), {"Sheet1": [["a", "b", "c"]] + [
+            [f"s{i}{j}", float(j) + 0.5, dt.date(2020, 1, 1 + j)] for j in range(20)
+        ]})
+    o = {"path": str(d / "*.xlsx"), **opts}
+    stream = DS.SheetReaderStreamReader(o, DS.SheetReaderDataSource(o).schema())
+    rows, end = stream.read(stream.initialOffset())
+    batch, _ = _read(o.pop("path"), **o)
+    assert len(end["processed"]) == 2
+    assert len(rows) == 40
+    assert rows == batch
+    if "types" in opts:
+        assert rows[1] == ("s01", "1.500000", "2020-01-02")

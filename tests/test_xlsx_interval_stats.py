@@ -463,9 +463,9 @@ def test_columns_pruning_composes_with_interval_pruning(spark, stats_xlsx):
 
 
 def test_row_path_inline_strings_prunes_too(stats_xlsx, monkeypatch):
-    """The typed ROW path (inline_strings) mirrors the columnar tier's
-    interval pruning (r11): a selective filter skips stats-proven-empty
-    intervals there as well, results identical to the columnar read."""
+    """The inline-strings read prunes intervals like the default read
+    (r11): a selective filter skips stats-proven-empty intervals there as
+    well, results identical to the default read."""
     spy = _Spy(monkeypatch)
     want = sorted(_collect(stats_xlsx, [LessThan(("id",), 500.0)]), key=str)
 
@@ -473,7 +473,7 @@ def test_row_path_inline_strings_prunes_too(stats_xlsx, monkeypatch):
         reader = DS.SheetReaderReader(
             {
                 "path": stats_xlsx, "threads": str(threads),
-                "inline_strings": "true",  # routes through _read_rows
+                "inline_strings": "true",
             },
             SCHEMA,
         )

@@ -1,6 +1,6 @@
 """Reader-side column pruning (`columns` option): pruned reads return only
-the requested columns with identical values, work on both the columnar fast
-path and the expat row path, and pruned columns are genuinely never decoded
+the requested columns with identical values, work on typed and coerce
+reads alike, and pruned columns are genuinely never decoded
 (proved by a poisoned cell in a dropped column that would fail the Arrow
 cast if it were).
 
@@ -91,7 +91,8 @@ def test_pruned_read_matches_full_read(spark, wide_xlsx):
 
 
 def test_pruned_read_row_path(spark, wide_xlsx):
-    """coerce_to_string forces the expat row path; pruning must hold there."""
+    """coerce_to_string decodes off-template chunks per cell; pruning must
+    hold there."""
     _register(spark)
     full = (
         spark.read.format("sheetreader")

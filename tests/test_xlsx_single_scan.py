@@ -102,10 +102,8 @@ CASES = {
         _interval(10, plants=_plant(1500, [("A", b' t="s"', b"1"), ("F", b"", b"2")])),
         b"", DATE_STYLES, False,
     ),
-    # rowstream.foreign_row_evidence fires on every prefixed interval
-    # (each ``</x:row>`` holds ``:row``), so prefixed sheets take the
-    # per-cell path, like the reader's chunks past chunk 0
-    "prefixed": (_interval(11, pfx=b"x:"), b"x:", DATE_STYLES, False),
+    # own ``</x:row>`` closers no longer count as foreign-row evidence
+    "prefixed": (_interval(11, pfx=b"x:"), b"x:", DATE_STYLES, True),
     "foreign_prefix_row": (
         _interval(12, plants={1500: FOREIGN_ROW}), b"", DATE_STYLES, False
     ),
