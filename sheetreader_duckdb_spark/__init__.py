@@ -132,8 +132,9 @@ def index_xlsx(path, out_path=None, **kwargs):
 
 def index_xlsx_dir(spark, path_or_glob, **kwargs):
     """Distributed in-place retrofit of every workbook in a directory or
-    glob — one Spark task per file; per-file failures reported, not
-    fatal. See ``sources.xlsx.indexer.index_xlsx_dir``."""
+    glob — files packed into at most one Spark task per core; one report
+    per file in input order, per-file failures reported, not fatal. See
+    ``sources.xlsx.indexer.index_xlsx_dir``."""
     register(spark)
     from sheetreader_duckdb_spark.sources.xlsx.indexer import (
         index_xlsx_dir as _ixd,
@@ -154,8 +155,9 @@ def describe_index(path):
 
 
 def describe_index_dir(spark, path_or_glob):
-    """Distributed index-health sweep — one report per workbook, one
-    Spark task per file; the audit story for a retrofitted corpus. See
+    """Distributed index-health sweep — one report per workbook, in
+    input order, from at most one Spark task per core; the audit story
+    for a retrofitted corpus. See
     ``sources.xlsx.indexer.describe_index_dir``."""
     register(spark)
     from sheetreader_duckdb_spark.sources.xlsx.indexer import (

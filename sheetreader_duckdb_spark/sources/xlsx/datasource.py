@@ -25,16 +25,20 @@ Usage::
        .save("/out/dir"))
 
 Architecture (deliberately NOT the reference's): schema() is a lazy two-row
-probe of the first file; the full parse happens at task time, one partition
-per (file, sheet) — on a cluster, thousands of spreadsheets parse in
-parallel. Output is Arrow RecordBatches (the Spark analog of the reference's
-2048-row DataChunks), consumed by Spark's vectorized columnar path. One
+probe of the first file; the full parse happens at task time. A large file
+is split into shard partitions; consecutive small (single-shard) files are
+packed into at most one partition per core of the cluster
+(``tasks.pack_contiguous``), because every Python task pays a fixed
+start-up cost that outweighs parsing a small workbook. Output is Arrow
+RecordBatches (the Spark analog of the reference's 2048-row DataChunks),
+consumed by Spark's vectorized columnar path. One
 partition reader (``SheetReaderReader._read_columnar``) serves every
 option; like the reference's per-cell ``SetCellString`` branch, an option
 only decides how a cell decodes, never which reader runs.
 
 Beyond-reference extension: multi-file globs are accepted (the reference
-rejects >1 file at bind, :648-651); partition = file.
+rejects >1 file at bind, :648-651); a partition reads whole files in input
+order, or one shard of one file.
 """
 
 from __future__ import annotations
@@ -43,6 +47,7 @@ import glob as _glob
 import operator as _op
 import os
 from dataclasses import dataclass
+from itertools import groupby
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -64,6 +69,7 @@ from pyspark.sql.types import (
 from sheetreader_duckdb_spark.sources.xlsx import parser as P
 from sheetreader_duckdb_spark.sources.xlsx import splitindex as SI
 from sheetreader_duckdb_spark.sources.xlsx.inference import SheetSchema, infer_schema
+from sheetreader_duckdb_spark.sources.xlsx.tasks import pack_contiguous
 
 _SQL_TO_SPARK = {
     "VARCHAR": StringType(),
@@ -571,21 +577,13 @@ def _auto_shard_cap(
     ``default_parallelism`` is captured at ``register(spark)`` time as a
     class attribute on SheetReaderDataSource and rides the pickled class
     into the planning worker (ADVICE r9: partitions() executes in a
-    separate driver-side Python worker with NO active session, so the old
-    getActiveSession() resolution was inert on a real cluster — it is kept
-    only as a harmless fallback for unpickled direct use)."""
+    separate driver-side Python worker with NO active session). It is the
+    one width planning reads — the same value packs small files
+    (``tasks.pack_contiguous``). A reader built without it caps at 32."""
     if max_shards is not None:
         return max_shards
     if default_parallelism is not None:
         return max(32, int(default_parallelism))
-    try:
-        from pyspark.sql import SparkSession
-
-        s = SparkSession.getActiveSession()
-        if s is not None:
-            return max(32, s.sparkContext.defaultParallelism)
-    except Exception:
-        pass
     return 32
 
 
@@ -886,7 +884,9 @@ class SheetReaderWriter(DataSourceWriter):
 
 @dataclass
 class _SheetPartition(InputPartition):
-    path: str
+    # The files this task reads, in input order. More than one only for
+    # packed whole files (n_shards == 1); a shard reads one file.
+    paths: tuple
     shard: int = 0
     n_shards: int = 1
     # Filters pushed during THIS query's planning, embedded per partition so
@@ -899,10 +899,11 @@ class SheetReaderReader(DataSourceReader):
     def __init__(self, options, schema: StructType, default_parallelism=None):
         self.opts = _Options.from_options(options)
         self.schema = schema
-        # Cluster fan-out captured at register() time (ADVICE r9: this
+        # Cluster width captured at register() time (ADVICE r9: this
         # reader plans inside a driver-side Python worker where NO active
-        # SparkSession exists, so resolving defaultParallelism here always
-        # fell back to 32 on a real cluster — the value must be plumbed in).
+        # SparkSession exists, so the value must be plumbed in). It caps
+        # auto shards and packs small files; None plans one partition per
+        # small file and caps shards at 32.
         self._default_parallelism = default_parallelism
         self._staged_filters: tuple = ()
         self.col_types = []
@@ -960,118 +961,126 @@ class SheetReaderReader(DataSourceReader):
         return remaining
 
     def partitions(self):
-        """One partition per (file, shard). Large files are split into chunk
-        round-robin shards — the Spark answer to the reference's interleaved
+        """Large files are split into chunk round-robin shards, one
+        partition each — the Spark answer to the reference's interleaved
         parse threads (S4/S14): every shard streams the same decompressed
         bytes (zlib is C-speed and cheap) but cell-parses only its assigned
         </row>-aligned chunks, so the expensive scan divides across executor
         cores. Result-invariant: shard assignment is deterministic and the
         union of shards is exactly the file's rows.
+
+        Each run of consecutive single-shard files is packed into at most
+        one partition per core of the cluster (``tasks.pack_contiguous``
+        over the captured width): a Python task's fixed start-up cost
+        outweighs parsing a small workbook, so the task count follows the
+        cluster, not the file count. Partitions keep input order, so rows
+        come out in the same order as one partition per file. Without a
+        captured width every small file keeps its own partition.
         """
+        filters = self._staged_filters
+        plan = [(p, *self._file_shards(p)) for p in self.opts.paths]
         parts = []
-        for p in self.opts.paths:
-            if self.opts.threads > 0:
-                n = self.opts.threads  # explicit, like the reference's S4
-            else:
-                try:
-                    size_mb = os.path.getsize(p) >> 20
-                except OSError:
-                    size_mb = 0
-                # Auto: ~1 shard per compressed MB, capped cluster-aware
-                # (max(32, defaultParallelism), or the max_shards option)
-                # so a single big file can feed every core of the executor
-                # fleet, not just a local[32] box's 32 tasks.
-                n = max(1, min(
-                    _auto_shard_cap(
-                        self.opts.max_shards, self._default_parallelism
-                    ),
-                    size_mb,
-                ))
-                # String-heavy refinement: every shard pays an O(sst) fixed
-                # cost (decompress + offset-index the shared-string heap),
-                # while the row scan divides by n — so when the heap rivals
-                # the sheet in bytes, more shards just multiply overhead.
-                # Cap n at ~8 shards per sheet/sst byte ratio (zip central
-                # directory read only — no decompression at planning).
-                # Measured on the 800k-unique-string partsupp witness
-                # (sheet 139 MB, sst 123 MB → cap 9): 6-10 shards 4.7 s,
-                # 16 → 8.0 s, 24 → 9.2 s. Numeric/deduped sheets have
-                # tiny heaps and keep the size-based count. Probed only
-                # when sharding would actually happen (n > 4): a
-                # many-small-file directory read never pays per-file zip
-                # metadata reads at planning.
-                if n <= 4:
-                    parts.extend(
-                        _SheetPartition(
-                            p, shard=i, n_shards=n,
-                            filters=self._staged_filters,
-                        )
-                        for i in range(n)
+        for single, run in groupby(plan, key=lambda e: e[2] == 1):
+            run = list(run)
+            if single:
+                parts.extend(
+                    _SheetPartition(tuple(g), filters=filters)
+                    for g in pack_contiguous(
+                        [p for p, _, _ in run], [s for _, s, _ in run],
+                        self._default_parallelism,
                     )
-                    continue
-                # One metadata open serves both planning probes (r11
-                # review: the sst probe and the prune block used to open
-                # the same zip twice per filtered file).
-                try:
-                    with P.XlsxWorkbook(p) as wb:
-                        info = {
-                            i.filename: i.file_size
-                            for i in wb.zf.infolist()
-                        }
-                        # A split-indexed heap removes the per-shard sst
-                        # fixed cost entirely (each shard inflates only
-                        # the intervals its rows reference), so the cap
-                        # below would just throttle a cost that no longer
-                        # exists — keep the size-based fan-out.
-                        sst_indexed = SI.decode_sst_index(wb.zf) is not None
-                        sst_u = info.get("xl/sharedStrings.xml", 0)
-                        sheet_u = max(
-                            (
-                                v
-                                for k, v in info.items()
-                                if k.startswith("xl/worksheets/")
-                            ),
-                            default=0,
-                        )
-                        if sst_u > 0 and sheet_u > 0 and not sst_indexed:
-                            n = max(1, min(n, round(8 * sheet_u / sst_u)))
-                        # Prune-aware fan-out (r11): a selective filter
-                        # on a stats-indexed file should not schedule a
-                        # task per interval it will never inflate — at
-                        # fleet scale a point lookup must not fan out
-                        # 1000 no-op tasks. Planning-time only (read-time
-                        # skips are recomputed per partition and own
-                        # correctness); applied only without a `columns`
-                        # option, where output names map to file columns
-                        # by position. An unreadable file keeps the
-                        # size-based n.
-                        if (
-                            self._staged_filters
-                            and self.opts.columns is None
-                            and not self.opts.coerce_to_string
-                            and n > 1
-                        ):
-                            sheet = wb.resolve_sheet(
-                                self.opts.sheet_name, self.opts.sheet_index
-                            )
-                            pts = SI.decode_split_index(wb.zf, sheet.path)
-                            skips = _interval_skips(
-                                wb, sheet.path, pts, self._staged_filters,
-                                self.schema,
-                                [f.name for f in self.schema.fields],
-                            )
-                            if skips is not None:
-                                n = max(1, min(n, len(pts) - len(skips)))
-                except P._UNREADABLE_WORKBOOK:
-                    pass  # the read of this file fails with the real error
-            parts.extend(
-                _SheetPartition(p, shard=i, n_shards=n, filters=self._staged_filters)
-                for i in range(n)
-            )
+                )
+                continue
+            for p, _, n in run:
+                parts.extend(
+                    _SheetPartition((p,), shard=i, n_shards=n, filters=filters)
+                    for i in range(n)
+                )
         # Consume the staged set: it belongs to this plan only. A later
         # filterless query on the same (shared) reader must see none of it.
         self._staged_filters = ()
         return parts
+
+    def _file_shards(self, p: str) -> tuple[int, int]:
+        """(compressed bytes, shard count) of one file."""
+        try:
+            size = os.path.getsize(p)
+        except OSError:
+            size = 0
+        if self.opts.threads > 0:
+            return size, self.opts.threads  # explicit, like the reference's S4
+        # Auto: ~1 shard per compressed MB, capped cluster-aware
+        # (max(32, defaultParallelism), or the max_shards option)
+        # so a single big file can feed every core of the executor
+        # fleet, not just a local[32] box's 32 tasks.
+        n = max(1, min(
+            _auto_shard_cap(self.opts.max_shards, self._default_parallelism),
+            size >> 20,
+        ))
+        # String-heavy refinement: every shard pays an O(sst) fixed
+        # cost (decompress + offset-index the shared-string heap),
+        # while the row scan divides by n — so when the heap rivals
+        # the sheet in bytes, more shards just multiply overhead.
+        # Cap n at ~8 shards per sheet/sst byte ratio (zip central
+        # directory read only — no decompression at planning).
+        # Measured on the 800k-unique-string partsupp witness
+        # (sheet 139 MB, sst 123 MB → cap 9): 6-10 shards 4.7 s,
+        # 16 → 8.0 s, 24 → 9.2 s. Numeric/deduped sheets have
+        # tiny heaps and keep the size-based count. Probed only
+        # when sharding would actually happen (n > 4): a
+        # many-small-file directory read never pays per-file zip
+        # metadata reads at planning.
+        if n <= 4:
+            return size, n
+        # One metadata open serves both planning probes (r11
+        # review: the sst probe and the prune block used to open
+        # the same zip twice per filtered file).
+        try:
+            with P.XlsxWorkbook(p) as wb:
+                info = {i.filename: i.file_size for i in wb.zf.infolist()}
+                # A split-indexed heap removes the per-shard sst
+                # fixed cost entirely (each shard inflates only
+                # the intervals its rows reference), so the cap
+                # below would just throttle a cost that no longer
+                # exists — keep the size-based fan-out.
+                sst_indexed = SI.decode_sst_index(wb.zf) is not None
+                sst_u = info.get("xl/sharedStrings.xml", 0)
+                sheet_u = max(
+                    (v for k, v in info.items() if k.startswith("xl/worksheets/")),
+                    default=0,
+                )
+                if sst_u > 0 and sheet_u > 0 and not sst_indexed:
+                    n = max(1, min(n, round(8 * sheet_u / sst_u)))
+                # Prune-aware fan-out (r11): a selective filter
+                # on a stats-indexed file should not schedule a
+                # task per interval it will never inflate — at
+                # fleet scale a point lookup must not fan out
+                # 1000 no-op tasks. Planning-time only (read-time
+                # skips are recomputed per partition and own
+                # correctness); applied only without a `columns`
+                # option, where output names map to file columns
+                # by position. An unreadable file keeps the
+                # size-based n.
+                if (
+                    self._staged_filters
+                    and self.opts.columns is None
+                    and not self.opts.coerce_to_string
+                    and n > 1
+                ):
+                    sheet = wb.resolve_sheet(
+                        self.opts.sheet_name, self.opts.sheet_index
+                    )
+                    pts = SI.decode_split_index(wb.zf, sheet.path)
+                    skips = _interval_skips(
+                        wb, sheet.path, pts, self._staged_filters,
+                        self.schema,
+                        [f.name for f in self.schema.fields],
+                    )
+                    if skips is not None:
+                        n = max(1, min(n, len(pts) - len(skips)))
+        except P._UNREADABLE_WORKBOOK:
+            pass  # the read of this file fails with the real error
+        return size, n
 
     def read(self, partition: _SheetPartition):
         # Task boundary on this (possibly reused) worker: let the pinned
@@ -1086,29 +1095,34 @@ class SheetReaderReader(DataSourceReader):
         return self._read_masked(partition)
 
     def _read_masked(self, partition: _SheetPartition):
+        """Each file of the partition in order, read as its own task would
+        be: per-file probe, skip rows, pushed filters and mask."""
         mask = _filter_mask_builder(partition.filters, self.schema)
-        if mask is None:
-            yield from self._read_unfiltered(partition)
-            return
-        for batch in self._read_unfiltered(partition):
-            out = mask(batch)
-            if out.num_rows:
-                yield out
+        for k, path in enumerate(partition.paths):
+            if k:
+                P.bump_sst_epoch()  # a packed file starts like a new task
+            for batch in self._read_unfiltered(path, partition):
+                if mask is None:
+                    yield batch
+                    continue
+                out = mask(batch)
+                if out.num_rows:
+                    yield out
 
-    def _read_unfiltered(self, partition: _SheetPartition):
+    def _read_unfiltered(self, path: str, partition: _SheetPartition):
         opts = self.opts
         n_cols = len(self.col_types)
         # Per-file probe: header detection / skip accounting is per file; the
         # global schema (names/types) comes from the first file (or the
         # user), and is the fallback when this file's probe is insufficient.
         file_schema = _infer_or_declared(
-            partition.path, opts, [f.name for f in self.schema.fields],
+            path, opts, [f.name for f in self.schema.fields],
             self.col_types,
         )
         if opts.columns is None:
             if file_schema.n_detected_columns > n_cols:
                 raise ValueError(
-                    f"File {partition.path} has more columns than the schema. "
+                    f"File {path} has more columns than the schema. "
                     f"Has: {file_schema.n_detected_columns} Expected: {n_cols}"
                 )
             # Identity mapping: output column i IS file column i.
@@ -1122,10 +1136,10 @@ class SheetReaderReader(DataSourceReader):
             missing = [c for c in out_by_name if c not in present]
             if missing:
                 raise ValueError(
-                    f"sheetreader: 'columns' not in {partition.path}: {missing}"
+                    f"sheetreader: 'columns' not in {path}: {missing}"
                 )
         yield from self._read_columnar(
-            partition.path, file_schema, partition.shard,
+            path, file_schema, partition.shard,
             partition.n_shards, keep, partition.filters,
         )
 
@@ -1532,7 +1546,7 @@ class SheetReaderStreamReader(SimpleDataSourceStreamReader):
         for path in paths:
             opts["path"] = path
             reader = SheetReaderReader(opts, self.schema)
-            for b in reader.read(_SheetPartition(path)):
+            for b in reader.read(_SheetPartition((path,))):
                 yield from zip(*[c.to_pylist() for c in b.columns])
 
 

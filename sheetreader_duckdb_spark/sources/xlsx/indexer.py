@@ -1375,33 +1375,53 @@ def describe_index(path: str) -> dict:
     return out
 
 
+def _sweep(spark, paths: list[str], one) -> list[dict]:
+    """``one(path)`` for every workbook on the cluster, reports in input
+    order. The files are packed into at most ``defaultParallelism``
+    contiguous, byte-balanced tasks (``tasks.pack_contiguous``): a
+    Python task's fixed start-up cost outweighs the work on one small
+    file, so the task count follows the cluster width, not the file
+    count."""
+    from .tasks import pack_contiguous
+
+    sizes = []
+    for p in paths:
+        try:
+            sizes.append(os.path.getsize(p))
+        except OSError:
+            sizes.append(0)  # ``one`` reports the file's real error
+    sc = spark.sparkContext
+    groups = pack_contiguous(paths, sizes, sc.defaultParallelism)
+    return (
+        sc.parallelize(groups, len(groups))
+        .flatMap(lambda group: [one(p) for p in group])
+        .collect()
+    )
+
+
 def describe_index_dir(spark, path_or_glob: str) -> list[dict]:
     """Distributed index-health sweep: one report per workbook (the
     ``describe_index`` shape, plus ``reason: "error: ..."`` rows for
-    unreadable files), one Spark task per file — the audit story for a
-    retrofitted corpus: which files still lack an index, which columns
-    lost stats to shedding, where claim coverage collapsed."""
+    unreadable files), in input order, from at most one task per core
+    (``_sweep``) — the audit story for a retrofitted corpus: which files
+    still lack an index, which columns lost stats to shedding, where
+    claim coverage collapsed."""
     paths = _resolve_corpus_paths(path_or_glob)
 
-    def _one(it):
+    def _one(p):
         from sheetreader_duckdb_spark.sources.xlsx.indexer import (
             describe_index,
         )
 
-        for p in it:
-            try:
-                yield describe_index(p)
-            except Exception as e:  # noqa: BLE001 — sweep survives bad files
-                yield {
-                    "indexed": False, "reason": f"error: {e}", "path": p,
-                    "comment_bytes": 0, "sheets": {}, "sst": None,
-                }
+        try:
+            return describe_index(p)
+        except Exception as e:  # noqa: BLE001 — sweep survives bad files
+            return {
+                "indexed": False, "reason": f"error: {e}", "path": p,
+                "comment_bytes": 0, "sheets": {}, "sst": None,
+            }
 
-    return (
-        spark.sparkContext.parallelize(paths, len(paths))
-        .mapPartitions(_one)
-        .collect()
-    )
+    return _sweep(spark, paths, _one)
 
 
 def index_xlsx_dir(
@@ -1413,44 +1433,39 @@ def index_xlsx_dir(
     stats: bool = True,
     workers: int = 1,
 ) -> list[dict]:
-    """Distributed retrofit of a whole corpus: one Spark task per
-    workbook, each running ``index_xlsx`` IN PLACE (per-file output paths
-    don't generalize to a sweep; each file's replace is atomic). This is
-    the conversion story at fleet scale — indexing a directory of
-    foreign XLSX is embarrassingly parallel per file, and each task's
-    work is one sequential inflate+deflate of its own file.
+    """Distributed retrofit of a whole corpus: every workbook runs
+    ``index_xlsx`` IN PLACE (per-file output paths don't generalize to a
+    sweep; each file's replace is atomic), packed into at most one task
+    per core (``_sweep``). This is the conversion story at fleet scale —
+    indexing a directory of foreign XLSX is embarrassingly parallel per
+    file, and each file's work is one sequential inflate+deflate.
 
     ``path_or_glob``: a directory (its ``*.xlsx``, non-recursive) or a
     glob pattern. Paths must be visible to the executors (shared
     filesystem — the same constraint as reading them). Per-file failures
-    are REPORTED, not fatal: the sweep returns one result dict per file
-    (``index_xlsx``'s shape, plus ``reason: "error: ..."`` rows for
-    files that raised), so a single corrupt workbook can't kill a
-    million-file sweep."""
+    are REPORTED, not fatal: the sweep returns one result dict per file,
+    in input order (``index_xlsx``'s shape, plus ``reason: "error: ..."``
+    rows for files that raised), so a single corrupt workbook can't kill
+    a million-file sweep."""
     paths = _resolve_corpus_paths(path_or_glob)
-    # workers defaults to 1 here (unlike index_xlsx's auto): the sweep is
-    # already one Spark task per file across the cluster's cores, and
-    # per-member threads inside every task would oversubscribe; raise it
-    # only for sweeps of few, large, multi-sheet workbooks.
+    # workers defaults to 1 here (unlike index_xlsx's auto): the sweep
+    # already keeps every core of the cluster busy, and per-member
+    # threads inside every task would oversubscribe; raise it only for
+    # sweeps of few, large, multi-sheet workbooks.
     kwargs = dict(
         sheet_name=sheet_name, sheet_index=sheet_index,
         replace_comment=replace_comment, stats=stats, workers=workers,
     )
 
-    def _one(it):
+    def _one(p):
         from sheetreader_duckdb_spark.sources.xlsx.indexer import index_xlsx
 
-        for p in it:
-            try:
-                yield index_xlsx(p, **kwargs)
-            except Exception as e:  # noqa: BLE001 — sweep survives one bad file
-                yield {
-                    "indexed": False, "reason": f"error: {e}", "rows": 0,
-                    "worksheet_points": 0, "sst_points": 0, "path": p,
-                }
+        try:
+            return index_xlsx(p, **kwargs)
+        except Exception as e:  # noqa: BLE001 — sweep survives one bad file
+            return {
+                "indexed": False, "reason": f"error: {e}", "rows": 0,
+                "worksheet_points": 0, "sst_points": 0, "path": p,
+            }
 
-    return (
-        spark.sparkContext.parallelize(paths, len(paths))
-        .mapPartitions(_one)
-        .collect()
-    )
+    return _sweep(spark, paths, _one)

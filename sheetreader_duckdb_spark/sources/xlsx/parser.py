@@ -151,8 +151,18 @@ def column_index(cell_ref: str) -> int:
     return col - 1
 
 
-_SST_CACHE: dict = {}  # single entry: {"key": (path, size, mtime_ns), "strings": [...]}
-_SST_LAZY_CACHE: dict = {}  # single entry: {"key": ..., "heap": SharedStringHeap}
+class _ProcessCache(dict):
+    """A cache that belongs to one process: it pickles as an empty cache.
+    ``register()`` pickles this module by value, so without this every
+    pickled data source and reader would carry whatever the driver had
+    cached (a whole raw ``sharedStrings.xml`` after a schema probe)."""
+
+    def __reduce__(self):
+        return (type(self), ())
+
+
+_SST_CACHE = _ProcessCache()  # single entry: {"key": (path, size, mtime_ns), "strings": [...]}
+_SST_LAZY_CACHE = _ProcessCache()  # single entry: {"key": ..., "heap": SharedStringHeap}
 
 # Task-boundary signal for the worker-pinned lazy heap (r12): the
 # datasource bumps this at every read() entry; IntervalStringHeap drops
@@ -193,7 +203,7 @@ def _si_fast_re(pfx: bytes = b""):
 _SI_FAST_RE = _si_fast_re(b"")
 
 _SST_PFX_RE = re.compile(rb"<(?:([A-Za-z_][\w.-]*):)?sst[ \t\r\n/>]")
-_SI_MACHINERY_CACHE: dict = {}
+_SI_MACHINERY_CACHE = _ProcessCache()
 
 
 def _si_machinery(data: bytes):
@@ -1225,7 +1235,7 @@ class _PrefixRes:
         )
 
 
-_PREFIX_CACHE: dict = {}
+_PREFIX_CACHE = _ProcessCache()
 
 
 def prefix_res(pfx: bytes) -> _PrefixRes:

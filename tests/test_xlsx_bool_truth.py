@@ -96,7 +96,7 @@ def _read(path: str, schema: StructType, **opts) -> list:
         {"path": path, "has_header": "false", **opts}, schema
     )
     out = []
-    for batch in reader.read(DS._SheetPartition(path)):
+    for batch in reader.read(DS._SheetPartition((path,))):
         out.extend(batch.column(0).to_pylist())
     return out
 

@@ -120,7 +120,7 @@ def _read_rows(path, filters):
     rows = []
     for s in range(THREADS):
         part = DS._SheetPartition(
-            path, shard=s, n_shards=THREADS, filters=tuple(filters)
+            (path,), shard=s, n_shards=THREADS, filters=tuple(filters)
         )
         for b in reader.read(part):
             rows.extend(zip(*[c.to_pylist() for c in b.columns]))

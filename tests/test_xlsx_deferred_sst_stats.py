@@ -92,7 +92,7 @@ def _collect(path, filters, threads=4):
     rows = []
     for s in range(threads):
         part = DS._SheetPartition(
-            path, shard=s, n_shards=threads, filters=tuple(filters)
+            (path,), shard=s, n_shards=threads, filters=tuple(filters)
         )
         for batch in reader.read(part):
             rows.extend(zip(*[c.to_pylist() for c in batch.columns]))

@@ -798,8 +798,8 @@ def test_cluster_cap_travels_through_real_spark_read(spark, tmp_path):
     proof: the class attribute is set (exactly what register() does, with a
     simulated 48-core width since local mode can't exceed its own core
     count), the class is re-registered, and a REAL spark.read on a 50 MB
-    file must plan 48 shards — not the 32 the dead getActiveSession()
-    fallback would give."""
+    file must plan 48 shards — not the 32 a reader without a captured
+    width caps at."""
     import zipfile
 
     from sheetreader_duckdb_spark import register
@@ -1526,19 +1526,20 @@ def _oracle(path, **opts):
 
     rows = []
     for part in reader.partitions():
-        fs = DS._infer_or_declared(part.path, o, names, reader.col_types)
-        cols = [fs.names.index(n) for n in names]
-        with P.XlsxWorkbook(part.path, allow_inline=o.inline_strings) as wb:
-            sheet = wb.resolve_sheet(o.sheet_name, o.sheet_index)
-            for cells in wb.iter_rows(
-                sheet, skip_rows=fs.skip_rows,
-                shard=part.shard, n_shards=part.n_shards,
-            ):
-                by_col = {c: (t, v) for c, t, v in cells}
-                rows.append(tuple(
-                    cell(sql, *by_col.get(c, (P.T_NONE, None)), wb.shared_strings)
-                    for sql, c in zip(reader.col_types, cols)
-                ))
+        for path in part.paths:
+            fs = DS._infer_or_declared(path, o, names, reader.col_types)
+            cols = [fs.names.index(n) for n in names]
+            with P.XlsxWorkbook(path, allow_inline=o.inline_strings) as wb:
+                sheet = wb.resolve_sheet(o.sheet_name, o.sheet_index)
+                for cells in wb.iter_rows(
+                    sheet, skip_rows=fs.skip_rows,
+                    shard=part.shard, n_shards=part.n_shards,
+                ):
+                    by_col = {c: (t, v) for c, t, v in cells}
+                    rows.append(tuple(
+                        cell(sql, *by_col.get(c, (P.T_NONE, None)), wb.shared_strings)
+                        for sql, c in zip(reader.col_types, cols)
+                    ))
     return rows
 
 

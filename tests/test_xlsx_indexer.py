@@ -372,7 +372,7 @@ def test_retrofit_crash_leaves_source_intact(foreign_xlsx, tmp_path, monkeypatch
 
 
 def test_index_xlsx_dir_distributed_sweep(spark, tmp_path):
-    """index_xlsx_dir: one task per file, in place; per-file failures
+    """index_xlsx_dir: every file indexed in place; per-file failures
     reported, not fatal."""
     from sheetreader_duckdb_spark import index_xlsx_dir
 

@@ -107,7 +107,7 @@ def _collect(path, filters, threads=4, schema=SCHEMA):
     rows = []
     for s in range(threads):
         part = DS._SheetPartition(
-            path, shard=s, n_shards=threads, filters=tuple(filters)
+            (path,), shard=s, n_shards=threads, filters=tuple(filters)
         )
         for batch in reader.read(part):
             rows.extend(zip(*[c.to_pylist() for c in batch.columns]))
@@ -480,7 +480,7 @@ def test_row_path_inline_strings_prunes_too(stats_xlsx, monkeypatch):
         rows = []
         for s in range(threads):
             part = DS._SheetPartition(
-                stats_xlsx, shard=s, n_shards=threads, filters=tuple(filters)
+                (stats_xlsx,), shard=s, n_shards=threads, filters=tuple(filters)
             )
             for batch in reader.read(part):
                 rows.extend(zip(*[c.to_pylist() for c in batch.columns]))

@@ -208,6 +208,8 @@ def test_multifile_glob(sr, fixdir):
         write_xlsx(f"{fixdir}/glob_part{i}.xlsx", {"Sheet1": [["k", "v"]] + [[float(i * 10 + j), "x"] for j in range(5)]})
     df = _read(sr, f"{fixdir}/glob_part*.xlsx")
     assert df.count() == 15
+    # Small files are packed into at most one partition per core; three
+    # files on four cores keep one partition each.
     assert df.rdd.getNumPartitions() == 3
 
 

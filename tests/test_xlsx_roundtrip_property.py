@@ -341,7 +341,7 @@ def test_retrofit_and_pruning_roundtrip_property(
 
     for s in range(3):
         part = _SheetPartition(
-            path, shard=s, n_shards=3,
+            (path,), shard=s, n_shards=3,
             filters=(
                 GreaterThanOrEqual((header[ci],), lo),
                 LessThanOrEqual((header[ci],), hi),

@@ -36,7 +36,7 @@ def _collect(path, schema, filters, threads=3):
     rows = []
     for s in range(threads):
         part = DS._SheetPartition(
-            path, shard=s, n_shards=threads, filters=tuple(filters)
+            (path,), shard=s, n_shards=threads, filters=tuple(filters)
         )
         for batch in reader.read(part):
             rows.extend(zip(*[c.to_pylist() for c in batch.columns]))
