@@ -89,10 +89,7 @@ def register(spark):
     # The reader implements pushFilters; Spark refuses to plan a pushdown-
     # capable Python source while this conf is off, so enable it wherever
     # the source is registered (configure_session sets it too).
-    try:
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    except Exception:  # pragma: no cover — ancient/readonly session confs
-        pass
+    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     _ship_package(spark)
     # Streaming source planning runs in a driver-side Python runner that does
     # NOT see addPyFile paths — serialize the data source modules by value so

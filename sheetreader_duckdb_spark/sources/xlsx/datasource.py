@@ -69,7 +69,10 @@ from pyspark.sql.types import (
 from sheetreader_duckdb_spark.sources.xlsx import parser as P
 from sheetreader_duckdb_spark.sources.xlsx import splitindex as SI
 from sheetreader_duckdb_spark.sources.xlsx.inference import SheetSchema, infer_schema
-from sheetreader_duckdb_spark.sources.xlsx.tasks import pack_contiguous
+from sheetreader_duckdb_spark.sources.xlsx.tasks import (
+    pack_contiguous,
+    stat_checked_zip_invalidation,
+)
 
 _SQL_TO_SPARK = {
     "VARCHAR": StringType(),
@@ -612,9 +615,26 @@ _PROBE_INSUFFICIENT = (
 )
 
 
-def _infer_or_declared(
-    path: str, opts: _Options, names: list[str], types: list[str]
-) -> SheetSchema:
+def _relation_schema(opts: _Options) -> SheetSchema:
+    """The relation's file layout: the first file, in order, whose two-row
+    probe can type it. Any member can carry it (all share one layout by the
+    sink's contract); the files it skips are read under the declared-schema
+    fallback (``_infer_or_declared``). A single-file read keeps the
+    reference-parity error as-is."""
+    first_err: ValueError | None = None
+    for p in opts.paths:
+        try:
+            return _infer_for_file(p, opts)
+        except ValueError as err:
+            if len(opts.paths) == 1 or not any(
+                s in str(err) for s in _PROBE_INSUFFICIENT
+            ):
+                raise
+            first_err = first_err or err
+    raise first_err  # every member failed its probe
+
+
+def _infer_or_declared(path: str, opts: _Options, declared) -> SheetSchema:
     """Per-file inference with a declared-schema fallback — a documented
     extension BEYOND reference parity (like multi-file globs): the
     reference errors when the two-row probe can't type a file (an absent
@@ -622,15 +642,17 @@ def _infer_or_declared(
     sink partition, fewer than two rows). In a directory/multi-file read
     the relation already HAS a schema — from the first file or the user —
     and the sink's contract is one layout for every file, so a file whose
-    own probe is insufficient is read with the declared (names, types);
-    its header row is detected by exact string-equality with the declared
-    names. Single-file reads without a user schema are unaffected: their
+    own probe is insufficient is read with the declared (names, types) of
+    every file column, which ``declared()`` returns only then; its header
+    row is detected by exact string-equality with the declared names.
+    Single-file reads without a user schema are unaffected: their
     planning-time probe is the same call that raises here."""
     try:
         return _infer_for_file(path, opts)
     except ValueError as err:
         if not any(s in str(err) for s in _PROBE_INSUFFICIENT):
             raise
+        names, types = declared()
         with P.XlsxWorkbook(path, allow_inline=opts.inline_strings) as wb:
             sheet = wb.resolve_sheet(opts.sheet_name, opts.sheet_index)
             first = next(
@@ -668,26 +690,9 @@ class SheetReaderDataSource(DataSource):
         return "sheetreader"
 
     def schema(self):
+        stat_checked_zip_invalidation()
         opts = _Options.from_options(self.options)
-        # Multi-file reads probe files IN ORDER until one has two typeable
-        # rows — any member can carry the relation's schema (all share one
-        # layout by the sink's contract), and the files it skips are read
-        # under the declared-schema fallback (_infer_or_declared). A
-        # single-file read keeps the reference-parity error as-is.
-        inferred = None
-        first_err: ValueError | None = None
-        for p in opts.paths:
-            try:
-                inferred = _infer_for_file(p, opts)
-                break
-            except ValueError as err:
-                if len(opts.paths) == 1 or not any(
-                    s in str(err) for s in _PROBE_INSUFFICIENT
-                ):
-                    raise
-                first_err = first_err or err
-        if inferred is None:
-            raise first_err  # every member failed its probe
+        inferred = _relation_schema(opts)
         fields = {
             n: StructField(n, _SQL_TO_SPARK[t], nullable=True)
             for n, t in zip(inferred.names, inferred.types)
@@ -707,6 +712,7 @@ class SheetReaderDataSource(DataSource):
     _cluster_default_parallelism: int | None = None
 
     def reader(self, schema: StructType) -> "SheetReaderReader":
+        stat_checked_zip_invalidation()
         return SheetReaderReader(
             self.options, schema,
             default_parallelism=type(self)._cluster_default_parallelism,
@@ -809,6 +815,7 @@ class SheetReaderWriter(DataSourceWriter):
         return os.path.join(f".staging-{self.token}", f"{attempt}-{final}")
 
     def write(self, iterator) -> _WriteCommit:
+        stat_checked_zip_invalidation()
         from pyspark import TaskContext
 
         from sheetreader_duckdb_spark.sources.xlsx.writer import IncrementalXlsxWriter
@@ -1091,6 +1098,7 @@ class SheetReaderReader(DataSourceReader):
         # at-a-time consumption is still assumed — that is how Spark
         # workers drive partitions; interleaving two live reads in one
         # process would only cost re-inflation, never correctness.
+        stat_checked_zip_invalidation()
         P.bump_sst_epoch()
         return self._read_masked(partition)
 
@@ -1115,10 +1123,7 @@ class SheetReaderReader(DataSourceReader):
         # Per-file probe: header detection / skip accounting is per file; the
         # global schema (names/types) comes from the first file (or the
         # user), and is the fallback when this file's probe is insufficient.
-        file_schema = _infer_or_declared(
-            path, opts, [f.name for f in self.schema.fields],
-            self.col_types,
-        )
+        file_schema = _infer_or_declared(path, opts, self._file_layout)
         if opts.columns is None:
             if file_schema.n_detected_columns > n_cols:
                 raise ValueError(
@@ -1142,6 +1147,16 @@ class SheetReaderReader(DataSourceReader):
             path, file_schema, partition.shard,
             partition.n_shards, keep, partition.filters,
         )
+
+    def _file_layout(self) -> tuple[list[str], list[str]]:
+        """(names, types) of every file column, in file order: the declared
+        schema of a file whose own probe is insufficient. A ``columns=``
+        read's output schema holds only the kept columns, so it re-derives
+        the relation's layout the way ``schema()`` does."""
+        if self.opts.columns is None:
+            return [f.name for f in self.schema.fields], self.col_types
+        full = _relation_schema(self.opts)
+        return full.names, full.types
 
     def _read_columnar(
         self, path: str, file_schema, shard: int, n_shards: int,
@@ -1529,6 +1544,7 @@ class SheetReaderStreamReader(SimpleDataSourceStreamReader):
         return {"processed": []}
 
     def read(self, start: dict):
+        stat_checked_zip_invalidation()
         seen = set(start.get("processed", []))
         new = [f for f in self._current_files() if f not in seen]
         end = {"processed": sorted(seen | set(new))}
@@ -1537,6 +1553,7 @@ class SheetReaderStreamReader(SimpleDataSourceStreamReader):
         return list(self._rows(new)), end
 
     def readBetweenOffsets(self, start: dict, end: dict):
+        stat_checked_zip_invalidation()
         new = sorted(set(end.get("processed", [])) - set(start.get("processed", [])))
         return list(self._rows(new))
 

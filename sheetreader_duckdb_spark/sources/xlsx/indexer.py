@@ -1382,7 +1382,7 @@ def _sweep(spark, paths: list[str], one) -> list[dict]:
     Python task's fixed start-up cost outweighs the work on one small
     file, so the task count follows the cluster width, not the file
     count."""
-    from .tasks import pack_contiguous
+    from .tasks import pack_contiguous, stat_checked_zip_invalidation
 
     sizes = []
     for p in paths:
@@ -1392,11 +1392,12 @@ def _sweep(spark, paths: list[str], one) -> list[dict]:
             sizes.append(0)  # ``one`` reports the file's real error
     sc = spark.sparkContext
     groups = pack_contiguous(paths, sizes, sc.defaultParallelism)
-    return (
-        sc.parallelize(groups, len(groups))
-        .flatMap(lambda group: [one(p) for p in group])
-        .collect()
-    )
+
+    def task(group):
+        stat_checked_zip_invalidation()
+        return [one(p) for p in group]
+
+    return sc.parallelize(groups, len(groups)).flatMap(task).collect()
 
 
 def describe_index_dir(spark, path_or_glob: str) -> list[dict]:

@@ -21,6 +21,8 @@ through the format (or ``read_xlsx``), which stays Arrow end-to-end.
 
 from __future__ import annotations
 
+from sheetreader_duckdb_spark.sources.xlsx.tasks import stat_checked_zip_invalidation
+
 _OPTION_ARGS = (
     "sheet_index",
     "sheet_name",
@@ -87,6 +89,7 @@ class SheetReaderUDTF:
         return AnalyzeResult(schema=ds.schema())
 
     def eval(self, path, **kwargs):
+        stat_checked_zip_invalidation()
         from sheetreader_duckdb_spark.sources.xlsx.datasource import (
             SheetReaderDataSource,
         )

@@ -1527,7 +1527,7 @@ def _oracle(path, **opts):
     rows = []
     for part in reader.partitions():
         for path in part.paths:
-            fs = DS._infer_or_declared(path, o, names, reader.col_types)
+            fs = DS._infer_or_declared(path, o, lambda: (names, reader.col_types))
             cols = [fs.names.index(n) for n in names]
             with P.XlsxWorkbook(path, allow_inline=o.inline_strings) as wb:
                 sheet = wb.resolve_sheet(o.sheet_name, o.sheet_index)

@@ -188,6 +188,25 @@ def test_header_only_file_inside_a_pack(tmp_path):
     assert rows == want and len(rows) == 5 * 6
 
 
+@pytest.mark.parametrize("width", [2, None], ids=["packed", "unpacked"])
+def test_header_only_file_under_columns(tmp_path, width):
+    """A ``columns=`` read falls back to the relation's FULL file layout
+    for a member whose probe is insufficient: its header row is matched
+    against every file column, not the pruned output names, so a
+    header-only member reads as zero rows."""
+    header = ["k", "s", "note", "ok"]
+    for i in range(5):
+        rows = [] if i == 2 else [
+            [float(i * 100 + j), f"f{i}r{j}", f"n{j}", bool(j % 2)]
+            for j in range(6)
+        ]
+        write_xlsx(str(tmp_path / f"c{i}.xlsx"), {"Sheet1": [header] + rows})
+    opts = {"path": str(tmp_path)}
+    _, full = _plan_and_rows(opts, width)
+    _, rows = _plan_and_rows({**opts, "columns": "note,k"}, width)
+    assert rows == [(r[2], r[0]) for r in full] and len(rows) == 4 * 6
+
+
 # -- through Spark ------------------------------------------------------------
 @pytest.fixture(scope="module")
 def registered(spark):
