@@ -1020,10 +1020,17 @@ class SheetReaderReader(DataSourceReader):
         # (max(32, defaultParallelism), or the max_shards option)
         # so a single big file can feed every core of the executor
         # fleet, not just a local[32] box's 32 tasks.
-        n = max(1, min(
+        auto = n = max(1, min(
             _auto_shard_cap(self.opts.max_shards, self._default_parallelism),
             size >> 20,
         ))
+        # Whole waves: past the captured width, a count that is not a
+        # multiple of it leaves most cores idle in its last wave (5
+        # shards on 4 cores run as 4 + 1). Rounding down keeps every
+        # wave full; a max_shards option is the user's own count.
+        w = self._default_parallelism
+        if w and n > w and self.opts.max_shards is None:
+            n -= n % w
         # String-heavy refinement: every shard pays an O(sst) fixed
         # cost (decompress + offset-index the shared-string heap),
         # while the row scan divides by n — so when the heap rivals
@@ -1034,10 +1041,11 @@ class SheetReaderReader(DataSourceReader):
         # (sheet 139 MB, sst 123 MB → cap 9): 6-10 shards 4.7 s,
         # 16 → 8.0 s, 24 → 9.2 s. Numeric/deduped sheets have
         # tiny heaps and keep the size-based count. Probed only
-        # when sharding would actually happen (n > 4): a
-        # many-small-file directory read never pays per-file zip
+        # when the size-based count passes 4 (before the whole-wave
+        # rounding, so a 5-7 MB file still gets the prune-aware cap):
+        # a many-small-file directory read never pays per-file zip
         # metadata reads at planning.
-        if n <= 4:
+        if auto <= 4:
             return size, n
         # One metadata open serves both planning probes (r11
         # review: the sst probe and the prune block used to open

@@ -40,6 +40,7 @@ import os
 import struct
 import zipfile
 from collections import Counter
+from functools import partial
 from operator import itemgetter
 
 from .parser import (
@@ -56,6 +57,7 @@ from .rowstream import MixedAwareRowCounter, foreign_row_evidence
 from .splitindex import (
     SECTION_KEYS,
     SECTIONS,
+    SPLIT_INTERVAL,
     SST_ENTRY,
     member_data_offset,
     strip_count_entry,
@@ -67,7 +69,7 @@ from .writer import _publish_index, _write_indexed_member
 class _IntervalStatsCollector:
     """Per-interval min/max per column letter, collected from the
     retrofit pass's own bytes (VERDICT r11 task 2 — the parquet
-    row-group-stats pattern for XLSX): buffers one interval's uncompressed
+    row-group-stats pattern for XLSX): analyses one interval's uncompressed
     XML at a time and sees its cells through the reader's own scans — the
     dense row pattern (``parser.build_dense_row_re``) when every row
     matches it, else the prefix-compiled cell regex — then folds raw
@@ -97,8 +99,9 @@ class _IntervalStatsCollector:
     * fine-grained intervals are realigned to the FINAL (possibly
       2:1-thinned) point list by cumulative row count; any misalignment
       drops all stats;
-    * a buffered interval above 64 MB disables collection outright
-      (bounded memory beats stats);
+    * an interval the writer had to stream past its 64 MB segment cap
+      (``writer._SEGMENT_CAP``) disables collection outright (bounded
+      memory beats stats);
     * count-specific: a column whose family totals exceed the interval's
       row count (duplicate cell refs — malformed OOXML that could let
       IsNull-pruning overclaim) withholds ITS counts for the interval,
@@ -106,7 +109,6 @@ class _IntervalStatsCollector:
       does the same (the cell's decode family is undecidable).
     """
 
-    _MAX_BUFFER = 64 << 20
     # Deferred-resolution budget (r13, the big-heap path): stored sst
     # ref indices per column / per collector. 4M int64 refs ≈ 32 MB a
     # column, 8M ≈ 64 MB total — crossing a cap sheds that column's
@@ -119,20 +121,9 @@ class _IntervalStatsCollector:
         self, pfx: bytes, sst: "list[str] | None" = None,
         date_styles: "frozenset[int] | None" = None,
         defer_strings: bool = False,
-        pool=None, pool_size: int = 0,
     ):
         self._pfx = pfx
         self._sst = sst
-        # Optional fork Pool (r13): interval analysis runs in worker
-        # PROCESSES (the regex/fold slices are GIL-bound and were the
-        # reason stats=True gained nothing from the r12 thread fan-out);
-        # an eager heap rides into the workers via fork COW
-        # (_POOL_HEAP). fine[] holds AsyncResults until _drain realizes
-        # them head-first, so claim order — and output bytes — are
-        # identical to the serial path.
-        self._pool = pool
-        self._pool_size = pool_size
-        self._head = 0
         # Deferred string bounds (r13): instead of resolving t="s" refs
         # against a RESIDENT heap (the r12 design, whose 256 MB gate
         # dropped string stats on big-sst files entirely), record each
@@ -153,8 +144,7 @@ class _IntervalStatsCollector:
         # numeric cell then withholds its count claim for that interval
         # (sound both ways); unstyled numerics are always T_NUMERIC.
         self._date_styles = date_styles
-        self._buf: list = []
-        self._size = 0
+        self._buf: list = []  # on_piece's open interval
         self._cum = 0
         # [(cum_rows_at_interval_end, {section key: claims | None})] with
         # claims per letter: st (mn, mx), sv (lo, hi), nc (n, s, b, d) |
@@ -163,47 +153,43 @@ class _IntervalStatsCollector:
         self.dead = False
 
     def on_piece(self, piece: bytes, flushed: bool) -> None:
-        if self.dead:
-            return
+        """Observe one piece of the stream; ``flushed`` ends an interval.
+        The writer hands whole intervals to ``analyzer``/``fold`` instead
+        (``writer._SegmentWriter``); this is the same analysis for a
+        caller that holds pieces."""
         self._buf.append(piece)
-        self._size += len(piece)
-        if self._size > self._MAX_BUFFER:
-            self.dead = True
-            self._buf = []
-            return
         if flushed:
-            self._close()
+            self.finish()
 
-    def _close(self) -> None:
-        data = b"".join(self._buf)
-        self._buf = []
-        self._size = 0
-        if self._pool is not None:
-            # GIL-free lane (r13, VERDICT task 4): the regex scan +
-            # numpy folds of one interval are pure CPU on immutable
-            # bytes — ship them to a forked worker and realize results
-            # IN ORDER later. Backpressure caps in-flight work so the
-            # (faster) inflate producer can't queue a whole file.
-            self.fine.append(self._pool.apply_async(
-                _analyze_interval_pooled,
-                (data, self._pfx, self._date_styles, self._defer,
-                 frozenset(self._defer_dead_b)),
-            ))
-            self._drain(max_pending=2 * self._pool_size)
-        else:
-            self.fine.append(self._finish_record(
-                _analyze_interval(
-                    data, self._pfx, self._date_styles, self._sst,
-                    self._defer, dead_cols=self._defer_dead_b,
-                ),
-                len(self.fine),
-            ))
+    def analyzer(self, pooled: bool = False):
+        """One interval's analysis as a picklable callable of its bytes,
+        or None once collection died. ``pooled`` runs in a fork-pool
+        worker, where an eager heap comes from the inherited
+        ``_POOL_HEAP`` (no per-job serialization) and the shed columns
+        are a snapshot taken now (the parent drops late arrivals
+        regardless, so staleness only costs cycles)."""
+        if self.dead:
+            return None
+        dead = frozenset(self._defer_dead_b)
+        if pooled:
+            return partial(
+                _analyze_interval_pooled, pfx=self._pfx,
+                date_styles=self._date_styles, defer=self._defer,
+                dead_cols=dead,
+            )
+        return partial(
+            _analyze_interval, pfx=self._pfx, date_styles=self._date_styles,
+            sst=self._sst, defer=self._defer, dead_cols=dead,
+        )
 
-    def _finish_record(self, r, fi: int):
+    def fold(self, r) -> None:
         """Fold one interval's analysis into collector state, in stream
         order (cum accumulation + deferred-ref bookkeeping live HERE, on
-        the parent side, so pooled and serial runs build byte-identical
-        claims). Returns the fine record for slot ``fi``."""
+        the parent side, so pooled and serial runs build identical
+        claims)."""
+        if self.dead:
+            return
+        fi = len(self.fine)
         rows_in, claims, drefs = r
         self._cum += rows_in
         if drefs:
@@ -215,32 +201,16 @@ class _IntervalStatsCollector:
                     self._defer_counts.get(col, 0) + int(arr.size)
                 )
             self._enforce_defer_budget()
-        return (self._cum, claims)
+        self.fine.append((self._cum, claims))
 
-    def _drain(self, max_pending: int) -> None:
-        """Realize pooled results from the head of ``fine`` — completed
-        ones always, blocking only while more than ``max_pending`` are
-        outstanding (0 = realize everything). Head-first realization
-        keeps cum accumulation (and with it every claim) in stream
-        order regardless of worker completion order."""
-        while not self.dead and self._head < len(self.fine):
-            rec = self.fine[self._head]
-            if isinstance(rec, tuple):
-                self._head += 1
-                continue
-            if len(self.fine) - self._head <= max_pending and not rec.ready():
-                break
-            # A worker's exception re-raises here, as on the serial path.
-            self.fine[self._head] = self._finish_record(rec.get(), self._head)
-            self._head += 1
-
-    def flush_realize(self) -> None:
-        """Close any trailing buffer and realize every pooled result —
-        required before reading ``fine``/deferred refs (aligned() and
-        the deferred resolver call it)."""
-        if self._buf:
-            self._close()
-        self._drain(max_pending=0)
+    def finish(self) -> None:
+        """Analyse any open ``on_piece`` interval — required before
+        reading ``fine``/deferred refs (aligned() and the deferred
+        resolver call it)."""
+        if self._buf and not self.dead:
+            data = b"".join(self._buf)
+            self._buf = []
+            self.fold(self.analyzer()(data))
 
     def _shed_defer_col(self, col: str) -> None:
         self._defer_dead.add(col)
@@ -276,7 +246,7 @@ class _IntervalStatsCollector:
         nothing to claim."""
         if self.dead or points is None:
             return {}
-        self.flush_realize()
+        self.finish()
         if self._defer and self._defer_refs and not self._defer_resolved:
             raise RuntimeError(
                 "deferred string bounds not resolved — run "
@@ -386,7 +356,7 @@ def _analyze_interval(
     data: bytes, pfx: bytes, date_styles, sst, defer: bool,
     dead_cols: "frozenset | set" = frozenset(),
 ):
-    """Pure per-interval analysis (the collector's old ``_close`` body,
+    """Pure per-interval analysis (the collector's interval step,
     extracted so a forked worker can run it on raw bytes): returns
     ``(rows_in, claims, defer_refs)`` where ``claims`` maps every section
     key to its per-letter claims, or to None throughout for a withheld
@@ -400,11 +370,21 @@ def _analyze_interval(
     withheld = (rows_in, dict.fromkeys(SECTION_KEYS), None)
     cols = _dense_columns(data, pr, rows_in)
     if cols is None:
-        ms = pr.cell_re.findall(data)
-        if len(ms) != len(pr.cell_count_re.findall(data)):
+        # One streaming pass (no list of every cell: a worker's peak
+        # memory is this interval's values, not its cell tuples).
+        cols = {}
+        seen = 0
+        refused = False
+        for m in pr.cell_re.finditer(data):
+            letters, s_attr, t_attr, v = m.groups(b"")
+            seen += 1
+            refused = refused or t_attr in (b"str", b"inlineStr")
+            if v:
+                cols.setdefault((letters, s_attr, t_attr), []).append(v)
+        if seen != sum(1 for _ in pr.cell_count_re.finditer(data)):
             # unseen cells: no claims
             return withheld
-        if any(t in (b"str", b"inlineStr") for _l, _s, t, _v in ms):
+        if refused:
             # Cells the default reader REFUSES (formula/inline strings →
             # UNSUPPORTED_STRING_ERROR): claiming stats here would let a
             # pruned filtered read silently succeed where the unfiltered
@@ -414,10 +394,6 @@ def _analyze_interval(
             # above — their <is>/<f> children defeat the cell regex — but
             # a bare `<c t="str"><v>…</v></c>` matches and needs this.)
             return withheld
-        cols = {}
-        for letters, s_attr, t_attr, v in ms:
-            if v:
-                cols.setdefault((letters, s_attr, t_attr), []).append(v)
     per: dict = {}
     per_s: dict = {}
     # Value counts per letter (r13, the `nc` section): how many cells
@@ -593,12 +569,10 @@ def _analyze_interval(
 
 
 def _analyze_interval_pooled(data, pfx, date_styles, defer, dead_cols):
-    """Fork-worker wrapper: the eager heap comes from the inherited
-    _POOL_HEAP global; ``dead_cols`` is the parent's shed-column
-    snapshot at submit time (workers stop collecting refs for them —
-    the parent drops late arrivals regardless, so staleness only costs
-    cycles). A failure propagates through ``AsyncResult.get()``, so a
-    pooled retrofit raises exactly where a serial one would."""
+    """Fork-worker form of ``_analyze_interval``: the eager heap comes
+    from the inherited _POOL_HEAP global. A failure propagates through
+    ``AsyncResult.get()``, so a pooled retrofit raises exactly where a
+    serial one would."""
     return _analyze_interval(
         data, pfx, date_styles,
         None if defer else _POOL_HEAP, defer, dead_cols=dead_cols,
@@ -674,9 +648,10 @@ def _peek(zf: zipfile.ZipFile, name: str, n: int) -> bytes:
         return f.read(n)
 
 
-def _reencode_member(zout, zinfo, chunks, boundary, needle, neg, on_piece=None):
+def _reencode_member(zout, zinfo, chunks, boundary, needle, neg, stats=None,
+                     pool=None, pool_size=0):
     """Re-deflate one member with flush points, preserving its metadata
-    (zipfile re-computes CRC/sizes from the actual stream)."""
+    (CRC/sizes are recomputed from the actual stream)."""
     import copy as _copy
 
     zi = _copy.copy(zinfo)
@@ -687,19 +662,32 @@ def _reencode_member(zout, zinfo, chunks, boundary, needle, neg, on_piece=None):
     zi.compress_size = 0
     zi.file_size = 0
     return _write_indexed_member(
-        zout, zi, chunks, boundary, needle, neg, on_piece=on_piece
+        zout, zi, chunks, boundary, needle, neg, stats=stats, pool=pool,
+        pool_size=pool_size,
     )
 
 
-def _stage_members(src_path, jobs, base, stats, stats_sst, workers,
+def _retrofit_width(workers: "int | None") -> int:
+    """Processes (and staging threads) one retrofit may use: ``workers``
+    when given, else the usable cores, at most 4."""
+    if workers is not None:
+        return max(1, workers)
+    try:
+        cores = len(os.sched_getaffinity(0))
+    except AttributeError:  # no affinity API on this platform
+        cores = os.cpu_count() or 1
+    return min(4, cores)
+
+
+def _stage_members(src_path, jobs, base, stats, stats_sst, width,
                    tmps_out=None, pool=None, pool_size=0):
     """Re-deflate each splittable member into its own single-member temp
-    archive, fanning out across threads (VERDICT r12 task 3: zlib
-    releases the GIL in both directions, so independent members'
-    inflate+deflate overlaps — retrofit wall time trends toward
-    max(member) instead of Σ(members) on multi-sheet workbooks; the
-    GIL-bound slices — row counting, stats regexes — still serialize,
-    which bounds the speedup honestly). Each worker opens its own
+    archive, one staging thread per member up to ``width``. A staging
+    thread inflates its member, counts and cuts it at flush points, and
+    writes the deflated segments; with ``pool`` the segments (and their
+    interval statistics) are computed in the pool's worker processes, so
+    one big member keeps every worker busy, and several members overlap
+    their inflates (zlib releases the GIL). Each thread opens its own
     ZipFile handle (zipfile reads are not safely concurrent on one
     object). Returns ``{filename: {"tmp": path, "r": result}}``.
 
@@ -707,8 +695,6 @@ def _stage_members(src_path, jobs, base, stats, stats_sst, workers,
     source stream and the shared deflate settings, and assembly replays
     archive order — so the final file is identical for ANY worker
     count, including 1 (pinned in tests/test_xlsx_indexer.py)."""
-    if workers is None:
-        workers = min(4, len(jobs)) or 1
 
     def _one(i, kind, info, kpfx):
         tmpm = f"{base}.m{i}"
@@ -723,6 +709,7 @@ def _stage_members(src_path, jobs, base, stats, stats_sst, workers,
                         ztmp, info,
                         _inflate_chunks(wb2.zf, info.filename),
                         b"</" + kpfx + b"si>", b"<" + kpfx + b"si", None,
+                        pool=pool, pool_size=pool_size,
                     )
                 else:
                     r = _index_one_sheet(
@@ -732,14 +719,14 @@ def _stage_members(src_path, jobs, base, stats, stats_sst, workers,
         return info.filename, {"tmp": tmpm, "r": r}
 
     staged: dict = {}
-    if workers <= 1 or len(jobs) <= 1:
+    if width <= 1 or len(jobs) <= 1:
         for i, (kind, info, kpfx) in enumerate(jobs):
             k, v = _one(i, kind, info, kpfx)
             staged[k] = v
     else:
         from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=workers) as ex:
+        with ThreadPoolExecutor(max_workers=min(width, len(jobs))) as ex:
             futs = [ex.submit(_one, i, *j) for i, j in enumerate(jobs)]
             for f in futs:
                 k, v = f.result()
@@ -770,11 +757,12 @@ def index_xlsx(
     * a foreign (non-index) archive comment is preserved by NOT indexing
       unless ``replace_comment=True``; our own stale index comment is
       always replaced.
-    * ``workers`` (r12): fan the per-member re-deflates across threads
-      (None = auto, min(4, splittable members)); output bytes are
-      identical for every worker count. Multi-sheet workbooks and the
-      worksheet+sst pair overlap their zlib work; a single-sheet,
-      no-sst file gains nothing.
+    * ``workers``: processes that deflate (and, with ``stats``, analyse)
+      the flush intervals, and threads that stage the members (None =
+      auto: the usable cores, at most 4). One big worksheet spreads its
+      intervals over every worker; output bytes are identical for every
+      worker count. ``workers=1`` runs everything inline: no process, no
+      thread.
 
     Returns ``{"indexed": bool, "reason": str | None, "rows": int,
     "worksheet_points": int, "sst_points": int, "path": str}``. A file
@@ -825,7 +813,7 @@ def index_xlsx(
         )
 
         staged_tmps: list = []
-        stats_pool = None  # assigned in the try; torn down in finally
+        pool = None  # assigned in the try; torn down in finally
 
         def _rm_temps(keep_out: bool = False):
             # exact names, never glob — a destination basename containing
@@ -867,28 +855,25 @@ def index_xlsx(
                         jobs.append(("extra", info, pfx2))
                 elif info.filename == SST_ENTRY and sst_pfx is not None:
                     jobs.append(("sst", info, sst_pfx))
-            # Stats pool (r13, VERDICT r12 task 4): the per-member
-            # thread fan-out overlaps zlib but the stats slices — cell
-            # regex + numpy folds — are GIL-bound Python, so stats=True
-            # gained almost nothing from threads (8.79→8.52 s while
-            # stats=False went 4.28→2.43 s). Interval analysis now ships
-            # to a FORK pool (bytes in, claims out): workers spawn
-            # eagerly here — in the main thread, BEFORE the staging
-            # threads exist (fork-with-live-threads is the classic
-            # deadlock) — and inherit any eager heap via copy-on-write
-            # (_POOL_HEAP set just before construction). Single big
-            # sheets gain too: consecutive intervals of one stream
-            # analyze concurrently. A box without fork or under resource
-            # limits (OSError / ValueError from pool setup) falls back to
-            # the serial in-thread path, claims identical; any other
-            # error is a bug and raises.
+            # Segment pool: every flush interval of every member is
+            # deflated — and, with stats, analysed — as one job in a
+            # FORK pool (bytes in once, segment and claims out), so one
+            # big worksheet fills every worker. Workers spawn eagerly
+            # here — in the main thread, BEFORE the staging threads
+            # exist (fork-with-live-threads is the classic deadlock) —
+            # and inherit any eager heap via copy-on-write (_POOL_HEAP
+            # set just before construction). No pool when no member
+            # spans one interval (a lone segment has nothing to overlap
+            # with). A box without fork or under resource limits
+            # (OSError / ValueError from pool setup) falls back to the
+            # inline path, bytes identical; any other error is a bug and
+            # raises.
             global _POOL_HEAP
-            eff_workers = (
-                workers if workers is not None
-                else (min(4, len(jobs)) or 1)
-            )
+            width = _retrofit_width(workers)
             pool_size = 0
-            if stats and eff_workers > 1:
+            if width > 1 and any(
+                info.file_size > SPLIT_INTERVAL for _k, info, _p in jobs
+            ):
                 try:
                     import multiprocessing as _mp
 
@@ -897,18 +882,18 @@ def index_xlsx(
                         if isinstance(stats_sst, list)
                         else None
                     )
-                    stats_pool = _mp.get_context("fork").Pool(
-                        processes=eff_workers
+                    pool = _mp.get_context("fork").Pool(
+                        processes=width
                     )
-                    pool_size = eff_workers
+                    pool_size = width
                 except (OSError, ValueError):
-                    stats_pool = None
+                    pool = None
                     pool_size = 0
                 finally:
                     _POOL_HEAP = None
             staged = _stage_members(
-                path, jobs, tmp, stats, stats_sst, workers,
-                tmps_out=staged_tmps, pool=stats_pool, pool_size=pool_size,
+                path, jobs, tmp, stats, stats_sst, width,
+                tmps_out=staged_tmps, pool=pool, pool_size=pool_size,
             )
             pts = spts = None
             nrows = n_si = 0
@@ -939,13 +924,11 @@ def index_xlsx(
             # the cross-check: a streamed total disagreeing with it
             # would mean misaligned indices, so everything is withheld.
             all_colls = [coll_p] + [c for _, _, _, c in extra_raw]
-            # Filter on the MODE, not on already-realized refs: a
-            # collector whose string refs all sit in the unflushed
-            # trailing interval (or in pending pooled results) has an
-            # empty _defer_refs here — the resolver flushes+realizes
-            # each collector itself and early-exits when nothing
-            # anywhere needs the heap pass (r13 review fix: the old
-            # filter crashed aligned() on tail-only string columns).
+            # Filter on the MODE, not on collected refs: the resolver
+            # marks every deferred collector resolved and early-exits
+            # when nothing anywhere needs the heap pass (r13 review fix:
+            # filtering on refs crashed aligned() on tail-only string
+            # columns).
             deferred = [
                 c for c in all_colls if c is not None and c._defer
             ]
@@ -1005,9 +988,9 @@ def index_xlsx(
         else:
             _rm_temps(keep_out=True)
         finally:
-            if stats_pool is not None:
-                stats_pool.terminate()
-                stats_pool.join()
+            if pool is not None:
+                pool.terminate()
+                pool.join()
         os.replace(tmp, dest)
         return {
             "indexed": True, "reason": None, "rows": nrows,
@@ -1147,9 +1130,9 @@ def _resolve_deferred_strings(collectors, entries, expected_n=None):
     groups: list = []
     arrs: list = []
     for coll in collectors:
-        # trailing interval + any in-flight pooled analyses must land
-        # BEFORE the one heap pass reads the refs
-        coll.flush_realize()
+        # a trailing interval must land BEFORE the one heap pass reads
+        # the refs
+        coll.finish()
         for fi, col, arr in coll._defer_refs:
             groups.append((coll, fi, col))
             arrs.append(arr)
@@ -1255,7 +1238,6 @@ def _index_one_sheet(zout, wb, src_path, info, pfx, want_stats, sst=None,
         _IntervalStatsCollector(
             pfx, sst=None if defer else sst,
             date_styles=wb.date_styles, defer_strings=defer,
-            pool=pool, pool_size=pool_size,
         )
         if want_stats
         else None
@@ -1263,12 +1245,11 @@ def _index_one_sheet(zout, wb, src_path, info, pfx, want_stats, sst=None,
     pts, n = _reencode_member(
         zout, info, _counted(_inflate_chunks(wb.zf, info.filename)),
         b"</" + pfx + b"row>", b"<" + pfx + b"row", b"<" + pfx + b"rowB",
-        on_piece=coll.on_piece if coll else None,
+        stats=coll, pool=pool, pool_size=pool_size,
     )
     # The mixed verdict only means anything when indexing actually ran:
-    # with flush machinery unavailable (pts None, counting stopped early)
-    # the needle count is not comparable and every pure-prefix file would
-    # misreport as mixed (r11 review).
+    # with flush machinery unavailable (pts None) nothing is indexed, and
+    # the report must say that, not "mixed" (r11 review).
     if pts is not None and anyctr.close() != n:
         return pts, n, None, True
     return pts, n, coll, False

@@ -24,6 +24,7 @@ import os
 import re
 import zipfile
 import zlib
+from collections import deque
 from xml.sax.saxutils import escape
 
 from .splitindex import MAX_POINTS, SPLIT_INTERVAL, encode_split_index
@@ -121,66 +122,196 @@ def _cell_xml(ref: str, v: object, intern, date1904: bool) -> str:
     raise TypeError(f"Unsupported cell value type: {type(v)}")
 
 
-def _flush_point(zwf) -> "int | None":
-    """Emit a ``Z_FULL_FLUSH`` into an open ``zf.open(name, "w")`` stream
-    and return the member-relative compressed offset after it — the seek
-    point a reader can start a fresh inflater at (splitindex module doc).
+def _deflater():
+    """The raw deflate stream zipfile itself opens for a ZIP_DEFLATED
+    member at the default level."""
+    return zlib.compressobj(zlib.Z_DEFAULT_COMPRESSION, zlib.DEFLATED, -15)
+
+
+def _deflate_segment(data: bytes, last: bool) -> bytes:
+    """One flush interval of a member as an independent deflate segment:
+    a fresh raw deflater, ended by ``Z_FULL_FLUSH`` (``Z_FINISH`` for the
+    member's last segment). The segments of a member, concatenated, are
+    byte for byte the single stream that flushes at the same offsets:
+    a full flush empties the bit buffer, clears the match hash and, with
+    all input consumed, restarts the window, which is exactly a fresh
+    deflater's state, and zlib's output does not depend on how its input
+    is sliced."""
+    c = _deflater()
+    return c.compress(data) + c.flush(zlib.Z_FINISH if last else zlib.Z_FULL_FLUSH)
+
+
+def _segment_job(data: bytes, last: bool, analyze=None):
+    """All the work one interval needs besides writing: its deflate
+    segment and, with ``analyze`` (a picklable callable of the bytes),
+    its interval statistics. Inline and in a fork-pool worker alike."""
+    return _deflate_segment(data, last), (
+        analyze(data) if analyze is not None else None
+    )
+
+
+def _flush_point(zwf, comp: bytes) -> int:
+    """Append one finished deflate segment to an open
+    ``zf.open(name, "w")`` member and return the member-relative
+    compressed offset after it: past a segment that ends in
+    ``Z_FULL_FLUSH``, the seek point a reader can start a fresh inflater
+    at (splitindex module doc). The segment is byte-identical to the
+    stretch a single flushing stream would have written there
+    (``_deflate_segment``), so indexed members are unchanged by how many
+    processes deflated them.
 
     Reaches into CPython zipfile's ``_ZipWriteFile`` internals
-    (``_compressor``/``_fileobj``/``_compress_size``, stable across 3.8+):
-    the flush consumes no uncompressed bytes, so CRC and file_size are
-    untouched and only the compressed byte count needs adjusting. Returns
-    None when the internals are unavailable (alternate Python) — the
-    member is then a perfectly normal unindexed deflate stream. A one-time
-    round-trip probe (``_flush_probe``) guards against a future SEMANTIC
-    change to how ``_compress_size`` feeds the zip metadata: if the
+    (``_fileobj``/``_compress_size`` here; ``_crc``/``_file_size`` and
+    ``_compressor`` in ``_SegmentWriter``, stable across 3.8+). A one-time
+    round-trip probe (``_flush_probe``) gates all of it: if the
     interpreter's zipfile no longer behaves as patched, indexing turns
-    OFF globally instead of mis-sizing members (ADVICE r10)."""
-    global _FLUSH_OK
-    if _FLUSH_OK is None:
-        _FLUSH_OK = _flush_probe()
-    if not _FLUSH_OK:
-        return None
-    try:
-        comp = zwf._compressor
-        fobj = zwf._fileobj
-        size = zwf._compress_size
-    except AttributeError:
-        return None
-    out = comp.flush(zlib.Z_FULL_FLUSH)
-    fobj.write(out)
-    zwf._compress_size = size + len(out)
+    OFF globally and members stream through zipfile unindexed instead of
+    being mis-sized (ADVICE r10)."""
+    zwf._fileobj.write(comp)
+    zwf._compress_size += len(comp)
     return zwf._compress_size
+
+
+class _Spent:
+    """A member's compressor once its segments are written: the last
+    segment already ended the deflate stream, so closing the member must
+    flush nothing more."""
+
+    def flush(self, *_):
+        return b""
+
+
+# An open segment this large without a boundary (one huge row, rows under
+# another prefix) stops buffering: the rest of it deflates as it streams,
+# in the parent, and interval statistics are given up (indexer).
+_SEGMENT_CAP = 64 << 20
+
+
+class _SegmentWriter:
+    """Write one zip member as independent deflate segments, one per
+    flush interval, in stream order (the encoder of
+    ``_write_indexed_member``).
+
+    ``add`` folds each uncompressed piece into the member's CRC and size
+    at once and buffers it; ``cut`` closes the open segment. Without a
+    pool the segment is deflated (and, with ``stats``, analysed) right
+    there; with one it goes to a worker as one job and is not kept, at
+    most ``2 × pool_size`` jobs in flight. Finished segments are written
+    head-first, so the member, its flush offsets and the collector's
+    claims do not depend on which worker finished first."""
+
+    def __init__(self, zwf, stats=None, pool=None, pool_size: int = 0):
+        self._zwf = zwf
+        self._stats = stats
+        self._pool = pool
+        self._max_pending = 2 * pool_size
+        self._pending: deque = deque()  # AsyncResults, stream order
+        self._buf: list = []
+        self._size = 0
+        self._stream = None  # deflater of an open segment past _SEGMENT_CAP
+        self.ends: list = []  # compressed offset after each segment
+
+    def add(self, piece: bytes) -> None:
+        zwf = self._zwf
+        zwf._crc = zlib.crc32(piece, zwf._crc)
+        zwf._file_size += len(piece)
+        if self._stream is not None:
+            _flush_point(zwf, self._stream.compress(piece))
+            return
+        self._buf.append(piece)
+        self._size += len(piece)
+        if self._size > _SEGMENT_CAP:
+            self._drain(0)  # everything before it is written first
+            if self._stats is not None:
+                self._stats.dead = True
+            self._stream = _deflater()
+            _flush_point(zwf, self._stream.compress(b"".join(self._buf)))
+            self._buf, self._size = [], 0
+
+    def cut(self, last: bool) -> int:
+        """Close the open segment; returns its ordinal."""
+        n = len(self.ends) + len(self._pending)
+        if self._stream is not None:
+            self.ends.append(_flush_point(self._zwf, self._stream.flush(
+                zlib.Z_FINISH if last else zlib.Z_FULL_FLUSH
+            )))
+            self._stream = None
+            return n
+        data = b"".join(self._buf)
+        self._buf, self._size = [], 0
+        st = self._stats
+        # A lone segment (the member never reached one interval) gets no
+        # index, so its statistics would never be read.
+        analyze = (
+            st.analyzer(pooled=self._pool is not None)
+            if st is not None and data and (n or not last) else None
+        )
+        if self._pool is None:
+            self._land(*_segment_job(data, last, analyze))
+        else:
+            self._pending.append(
+                self._pool.apply_async(_segment_job, (data, last, analyze))
+            )
+            self._drain(self._max_pending)
+        return n
+
+    def _drain(self, max_pending: int) -> None:
+        """Write finished segments from the head: completed ones always,
+        blocking only while more than ``max_pending`` are outstanding. A
+        worker's exception re-raises here."""
+        while self._pending:
+            if len(self._pending) <= max_pending and not self._pending[0].ready():
+                return
+            self._land(*self._pending.popleft().get())
+
+    def _land(self, comp: bytes, analysis) -> None:
+        self.ends.append(_flush_point(self._zwf, comp))
+        if analysis is not None:
+            self._stats.fold(analysis)
+
+    def finish(self) -> list:
+        """Write every outstanding segment, retire the member's own
+        compressor; returns the offset after each segment."""
+        self._drain(0)
+        self._zwf._compressor = _Spent()
+        return self.ends
 
 
 _FLUSH_OK: "bool | None" = None  # one-time _flush_probe verdict
 
 
+def _segments_ok() -> bool:
+    global _FLUSH_OK
+    if _FLUSH_OK is None:
+        _FLUSH_OK = _flush_probe()
+    return _FLUSH_OK
+
+
 def _flush_probe() -> bool:
-    """Self-test the ``_ZipWriteFile`` surgery on an in-memory zip before
-    the first real flush point: write a member with one mid-stream full
-    flush, then verify (a) the central directory's ``compress_size``
+    """Self-test the ``_ZipWriteFile`` surgery of ``_SegmentWriter`` on an
+    in-memory zip before the first indexed member: write a member as two
+    segments, then verify (a) the central directory's ``compress_size``
     matches the bytes actually occupied in the archive, (b) the member
-    round-trips byte-identical through a fresh ``ZipFile.read``, and
-    (c) a fresh raw inflater started at the recorded offset reproduces
-    the post-flush bytes. Any future CPython change to these internals
-    fails the probe and degrades every write to a plain unindexed deflate
-    stream — never corrupt zip metadata (ADVICE r10)."""
+    round-trips byte-identical, CRC checked, through a fresh
+    ``ZipFile.read``, and (c) a fresh raw inflater started at the
+    recorded offset reproduces the second segment's bytes. Any future
+    CPython change to these internals fails the probe and degrades every
+    write to a plain unindexed deflate stream — never corrupt zip
+    metadata (ADVICE r10)."""
     import io
 
     head, tail = b"<probe>" * 64, b"</probe>" * 64
     try:
         buf = io.BytesIO()
         with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
-            with zf.open("p", "w") as out:
+            with zf.open("p", "w", force_zip64=True) as out:
                 data_start = out._fileobj.tell()
-                out.write(head)
-                comp = out._compressor
-                flushed = comp.flush(zlib.Z_FULL_FLUSH)
-                out._fileobj.write(flushed)
-                out._compress_size += len(flushed)
-                coff = out._compress_size
-                out.write(tail)
+                seg = _SegmentWriter(out)
+                seg.add(head)
+                seg.cut(last=False)
+                seg.add(tail)
+                seg.cut(last=True)
+                coff, _ = seg.finish()
             if zf.getinfo("p").compress_size != zf.fp.tell() - data_start:
                 return False
             csize = zf.getinfo("p").compress_size
@@ -205,10 +336,11 @@ from .rowstream import NeedleStreamCounter as _StraddleCounter  # noqa: E402
 
 def _write_indexed_member(
     zf, name, chunks, boundary: bytes = b"</row>", needle: bytes = b"<row ",
-    neg_needle: "bytes | None" = None, on_piece=None,
+    neg_needle: "bytes | None" = None, stats=None, pool=None,
+    pool_size: int = 0,
 ) -> "tuple[list | None, int]":
     """Stream a zip member with split points: write ``chunks`` (any byte
-    slicing) into the member, emitting a full-flush point at the first
+    slicing) into the member, with a full-flush point at the first
     ``boundary`` past every ``SPLIT_INTERVAL`` uncompressed bytes.
     Returns (points, count) where points is the (member-relative
     compressed offset, cumulative ``needle`` count) list — or None when
@@ -217,60 +349,63 @@ def _write_indexed_member(
     heap indexes entries (``</si>`` / ``<si>``). ``neg_needle`` subtracts
     a prefix-colliding element (``<rowB``) so retrofit counts over
     foreign XML agree with ``parser.count_row_starts``. ``name`` may be a
-    ZipInfo to preserve foreign member metadata (retrofit). ``on_piece``,
-    when given, observes every written piece plus each flush point's
-    ordinal — the hook interval statistics ride on (indexer module).
+    ZipInfo to preserve foreign member metadata (retrofit).
+
+    Each interval between two flush points is deflated on its own
+    (``_deflate_segment``), which is byte-identical to one stream that
+    flushes there, so the member is the same whether its segments are
+    deflated inline or, with ``pool`` (a fork ``multiprocessing`` pool of
+    ``pool_size`` workers), in parallel. ``stats``, an interval
+    statistics collector (indexer module), has every interval analysed
+    in the same job as its deflate.
 
     Past ``MAX_POINTS`` the recorded points thin 2:1 and the interval
     doubles — any subset of valid flush points is a valid (coarser)
     index, and the comment stays bounded for arbitrarily large members."""
-    points: list = []
-    indexable = True
     interval = SPLIT_INTERVAL
     blen = len(boundary)
     ctr = _StraddleCounter(needle, neg_needle)
-    since = 0  # uncompressed bytes written since the last flush point
     with zf.open(name, "w", force_zip64=True) as out:
+        if not _segments_ok():
+            for ch in chunks:
+                out.write(ch)
+                ctr.feed(ch)
+            return None, ctr.count
+        seg = _SegmentWriter(out, stats, pool, pool_size)
+        cuts: list = []  # (segment ordinal, cumulative count) per point
+        since = 0  # uncompressed bytes since the last flush point
         for ch in chunks:
-            while indexable and since + len(ch) >= interval:
-                # Earliest in-chunk boundary past the interval mark —
-                # zero buffering: pieces stream straight to the member.
-                # (A boundary straddling two chunks is simply not seen;
-                # the point lands at the next whole one — any aligned
-                # point set is a valid index.)
+            while since + len(ch) >= interval:
+                # Earliest in-chunk boundary past the interval mark. (A
+                # boundary straddling two chunks is simply not seen; the
+                # point lands at the next whole one — any aligned point
+                # set is a valid index.)
                 cut = ch.find(boundary, max(0, interval - since - blen))
                 if cut == -1:
                     break
                 cut += blen
                 piece, ch = ch[:cut], ch[cut:]
-                out.write(piece)
                 ctr.feed(piece)
-                if on_piece is not None:
-                    on_piece(piece, True)
-                coff = _flush_point(out)
-                if coff is None:
-                    indexable = False
-                    break
-                points.append((coff, ctr.count))
+                seg.add(piece)
+                cuts.append((seg.cut(last=False), ctr.count))
                 since = 0
-                if len(points) >= MAX_POINTS:
-                    points = points[1::2]
+                if len(cuts) >= MAX_POINTS:
+                    cuts = cuts[1::2]
                     interval *= 2
             if ch:
-                out.write(ch)
-                if indexable:
-                    ctr.feed(ch)
-                    if on_piece is not None:
-                        on_piece(ch, False)
+                ctr.feed(ch)
+                seg.add(ch)
                 since += len(ch)
-    return (points if (indexable and points) else None), ctr.count
+        seg.cut(last=True)
+        ends = seg.finish()
+    return [(ends[i], n) for i, n in cuts] or None, ctr.count
 
 
 def _write_sheet_member(
-    zf, name: str, chunks, on_piece=None
+    zf, name: str, chunks, stats=None
 ) -> "tuple[list | None, int]":
     return _write_indexed_member(
-        zf, name, chunks, b"</row>", b"<row ", on_piece=on_piece
+        zf, name, chunks, b"</row>", b"<row ", stats=stats
     )
 
 
@@ -658,7 +793,7 @@ class IncrementalXlsxWriter:
                     )
                 pts, nrows = _write_sheet_member(
                     zf, "xl/worksheets/sheet1.xml", _sheet_chunks(),
-                    on_piece=coll.on_piece if coll else None,
+                    stats=coll,
                 )
                 def _sst_chunks():
                     yield (

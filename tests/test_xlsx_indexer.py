@@ -950,3 +950,211 @@ def test_describe_index_dir_sweep(tmp_path, spark):
     rep = describe_index(src)
     sh2 = rep["sheets"]["xl/worksheets/sheet1.xml"]
     assert sh2["stride"] is None and sh2["numeric_stat_cols"] == []
+
+
+# ---- interval-parallel deflate: one encoder, any worker count -------------
+
+SMALL_INTERVAL = 96 << 10  # ~1 MB sheet → more than 8 intervals
+
+
+def _raw_member(path: str, name: str) -> bytes:
+    with zipfile.ZipFile(path) as zf:
+        info = zf.getinfo(name)
+    with open(path, "rb") as f:
+        f.seek(SI.member_data_offset(path, info))
+        return f.read(info.compress_size)
+
+
+def _serial_oracle(data: bytes, cuts: list) -> bytes:
+    """One raw deflate stream over the whole member with a full flush at
+    every cut: the single-stream encoding the segments must reproduce."""
+    import zlib
+
+    c = zlib.compressobj(zlib.Z_DEFAULT_COMPRESSION, zlib.DEFLATED, -15)
+    out, prev = [], 0
+    for off in cuts:
+        out += [c.compress(data[prev:off]), c.flush(zlib.Z_FULL_FLUSH)]
+        prev = off
+    out += [c.compress(data[prev:]), c.flush()]
+    return b"".join(out)
+
+
+@pytest.fixture(scope="module")
+def many_interval_xlsx(tmp_path_factory):
+    d = tmp_path_factory.mktemp("segments")
+    src = str(d / "src.xlsx")
+    w = IncrementalXlsxWriter(src, "Sheet1")
+    w.write_row(["name", "qty", "price"])
+    for i in range(9_000):
+        w.write_row([f"n{i:05d}", float(i % 97), float(i) + 0.5])
+    w.close()
+    return _foreignize(src, str(d / "foreign.xlsx"))
+
+
+@pytest.mark.parametrize("max_points", [None, 4], ids=["plain", "thinned"])
+def test_segments_byte_identical_to_serial_oracle(
+    many_interval_xlsx, tmp_path, monkeypatch, max_points
+):
+    """Every flush interval is deflated on its own, inline or in the
+    pool: the output is byte-identical for workers 1, 2, 4 and auto,
+    with statistics on and off, and each re-deflated member equals one
+    serial deflate stream that full-flushes at the cuts the encoder
+    made. With ``max_points`` the recorded points thin 2:1 while the
+    member keeps every flush."""
+    from sheetreader_duckdb_spark.sources.xlsx import indexer as IX
+    from sheetreader_duckdb_spark.sources.xlsx import writer as W
+
+    monkeypatch.setattr(W, "SPLIT_INTERVAL", SMALL_INTERVAL)
+    monkeypatch.setattr(IX, "SPLIT_INTERVAL", SMALL_INTERVAL)
+    if max_points is not None:
+        monkeypatch.setattr(W, "MAX_POINTS", max_points)
+    cuts: dict = {}
+    real_add, real_cut = W._SegmentWriter.add, W._SegmentWriter.cut
+
+    def add(self, piece):
+        self.seen = getattr(self, "seen", 0) + len(piece)
+        real_add(self, piece)
+
+    def cut(self, last):
+        if not last:
+            cuts.setdefault(self._zwf._zinfo.filename, []).append(self.seen)
+        return real_cut(self, last)
+
+    monkeypatch.setattr(W._SegmentWriter, "add", add)
+    monkeypatch.setattr(W._SegmentWriter, "cut", cut)
+
+    sheet, sst = "xl/worksheets/sheet1.xml", "xl/sharedStrings.xml"
+    outs: dict = {}
+    for stats in (True, False):
+        for workers in (1, 2, 4, None):
+            cuts.clear()
+            out = str(tmp_path / f"o-{stats}-{workers}.xlsx")
+            res = index_xlsx(
+                many_interval_xlsx, out_path=out, stats=stats, workers=workers
+            )
+            assert res["indexed"], res
+            outs[stats, workers] = open(out, "rb").read()
+            seen_cuts = {k: list(v) for k, v in cuts.items()}
+        assert len({outs[stats, w] for w in (1, 2, 4, None)}) == 1, stats
+
+    # flushes made; with thinning the interval doubles as it goes
+    assert len(seen_cuts[sheet]) >= (8 if max_points is None else 5)
+    with zipfile.ZipFile(many_interval_xlsx) as zf:
+        plain = {name: zf.read(name) for name in (sheet, sst)}
+    for stats in (True, False):
+        out = str(tmp_path / f"o-{stats}-None.xlsx")
+        for name in (sheet, sst):
+            assert _raw_member(out, name) == _serial_oracle(
+                plain[name], seen_cuts[name]
+            ), (stats, name)
+        with zipfile.ZipFile(out) as zf:
+            assert zf.testzip() is None
+            pts = SI.decode_split_index(zf, sheet)
+        if max_points is None:
+            assert len(pts) == len(seen_cuts[sheet]) + 1
+        else:
+            assert len(pts) < len(seen_cuts[sheet])
+
+
+@pytest.mark.parametrize("workers", [1, 4])
+def test_segment_past_cap_streams_in_the_parent(
+    many_interval_xlsx, tmp_path, monkeypatch, workers
+):
+    """An open segment that outgrows ``writer._SEGMENT_CAP`` (a long
+    stretch with no boundary) stops buffering and deflates as it
+    streams, in the parent: the members and their flush points are
+    unchanged, and only the interval statistics are given up."""
+    from sheetreader_duckdb_spark.sources.xlsx import indexer as IX
+    from sheetreader_duckdb_spark.sources.xlsx import writer as W
+
+    monkeypatch.setattr(W, "SPLIT_INTERVAL", SMALL_INTERVAL)
+    monkeypatch.setattr(IX, "SPLIT_INTERVAL", SMALL_INTERVAL)
+    want = str(tmp_path / "want.xlsx")
+    assert index_xlsx(many_interval_xlsx, out_path=want)["indexed"]
+    monkeypatch.setattr(W, "_SEGMENT_CAP", 16 << 10)
+    out = str(tmp_path / "out.xlsx")
+    assert index_xlsx(many_interval_xlsx, out_path=out, workers=workers)["indexed"]
+    sheet = "xl/worksheets/sheet1.xml"
+    for name in (sheet, "xl/sharedStrings.xml"):
+        assert _raw_member(out, name) == _raw_member(want, name), name
+    with zipfile.ZipFile(want) as zw, zipfile.ZipFile(out) as zo:
+        pts = SI.decode_split_index(zo, sheet)
+        assert pts == SI.decode_split_index(zw, sheet) and len(pts) >= 8
+        assert SI.decode_interval_sections(zw, sheet, pts)
+        assert not SI.decode_interval_sections(zo, sheet, pts)
+
+
+@pytest.mark.parametrize("workers", [1, 4])
+@pytest.mark.parametrize("stats", [False, True])
+def test_segment_deflate_error_is_loud(
+    foreign_xlsx, tmp_path, monkeypatch, stats, workers
+):
+    """A deflate job that raises, inline or in a pool worker, fails the
+    retrofit and leaves neither the output nor staging files behind."""
+    from sheetreader_duckdb_spark.sources.xlsx import writer as W
+
+    def boom(*a, **k):
+        raise RuntimeError("segment deflate bug (simulated)")
+
+    monkeypatch.setattr(W, "_deflate_segment", boom)
+    monkeypatch.setattr(W, "_FLUSH_OK", True)  # the probe deflates too
+    out = str(tmp_path / "out.xlsx")
+    with pytest.raises(RuntimeError, match="segment deflate bug"):
+        index_xlsx(foreign_xlsx, out_path=out, stats=stats, workers=workers)
+    assert not os.path.exists(out)
+    assert not [f for f in os.listdir(tmp_path) if ".idx-tmp" in f]
+
+
+def test_workers_one_starts_no_process_or_thread(foreign_xlsx, tmp_path, monkeypatch):
+    """``workers=1`` (what ``index_xlsx_dir`` passes inside Spark tasks)
+    runs every segment inline: no pool, no staging thread — and the
+    bytes are those of the parallel path."""
+    import multiprocessing
+    import threading
+
+    want = str(tmp_path / "want.xlsx")
+    assert index_xlsx(foreign_xlsx, out_path=want, workers=4)["indexed"]
+
+    def refuse(*a, **k):
+        raise AssertionError("workers=1 must not start a pool or a thread")
+
+    monkeypatch.setattr(multiprocessing, "get_context", refuse)
+    monkeypatch.setattr(threading.Thread, "start", refuse)
+    out = str(tmp_path / "out.xlsx")
+    assert index_xlsx(foreign_xlsx, out_path=out, workers=1)["indexed"]
+    assert open(out, "rb").read() == open(want, "rb").read()
+
+
+def test_writer_output_pinned(tmp_path, monkeypatch):
+    """``write_xlsx`` and ``IncrementalXlsxWriter`` (with interval
+    statistics) write the same bytes as the single-stream encoder did:
+    sha256 pinned, with the zip timestamps fixed and intervals small
+    enough for many flush points in the sheet and the heap."""
+    import hashlib
+    import types
+
+    from sheetreader_duckdb_spark.sources.xlsx import writer as W
+
+    monkeypatch.setattr(W, "SPLIT_INTERVAL", 32 << 10)
+    monkeypatch.setattr(
+        zipfile, "time",
+        types.SimpleNamespace(time=lambda: 0.0,
+                              localtime=lambda _t=None: (2024, 1, 2, 3, 4, 5)),
+    )
+    rows = [["k", "name", "x", "flag"]] + [
+        [i, f"s{i % 2500:04d}-label", i * 0.25, i % 3 == 0] for i in range(6_000)
+    ]
+    a = str(tmp_path / "a.xlsx")
+    W.write_xlsx(a, {"One": rows, "Two": rows[:3_000]})
+    b = str(tmp_path / "b.xlsx")
+    w = IncrementalXlsxWriter(b, "S", stats=True)
+    for r in rows:
+        w.write_row(r)
+    w.close()
+    digest = {
+        p: hashlib.sha256(open(p, "rb").read()).hexdigest() for p in (a, b)
+    }
+    assert digest == {
+        a: "0bfba1e9582244de8606adebe8a952cda0cb88e0a0c1c9eef75cdc872d665e27",
+        b: "1ae7436aa1a08a1aa1d99aad15485eeb4772f794913bdf6671ec00e97bb4416d",
+    }

@@ -219,6 +219,10 @@ def test_big_sheet_interval_makes_no_per_cell_scan(monkeypatch):
             n[0] += s is data
             return cell_re.findall(s, *a)
 
+        def finditer(self, s, *a):
+            n[0] += s is data
+            return cell_re.finditer(s, *a)
+
     monkeypatch.setattr(pr, "cell_re", Counting())
     got = IX._analyze_interval(data, b"", DATE_STYLES, HEAP, False)
     assert n[0] == 0
