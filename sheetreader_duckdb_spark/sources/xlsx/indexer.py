@@ -57,13 +57,12 @@ from .rowstream import MixedAwareRowCounter, foreign_row_evidence
 from .splitindex import (
     SECTION_KEYS,
     SECTIONS,
-    SPLIT_INTERVAL,
     SST_ENTRY,
     member_data_offset,
     strip_count_entry,
     truncated_string_bounds,
 )
-from .writer import _publish_index, _write_indexed_member
+from .writer import _publish_index, _write_indexed_member, spans_intervals
 
 
 class _IntervalStatsCollector:
@@ -144,22 +143,12 @@ class _IntervalStatsCollector:
         # numeric cell then withholds its count claim for that interval
         # (sound both ways); unstyled numerics are always T_NUMERIC.
         self._date_styles = date_styles
-        self._buf: list = []  # on_piece's open interval
         self._cum = 0
         # [(cum_rows_at_interval_end, {section key: claims | None})] with
         # claims per letter: st (mn, mx), sv (lo, hi), nc (n, s, b, d) |
         # None, bt (n_true, n_false) | None; None withholds the section
         self.fine: list = []
         self.dead = False
-
-    def on_piece(self, piece: bytes, flushed: bool) -> None:
-        """Observe one piece of the stream; ``flushed`` ends an interval.
-        The writer hands whole intervals to ``analyzer``/``fold`` instead
-        (``writer._SegmentWriter``); this is the same analysis for a
-        caller that holds pieces."""
-        self._buf.append(piece)
-        if flushed:
-            self.finish()
 
     def analyzer(self, pooled: bool = False):
         """One interval's analysis as a picklable callable of its bytes,
@@ -203,15 +192,6 @@ class _IntervalStatsCollector:
             self._enforce_defer_budget()
         self.fine.append((self._cum, claims))
 
-    def finish(self) -> None:
-        """Analyse any open ``on_piece`` interval — required before
-        reading ``fine``/deferred refs (aligned() and the deferred
-        resolver call it)."""
-        if self._buf and not self.dead:
-            data = b"".join(self._buf)
-            self._buf = []
-            self.fold(self.analyzer()(data))
-
     def _shed_defer_col(self, col: str) -> None:
         self._defer_dead.add(col)
         self._defer_dead_b.add(col.encode())
@@ -246,7 +226,6 @@ class _IntervalStatsCollector:
         nothing to claim."""
         if self.dead or points is None:
             return {}
-        self.finish()
         if self._defer and self._defer_refs and not self._defer_resolved:
             raise RuntimeError(
                 "deferred string bounds not resolved — run "
@@ -872,7 +851,7 @@ def index_xlsx(
             width = _retrofit_width(workers)
             pool_size = 0
             if width > 1 and any(
-                info.file_size > SPLIT_INTERVAL for _k, info, _p in jobs
+                spans_intervals(info.file_size) for _k, info, _p in jobs
             ):
                 try:
                     import multiprocessing as _mp
@@ -1130,9 +1109,6 @@ def _resolve_deferred_strings(collectors, entries, expected_n=None):
     groups: list = []
     arrs: list = []
     for coll in collectors:
-        # a trailing interval must land BEFORE the one heap pass reads
-        # the refs
-        coll.finish()
         for fi, col, arr in coll._defer_refs:
             groups.append((coll, fi, col))
             arrs.append(arr)

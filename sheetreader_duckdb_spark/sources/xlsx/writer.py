@@ -198,7 +198,12 @@ class _SegmentWriter:
     there; with one it goes to a worker as one job and is not kept, at
     most ``2 × pool_size`` jobs in flight. Finished segments are written
     head-first, so the member, its flush offsets and the collector's
-    claims do not depend on which worker finished first."""
+    claims do not depend on which worker finished first.
+
+    With neither a pool nor ``stats`` nothing needs a whole interval:
+    every piece streams through one deflater that full-flushes at each
+    cut, which writes the same bytes as the per-segment deflaters
+    (``_deflate_segment``) without holding an interval in memory."""
 
     def __init__(self, zwf, stats=None, pool=None, pool_size: int = 0):
         self._zwf = zwf
@@ -208,7 +213,10 @@ class _SegmentWriter:
         self._pending: deque = deque()  # AsyncResults, stream order
         self._buf: list = []
         self._size = 0
-        self._stream = None  # deflater of an open segment past _SEGMENT_CAP
+        self._streaming = pool is None and stats is None
+        # deflater of a streaming member, or of an open segment past
+        # _SEGMENT_CAP
+        self._stream = _deflater() if self._streaming else None
         self.ends: list = []  # compressed offset after each segment
 
     def add(self, piece: bytes) -> None:
@@ -235,7 +243,8 @@ class _SegmentWriter:
             self.ends.append(_flush_point(self._zwf, self._stream.flush(
                 zlib.Z_FINISH if last else zlib.Z_FULL_FLUSH
             )))
-            self._stream = None
+            if not self._streaming:
+                self._stream = None
             return n
         data = b"".join(self._buf)
         self._buf, self._size = [], 0
@@ -290,7 +299,9 @@ def _segments_ok() -> bool:
 def _flush_probe() -> bool:
     """Self-test the ``_ZipWriteFile`` surgery of ``_SegmentWriter`` on an
     in-memory zip before the first indexed member: write a member as two
-    segments, then verify (a) the central directory's ``compress_size``
+    segments (streamed; pooled and analysed segments touch the same
+    zipfile fields, only where their bytes are deflated differs), then
+    verify (a) the central directory's ``compress_size``
     matches the bytes actually occupied in the archive, (b) the member
     round-trips byte-identical, CRC checked, through a fresh
     ``ZipFile.read``, and (c) a fresh raw inflater started at the
@@ -332,6 +343,13 @@ def _flush_probe() -> bool:
 # exact at every flush point (the property adds completed matches still
 # in the carry), so the indexed-member loop below reads it unchanged.
 from .rowstream import NeedleStreamCounter as _StraddleCounter  # noqa: E402
+
+
+def spans_intervals(size: int) -> bool:
+    """Whether a member of ``size`` uncompressed bytes can reach a flush
+    point in ``_write_indexed_member``, i.e. be written as more than one
+    segment (a smaller member is one lone segment with no index)."""
+    return size >= SPLIT_INTERVAL
 
 
 def _write_indexed_member(

@@ -230,7 +230,7 @@ def _deferred_coll(refs_xml: bytes) -> _IntervalStatsCollector:
     coll = _IntervalStatsCollector(
         b"", date_styles=frozenset(), defer_strings=True
     )
-    coll.on_piece(refs_xml, True)
+    coll.fold(coll.analyzer()(refs_xml))  # one whole interval
     return coll
 
 

@@ -1001,11 +1001,9 @@ def test_segments_byte_identical_to_serial_oracle(
     serial deflate stream that full-flushes at the cuts the encoder
     made. With ``max_points`` the recorded points thin 2:1 while the
     member keeps every flush."""
-    from sheetreader_duckdb_spark.sources.xlsx import indexer as IX
     from sheetreader_duckdb_spark.sources.xlsx import writer as W
 
     monkeypatch.setattr(W, "SPLIT_INTERVAL", SMALL_INTERVAL)
-    monkeypatch.setattr(IX, "SPLIT_INTERVAL", SMALL_INTERVAL)
     if max_points is not None:
         monkeypatch.setattr(W, "MAX_POINTS", max_points)
     cuts: dict = {}
@@ -1064,11 +1062,9 @@ def test_segment_past_cap_streams_in_the_parent(
     stretch with no boundary) stops buffering and deflates as it
     streams, in the parent: the members and their flush points are
     unchanged, and only the interval statistics are given up."""
-    from sheetreader_duckdb_spark.sources.xlsx import indexer as IX
     from sheetreader_duckdb_spark.sources.xlsx import writer as W
 
     monkeypatch.setattr(W, "SPLIT_INTERVAL", SMALL_INTERVAL)
-    monkeypatch.setattr(IX, "SPLIT_INTERVAL", SMALL_INTERVAL)
     want = str(tmp_path / "want.xlsx")
     assert index_xlsx(many_interval_xlsx, out_path=want)["indexed"]
     monkeypatch.setattr(W, "_SEGMENT_CAP", 16 << 10)
@@ -1089,14 +1085,18 @@ def test_segment_past_cap_streams_in_the_parent(
 def test_segment_deflate_error_is_loud(
     foreign_xlsx, tmp_path, monkeypatch, stats, workers
 ):
-    """A deflate job that raises, inline or in a pool worker, fails the
-    retrofit and leaves neither the output nor staging files behind."""
+    """A deflater that raises, streaming inline or in a pool worker's
+    segment job, fails the retrofit and leaves neither the output nor
+    staging files behind."""
     from sheetreader_duckdb_spark.sources.xlsx import writer as W
 
-    def boom(*a, **k):
-        raise RuntimeError("segment deflate bug (simulated)")
+    class Boom:
+        def compress(self, *a):
+            raise RuntimeError("segment deflate bug (simulated)")
 
-    monkeypatch.setattr(W, "_deflate_segment", boom)
+        flush = compress
+
+    monkeypatch.setattr(W, "_deflater", Boom)
     monkeypatch.setattr(W, "_FLUSH_OK", True)  # the probe deflates too
     out = str(tmp_path / "out.xlsx")
     with pytest.raises(RuntimeError, match="segment deflate bug"):

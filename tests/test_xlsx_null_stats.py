@@ -128,6 +128,11 @@ def _collect(path, filters, threads=4, schema=SCHEMA, **opts):
     return rows
 
 
+def _feed(coll, xml: bytes) -> None:
+    """Analyse ``xml`` as one whole interval, as the writer does."""
+    coll.fold(coll.analyzer()(xml))
+
+
 # ---------------------------------------------------------------- units
 
 
@@ -156,7 +161,7 @@ def test_collector_family_split_and_withholds():
         b"</sheetData>"
     )
     coll = _IntervalStatsCollector(b"", sst=["s"], date_styles=frozenset({1}))
-    coll.on_piece(xml, True)
+    _feed(coll, xml)
     cum, claims = coll.fine[0]
     st, sv, nc = (claims[k] for k in ("st", "sv", "nc"))
     assert cum == 2
@@ -178,7 +183,7 @@ def test_collector_family_split_and_withholds():
         b"</sheetData>"
     )
     coll2 = _IntervalStatsCollector(b"", date_styles=frozenset())
-    coll2.on_piece(dup, True)
+    _feed(coll2, dup)
     nc2 = coll2.fine[0][1]["nc"]
     assert nc2["A"] is None and nc2["B"] == (1, 0, 0, 0)
 
@@ -186,10 +191,10 @@ def test_collector_family_split_and_withholds():
     # family is undecidable → its column claims nothing; unstyled
     # numerics stay exact
     coll3 = _IntervalStatsCollector(b"", date_styles=None)
-    coll3.on_piece(
+    _feed(
+        coll3,
         b'<sheetData><row r="1"><c r="A1" s="7"><v>1</v></c>'
         b'<c r="B1"><v>2</v></c></row></sheetData>',
-        True,
     )
     nc3 = coll3.fine[0][1]["nc"]
     assert nc3["A"] is None and nc3["B"] == (1, 0, 0, 0)
@@ -200,10 +205,10 @@ def test_collector_error_cells_withhold_counts_too():
     t="str" cells claims NO counts (pruning must not skip the error the
     unfiltered read raises)."""
     coll = _IntervalStatsCollector(b"", date_styles=frozenset())
-    coll.on_piece(
+    _feed(
+        coll,
         b'<sheetData><row r="1"><c r="A1" t="str"><v>x</v></c></row>'
         b"</sheetData>",
-        True,
     )
     assert coll.fine[0][1] == dict.fromkeys(SI.SECTION_KEYS)
 
@@ -475,20 +480,20 @@ def test_unparseable_values_withhold_whole_interval():
         coll = _IntervalStatsCollector(
             b"", sst=["x"], date_styles=frozenset()
         )
-        coll.on_piece(
+        _feed(
+            coll,
             b'<sheetData><row r="1">' + bad +
             b'<c r="B1"><v>7</v></c></row></sheetData>',
-            True,
         )
         assert coll.fine[0][1] == dict.fromkeys(SI.SECTION_KEYS), bad
     # NaN is NOT an error in the reader (float('nan') parses): the
     # column skips its bounds claim but counts stay — and other
     # columns' claims survive
     coll = _IntervalStatsCollector(b"", date_styles=frozenset())
-    coll.on_piece(
+    _feed(
+        coll,
         b'<sheetData><row r="1"><c r="A1"><v>NaN</v></c>'
         b'<c r="B1"><v>7</v></c></row></sheetData>',
-        True,
     )
     st, sv, nc = (coll.fine[0][1][k] for k in ("st", "sv", "nc"))
     assert "A" not in st and st["B"] == (7.0, 7.0)
@@ -510,19 +515,19 @@ def test_exotic_string_refs_withhold_interval_not_crash():
            b'<c r="A1" t="s"><v>99999999999999999999</v></c>'\
            b'<c r="B1"><v>7</v></c></row></sheetData>'
     coll = _IntervalStatsCollector(b"", sst=["x"], date_styles=frozenset())
-    coll.on_piece(huge, True)  # must not raise
+    _feed(coll, huge)  # must not raise
     assert coll.fine[0][1] == dict.fromkeys(SI.SECTION_KEYS)
 
     noheap = b'<sheetData><row r="1"><c r="A1" t="s"><v>0</v></c>'\
              b'<c r="B1"><v>7</v></c></row></sheetData>'
     coll = _IntervalStatsCollector(b"", sst=None, date_styles=frozenset())
-    coll.on_piece(noheap, True)
+    _feed(coll, noheap)
     assert coll.fine[0][1] == dict.fromkeys(SI.SECTION_KEYS)
 
     oor = b'<sheetData><row r="1"><c r="A1" t="s"><v>5</v></c>'\
           b'<c r="B1"><v>7</v></c></row></sheetData>'
     coll = _IntervalStatsCollector(b"", sst=["only"], date_styles=frozenset())
-    coll.on_piece(oor, True)
+    _feed(coll, oor)
     assert coll.fine[0][1] == dict.fromkeys(SI.SECTION_KEYS)
 
     # negative ref WRAPS in the reader (no error): bounds stay faithful
@@ -530,7 +535,7 @@ def test_exotic_string_refs_withhold_interval_not_crash():
     neg = b'<sheetData><row r="1"><c r="A1" t="s"><v>-1</v></c>'\
           b'<c r="B1"><v>7</v></c></row></sheetData>'
     coll = _IntervalStatsCollector(b"", sst=["w", "z"], date_styles=frozenset())
-    coll.on_piece(neg, True)
+    _feed(coll, neg)
     st, sv, nc = (coll.fine[0][1][k] for k in ("st", "sv", "nc"))
     assert sv["A"] == ("z", "z") and st["B"] == (7.0, 7.0)
 
@@ -542,7 +547,7 @@ def test_exotic_string_refs_withhold_interval_not_crash():
     negoor = b'<sheetData><row r="1"><c r="A1" t="s"><v>-999999</v></c>'\
              b'<c r="B1"><v>7</v></c></row></sheetData>'
     coll = _IntervalStatsCollector(b"", sst=["w", "z"], date_styles=frozenset())
-    coll.on_piece(negoor, True)  # must not raise
+    _feed(coll, negoor)  # must not raise
     assert coll.fine[0][1] == dict.fromkeys(SI.SECTION_KEYS)
 
     # ADVICE r14 low: a lone-surrogate heap entry strictly BETWEEN the
@@ -557,7 +562,7 @@ def test_exotic_string_refs_withhold_interval_not_crash():
     coll = _IntervalStatsCollector(
         b"", sst=["a", "m\ud800m", "z"], date_styles=frozenset()
     )
-    coll.on_piece(midsur, True)
+    _feed(coll, midsur)
     assert coll.fine[0][1] == dict.fromkeys(SI.SECTION_KEYS)
 
 
@@ -577,7 +582,7 @@ def test_deferred_negative_ref_withholds_interval():
           b'<c r="B1"><v>7</v></c></row></sheetData>'
     coll = _IntervalStatsCollector(b"", date_styles=frozenset(),
                                    defer_strings=True)
-    coll.on_piece(neg, True)
+    _feed(coll, neg)
     _resolve_deferred_strings([coll], iter(["w", "z"]))
     assert coll.fine[0][1] == dict.fromkeys(SI.SECTION_KEYS)
 
@@ -585,7 +590,7 @@ def test_deferred_negative_ref_withholds_interval():
             b'<c r="B1"><v>7</v></c></row></sheetData>'
     coll = _IntervalStatsCollector(b"", date_styles=frozenset(),
                                    defer_strings=True)
-    coll.on_piece(ok_iv, True)
+    _feed(coll, ok_iv)
     _resolve_deferred_strings([coll], iter(["w", "z"]))
     st, sv, nc = (coll.fine[0][1][k] for k in ("st", "sv", "nc"))
     assert sv["A"] == ("z", "z") and st["B"] == (7.0, 7.0)
