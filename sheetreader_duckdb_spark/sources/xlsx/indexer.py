@@ -45,7 +45,6 @@ from operator import itemgetter
 
 from .parser import (
     _SST_PFX_RE,
-    _UNREADABLE_WORKBOOK,
     XlsxWorkbook,
     _bool_payload,
     build_dense_row_re,
@@ -74,16 +73,18 @@ class _IntervalStatsCollector:
     matches it, else the prefix-compiled cell regex — then folds raw
     ``<v>`` values of untyped / ``t="n"`` cells column by column (date
     serials stay raw — the reader converts filter dates to serial
-    envelopes). With an ``sst`` resolver (r12), STRING
-    cells (``t="s"``) additionally fold to truncated (lo, hi) bounds over
-    the RESOLVED shared-string values — resolution order cannot matter
-    because min/max commute, and the stored bounds use the over-keep-only
-    truncation rule (splitindex.truncated_string_bounds). Value COUNTS
-    per type family (r13, the ``nc`` section — [numeric_plain, string,
-    boolean, date_styled], splitindex module comment) ride the same
-    pass: they need no heap and no float parse, only the t/s attrs the
-    regex already captured, and they feed IsNull/IsNotNull pruning.
-    Honesty rules, all conservative toward NOT pruning:
+    envelopes). STRING cells (``t="s"``) record each interval's UNIQUE
+    ref indices per column; ``_resolve_deferred_strings`` then folds
+    their truncated (lo, hi) bounds in ONE streamed pass over the heap
+    (the retrofit's source heap, or the sink's own intern list), so
+    memory is O(unique refs), never O(heap). The stored bounds use the
+    over-keep-only truncation rule (splitindex.truncated_string_bounds).
+    Value COUNTS per type family (r13, the ``nc`` section —
+    [numeric_plain, string, boolean, date_styled], splitindex module
+    comment) ride the same pass: they need no heap and no float parse,
+    only the t/s attrs the regex already captured, and they feed
+    IsNull/IsNotNull pruning. Honesty rules, all conservative toward NOT
+    pruning:
 
     * an interval whose cell-regex match count disagrees with its raw
       ``<c`` count (irregular cells the regex can't see) records None for
@@ -92,9 +93,12 @@ class _IntervalStatsCollector:
       the default reader refuses — pruning must not skip the error the
       unfiltered read raises (ADVICE r12);
     * a column whose values fail float parse — or contain NaN — records
-      None for that interval; a string cell whose sst reference fails to
-      resolve, or whose max admits no honest truncated upper bound,
-      likewise drops that column's string claim;
+      None for that interval; a string column whose max admits no honest
+      truncated upper bound drops its string claim;
+    * an interval whose read would raise on a string cell — a garbage,
+      negative or out-of-heap ref, a lone-surrogate heap entry — and
+      every string-bearing interval when the heap is missing or its
+      stream cannot be decoded, claims nothing in any section;
     * fine-grained intervals are realigned to the FINAL (possibly
       2:1-thinned) point list by cumulative row count; any misalignment
       drops all stats;
@@ -108,32 +112,26 @@ class _IntervalStatsCollector:
       does the same (the cell's decode family is undecidable).
     """
 
-    # Deferred-resolution budget (r13, the big-heap path): stored sst
-    # ref indices per column / per collector. 4M int64 refs ≈ 32 MB a
-    # column, 8M ≈ 64 MB total — crossing a cap sheds that column's
-    # (then the largest columns') STRING claims only; numeric/bool/count
-    # claims and the index itself are untouched.
+    # Deferred-resolution budget (r13): stored sst ref indices per
+    # column / per collector. 4M int64 refs ≈ 32 MB a column, 8M ≈ 64 MB
+    # total — crossing a cap sheds that column's (then the largest
+    # columns') STRING claims only; numeric/bool/count claims, the
+    # error-parity checks and the index itself are untouched.
     _DEFER_COL_CAP = 4 << 20
     _DEFER_TOTAL_CAP = 8 << 20
 
     def __init__(
-        self, pfx: bytes, sst: "list[str] | None" = None,
-        date_styles: "frozenset[int] | None" = None,
-        defer_strings: bool = False,
+        self, pfx: bytes, date_styles: "frozenset[int] | None" = None,
     ):
         self._pfx = pfx
-        self._sst = sst
-        # Deferred string bounds (r13): instead of resolving t="s" refs
-        # against a RESIDENT heap (the r12 design, whose 256 MB gate
-        # dropped string stats on big-sst files entirely), record each
-        # interval's UNIQUE ref indices and fold bounds later in ONE
-        # streaming pass over the heap (_resolve_deferred_strings) —
-        # collector memory is O(unique refs, capped) instead of O(heap).
-        self._defer = defer_strings
         self._defer_refs: list = []    # (fine_idx, col, np.int64 uniques)
         self._defer_counts: dict = {}  # col -> stored ref total
         self._defer_dead: set = set()  # cols shed by budget/garbage
         self._defer_dead_b: set = set()  # bytes twin for the cell loop
+        # fine_idx -> largest string ref of that interval, shed columns
+        # included: the resolver's range check once the heap length is
+        # known, and the set of intervals a missing heap withholds
+        self._ref_top: dict = {}
         self._defer_resolved = False
         # Style indices that decode numeric cells as DATE (parser
         # semantics: styled-in-set → T_DATE, else T_NUMERIC). The count
@@ -150,25 +148,16 @@ class _IntervalStatsCollector:
         self.fine: list = []
         self.dead = False
 
-    def analyzer(self, pooled: bool = False):
+    def analyzer(self):
         """One interval's analysis as a picklable callable of its bytes,
-        or None once collection died. ``pooled`` runs in a fork-pool
-        worker, where an eager heap comes from the inherited
-        ``_POOL_HEAP`` (no per-job serialization) and the shed columns
-        are a snapshot taken now (the parent drops late arrivals
-        regardless, so staleness only costs cycles)."""
+        or None once collection died. The shed columns are a snapshot
+        taken now (the parent drops late arrivals regardless, so
+        staleness only costs cycles)."""
         if self.dead:
             return None
-        dead = frozenset(self._defer_dead_b)
-        if pooled:
-            return partial(
-                _analyze_interval_pooled, pfx=self._pfx,
-                date_styles=self._date_styles, defer=self._defer,
-                dead_cols=dead,
-            )
         return partial(
             _analyze_interval, pfx=self._pfx, date_styles=self._date_styles,
-            sst=self._sst, defer=self._defer, dead_cols=dead,
+            dead_cols=frozenset(self._defer_dead_b),
         )
 
     def fold(self, r) -> None:
@@ -179,9 +168,10 @@ class _IntervalStatsCollector:
         if self.dead:
             return
         fi = len(self.fine)
-        rows_in, claims, drefs = r
+        rows_in, claims, refs = r
         self._cum += rows_in
-        if drefs:
+        if refs is not None:
+            self._ref_top[fi], drefs = refs
             for col, arr in drefs.items():
                 if col in self._defer_dead:
                     continue
@@ -226,7 +216,7 @@ class _IntervalStatsCollector:
         nothing to claim."""
         if self.dead or points is None:
             return {}
-        if self._defer and self._defer_refs and not self._defer_resolved:
+        if self._ref_top and not self._defer_resolved:
             raise RuntimeError(
                 "deferred string bounds not resolved — run "
                 "_resolve_deferred_strings over the heap first"
@@ -296,22 +286,19 @@ class _IntervalStatsCollector:
         return out
 
 
-# Eager shared-strings heap for POOLED interval analysis: set in the
-# parent immediately before the fork Pool is constructed, inherited by
-# every worker via copy-on-write (zero serialization — the reason the
-# pool uses the fork context explicitly). None in deferred/no-heap runs.
-_POOL_HEAP: "list[str] | None" = None
-
 _TEMPLATE_TAIL = 64 << 10  # interval tail searched for a template row
 
 
 def _dense_columns(data: bytes, pr, rows_in: int):
-    """An interval's non-empty ``<v>`` values per (letters, s, t) column
-    from ONE findall of the reader's dense row pattern
-    (``parser.build_dense_row_re``) on a template row — the widest, then
-    last, tail row that compiles; None if none does or a row deviates. A
-    match of every row proves each holds only template cells, in order,
-    with the template's exact s/t and a non-empty ``<v>`` or no cell: no
+    """``(head, columns)``: an interval's non-empty ``<v>`` values per
+    (letters, s, t) column from ONE findall of the reader's dense row
+    pattern (``parser.build_dense_row_re``) over the rows from the first
+    one that matches a template row — the widest, then last, tail row
+    that compiles. ``head`` holds the bytes before that row (the
+    worksheet opener, a header row), which the caller scans cell by
+    cell. None if no tail row compiles or a later row deviates. A match
+    of every row proves each holds only template cells, in order, with
+    the template's exact s/t and a non-empty ``<v>`` or no cell: no
     unseen cells, no ``t="str"``/``inlineStr``, no repeated ref."""
     tail = pr.row_re.findall(data, max(0, len(data) - _TEMPLATE_TAIL))
     rows = [(pr.cell_re.findall(body), body) for body in reversed(tail)]
@@ -322,67 +309,74 @@ def _dense_columns(data: bytes, pr, rows_in: int):
             break
     else:
         return None
-    dm = built[0].findall(data)
-    if len(dm) != rows_in or foreign_row_evidence(data, pr.pfx):
+    first = built[0].search(data)
+    if first is None:
+        return None
+    head = data[:first.start()]
+    dm = built[0].findall(data, len(head))
+    if (
+        len(dm) != rows_in - count_row_starts(head, pr.pfx)
+        or foreign_row_evidence(data, pr.pfx)
+    ):
         return None
     if len(cells) == 1:  # one group: findall returns bytes, not tuples
-        return {cells[0][:3]: list(filter(None, dm))}
-    return {c[:3]: list(filter(None, map(itemgetter(j), dm)))
-            for j, c in enumerate(cells)}
+        return head, {cells[0][:3]: list(filter(None, dm))}
+    return head, {c[:3]: list(filter(None, map(itemgetter(j), dm)))
+                  for j, c in enumerate(cells)}
 
 
 def _analyze_interval(
-    data: bytes, pfx: bytes, date_styles, sst, defer: bool,
+    data: bytes, pfx: bytes, date_styles,
     dead_cols: "frozenset | set" = frozenset(),
 ):
     """Pure per-interval analysis (the collector's interval step,
     extracted so a forked worker can run it on raw bytes): returns
-    ``(rows_in, claims, defer_refs)`` where ``claims`` maps every section
-    key to its per-letter claims, or to None throughout for a withheld
-    interval, and ``defer_refs`` maps column letters to unique sst ref
-    arrays (deferred mode only). All honesty rules documented on
-    _IntervalStatsCollector live here."""
+    ``(rows_in, claims, refs)`` where ``claims`` maps every section key
+    to its per-letter claims, or to None throughout for a withheld
+    interval, and ``refs`` is None for an interval without string refs,
+    else ``(largest ref, {letter: unique ref array})`` for the heap fold
+    (columns in ``dead_cols`` ship no array). All honesty rules
+    documented on _IntervalStatsCollector live here."""
     import numpy as np
 
     pr = prefix_res(pfx)
     rows_in = count_row_starts(data, pfx)
     withheld = (rows_in, dict.fromkeys(SECTION_KEYS), None)
-    cols = _dense_columns(data, pr, rows_in)
-    if cols is None:
-        # One streaming pass (no list of every cell: a worker's peak
-        # memory is this interval's values, not its cell tuples).
-        cols = {}
-        seen = 0
-        refused = False
-        for m in pr.cell_re.finditer(data):
-            letters, s_attr, t_attr, v = m.groups(b"")
-            seen += 1
-            refused = refused or t_attr in (b"str", b"inlineStr")
-            if v:
-                cols.setdefault((letters, s_attr, t_attr), []).append(v)
-        if seen != sum(1 for _ in pr.cell_count_re.finditer(data)):
-            # unseen cells: no claims
-            return withheld
-        if refused:
-            # Cells the default reader REFUSES (formula/inline strings →
-            # UNSUPPORTED_STRING_ERROR): claiming stats here would let a
-            # pruned filtered read silently succeed where the unfiltered
-            # read of the same file errors — withhold the whole interval
-            # so it always inflates and raises identically (ADVICE r12).
-            # (Most such cells already land in the count-mismatch branch
-            # above — their <is>/<f> children defeat the cell regex — but
-            # a bare `<c t="str"><v>…</v></c>` matches and needs this.)
-            return withheld
+    dense = _dense_columns(data, pr, rows_in)
+    head, cols = (data, {}) if dense is None else dense
+    # One streaming pass over the rows the dense scan left (no list of
+    # every cell: a worker's peak memory is this interval's values, not
+    # its cell tuples).
+    seen = 0
+    refused = False
+    for m in pr.cell_re.finditer(head):
+        letters, s_attr, t_attr, v = m.groups(b"")
+        seen += 1
+        refused = refused or t_attr in (b"str", b"inlineStr")
+        if v:
+            cols.setdefault((letters, s_attr, t_attr), []).append(v)
+    if seen != sum(1 for _ in pr.cell_count_re.finditer(head)):
+        # unseen cells: no claims
+        return withheld
+    if refused:
+        # Cells the default reader REFUSES (formula/inline strings →
+        # UNSUPPORTED_STRING_ERROR): claiming stats here would let a
+        # pruned filtered read silently succeed where the unfiltered
+        # read of the same file errors — withhold the whole interval
+        # so it always inflates and raises identically (ADVICE r12).
+        # (Most such cells already land in the count-mismatch branch
+        # above — their <is>/<f> children defeat the cell regex — but
+        # a bare `<c t="str"><v>…</v></c>` matches and needs this.)
+        return withheld
     per: dict = {}
     per_s: dict = {}
     # Value counts per letter (r13, the `nc` section): how many cells
     # decode NON-NULL per type family — [numeric_plain, string,
     # boolean, date_styled] (splitindex module comment). Counted for
-    # every family regardless of sst availability (counts need no
-    # heap), so null-pruning works even on files whose string BOUNDS
-    # are withheld. Cells of any other shape (t="e", empty <v>,
-    # unknown t) decode to NULL in every scan tier and count nowhere,
-    # which is exactly the claim.
+    # every family (counts need no heap), so null-pruning works even on
+    # columns whose string BOUNDS are shed or unclaimable. Cells of any
+    # other shape (t="e", empty <v>, unknown t) decode to NULL in every
+    # scan tier and count nowhere, which is exactly the claim.
     ncounts: dict = {}
     # Boolean VALUE counts per letter (r15, the `bt` section):
     # [n_true, n_false] over the interval's t="b" cells, truth decided by
@@ -403,11 +397,10 @@ def _analyze_interval(
             else:
                 fam = 3 if int(s_attr) in date_styles else 0
         elif t_attr == b"s":
-            # collected for EVERY mode — even budget-shed columns and
-            # no-heap files — because the parse-check below is an
-            # error-parity obligation, not a claims step (r13 review
-            # pass 2: a garbage ref in a shed column must still
-            # withhold the interval)
+            # collected even for budget-shed columns, because the
+            # parse-check below is an error-parity obligation, not a
+            # claims step (r13 review pass 2: a garbage ref in a shed
+            # column must still withhold the interval)
             per_s.setdefault(letters, []).extend(vals)
             fam = 1
         elif t_attr == b"b":
@@ -463,79 +456,26 @@ def _analyze_interval(
     # OverflowError covers refs past int64 (the reader's Arrow cast
     # raises on those too — r13 review pass 2: np.astype raised it
     # UNCAUGHT and crashed serial retrofits).
-    ref_arrs: dict = {}
+    top = -1
+    drefs: dict = {}
     for letters, vals in per_s.items():
         try:
-            ref_arrs[letters] = np.array(vals).astype(np.int64)
+            arr = np.array(vals).astype(np.int64)
         except (ValueError, OverflowError):
             return withheld
-    if per_s and sst is None and not defer:
-        # string cells but no usable heap (missing or undecodable sst
-        # member): the READ of this interval raises — claim nothing
-        return withheld
-    sstats: dict = {}
-    drefs: "dict | None" = None
-    if defer:
-        # Each column's UNIQUE ref indices for the one-pass heap fold;
-        # the sstats dict stays a live placeholder the resolver fills
-        # in (aligned() refuses to run before it). Budget/shedding is
-        # PARENT-side bookkeeping (_finish_record); shed columns skip
-        # only the dedup/ship cost here — their parse check already
-        # ran above.
-        drefs = {}
-        for letters, arr in ref_arrs.items():
-            if arr.size and int(arr.min()) < 0:
-                # Negative ref under deferral: an IN-RANGE negative wraps
-                # in the reader, but whether this one is in range depends
-                # on the heap length — unknown until the post-staging
-                # stream. An OUT-of-range negative makes the read raise
-                # IndexError, so standing claims would prune the error
-                # away (ADVICE r13 medium). Deferral cannot range-check
-                # cheaply: withhold the whole interval — the conservative
-                # superset of the eager path's arr.min() < -len(sst)
-                # withhold. (Checked before the dead_cols skip: shedding
-                # drops claims, not the error-parity obligation.)
+        if arr.size:
+            if int(arr.min()) < 0:
+                # Negative ref: an IN-RANGE negative wraps in the reader,
+                # an out-of-range one raises IndexError — which one
+                # depends on the heap length, unknown until the heap
+                # pass. Withhold the whole interval: the conservative
+                # superset of both (ADVICE r13 medium). Checked before
+                # the dead_cols skip: shedding drops claims, not the
+                # error-parity obligation.
                 return withheld
-            if letters in dead_cols:
-                continue
+            top = max(top, int(arr.max()))
+        if letters not in dead_cols:
             drefs[letters.decode()] = np.unique(arr)
-    else:
-        for letters, arr in ref_arrs.items():
-            if arr.size and (arr.max() >= len(sst) or arr.min() < -len(sst)):
-                # the reader raises IndexError on an out-of-heap ref —
-                # positive past the end OR negative past the wrap range
-                # (ADVICE r13: -999999 on a small heap used to raise here
-                # at sst[i] serially and drop all claims pooled): error
-                # parity — the whole interval claims nothing
-                return withheld
-            try:
-                # single parse: resolve via the checked int64 array
-                # (in-range negative refs wrap in BOTH the reader and
-                # here, so bounds stay faithful to reader-visible values)
-                resolved = [sst[i] for i in arr.tolist()]
-                # Encode-check EVERY resolved entry, not just the two
-                # bound candidates (ADVICE r13 low): a lone-surrogate
-                # entry strictly between the extremes still makes the
-                # unfiltered read fail at Arrow conversion, so claims
-                # here could prune the error away. The deferred resolver
-                # already checks each referenced entry — this restores
-                # eager/deferred parity. Per-string encode, NOT one bulk
-                # join+encode (r14 review): the join materialized a
-                # concatenated copy of the interval's whole string volume
-                # (~2x transient) per column just to catch a rare
-                # surrogate; the loop detects the same UnicodeEncodeError
-                # with no large allocation.
-                for _s in resolved:
-                    _s.encode("utf-8")
-                bounds = truncated_string_bounds(min(resolved), max(resolved))
-            except ValueError:
-                # UnicodeEncodeError (lone-surrogate heap string): the
-                # read of this interval fails at Arrow conversion —
-                # error parity again, whole interval withheld
-                return withheld
-            if bounds is None:
-                continue  # no honest upper bound: claim nothing
-            sstats[letters.decode()] = bounds
     nc = {
         k.decode(): (tuple(v) if v is not None else None)
         for k, v in ncounts.items()
@@ -544,18 +484,10 @@ def _analyze_interval(
         k.decode(): (tuple(v) if v is not None else None)
         for k, v in bcounts.items()
     }
-    return rows_in, {"st": stats, "sv": sstats, "nc": nc, "bt": bv}, drefs
-
-
-def _analyze_interval_pooled(data, pfx, date_styles, defer, dead_cols):
-    """Fork-worker form of ``_analyze_interval``: the eager heap comes
-    from the inherited _POOL_HEAP global. A failure propagates through
-    ``AsyncResult.get()``, so a pooled retrofit raises exactly where a
-    serial one would."""
-    return _analyze_interval(
-        data, pfx, date_styles,
-        None if defer else _POOL_HEAP, defer, dead_cols=dead_cols,
-    )
+    # sv starts empty: the heap fold (_resolve_deferred_strings) fills
+    # it in, and aligned() refuses to run before that
+    claims = {"st": stats, "sv": {}, "nc": nc, "bt": bv}
+    return rows_in, claims, None if top < 0 else (top, drefs)
 
 
 def _strip_zip64_extra(extra: bytes) -> bytes:
@@ -658,7 +590,7 @@ def _retrofit_width(workers: "int | None") -> int:
     return min(4, cores)
 
 
-def _stage_members(src_path, jobs, base, stats, stats_sst, width,
+def _stage_members(src_path, jobs, base, stats, width,
                    tmps_out=None, pool=None, pool_size=0):
     """Re-deflate each splittable member into its own single-member temp
     archive, one staging thread per member up to ``width``. A staging
@@ -693,7 +625,7 @@ def _stage_members(src_path, jobs, base, stats, stats_sst, width,
                 else:
                     r = _index_one_sheet(
                         ztmp, wb2, src_path, info, kpfx, stats,
-                        sst=stats_sst, pool=pool, pool_size=pool_size,
+                        pool=pool, pool_size=pool_size,
                     )
         return info.filename, {"tmp": tmpm, "r": r}
 
@@ -743,11 +675,18 @@ def index_xlsx(
       worker count. ``workers=1`` runs everything inline: no process, no
       thread.
 
+    * ``stats``: author per-interval statistics. String bounds come from
+      each interval's unique shared-string refs, folded in one streamed
+      pass over the source heap after staging
+      (``_resolve_deferred_strings``); the heap is never held.
+
     Returns ``{"indexed": bool, "reason": str | None, "rows": int,
     "worksheet_points": int, "sst_points": int, "path": str}``. A file
     whose worksheet defeats indexing (undetectable row prefix, encrypted
     members, too small to span one interval) is reported, not modified —
-    the sequential read serves it exactly as before.
+    the sequential read serves it exactly as before. "Too small" is
+    decided from the central directory's member sizes before any member
+    is inflated.
     """
 
     def _noop(reason: str) -> dict:
@@ -785,6 +724,33 @@ def index_xlsx(
             if m is not None:
                 sst_pfx = (m.group(1) + b":") if m.group(1) else b""
 
+        # Plan the splittable members, then STAGE each into its own temp
+        # archive — in parallel when there is more than one (r12:
+        # per-member-parallel retrofit; each worksheet and the sst are
+        # independent re-deflate streams) — and ASSEMBLE the output by
+        # raw-copying source order: staged members carry their flush
+        # points (member-relative offsets survive relocation),
+        # everything else copies verbatim.
+        sheet_paths = {s.path for s in wb.sheets}
+        jobs: list = []
+        for info in infos:
+            if info.filename == sheet.path:
+                jobs.append(("primary", info, pfx))
+            elif info.filename in sheet_paths:
+                # Additional worksheets of a multi-sheet workbook (r11):
+                # each gets its own flush points + section under the `m`
+                # key, so a sheet_index/sheet_name read of ANY big sheet
+                # shards with seeks.
+                pfx2 = detect_row_prefix(_peek(wb.zf, info.filename, 4 << 20))
+                if pfx2 is not None:
+                    jobs.append(("extra", info, pfx2))
+            elif info.filename == SST_ENTRY and sst_pfx is not None:
+                jobs.append(("sst", info, sst_pfx))
+        if not any(spans_intervals(info.file_size) for _k, info, _p in jobs):
+            # no member reaches a flush point: staging would re-deflate
+            # every member only to publish nothing
+            return _noop(_TOO_SMALL)
+
         dest = out_path or path
         tmp = os.path.join(
             os.path.dirname(os.path.abspath(dest)) or ".",
@@ -805,73 +771,29 @@ def index_xlsx(
                     pass
 
         try:
-            sheet_paths = {s.path for s in wb.sheets}
-            stats_sst = _stats_sst(wb) if stats else None
-            if stats_sst is _DEFER_SST and sst_pfx is None:
-                # no detectable heap prefix to stream-decode with — the
-                # r12 behavior (no string bounds) is the honest fallback
-                stats_sst = None
-            # Plan the splittable members, then STAGE each into its own
-            # temp archive — in parallel when there is more than one
-            # (r12: per-member-parallel retrofit; each worksheet and the
-            # sst are independent re-deflate streams) — and ASSEMBLE the
-            # output by raw-copying source order: staged members carry
-            # their flush points (member-relative offsets survive
-            # relocation), everything else copies verbatim.
-            jobs: list = []
-            for info in infos:
-                if info.filename == sheet.path:
-                    jobs.append(("primary", info, pfx))
-                elif info.filename in sheet_paths:
-                    # Additional worksheets of a multi-sheet workbook
-                    # (r11): each gets its own flush points + section
-                    # under the `m` key, so a sheet_index/sheet_name
-                    # read of ANY big sheet shards with seeks.
-                    pfx2 = detect_row_prefix(
-                        _peek(wb.zf, info.filename, 4 << 20)
-                    )
-                    if pfx2 is not None:
-                        jobs.append(("extra", info, pfx2))
-                elif info.filename == SST_ENTRY and sst_pfx is not None:
-                    jobs.append(("sst", info, sst_pfx))
             # Segment pool: every flush interval of every member is
             # deflated — and, with stats, analysed — as one job in a
             # FORK pool (bytes in once, segment and claims out), so one
             # big worksheet fills every worker. Workers spawn eagerly
             # here — in the main thread, BEFORE the staging threads
-            # exist (fork-with-live-threads is the classic deadlock) —
-            # and inherit any eager heap via copy-on-write (_POOL_HEAP
-            # set just before construction). No pool when no member
-            # spans one interval (a lone segment has nothing to overlap
-            # with). A box without fork or under resource limits
-            # (OSError / ValueError from pool setup) falls back to the
-            # inline path, bytes identical; any other error is a bug and
+            # exist (fork-with-live-threads is the classic deadlock). A
+            # box without fork or under resource limits (OSError /
+            # ValueError from pool setup) falls back to the inline
+            # path, bytes identical; any other error is a bug and
             # raises.
-            global _POOL_HEAP
             width = _retrofit_width(workers)
             pool_size = 0
-            if width > 1 and any(
-                spans_intervals(info.file_size) for _k, info, _p in jobs
-            ):
+            if width > 1:
                 try:
                     import multiprocessing as _mp
 
-                    _POOL_HEAP = (
-                        stats_sst
-                        if isinstance(stats_sst, list)
-                        else None
-                    )
-                    pool = _mp.get_context("fork").Pool(
-                        processes=width
-                    )
+                    pool = _mp.get_context("fork").Pool(processes=width)
                     pool_size = width
                 except (OSError, ValueError):
                     pool = None
                     pool_size = 0
-                finally:
-                    _POOL_HEAP = None
             staged = _stage_members(
-                path, jobs, tmp, stats, stats_sst, width,
+                path, jobs, tmp, stats, width,
                 tmps_out=staged_tmps, pool=pool, pool_size=pool_size,
             )
             pts = spts = None
@@ -896,32 +818,23 @@ def index_xlsx(
                     spts, n_si = r
             if pts is None and spts is None and not extra_raw:
                 raise _TooSmall
-            # Deferred string-bound resolution (r13): collectors on a
-            # big-heap workbook stored ref indices during staging — fold
-            # bounds in ONE streaming pass over the source heap before
-            # aligning. The retrofit's own staged entry count (n_si) is
-            # the cross-check: a streamed total disagreeing with it
-            # would mean misaligned indices, so everything is withheld.
-            all_colls = [coll_p] + [c for _, _, _, c in extra_raw]
-            # Filter on the MODE, not on collected refs: the resolver
-            # marks every deferred collector resolved and early-exits
-            # when nothing anywhere needs the heap pass (r13 review fix:
-            # filtering on refs crashed aligned() on tail-only string
-            # columns).
-            deferred = [
-                c for c in all_colls if c is not None and c._defer
-            ]
-            shed_cols: list = []
-            if deferred:
-                _resolve_deferred_strings(
-                    deferred, _iter_sst_entries(wb.zf, sst_pfx),
-                    expected_n=n_si if any(
-                        k == "sst" for k, _i, _p in jobs
-                    ) else None,
-                )
-                shed_cols = sorted(
-                    {col for c in deferred for col in c.defer_shed}
-                )
+            # String bounds: every collector's recorded refs fold in ONE
+            # streamed pass over the source heap. The retrofit's own
+            # staged entry count (n_si) is the cross-check: a streamed
+            # total disagreeing with it would mean misaligned indices.
+            # With no heap, or no detectable heap prefix, there is
+            # nothing to stream and string-bearing intervals claim
+            # nothing.
+            colls = [coll_p] + [c for _e, _p, _n, c in extra_raw]
+            colls = [c for c in colls if c is not None]
+            _resolve_deferred_strings(
+                colls,
+                None if sst_pfx is None else _iter_sst_entries(
+                    wb.zf, sst_pfx
+                ),
+                expected_n=n_si if sst_pfx is not None else None,
+            )
+            shed_cols = sorted({col for c in colls for col in c.defer_shed})
             sections = (
                 coll_p.aligned(pts, nrows) if coll_p is not None else None
             )
@@ -959,7 +872,7 @@ def index_xlsx(
             return _noop(
                 "worksheet mixes row prefixes — counts would not validate"
                 if mixed
-                else "member(s) below one split interval — nothing to index"
+                else _TOO_SMALL
             )
         except BaseException:
             _rm_temps()
@@ -975,99 +888,50 @@ def index_xlsx(
             "indexed": True, "reason": None, "rows": nrows,
             "worksheet_points": len(pts or []), "sst_points": len(spts or []),
             "extra_sheets": len(extra), "path": dest,
-            # observability for the deferred big-heap path (r13):
-            # columns whose string bounds were shed by the ref budget
+            # observability (r13): columns whose string bounds were
+            # shed by the ref budget
             "string_stats_shed": shed_cols,
         }
-
-
-# Heaps small enough to resolve RESIDENT for eager bounds; bigger heaps
-# defer to the one-pass streaming fold (r13 — the r12 design simply shed
-# all string stats past this gate). Module constant so tests can force
-# the deferred path without 256 MB fixtures.
-_SST_STATS_RESIDENT_CAP = 256 << 20
-
-# Sentinel: the heap is too big to hold resident — collect ref indices
-# during staging and resolve bounds in one streaming pass afterwards.
-_DEFER_SST = object()
-
-
-def _stats_sst(wb):
-    """The resolved shared-strings heap for stats authoring; ``None``
-    when string bounds should be skipped (no heap / undecodable heap);
-    ``_DEFER_SST`` when the heap exceeds the resident cap — the caller
-    then streams it once after staging (_resolve_deferred_strings)
-    instead of losing string stats entirely (VERDICT r12 task 3)."""
-    try:
-        info = wb.zf.getinfo(SST_ENTRY)
-    except KeyError:
-        return None
-    if info.file_size > _SST_STATS_RESIDENT_CAP:
-        return _DEFER_SST
-    try:
-        return wb.shared_strings
-    except _UNREADABLE_WORKBOOK:
-        return None  # undecodable heap: the read will error, not the stats
 
 
 def _iter_sst_entries(zf, pfx: bytes):
     """Stream the shared-strings heap as decoded entry strings in heap
     order with bounded memory: inflate chunk-wise, cut the buffer at the
-    last complete entry terminator, decode each cut span with the
-    conventional single-run regex (count-checked exactly like
-    _parse_sst_fast), falling back to a namespace-wrapped expat walk for
-    spans the pattern cannot own (rich-text runs, attributes, comments).
+    last complete entry terminator, and decode each cut span as a
+    one-span heap with the reader's own decoders
+    (``parser._parse_sst_fast``, then ``parser._parse_sst_expat`` for
+    spans the pattern cannot own: rich-text runs, attributes, comments).
     Raises ValueError when a span defeats both — the caller sheds string
     claims rather than risking index misalignment."""
-    from .parser import (
-        _SST_PFX_RE as _PFXRE,
-        _XSTRING_RE,
-        _parse_sst_expat,
-        _si_fast_re,
-        _unescape,
-    )
+    from xml.etree.ElementTree import ParseError
 
-    si_re = _si_fast_re(pfx)
+    from .parser import _parse_sst_expat, _parse_sst_fast
+
     end1 = b"</" + pfx + b"si>"
     end2 = b"<" + pfx + b"si/>"
-    open_tag = b"<" + pfx + b"si"
-    plain_open = b"<" + pfx + b"si>"
-    decl = (
-        b'<sst xmlns:' + pfx[:-1] + b'="urn:x">'
-        if pfx
-        else b"<sst>"
-    )
+    # a root carrying the heap's prefix, so the fast path resolves the
+    # same needles (prefixed tags get a placeholder xmlns for expat)
+    root = b"<" + pfx + b"sst" + (
+        b' xmlns:' + pfx[:-1] + b'="urn:x"' if pfx else b""
+    ) + b">"
+    close = b"</" + pfx + b"sst>"
 
-    def _decode_span(span: bytes):
-        if b"<!--" not in span and b"<![CDATA[" not in span:
-            n_si = span.count(plain_open) + span.count(end2)
-            if span.count(open_tag) == n_si:
-                ms = si_re.findall(span)
-                if len(ms) == n_si:
-                    for raw in ms:
-                        t = _unescape(raw) if b"&" in raw else raw.decode(
-                            "utf-8"
-                        )
-                        if "_x" in t:
-                            t = _XSTRING_RE.sub(
-                                lambda m: chr(int(m.group(1), 16)), t
-                            )
-                        yield t
-                    return
-        # exotic span: one bounded expat walk over the wrapped fragment
-        # (prefixed tags get a placeholder xmlns so expat accepts them);
-        # a malformed span raises ExpatError → ValueError for the caller
+    def _decode_span(span: bytes) -> list:
+        doc = root + span + close
+        got = _parse_sst_fast(doc)
+        if got is not None:
+            return got
         try:
-            yield from _parse_sst_expat(decl + span + b"</sst>")
-        except Exception as e:
-            raise ValueError(f"sst span defeats streaming decode: {e}")
+            return _parse_sst_expat(doc)
+        except ParseError as e:
+            raise ValueError(f"sst span defeats streaming decode: {e}") from e
 
     buf = b""
     opened = False
     for chunk in _inflate_chunks(zf, SST_ENTRY):
         buf += chunk
         if not opened:
-            m = _PFXRE.search(buf[: 64 << 10])
+            m = _SST_PFX_RE.search(buf[: 64 << 10])
             if m is None:
                 if len(buf) > (64 << 10):
                     raise ValueError("no sst opener in the heap head")
@@ -1087,24 +951,24 @@ def _iter_sst_entries(zf, pfx: bytes):
 
 
 def _resolve_deferred_strings(collectors, entries, expected_n=None):
-    """One streaming pass over the heap folding truncated bounds into
-    every deferred (interval, column) group across ALL collectors of a
-    workbook (multi-sheet retrofits share the pass).
+    """One streamed pass over the heap ``entries`` (decoded strings in
+    heap order, or None when there is no heap to read) that turns every
+    collector's recorded refs into string bounds — the one string-bounds
+    rule of the stats author, for the retrofit (the source heap) and the
+    sink (its own intern list) alike. Multi-sheet retrofits share the
+    pass; memory is O(unique refs), never O(heap).
 
-    Per entry the fold uses bounded candidates only — lo_c =
-    16-byte-prefix(s) (<= s) and hi_c = s or increment(prefix(s))
-    (>= s) — so lo = min(lo_c) <= true min and hi = max(hi_c) >= true
-    max: the same over-keep-only guarantee as the eager
-    truncated_string_bounds, possibly a little wider (costs pruning
-    opportunity, never rows). Groups touching an unencodable entry
-    (lone surrogates), an unclaimable bound (U+10FFFF prefix), or a ref
-    beyond the heap claim nothing — eager-path parity. If the stream
-    decode is defeated, or ``expected_n`` (the retrofit's own staged
-    entry count) disagrees with the streamed total — either would mean
-    misaligned indices — EVERY string claim is withheld."""
+    Per (interval, column) group the fold keeps the exact min and max
+    referenced string and stores ``truncated_string_bounds`` of that
+    pair, so the claims equal a resident-heap resolution. A group whose
+    max admits no honest truncated bound claims nothing for that column.
+    An interval whose read would raise — it references an unencodable
+    entry (lone surrogate) or a ref past the heap — claims nothing in
+    any section (error parity). If there is no heap, the stream decode
+    is defeated, or ``expected_n`` (the retrofit's own staged entry
+    count) disagrees with the streamed total — misaligned indices —
+    EVERY interval holding string refs claims nothing in any section."""
     import numpy as np
-
-    from .splitindex import STR_STAT_BYTES, increment_str, utf8_char_prefix
 
     groups: list = []
     arrs: list = []
@@ -1113,95 +977,83 @@ def _resolve_deferred_strings(collectors, entries, expected_n=None):
             groups.append((coll, fi, col))
             arrs.append(arr)
     n_groups = len(groups)
-    if n_groups == 0:
-        # nothing deferred anywhere: skip the heap pass entirely
-        for coll in collectors:
-            coll._defer_resolved = True
-        return
-    all_idx = np.concatenate(arrs)
-    gid = np.repeat(
-        np.arange(n_groups, dtype=np.int64),
-        [a.size for a in arrs],
-    )
-    order = np.argsort(all_idx, kind="stable")
-    all_idx = all_idx[order]
-    gid = gid[order]
     lo: list = [None] * n_groups
     hi: list = [None] * n_groups
-    dead = [False] * n_groups   # no honest claim (U+10FFFF bound)
-    err = [False] * n_groups    # the READ of that interval would fail
-    p, total, n = 0, 0, all_idx.size
-    ok = True
-    try:
-        for s in entries:
-            j = total
-            total += 1
-            if p >= n or all_idx[p] != j:
-                continue  # unreferenced entry: keep counting only
-            enc_fail = False
-            try:
-                if len(s.encode("utf-8")) <= STR_STAT_BYTES:
-                    lo_c: "str | None" = s
-                    hi_c: "str | None" = s
-                else:
-                    pre = utf8_char_prefix(s)
-                    lo_c = pre
-                    hi_c = increment_str(pre)
-            except ValueError:  # UnicodeEncodeError: lone surrogate —
-                # a read materializing this entry fails at Arrow
-                # conversion, so referencing intervals are ERRORS, not
-                # mere no-claims (error parity, r13 review pass 2)
-                lo_c = hi_c = None
-                enc_fail = True
-            while p < n and all_idx[p] == j:
-                g = int(gid[p])
-                p += 1
-                if enc_fail:
-                    err[g] = True
-                    continue
-                if dead[g] or err[g]:
-                    continue
-                if hi_c is None:
-                    dead[g] = True  # no honest upper bound: claim nothing
-                    continue
-                if lo[g] is None or lo_c < lo[g]:
-                    lo[g] = lo_c
-                if hi[g] is None or hi_c > hi[g]:
-                    hi[g] = hi_c
-    except ValueError:
-        ok = False  # stream decode defeated: claim nothing anywhere
-    while p < n:
-        err[int(gid[p])] = True  # ref beyond the heap: the read raises
-        p += 1
-    if expected_n is not None and total != expected_n:
-        ok = False  # two independent entry counts disagree: misaligned
-    if ok:
-        for g, (coll, fi, col) in enumerate(groups):
-            if err[g]:
-                # error parity: the unfiltered read of this interval
-                # raises (IndexError / Arrow surrogate), so NO section
-                # may keep a claim that could prune the error away
-                cum = coll.fine[fi][0]
-                coll.fine[fi] = (cum, dict.fromkeys(SECTION_KEYS))
-        for g, (coll, fi, col) in enumerate(groups):
-            if not err[g] and not dead[g] and lo[g] is not None:
-                sv_slot = coll.fine[fi][1]["sv"]
-                if sv_slot is not None:
-                    sv_slot[col] = (lo[g], hi[g])
+    err = [False] * n_groups  # the READ of that interval would fail
+    total = 0
+    ok = entries is not None
+    if ok and any(coll._ref_top for coll in collectors):
+        idx = np.concatenate(arrs) if arrs else np.empty(0, dtype=np.int64)
+        order = np.argsort(idx, kind="stable")
+        idx = idx[order]
+        gid = np.repeat(
+            np.arange(n_groups, dtype=np.int64), [a.size for a in arrs]
+        )[order]
+        # one run of equal refs per referenced entry: run k is
+        # idx[edges[k]:edges[k + 1]] (refs are >= 0, so the -1 pads
+        # mark the first start and the end)
+        edges = np.flatnonzero(np.diff(idx, prepend=-1, append=-1))
+        k, runs = 0, edges.size - 1
+        nxt = int(idx[0]) if idx.size else -1
+        try:
+            for s in entries:
+                j = total
+                total += 1
+                if j != nxt:
+                    continue  # unreferenced entry: keep counting only
+                try:
+                    s.encode("utf-8")
+                except ValueError:  # UnicodeEncodeError: lone surrogate
+                    # — a read materializing this entry fails at Arrow
+                    # conversion, so referencing intervals are ERRORS,
+                    # not mere no-claims (error parity, r13 review pass 2)
+                    s = None
+                for g in gid[edges[k]:edges[k + 1]].tolist():
+                    if s is None:
+                        err[g] = True
+                    elif lo[g] is None:
+                        lo[g] = hi[g] = s
+                    elif s < lo[g]:
+                        lo[g] = s
+                    elif s > hi[g]:
+                        hi[g] = s
+                k += 1
+                nxt = int(idx[edges[k]]) if k < runs else -1
+        except ValueError:
+            ok = False  # stream decode defeated
+        if expected_n is not None and total != expected_n:
+            ok = False  # two independent entry counts disagree
+    withhold = {  # a ref past the heap: the reader raises IndexError
+        (coll, fi)
+        for coll in collectors
+        for fi, top in coll._ref_top.items()
+        if not ok or top >= total
+    }
+    withhold.update((coll, fi) for g, (coll, fi, _c) in enumerate(groups)
+                    if err[g])
+    for coll, fi in withhold:
+        # error parity: NO section may keep a claim that could prune
+        # the failing read (or the unknowable one) away
+        coll.fine[fi] = (coll.fine[fi][0], dict.fromkeys(SECTION_KEYS))
+    for g, (coll, fi, col) in enumerate(groups):
+        if (coll, fi) in withhold or lo[g] is None:
+            continue
+        bounds = truncated_string_bounds(lo[g], hi[g])
+        if bounds is not None:
+            coll.fine[fi][1]["sv"][col] = bounds
     for coll in collectors:
         coll._defer_resolved = True
 
 
-def _index_one_sheet(zout, wb, src_path, info, pfx, want_stats, sst=None,
+def _index_one_sheet(zout, wb, src_path, info, pfx, want_stats,
                      pool=None, pool_size=0):
     """Re-deflate one worksheet member with flush points and the full
     honesty kit: the reader's own row count (``count_rows``' engine,
     exact under any prefix, for mixed detection) + optional interval
-    statistics. Returns (points, n_rows, collector, mixed) —
-    the caller aligns the collector AFTER any deferred string-bound
-    resolution (r13: big heaps stream once post-staging), so the
-    collector rides out of the staging worker instead of its aligned
-    arrays."""
+    statistics. Returns (points, n_rows, collector, mixed) — the
+    caller aligns the collector AFTER the string bounds are folded over
+    the streamed heap, so the collector rides out of the staging worker
+    instead of its aligned arrays."""
     anyctr = MixedAwareRowCounter(pfx, prefix_res(pfx).row_count_re)
 
     def _counted(chunks):
@@ -1209,12 +1061,8 @@ def _index_one_sheet(zout, wb, src_path, info, pfx, want_stats, sst=None,
             anyctr.feed(c)
             yield c
 
-    defer = sst is _DEFER_SST
     coll = (
-        _IntervalStatsCollector(
-            pfx, sst=None if defer else sst,
-            date_styles=wb.date_styles, defer_strings=defer,
-        )
+        _IntervalStatsCollector(pfx, date_styles=wb.date_styles)
         if want_stats
         else None
     )
@@ -1233,6 +1081,9 @@ def _index_one_sheet(zout, wb, src_path, info, pfx, want_stats, sst=None,
 
 class _TooSmall(Exception):
     """No member reached one split interval (control flow only)."""
+
+
+_TOO_SMALL = "member(s) below one split interval — nothing to index"
 
 
 def _resolve_corpus_paths(path_or_glob: str) -> list[str]:

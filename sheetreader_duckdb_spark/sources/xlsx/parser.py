@@ -248,15 +248,14 @@ def _parse_sst_fast(data: bytes) -> list[str] | None:
     matches = si_re.findall(data)
     if len(matches) != n_si:
         return None
-    out: list[str] = []
-    for raw in matches:
-        # entity decode only when present (same superset html.unescape
-        # the dense row path uses — _unescape)
-        s = _unescape(raw) if b"&" in raw else raw.decode("utf-8")
-        if "_x" in s:  # ST_Xstring decode (rare path)
-            s = _XSTRING_RE.sub(lambda m: chr(int(m.group(1), 16)), s)
-        out.append(s)
-    return out
+    return list(map(_si_text, matches))
+
+
+def _si_text(raw: bytes) -> str:
+    """One conventional ``<si>`` entry's raw ``<t>`` text as its string:
+    entity decode only when present (the superset html.unescape the
+    dense row path uses — _unescape), then ST_Xstring."""
+    return _xstring(_unescape(raw) if b"&" in raw else raw.decode("utf-8"))
 
 
 class SharedStringHeap:
@@ -337,12 +336,7 @@ class SharedStringHeap:
                 self._full = _parse_sst_expat(self._data)
             return self._full[i]
         g = m.group(1)
-        if g is None:
-            return ""
-        s = _unescape(g) if b"&" in g else g.decode("utf-8")
-        if "_x" in s:
-            s = _XSTRING_RE.sub(lambda mm: chr(int(mm.group(1), 16)), s)
-        return s
+        return "" if g is None else _si_text(g)
 
     def __getitem__(self, i: int) -> str:
         if self._full is not None:
@@ -593,10 +587,7 @@ def _parse_sst_expat(data: bytes) -> list[str]:
             if _local(el.tag) == "t" and depth_si:
                 parts.append(el.text or "")
             elif _local(el.tag) == "si":
-                s = "".join(parts)
-                if "_x" in s:  # ST_Xstring decode (rare path)
-                    s = _XSTRING_RE.sub(lambda m: chr(int(m.group(1), 16)), s)
-                strings.append(s)
+                strings.append(_xstring("".join(parts)))
                 depth_si = False
                 el.clear()
     return strings

@@ -252,8 +252,8 @@ class _SegmentWriter:
         # A lone segment (the member never reached one interval) gets no
         # index, so its statistics would never be read.
         analyze = (
-            st.analyzer(pooled=self._pool is not None)
-            if st is not None and data and (n or not last) else None
+            st.analyzer() if st is not None and data and (n or not last)
+            else None
         )
         if self._pool is None:
             self._land(*_segment_job(data, last, analyze))
@@ -799,20 +799,27 @@ class IncrementalXlsxWriter:
 
                 coll = None
                 if self.stats:
-                    from .indexer import _IntervalStatsCollector
+                    from .indexer import (
+                        _IntervalStatsCollector,
+                        _resolve_deferred_strings,
+                    )
 
-                    # the sink's own intern heap doubles as the resolver
-                    # for string bounds (r12) — already fully populated:
-                    # every row hit the spool before close() runs. The
-                    # sink's one date style is cellXfs index 1 (_STYLES),
-                    # so the count families split exactly (r13).
+                    # The sink's one date style is cellXfs index 1
+                    # (_STYLES), so the count families split exactly (r13).
                     coll = _IntervalStatsCollector(
-                        b"", sst=self._sst, date_styles=frozenset({1})
+                        b"", date_styles=frozenset({1})
                     )
                 pts, nrows = _write_sheet_member(
                     zf, "xl/worksheets/sheet1.xml", _sheet_chunks(),
                     stats=coll,
                 )
+                if coll is not None:
+                    # the sink's own intern list is the heap the string
+                    # bounds fold over — already complete: every row hit
+                    # the spool before close() runs
+                    _resolve_deferred_strings(
+                        [coll], self._sst, expected_n=len(self._sst)
+                    )
                 def _sst_chunks():
                     yield (
                         '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>\n'

@@ -112,7 +112,7 @@ def test_truth_rule_agrees_across_tiers_and_author(tmp_path):
     author = []
     for p in PAYLOADS:
         _, claims, _ = _analyze_interval(
-            _rows_xml([p]), b"", frozenset(), None, False
+            _rows_xml([p]), b"", frozenset()
         )
         author.append({(1, 0): True, (0, 1): False}[claims["bt"]["A"]])
     assert expat == WANT
@@ -150,5 +150,5 @@ def test_every_read_tier_raises_on_non_utf8_boolean_payload(tmp_path):
 def test_author_withholds_interval_with_non_utf8_boolean_payload():
     # The read of this interval raises, so no section may keep a claim
     # (column B's numeric bounds included) that could prune it away.
-    _, claims, _ = _analyze_interval(BAD, b"", frozenset(), None, False)
+    _, claims, _ = _analyze_interval(BAD, b"", frozenset())
     assert claims == dict.fromkeys(SI.SECTION_KEYS)

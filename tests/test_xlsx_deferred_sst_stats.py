@@ -1,21 +1,23 @@
-"""Deferred (streaming) string-bound resolution — the big-heap path
-(VERDICT r12 task 3: the 256 MB resident gate used to shed ALL string
-stats; now the retrofit collects sst REF INDICES during staging and
-folds truncated bounds in one streaming pass over the heap, memory
-O(unique refs, capped) instead of O(heap)).
+"""String-bound resolution by one streamed pass over the heap — the
+stats author's only string path: the retrofit collects sst REF INDICES
+during staging and folds truncated bounds in one streaming pass over the
+heap, memory O(unique refs, capped) instead of O(heap).
 
-Pinned here: deferred == eager pruning on the same source (bounds
-honest, reads bit-equal, spy-verified skips), the per-column budget
-shed (only the high-cardinality column loses its claims, reported),
-streaming-decoder shapes (rich-text fallback, entities, ST_Xstring,
-self-closing, chunk boundaries), and the resolver's withhold rules
-(lone surrogates, refs beyond the heap, entry-count cross-check
+Pinned here: the published bounds equal a resident-heap oracle (each
+interval's refs resolved against ``wb.shared_strings``, then
+``truncated_string_bounds``), pruned reads equal the unindexed reference
+read (spy-verified skips), the per-column budget shed (only the
+high-cardinality column loses its claims, reported), streaming-decoder
+shapes (rich-text fallback, entities, ST_Xstring, self-closing, chunk
+boundaries), and the resolver's withhold rules (lone surrogates, refs
+beyond the heap, a missing or undecodable heap, entry-count cross-check
 failure → claim nothing).
 """
 
 from __future__ import annotations
 
 import io
+import re
 import zipfile
 
 import pytest
@@ -24,7 +26,6 @@ from pyspark.sql.datasource import EqualTo, StringStartsWith
 from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 from sheetreader_duckdb_spark.sources.xlsx import datasource as DS
-from sheetreader_duckdb_spark.sources.xlsx import indexer as IX
 from sheetreader_duckdb_spark.sources.xlsx import splitindex as SI
 from sheetreader_duckdb_spark.sources.xlsx.indexer import (
     _IntervalStatsCollector,
@@ -32,6 +33,7 @@ from sheetreader_duckdb_spark.sources.xlsx.indexer import (
     _resolve_deferred_strings,
     index_xlsx,
 )
+from sheetreader_duckdb_spark.sources.xlsx.parser import XlsxWorkbook
 from sheetreader_duckdb_spark.sources.xlsx.writer import IncrementalXlsxWriter
 
 N = 160_000
@@ -65,24 +67,41 @@ def _write_src(path: str) -> None:
 
 @pytest.fixture(scope="module")
 def twin_retrofits(tmp_path_factory):
-    """The same source retrofit twice: once eager (resident heap), once
-    with the resident cap forced to 0 so the deferred streaming path
-    runs — everything downstream must agree."""
+    """The same source twice: one copy retrofit with stats, one left
+    unindexed — the reference every read of the indexed copy must
+    equal."""
     d = tmp_path_factory.mktemp("defsst")
     src = str(d / "src.xlsx")
     _write_src(src)
-    eager = _foreignize(src, str(d / "eager.xlsx"))
-    deferred = _foreignize(src, str(d / "deferred.xlsx"))
-    out_e = index_xlsx(eager)
-    assert out_e["indexed"] and out_e["string_stats_shed"] == []
-    orig_cap = IX._SST_STATS_RESIDENT_CAP
-    IX._SST_STATS_RESIDENT_CAP = 0
-    try:
-        out_d = index_xlsx(deferred)
-    finally:
-        IX._SST_STATS_RESIDENT_CAP = orig_cap
-    assert out_d["indexed"] and out_d["string_stats_shed"] == []
-    return eager, deferred
+    plain = _foreignize(src, str(d / "plain.xlsx"))
+    indexed = _foreignize(src, str(d / "indexed.xlsx"))
+    out = index_xlsx(indexed)
+    assert out["indexed"] and out["string_stats_shed"] == []
+    return plain, indexed
+
+
+def _oracle_sv(path, pts):
+    """Each interval's string bounds from a resident heap: its refs
+    resolved against ``wb.shared_strings``, then
+    ``truncated_string_bounds`` per column."""
+    ends = [cum for _, cum in pts]  # the last point is the row total
+    with XlsxWorkbook(path) as wb:
+        heap = wb.shared_strings
+        rows = re.findall(rb"<row[ >].*?</row>", wb.zf.read(SHEET))
+    per: list = [{} for _ in ends]
+    i = 0
+    for r, row in enumerate(rows):
+        while r >= ends[i]:
+            i += 1
+        for col, ref in re.findall(rb'<c r="([A-Z]+)\d+" t="s"><v>(\d+)<', row):
+            per[i].setdefault(col.decode(), []).append(heap[int(ref)])
+    return {
+        c: [
+            SI.truncated_string_bounds(min(p[c]), max(p[c])) if c in p else None
+            for p in per
+        ]
+        for c in sorted({c for p in per for c in p})
+    }
 
 
 def _collect(path, filters, threads=4):
@@ -117,38 +136,25 @@ class _Spy:
 
 
 def test_deferred_publishes_honest_sv(twin_retrofits):
-    eager, deferred = twin_retrofits
-    with zipfile.ZipFile(eager) as zf:
-        pts_e = SI.decode_split_index(zf, SHEET)
-        sv_e = SI.decode_interval_sections(zf, SHEET, pts_e).get("sv")
-    with zipfile.ZipFile(deferred) as zf:
-        pts_d = SI.decode_split_index(zf, SHEET)
-        sv_d = SI.decode_interval_sections(zf, SHEET, pts_d).get("sv")
-    assert pts_e == pts_d  # staging bytes independent of stats mode
-    assert sv_e is not None and sv_d is not None
-    assert set(sv_d) == set(sv_e)
-    # every value here is <= 16 bytes, so both paths store EXACT
-    # (min, max) per interval — byte-identical claims
-    assert sv_d == sv_e
-    # numeric and count sections unaffected by the string mode
-    with zipfile.ZipFile(eager) as ze, zipfile.ZipFile(deferred) as zd:
-        sec_e = SI.decode_interval_sections(ze, SHEET, pts_e)
-        sec_d = SI.decode_interval_sections(zd, SHEET, pts_d)
-    assert sec_e.get("st") == sec_d.get("st")
-    assert sec_e.get("nc") == sec_d.get("nc")
+    _, indexed = twin_retrofits
+    with zipfile.ZipFile(indexed) as zf:
+        pts = SI.decode_split_index(zf, SHEET)
+        sv = SI.decode_interval_sections(zf, SHEET, pts).get("sv")
+    assert sv is not None and set(sv) == {"A", "B", "C"}
+    assert sv == _oracle_sv(indexed, pts)
 
 
 def test_deferred_pruned_reads_bit_equal(twin_retrofits, monkeypatch):
-    eager, deferred = twin_retrofits
+    plain, indexed = twin_retrofits
     mk = f"k{N - 700:07d}"
     for filters, pred in [
         ([EqualTo(("key",), mk)], lambda r: r[0] == mk),
         ([StringStartsWith(("key",), "k00001")],
          lambda r: r[0].startswith("k00001")),
     ]:
-        want = sorted(_collect(eager, filters), key=str)
+        want = sorted(_collect(plain, filters), key=str)
         spy = _Spy(monkeypatch)
-        got = sorted(_collect(deferred, filters), key=str)
+        got = sorted(_collect(indexed, filters), key=str)
         assert got == want and len(want) > 0
         assert spy.skipped > spy.materialized, (filters, vars(spy))
 
@@ -160,7 +166,6 @@ def test_budget_sheds_only_the_wide_column(tmp_path, monkeypatch):
     src = str(tmp_path / "src.xlsx")
     _write_src(src)
     p = _foreignize(src, str(tmp_path / "f.xlsx"))
-    monkeypatch.setattr(IX, "_SST_STATS_RESIDENT_CAP", 0)
     monkeypatch.setattr(_IntervalStatsCollector, "_DEFER_COL_CAP", 10_000)
     out = index_xlsx(p)
     assert out["indexed"]
@@ -227,9 +232,7 @@ def test_iter_sst_entries_prefixed():
 
 
 def _deferred_coll(refs_xml: bytes) -> _IntervalStatsCollector:
-    coll = _IntervalStatsCollector(
-        b"", date_styles=frozenset(), defer_strings=True
-    )
+    coll = _IntervalStatsCollector(b"", date_styles=frozenset())
     coll.fold(coll.analyzer()(refs_xml))  # one whole interval
     return coll
 
@@ -240,7 +243,8 @@ def test_resolver_withholds_on_count_mismatch():
         b"</sheetData>"
     )
     _resolve_deferred_strings([coll], iter(["x", "y"]), expected_n=3)
-    assert coll.fine[0][1]["sv"] == {}  # mismatch → no string claims
+    # mismatch → misaligned refs: the interval claims nothing at all
+    assert coll.fine[0][1] == dict.fromkeys(SI.SECTION_KEYS)
     assert coll._defer_resolved
 
 
@@ -304,10 +308,60 @@ def test_resolver_truncates_long_entries_honestly():
     assert len(hi) <= SI.STR_STAT_BYTES + 1
 
 
-def test_pooled_and_deferred_compose(tmp_path, monkeypatch):
-    """workers>1 (fork-pool interval analysis) + big-heap deferral in
-    one retrofit: claims — and the output bytes — must match the
-    serial deferred run exactly."""
+def test_resolver_bounds_equal_resident_rule_on_long_non_ascii():
+    """The fold keeps each group's exact min and max entry and truncates
+    that pair once, so its bounds are the resident-heap rule's
+    (``truncated_string_bounds(min, max)``). Truncating every entry
+    before folding widens them on non-ASCII strings longer than 16
+    bytes: here the 18-byte max's 15-byte prefix sorts below the 16-byte
+    min."""
+    heaps = [
+        ["中" * 5 + "a", "中" * 6],
+        ["é" * 8, "é" * 9, "éa"],
+        ["ab" + "ü" * 9, "ab" + "ü" * 7 + "z", "ab" + "ü" * 8],
+    ]
+    for heap in heaps:
+        rows = b"".join(
+            b'<row r="%d"><c r="A%d" t="s"><v>%d</v></c></row>' % (i, i, i)
+            for i in range(len(heap))
+        )
+        coll = _deferred_coll(b"<sheetData>" + rows + b"</sheetData>")
+        _resolve_deferred_strings([coll], iter(heap), expected_n=len(heap))
+        assert coll.fine[0][1]["sv"]["A"] == SI.truncated_string_bounds(
+            min(heap), max(heap)
+        ), heap
+
+
+def test_unreadable_heap_withholds_string_intervals():
+    """A heap stream that cannot be decoded, or no heap at all, leaves
+    the string refs unresolvable: every interval holding string cells
+    claims nothing in ANY section (as the reader's failure or an
+    unknowable value demands), while intervals without string cells keep
+    their claims."""
+    strings = (
+        b'<sheetData><row r="1"><c r="A1" t="s"><v>0</v></c>'
+        b'<c r="B1"><v>7</v></c></row></sheetData>'
+    )
+    numbers = b'<sheetData><row r="2"><c r="B2"><v>8</v></c></row></sheetData>'
+    broken = (  # an unclosed rich-text run defeats both span decoders
+        b'<sst xmlns="x"><si><t>a</t></si><si><r><t>b</t></si></sst>'
+    )
+    for heap in ("broken", None):
+        coll = _IntervalStatsCollector(b"", date_styles=frozenset())
+        for xml in (strings, numbers):
+            coll.fold(coll.analyzer()(xml))
+        with _sst_zip(broken) as zf:
+            entries = _iter_sst_entries(zf, b"") if heap else None
+            _resolve_deferred_strings([coll], entries, expected_n=2)
+        assert coll.fine[0][1] == dict.fromkeys(SI.SECTION_KEYS), heap
+        assert coll.fine[1][1]["st"] == {"B": (8.0, 8.0)}, heap
+        assert coll.fine[1][1]["nc"] == {"B": (1, 0, 0, 0)}, heap
+
+
+def test_pooled_and_deferred_compose(tmp_path):
+    """workers>1 (fork-pool interval analysis) + the streamed heap fold
+    in one retrofit: claims — and the output bytes — must match the
+    serial run exactly."""
     import hashlib
     import shutil
 
@@ -319,7 +373,6 @@ def test_pooled_and_deferred_compose(tmp_path, monkeypatch):
     # 2-second boundary (the r12 byte-identity test's documented trap)
     b = str(tmp_path / "b.xlsx")
     shutil.copy(a, b)
-    monkeypatch.setattr(IX, "_SST_STATS_RESIDENT_CAP", 0)
     out1 = index_xlsx(a, workers=1)
     out4 = index_xlsx(b, workers=4)
     assert out1["indexed"] and out4["indexed"]
@@ -332,8 +385,8 @@ def test_pooled_and_deferred_compose(tmp_path, monkeypatch):
     assert secs.get("sv") is not None and secs.get("nc") is not None
 
 
-def test_tail_only_string_column_defers_cleanly(tmp_path, monkeypatch):
-    """r13 review repro: a defer-mode workbook whose t="s" cells appear
+def test_tail_only_string_column_defers_cleanly(tmp_path):
+    """r13 review repro: a workbook whose t="s" cells appear
     only AFTER the last flush point (trailing interval) used to crash
     index_xlsx with 'deferred string bounds not resolved' — the
     deferred-collector filter read _defer_refs before the trailing
@@ -346,7 +399,6 @@ def test_tail_only_string_column_defers_cleanly(tmp_path, monkeypatch):
         w.write_row([float(i), f"z{i:06d}" if i >= n - 50 else None])
     w.close()
     f = _foreignize(p, str(tmp_path / "tail_f.xlsx"))
-    monkeypatch.setattr(IX, "_SST_STATS_RESIDENT_CAP", 0)
     out = index_xlsx(f, workers=1)
     assert out["indexed"], out
     with zipfile.ZipFile(f) as zf:

@@ -547,6 +547,32 @@ def test_retrofit_descriptor_written_zip_with_unicode_names(tmp_path):
     assert len(got) == n and (1.0,) in got and (float(n),) in got
 
 
+def test_below_one_interval_decided_before_staging(tmp_path, monkeypatch):
+    """A workbook whose members all sit below one split interval is
+    reported before any member is inflated or re-deflated: the report
+    staging used to reach, the file untouched, no member staged and no
+    temp file left."""
+    from sheetreader_duckdb_spark.sources.xlsx import indexer as IX
+    from sheetreader_duckdb_spark.sources.xlsx.writer import write_xlsx
+
+    src = str(tmp_path / "src.xlsx")
+    write_xlsx(src, {"S": [["k", "v"]] + [[f"s{i}", float(i)] for i in range(2_500)]})
+    p = _foreignize(src, str(tmp_path / "small.xlsx"))
+    os.remove(src)
+    raw = open(p, "rb").read()
+    staged = []
+    monkeypatch.setattr(IX, "_stage_members", lambda *a, **k: staged.append(a))
+    for workers in (1, 4, None):
+        assert index_xlsx(p, workers=workers) == {
+            "indexed": False,
+            "reason": "member(s) below one split interval — nothing to index",
+            "rows": 0, "worksheet_points": 0, "sst_points": 0, "path": p,
+        }
+    assert staged == []
+    assert open(p, "rb").read() == raw
+    assert os.listdir(tmp_path) == ["small.xlsx"]
+
+
 def test_stats_survive_final_flush_on_last_row():
     """r11 review: a final flush point landing exactly on the last row
     produces a duplicate cumulative bound (zero-row terminal interval);
@@ -591,6 +617,11 @@ def test_flush_unavailable_reports_unavailable_not_mixed(foreign_xlsx, tmp_path,
     assert open(p, "rb").read() == raw
 
 
+def _analysis_bug(*a, **k):
+    # module level: a pooled analysis job pickles its function by name
+    raise RuntimeError("interval analysis bug (simulated)")
+
+
 @pytest.mark.parametrize("workers", [1, 4])
 def test_stats_analysis_error_is_loud(foreign_xlsx, tmp_path, monkeypatch, workers):
     """An unexpected error while analysing an interval fails the retrofit
@@ -599,10 +630,7 @@ def test_stats_analysis_error_is_loud(foreign_xlsx, tmp_path, monkeypatch, worke
     — and the failure leaves no staging files behind."""
     from sheetreader_duckdb_spark.sources.xlsx import indexer as IX
 
-    def boom(*a, **k):
-        raise RuntimeError("interval analysis bug (simulated)")
-
-    monkeypatch.setattr(IX, "_analyze_interval", boom)
+    monkeypatch.setattr(IX, "_analyze_interval", _analysis_bug)
     out = str(tmp_path / "out.xlsx")
     with pytest.raises(RuntimeError, match="interval analysis bug"):
         index_xlsx(foreign_xlsx, out_path=out, workers=workers)
@@ -636,17 +664,18 @@ def test_stats_pool_setup_error(foreign_xlsx, tmp_path, monkeypatch, exc):
 
 @pytest.mark.parametrize("exc", [ValueError, RuntimeError])
 def test_stats_heap_error_sheds_only_undecodable(foreign_xlsx, tmp_path, monkeypatch, exc):
-    """An undecodable shared-strings heap (ValueError) costs only the
-    statistics: the file still indexes, without an ``sv`` section (an
-    interval with string cells withholds every claim, since its read
-    would raise). Any other error from the heap load is a bug and
-    propagates."""
-    from sheetreader_duckdb_spark.sources.xlsx import parser as P
+    """An undecodable shared-strings heap (ValueError from the heap
+    stream) costs only the statistics: the file still indexes, without
+    an ``sv`` section (an interval with string cells withholds every
+    claim, since its read would raise). Any other error from the heap
+    stream is a bug and propagates."""
+    from sheetreader_duckdb_spark.sources.xlsx import indexer as IX
 
-    def heap(self):
+    def heap(zf, pfx):
         raise exc("heap decode (simulated)")
+        yield
 
-    monkeypatch.setattr(P.XlsxWorkbook, "shared_strings", property(heap))
+    monkeypatch.setattr(IX, "_iter_sst_entries", heap)
     out = str(tmp_path / "out.xlsx")
     if exc is RuntimeError:
         with pytest.raises(RuntimeError, match="heap decode"):

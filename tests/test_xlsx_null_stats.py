@@ -37,6 +37,7 @@ from sheetreader_duckdb_spark.sources.xlsx import datasource as DS
 from sheetreader_duckdb_spark.sources.xlsx import splitindex as SI
 from sheetreader_duckdb_spark.sources.xlsx.indexer import (
     _IntervalStatsCollector,
+    _resolve_deferred_strings,
     index_xlsx,
 )
 from sheetreader_duckdb_spark.sources.xlsx.splitindex import (
@@ -160,7 +161,7 @@ def test_collector_family_split_and_withholds():
         b'<row r="2"><c r="A2"><v>2.5</v></c></row>'
         b"</sheetData>"
     )
-    coll = _IntervalStatsCollector(b"", sst=["s"], date_styles=frozenset({1}))
+    coll = _IntervalStatsCollector(b"", date_styles=frozenset({1}))
     _feed(coll, xml)
     cum, claims = coll.fine[0]
     st, sv, nc = (claims[k] for k in ("st", "sv", "nc"))
@@ -477,9 +478,7 @@ def test_unparseable_values_withhold_whole_interval():
         b'<c r="A1"><v>abc</v></c>',        # float('abc') raises
         b'<c r="A1" t="s"><v>1.5</v></c>',  # int('1.5') raises
     ):
-        coll = _IntervalStatsCollector(
-            b"", sst=["x"], date_styles=frozenset()
-        )
+        coll = _IntervalStatsCollector(b"", date_styles=frozenset())
         _feed(
             coll,
             b'<sheetData><row r="1">' + bad +
@@ -507,89 +506,65 @@ def test_exotic_string_refs_withhold_interval_not_crash():
     with NO usable heap withhold too (the read raises IndexError on a
     missing sst); (c) an out-of-heap ref withholds the WHOLE interval,
     not just the column (the read raises IndexError)."""
-    from sheetreader_duckdb_spark.sources.xlsx.indexer import (
-        _IntervalStatsCollector,
-    )
+
+    def resolved(xml, heap):
+        coll = _IntervalStatsCollector(b"", date_styles=frozenset())
+        _feed(coll, xml)
+        _resolve_deferred_strings([coll], heap)
+        return coll.fine[0][1]
 
     huge = b'<sheetData><row r="1">'\
            b'<c r="A1" t="s"><v>99999999999999999999</v></c>'\
            b'<c r="B1"><v>7</v></c></row></sheetData>'
-    coll = _IntervalStatsCollector(b"", sst=["x"], date_styles=frozenset())
-    _feed(coll, huge)  # must not raise
-    assert coll.fine[0][1] == dict.fromkeys(SI.SECTION_KEYS)
+    assert resolved(huge, ["x"]) == dict.fromkeys(SI.SECTION_KEYS)
 
     noheap = b'<sheetData><row r="1"><c r="A1" t="s"><v>0</v></c>'\
              b'<c r="B1"><v>7</v></c></row></sheetData>'
-    coll = _IntervalStatsCollector(b"", sst=None, date_styles=frozenset())
-    _feed(coll, noheap)
-    assert coll.fine[0][1] == dict.fromkeys(SI.SECTION_KEYS)
+    assert resolved(noheap, None) == dict.fromkeys(SI.SECTION_KEYS)
 
     oor = b'<sheetData><row r="1"><c r="A1" t="s"><v>5</v></c>'\
           b'<c r="B1"><v>7</v></c></row></sheetData>'
-    coll = _IntervalStatsCollector(b"", sst=["only"], date_styles=frozenset())
-    _feed(coll, oor)
-    assert coll.fine[0][1] == dict.fromkeys(SI.SECTION_KEYS)
+    assert resolved(oor, ["only"]) == dict.fromkeys(SI.SECTION_KEYS)
 
-    # negative ref WRAPS in the reader (no error): bounds stay faithful
-    # to the wrapped value, claims survive
-    neg = b'<sheetData><row r="1"><c r="A1" t="s"><v>-1</v></c>'\
-          b'<c r="B1"><v>7</v></c></row></sheetData>'
-    coll = _IntervalStatsCollector(b"", sst=["w", "z"], date_styles=frozenset())
-    _feed(coll, neg)
-    st, sv, nc = (coll.fine[0][1][k] for k in ("st", "sv", "nc"))
-    assert sv["A"] == ("z", "z") and st["B"] == (7.0, 7.0)
-
-    # ADVICE r14 medium: a negative ref whose MAGNITUDE exceeds the heap
-    # (sst[-999999] on a 2-entry heap) makes the reader raise IndexError —
-    # it used to crash the serial eager path at sst[i] (while the pooled
-    # path silently dropped all claims). Now the whole interval withholds,
-    # like the positive out-of-heap case.
-    negoor = b'<sheetData><row r="1"><c r="A1" t="s"><v>-999999</v></c>'\
-             b'<c r="B1"><v>7</v></c></row></sheetData>'
-    coll = _IntervalStatsCollector(b"", sst=["w", "z"], date_styles=frozenset())
-    _feed(coll, negoor)  # must not raise
-    assert coll.fine[0][1] == dict.fromkeys(SI.SECTION_KEYS)
+    # A negative ref WRAPS in the reader when it is in range, and raises
+    # IndexError when it is not; which one depends on the heap length,
+    # unknown while the interval is analysed. Every negative ref
+    # withholds the interval, in range or not (ADVICE r14 medium: the
+    # out-of-range one used to crash the serial analysis at sst[i]).
+    for v in (b"-1", b"-999999"):
+        neg = b'<sheetData><row r="1"><c r="A1" t="s"><v>' + v + \
+              b'</v></c><c r="B1"><v>7</v></c></row></sheetData>'
+        assert resolved(neg, ["w", "z"]) == dict.fromkeys(SI.SECTION_KEYS)
 
     # ADVICE r14 low: a lone-surrogate heap entry strictly BETWEEN the
-    # min/max entries used to leave eager claims standing (only the two
-    # bound candidates were encode-checked) while the unfiltered read
-    # fails at Arrow conversion. Every resolved entry is checked now —
-    # eager/deferred parity.
+    # min/max entries makes the unfiltered read fail at Arrow
+    # conversion, so every referenced entry is encode-checked, not just
+    # the two bound candidates.
     midsur = b'<sheetData><row r="1">'\
              b'<c r="A1" t="s"><v>0</v></c><c r="B1"><v>7</v></c></row>'\
              b'<row r="2"><c r="A2" t="s"><v>1</v></c></row>'\
              b'<row r="3"><c r="A3" t="s"><v>2</v></c></row></sheetData>'
-    coll = _IntervalStatsCollector(
-        b"", sst=["a", "m\ud800m", "z"], date_styles=frozenset()
+    assert resolved(midsur, ["a", "m\ud800m", "z"]) == dict.fromkeys(
+        SI.SECTION_KEYS
     )
-    _feed(coll, midsur)
-    assert coll.fine[0][1] == dict.fromkeys(SI.SECTION_KEYS)
 
 
 def test_deferred_negative_ref_withholds_interval():
-    """Deferred twin of the ADVICE r14 medium fix: the deferred analyzer
-    cannot range-check a negative ref (heap length unknown until the
-    post-staging stream), so ANY negative ref withholds the whole
-    interval — the conservative superset of the eager path's
-    arr.min() < -len(sst) withhold. Intervals without negative refs keep
-    their claims."""
-    from sheetreader_duckdb_spark.sources.xlsx.indexer import (
-        _IntervalStatsCollector,
-        _resolve_deferred_strings,
-    )
-
+    """ADVICE r14 medium: the analyzer cannot range-check a negative ref
+    (the heap length is unknown until the heap pass), so ANY negative
+    ref withholds the whole interval — the conservative superset of the
+    reader's IndexError on ``sst[-n]`` past the heap. Intervals without
+    negative refs keep their claims."""
     neg = b'<sheetData><row r="1"><c r="A1" t="s"><v>-1</v></c>'\
           b'<c r="B1"><v>7</v></c></row></sheetData>'
-    coll = _IntervalStatsCollector(b"", date_styles=frozenset(),
-                                   defer_strings=True)
+    coll = _IntervalStatsCollector(b"", date_styles=frozenset())
     _feed(coll, neg)
     _resolve_deferred_strings([coll], iter(["w", "z"]))
     assert coll.fine[0][1] == dict.fromkeys(SI.SECTION_KEYS)
 
     ok_iv = b'<sheetData><row r="1"><c r="A1" t="s"><v>1</v></c>'\
             b'<c r="B1"><v>7</v></c></row></sheetData>'
-    coll = _IntervalStatsCollector(b"", date_styles=frozenset(),
-                                   defer_strings=True)
+    coll = _IntervalStatsCollector(b"", date_styles=frozenset())
     _feed(coll, ok_iv)
     _resolve_deferred_strings([coll], iter(["w", "z"]))
     st, sv, nc = (coll.fine[0][1][k] for k in ("st", "sv", "nc"))

@@ -5,10 +5,12 @@ Two places used to scan bytes a second time:
 * The interval-stats author (``indexer._analyze_interval``) now reads an
   interval through the reader's dense row pattern
   (``parser.build_dense_row_re``): one ``findall`` yields every column's
-  raw ``<v>`` values. The per-cell ``cell_re`` scan runs only when some
-  row deviates from the template. The differential below requires both
-  paths to give equal claims on generated intervals, and a guard requires
-  a big_sheet-shaped interval to make no per-cell scan at all.
+  raw ``<v>`` values. The per-cell ``cell_re`` scan runs only over the
+  rows before the first template match (a worksheet opener and header
+  row), or over the whole interval when a later row deviates from the
+  template. The differential below requires both paths to give equal
+  claims on generated intervals, and a guard requires a big_sheet-shaped
+  interval to make no per-cell scan at all.
 * A sharded read (``XlsxWorkbook._drive_chunks``) row-counts a chunk it
   does not own only while the global row ordinal is below ``skip_rows``.
   Reads that skip rows across several 1 MB chunks must equal the
@@ -18,6 +20,7 @@ Two places used to scan bytes a second time:
 
 from __future__ import annotations
 
+import io
 import random
 import re
 import sys
@@ -27,6 +30,7 @@ import pytest
 
 import sheetreader_duckdb_spark.sources.xlsx.parser as P
 from sheetreader_duckdb_spark.sources.xlsx import indexer as IX
+from sheetreader_duckdb_spark.sources.xlsx import splitindex as SI
 from sheetreader_duckdb_spark.sources.xlsx.indexer import index_xlsx
 from tests.test_xlsx_dense import _DEVIATING, _read, _sparse_workbook
 
@@ -75,6 +79,14 @@ def _plant(r, cells, pfx=b""):
 
 
 FOREIGN_ROW = b'<x:row r="1500"><x:c r="A1500" t="s"><x:v>3</x:v></x:c></x:row>'
+# The first interval of a worksheet: its opener and a header row of
+# shared strings precede rows shaped like the rest of the sheet.
+OPENER = (
+    b'<?xml version="1.0" encoding="UTF-8"?>\n<worksheet xmlns="urn:s">'
+    b'<dimension ref="A999:E3999"/><cols><col min="1" max="5"/></cols>'
+    b"<sheetData>"
+)
+HEADER_ROW = _row(999, [(c, b' t="s"', b"%d" % j) for j, c in enumerate("ABCDE")])
 
 # name -> (interval, prefix, date styles, dense path expected)
 CASES = {
@@ -107,20 +119,48 @@ CASES = {
     "foreign_prefix_row": (
         _interval(12, plants={1500: FOREIGN_ROW}), b"", DATE_STYLES, False
     ),
+    # the header rows go cell by cell, every later row to the findall
+    "header": (OPENER + HEADER_ROW + _interval(13), b"", DATE_STYLES, True),
 }
-MODES = {  # (heap, defer)
-    "eager": (HEAP, False),
-    "deferred": (None, True),
-    "no_heap": (None, False),
+
+
+def _heap_zip():
+    body = b"<sst>" + b"".join(b"<si><t>%s</t></si>" % w.encode() for w in HEAP)
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w") as zf:
+        zf.writestr(SI.SST_ENTRY, body + b"</sst>")
+    return zipfile.ZipFile(buf)
+
+
+# The heap the string bounds fold over: a resident list (what the sink
+# passes), the streamed heap of a zip member (what the retrofit passes),
+# or none at all.
+MODES = {
+    "eager": lambda: HEAP,
+    "deferred": lambda: IX._iter_sst_entries(_heap_zip(), b""),
+    "no_heap": lambda: None,
 }
 
 
 def _plain(result):
-    """``_analyze_interval``'s result with the deferred ref arrays as lists."""
-    rows_in, claims, drefs = result
+    """``_analyze_interval``'s result with the ref arrays as lists."""
+    rows_in, claims, refs = result
     return rows_in, claims, (
-        None if drefs is None else {k: v.tolist() for k, v in drefs.items()}
+        None if refs is None
+        else (refs[0], {k: v.tolist() for k, v in refs[1].items()})
     )
+
+
+def _claims(data, pfx, styles, mode):
+    """One interval through the whole stats author: its analysis, and
+    the collector's claims once the string bounds are folded over the
+    ``mode`` heap."""
+    coll = IX._IntervalStatsCollector(pfx, date_styles=styles)
+    r = IX._analyze_interval(data, pfx, styles)
+    plain = _plain(r)
+    coll.fold(r)
+    IX._resolve_deferred_strings([coll], MODES[mode]())
+    return plain, coll.fine
 
 
 def _takes_dense(data, pfx):
@@ -132,11 +172,10 @@ def _takes_dense(data, pfx):
 @pytest.mark.parametrize("case", list(CASES))
 def test_dense_stats_equal_per_cell_stats(monkeypatch, case, mode):
     data, pfx, styles, dense = CASES[case]
-    heap, defer = MODES[mode]
     assert _takes_dense(data, pfx) is dense
-    got = _plain(IX._analyze_interval(data, pfx, styles, heap, defer))
+    got = _claims(data, pfx, styles, mode)
     monkeypatch.setattr(IX, "_dense_columns", lambda *a: None)
-    want = _plain(IX._analyze_interval(data, pfx, styles, heap, defer))
+    want = _claims(data, pfx, styles, mode)
     assert got == want
 
 
@@ -145,7 +184,7 @@ def test_dense_stats_claim_every_family():
     compared with another: bounds, counts and boolean truths (the
     ``&#160;true`` payload reads True) for every family."""
     data, pfx, styles, _ = CASES["families"]
-    rows_in, claims, _ = IX._analyze_interval(data, pfx, styles, HEAP, False)
+    _, [(rows_in, claims)] = _claims(data, pfx, styles, "eager")
     assert rows_in == 3000
     assert sorted(claims["st"]) == ["B", "C", "E"]
     assert sorted(claims["sv"]) == ["A"]
@@ -177,11 +216,11 @@ def test_dense_stats_random_plants(monkeypatch):
             r = 1000 + rng.randrange(600)
             plants.update(_plant(r, rng.choice(deviations)))
         data = _interval(100 + seed, n_rows=600, plants=plants)
-        for heap, defer in MODES.values():
-            got = _plain(IX._analyze_interval(data, b"", DATE_STYLES, heap, defer))
+        for mode in MODES:
+            got = _claims(data, b"", DATE_STYLES, mode)
             with monkeypatch.context() as m:
                 m.setattr(IX, "_dense_columns", lambda *a: None)
-                want = _plain(IX._analyze_interval(data, b"", DATE_STYLES, heap, defer))
+                want = _claims(data, b"", DATE_STYLES, mode)
             assert got == want, (seed, sorted(plants))
 
 
@@ -224,11 +263,11 @@ def test_big_sheet_interval_makes_no_per_cell_scan(monkeypatch):
             return cell_re.finditer(s, *a)
 
     monkeypatch.setattr(pr, "cell_re", Counting())
-    got = IX._analyze_interval(data, b"", DATE_STYLES, HEAP, False)
+    got = _plain(IX._analyze_interval(data, b"", DATE_STYLES))
     assert n[0] == 0
     assert sorted(got[1]["st"]) == list("ABCDF")
     monkeypatch.setattr(IX, "_dense_columns", lambda *a: None)
-    assert IX._analyze_interval(data, b"", DATE_STYLES, HEAP, False) == got
+    assert _plain(IX._analyze_interval(data, b"", DATE_STYLES)) == got
     assert n[0] == 1
 
 
