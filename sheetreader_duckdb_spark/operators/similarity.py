@@ -940,12 +940,13 @@ def ivf_assign_carrier(
 
     This dominates both earlier forms at scale: the literal ``_argmax_cell``
     is map-side but its plan embeds K·dim doubles (analysis cost grows with
-    K); ``ivf_assign_join`` keeps the plan constant but materializes K rows
-    per vector through a crossJoin and buys the argmax with a max_by
-    SHUFFLE of n·K rows (measured: the assignment pass dominated index
+    K); the K-row broadcast join form (removed) kept the plan constant but
+    materialized K rows per vector through a crossJoin and bought the
+    argmax with a max_by SHUFFLE of n·K rows (measured: the assignment pass dominated index
     builds at 200k×128 — BENCHNOTES round 7). The carrier form is
     constant-plan AND amplification-free; scores and the first-index-of-max
-    tie-break are bit-identical to both (pinned in tests/test_similarity.py).
+    tie-break are bit-identical to the literal form (pinned in
+    tests/test_similarity.py).
     """
     from sheetreader_duckdb_spark.operators.exprutil import bind_once
 
@@ -1073,55 +1074,6 @@ def _assign_fn(assign: str):
     )
 
 
-def ivf_assign_join(
-    corpus: DataFrame,
-    centroids: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Cell assignment as a broadcast join against a K-row centroid table —
-    the large-K form of ``_argmax_cell``. Returns (id_col, cell).
-    (``ivf_assign_carrier`` supersedes this for the index-build hot path:
-    same constant plan size without the K× row amplification; this form
-    remains for the cached/self-join call sites pinned at the current
-    plan shape.)
-
-    The literal-embedded expression is the right call at small K (constant-
-    folded, map-side, zero extra rows), but its plan embeds K·dim literal
-    doubles: at the K ~ thousands a 100 TB corpus wants (cell occupancy
-    n/K), the expression tree itself becomes the bottleneck. This form
-    keeps the plan size CONSTANT in K — centroids travel as a broadcast
-    relation (K·dim doubles of data, like MLlib's KMeans model), each
-    vector meets each centroid through BroadcastNestedLoopJoin map-side,
-    and the per-vector argmax is a max_by aggregation keyed by the vector
-    id (one shuffle on a uniform key; that shuffle is the price of
-    constant plan size, and it disappears into the same exchange the
-    downstream cell equi-join needs anyway).
-
-    Scores use the same fold arithmetic as ``_argmax_cell`` (same IEEE
-    sequence: zip_with product fold / (vector-norm · centroid-norm)), and
-    ties resolve to the lowest cell id — identical to first-index-of-max —
-    so the two forms produce bit-identical assignments (pinned in
-    tests/test_similarity.py)."""
-    cdf = _centroid_table(corpus.sparkSession, centroids)
-    score = dot(F.col(vec_col), F.col("cvec")) / (l2_norm(F.col(vec_col)) * F.col("cnorm"))
-    # max_by over struct(score, -cell): lexicographic max = highest score,
-    # then lowest cell — Spark orders NaN greater than any double, matching
-    # array_max in the literal path.
-    return (
-        corpus.select(id_col, vec_col)
-        .crossJoin(broadcast(cdf))
-        .select(id_col, F.col("cell"), score.alias("__s"))
-        .groupBy(id_col)
-        .agg(
-            F.max_by(
-                F.col("cell"),
-                F.struct(F.col("__s").alias("s"), (-F.col("cell")).alias("nc")),
-            ).alias("cell")
-        )
-    )
-
-
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -1148,7 +1100,7 @@ def ivf_topk(
       zero extra shuffles, but the plan carries K·dim literal doubles.
     * ``"join"`` — the large-K constant-plan form: the corpus assignment
       goes through the 1-row broadcast centroid carrier (map-side
-      argmax, no shuffle; bit-identical to ``ivf_assign_join``,
+      argmax, no shuffle; bit-identical to the literal argmax,
       test-pinned) and the query probe-cell ranking through a broadcast
       join against the K-row centroid table.
     * ``"gemm"`` — the production no-knob form (r9): corpus assignment
@@ -1207,10 +1159,9 @@ def ivf_topk(
             )
         else:
             # Corpus side: inline carrier assignment (bit-identical to
-            # ivf_assign_join, test-pinned) — cell computed map-side in
-            # the same select as the vector, so the large-K mode no
-            # longer pays the n·K argmax shuffle + id join-back before
-            # the cell join.
+            # the literal argmax, test-pinned) — cell computed map-side
+            # in the same select as the vector, so the large-K mode pays
+            # no n·K argmax shuffle + id join-back before the cell join.
             ccar = centroid_carrier_df(corpus.sparkSession, centroids)
             ccell = bind_once(
                 _centroid_scores_from_carrier(
@@ -1392,7 +1343,7 @@ def semantic_dedup_pairs(
     constant in K, bit-identical scores/tie-break to the join form,
     test-pinned): the cell id is computed map-side IN the same select as
     the vector and its norm, so the only shuffle before pair generation
-    is the cell equi-join itself (the previous ``ivf_assign_join`` path
+    is the cell equi-join itself (the earlier broadcast-join assignment
     paid an n·K-row argmax shuffle plus an id-keyed join-back first).
     With balanced cells the candidate volume is n²/K instead of n².
     Precision is exact (every
@@ -1923,7 +1874,7 @@ def _pq_code_expr(
 # expression tree (`F.array(*[F.lit(w) …])`) costs py4j round-trips and
 # plan bytes proportional to n_codes·dim: fine for the 16×8 oracle
 # witness, minutes of plan build and a megabyte plan at a 256-code ×
-# 768-dim production book. The ivf_assign_join precedent: ship the
+# 768-dim production book. The centroid-carrier precedent: ship the
 # values through a broadcast exchange (constant plan size), keep the
 # scoring arithmetic EXPRESSION-identical so results are bit-identical
 # to the literal form (pinned in tests/test_pq.py).
@@ -2110,8 +2061,8 @@ def pq_encode(
     """Append the m-code PQ encoding (``array<int>``) plus the codebook-
     reconstructed norm ``pq_norm`` (‖x̂‖ = √Σ_j ‖book_j[code_j]‖² — the
     cosine denominator the coarse pass uses). Map-side; the codebooks are
-    dim·n_codes literal doubles, the join-form alternative for huge
-    codebooks follows ivf_assign_join."""
+    dim·n_codes literal doubles; ``pq_encode_join`` is the broadcast
+    form for huge codebooks."""
     m = len(codebooks)
     dsub = len(codebooks[0][0])
     codes = F.array(
@@ -2278,9 +2229,9 @@ def ivfpq_topk(
     768-dim float32 that is ~1/200000 of the raw corpus bytes per query.
 
     Plan shape: the index relation is (cid, cell, pq_codes, pq_norm) —
-    built once from ``ivf_assign_join`` (broadcast K-row centroid table,
-    one id-keyed argmax shuffle) + ``pq_encode_join`` (broadcast 1-row
-    codebook table), and at real scale persisted rather than re-derived
+    built once from the ``assign`` cell assignment (below the 'auto'
+    crossover the 1-row centroid carrier, map-side) + the ``encode`` PQ
+    encode, and at real scale persisted rather than re-derived
     (``build_ivf_index`` is the persisted form for the float variant).
     Queries rank probe cells against the same broadcast centroid table
     and carry their ADC LUT; the candidate pass is an equi-join on the

@@ -464,6 +464,25 @@ def _parse_bool(v: str | None, default: bool = False) -> bool:
     return str(v).strip().lower() in ("true", "1", "yes")
 
 
+def _resolve_paths(path: str) -> list[str]:
+    """The workbooks a ``path`` option names, sorted: a glob pattern's
+    matches first; when it has no glob magic, or matches nothing while
+    naming an existing path, the literal directory's ``*.xlsx`` (not
+    recursive; the directory part escaped, so 'batch[7]/' works) or the
+    literal file ('report[2024].xlsx' is a real name). A literal path is
+    returned whether or not it exists; each caller raises its own error
+    for an empty or missing result."""
+    if _glob.has_magic(path):
+        got = sorted(_glob.glob(path))
+        if got or not os.path.exists(path):
+            return got
+    if os.path.isdir(path):
+        # A directory reads every workbook in it: the inverse of the sink
+        # (one .xlsx per partition under `save(dir)`).
+        return sorted(_glob.glob(os.path.join(_glob.escape(path), "*.xlsx")))
+    return [path]
+
+
 @dataclass
 class _Options:
     paths: list[str]
@@ -486,28 +505,7 @@ class _Options:
         path = options.get("path")
         if not path:
             raise ValueError("sheetreader: 'path' is required")
-        if _glob.has_magic(path):
-            paths = sorted(_glob.glob(path))
-            if not paths:
-                # A literal path that merely LOOKS like a glob —
-                # 'report[2024].xlsx' / 'batch[7]/' are real names
-                # (r13: same metachar family as the retrofit temp-leak
-                # fix); glob semantics keep priority, the literal
-                # file-or-directory is the fallback when the pattern
-                # matches nothing.
-                if os.path.isdir(path):
-                    paths = sorted(_glob.glob(
-                        os.path.join(_glob.escape(path), "*.xlsx")
-                    ))
-                elif os.path.isfile(path):
-                    paths = [path]
-        elif os.path.isdir(path):
-            # A directory reads every workbook in it — the symmetric
-            # inverse of the sink (one .xlsx per partition under `save(dir)`),
-            # matching the streaming source's directory semantics above.
-            paths = sorted(_glob.glob(os.path.join(_glob.escape(path), "*.xlsx")))
-        else:
-            paths = [path]
+        paths = _resolve_paths(path)
         if not paths:
             raise ValueError("No files found in path")  # reference :648-649
         for p in paths:
@@ -1181,8 +1179,9 @@ class SheetReaderReader(DataSourceReader):
         bytes per row (irregular chunks and rows through the expat walker,
         ``parser._fragment_rows``); coerce and inline reads take
         ``parser._scan_chunk``. Chunk-0 shapes the scan cannot read go to
-        tier 3 (``_iter_rows_expat_sharded``). Row-shaped results become
-        Arrow through ``_rows_to_batches``.
+        tier 3 (``_iter_rows_expat_sharded``), whose expat step runs on
+        ``_drive_chunks`` too, split-index seeks included. Row-shaped
+        results become Arrow through ``_rows_to_batches``.
 
         ``keep`` maps file column index → output slot (None = pruned). A
         pruned column's cells are dropped at the raw-bytes stage: no shared-
@@ -1532,21 +1531,7 @@ class SheetReaderStreamReader(SimpleDataSourceStreamReader):
         self.schema = schema
 
     def _current_files(self) -> list[str]:
-        if _glob.has_magic(self.raw_path):
-            got = sorted(_glob.glob(self.raw_path))
-            if not got:  # literal glob-looking file or directory
-                if os.path.isdir(self.raw_path):
-                    return sorted(_glob.glob(os.path.join(
-                        _glob.escape(self.raw_path), "*.xlsx"
-                    )))
-                if os.path.isfile(self.raw_path):
-                    return [self.raw_path]
-            return got
-        if os.path.isdir(self.raw_path):
-            return sorted(
-                _glob.glob(os.path.join(_glob.escape(self.raw_path), "*.xlsx"))
-            )
-        return [self.raw_path] if os.path.exists(self.raw_path) else []
+        return [p for p in _resolve_paths(self.raw_path) if os.path.exists(p)]
 
     def initialOffset(self) -> dict:
         return {"processed": []}

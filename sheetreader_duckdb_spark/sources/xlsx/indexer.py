@@ -1087,21 +1087,12 @@ _TOO_SMALL = "member(s) below one split interval — nothing to index"
 
 
 def _resolve_corpus_paths(path_or_glob: str) -> list[str]:
-    """Sorted .xlsx paths for a sweep: a directory (its *.xlsx,
-    non-recursive — the directory part glob-escaped, so
-    'reports[2024]/' works) or a glob pattern taken as written. Raises
-    on an empty match (shared by index_xlsx_dir / describe_index_dir —
-    r13 review: the two had copied the resolution and would drift)."""
-    import glob as _glob
+    """Sorted .xlsx paths for a sweep, by the reader's own path rule
+    (``datasource._resolve_paths``). Raises on an empty match (shared by
+    index_xlsx_dir / describe_index_dir)."""
+    from .datasource import _resolve_paths
 
-    if os.path.isdir(path_or_glob):
-        paths = sorted(
-            _glob.glob(os.path.join(_glob.escape(path_or_glob), "*.xlsx"))
-        )
-    else:
-        paths = sorted(_glob.glob(path_or_glob))
-        if not paths and os.path.isfile(path_or_glob):
-            paths = [path_or_glob]  # literal glob-looking path
+    paths = [p for p in _resolve_paths(path_or_glob) if os.path.exists(p)]
     if not paths:
         raise ValueError(f"no .xlsx files match {path_or_glob!r}")
     return paths

@@ -874,8 +874,9 @@ class XlsxWorkbook:
            expat walker ``_walk_cells`` over that chunk as a fragment;
         3. when chunk 0 defeats the regex scan (mixed prefixes, no
            detectable opener), ``_iter_rows_expat_sharded``: the same
-           walker over namespace-agnostic chunks, or over the whole member
-           when sequential.
+           walker as the chunk step of a second ``_drive_chunks`` pass, or
+           over the whole member when sequential or when the member has
+           no sheetData opener.
 
         ``shard``/``n_shards``: chunk round-robin sharding. This shard
         cell-parses only its assigned chunks and row-counts the others
@@ -925,7 +926,7 @@ class XlsxWorkbook:
         chunk_bytes: int | None = None,
         skip_rows: int = 0,
     ):
-        """The chunk protocol of the fast tiers, written once: cut the
+        """The chunk protocol of every read tier, written once: cut the
         worksheet into ``</row>``-aligned chunks, hand chunk 0 and this
         shard's chunks to ``step``, row-count the others while the count
         is below ``skip_rows``, and yield what ``step`` yields.
@@ -1034,7 +1035,7 @@ class XlsxWorkbook:
                 if not data:
                     return
 
-    # -- tier 3: the expat walker, sharded over namespace-agnostic chunks ---
+    # -- tier 3: the expat walker as a step of _drive_chunks --------------
     def _iter_rows_expat_sharded(
         self,
         sheet: SheetInfo,
@@ -1044,74 +1045,44 @@ class XlsxWorkbook:
         n_shards: int = 1,
     ) -> Iterator[list[tuple[int, int, object]]]:
         """Tier 3 for the documents that defeat the regex scan (mixed or
-        undetectable prefixes). Sharded reads run the round-robin chunk
-        protocol with namespace-AGNOSTIC machinery: chunks cut at
-        any-prefix row ends (``_ANY_ROW_END_RE``), unassigned chunks
-        row-counted under any prefix, assigned chunks walked as wrapped
-        fragments (``_fragment_rows``). Chunk 0's preamble (XML prolog and
-        worksheet opener, illegal inside the wrapper) is consumed up to
-        the sheetData opener. Sequential reads, and a document with no
-        findable sheetData opener (on shard 0), walk the whole member."""
+        undetectable prefixes). Sharded reads run ``_drive_chunks`` (split-
+        index seeks with their row-count check, or the ``</row>``-cut
+        stream) with an expat step: owned chunks walk as wrapped fragments
+        (``_fragment_rows``), the others row-count under any prefix. Every
+        shard strips chunk 0's preamble (XML prolog and worksheet opener,
+        illegal inside the wrapper) through the sheetData opener, so all
+        shards decide alike: ``<sheetData/>`` holds no rows, and no opener
+        sends shard 0 to the whole-member walk. Sequential reads walk the
+        whole member."""
         if n_shards <= 1:
             yield from self._iter_rows_expat(sheet, skip_rows)
             return
         date_styles = self.date_styles
-        row_ord = 0
-        chunk_idx = 0
-        with self.zf.open(sheet.path) as f:
-            buf = b""
-            eof = False
-            opened = False
-            while True:
-                if not eof:
-                    data = f.read(chunk_bytes)
-                    if data:
-                        buf += data
-                    else:
-                        eof = True
-                if not opened:
-                    m = _SHEETDATA_OPEN_RE.search(buf)
-                    if m is None:
-                        if not eof and len(buf) < _MAX_ROW_BYTES:
-                            continue
-                        # No sheetData opener (schema-invalid document
-                        # that still carries rows, or >64MB preamble):
-                        # deterministic whole-file fallback, shard 0.
-                        if shard == 0:
-                            yield from self._iter_rows_expat(sheet, skip_rows)
-                        return
-                    if buf[m.end() - 2 : m.end()] == b"/>":
-                        return  # <sheetData/>: empty sheet, no rows anywhere
-                    buf = buf[m.end():]
-                    opened = True
-                if not eof:
-                    last = None
-                    for mm in _ANY_ROW_END_RE.finditer(buf):
-                        last = mm
-                    if last is None:
-                        if len(buf) < _MAX_ROW_BYTES:
-                            continue
-                        raise ValueError(
-                            "sheetreader: row exceeds 64MB without a </row> "
-                            f"boundary mid-file in {sheet.path}"
-                        )
-                    work, buf = buf[: last.end()], buf[last.end():]
-                else:
-                    work, buf = buf, b""
-                assigned = (chunk_idx % n_shards) == shard
-                chunk_idx += 1
-                if assigned:
-                    for cells in _fragment_rows(
-                        work, date_styles, self.date1904, self.allow_inline
-                    ):
-                        ordinal = row_ord
-                        row_ord += 1
-                        if ordinal >= skip_rows:
-                            yield cells
-                else:
-                    row_ord += count_any_row_starts(work)
-                if eof and not buf:
-                    return
+
+        def step(work, pr, first, assigned, ordinal):
+            if first:
+                m = _SHEETDATA_OPEN_RE.search(work)
+                if m is None:
+                    raise _FastPathUnsupported
+                if work[m.end() - 2 : m.end()] == b"/>":
+                    return 0  # <sheetData/>: an empty sheet
+                work = work[m.end():]
+            if not assigned:
+                return _chunk_rows(work, pr.pfx)
+            rows = _fragment_rows(work, date_styles, self.date1904, self.allow_inline)
+            yield from rows[max(0, skip_rows - ordinal):]
+            return len(rows)
+
+        try:
+            yield from self._drive_chunks(
+                sheet, step, shard, n_shards, chunk_bytes=chunk_bytes,
+                skip_rows=skip_rows,
+            )
+        except _FastPathUnsupported:
+            # Raised before any row, alike on every shard: shard 0 alone
+            # walks the whole member.
+            if shard == 0:
+                yield from self._iter_rows_expat(sheet, skip_rows)
 
     # -- tier 3 sequential: the expat walker streaming the whole member -----
     def _iter_rows_expat(self, sheet: SheetInfo, skip_rows: int = 0) -> Iterator[list[tuple[int, int, object]]]:
@@ -1249,12 +1220,10 @@ from .rowstream import (  # noqa: E402  (grouped with its siblings below)
     foreign_row_evidence,
 )
 
-# Tier-3 sharding machinery (r11): any-prefix row-end cut points, and the
-# sheetData open/close tags under any prefix — the preamble before the
+# The sheetData open/close tags under any prefix: the preamble before the
 # opener and the trailing members after the close can't carry rows and are
 # excluded from the fragment parse (an XML prolog or an unopened close tag
 # inside the synthetic wrapper would be a parse error).
-_ANY_ROW_END_RE = re.compile(rb"</(?:[A-Za-z_][\w.-]*:)?row[ \t\r\n]*>")
 _SHEETDATA_OPEN_RE = re.compile(
     rb"<(?:[A-Za-z_][\w.-]*:)?sheetData(?=[ \t\r\n/>])[^>]*>"
 )

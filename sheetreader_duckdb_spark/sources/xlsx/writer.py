@@ -70,6 +70,83 @@ _STYLES = """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>
 </cellXfs>
 </styleSheet>"""
 
+_XML_DECL = '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>\n'
+_MAIN_NS = "http://schemas.openxmlformats.org/spreadsheetml/2006/main"
+_REL_NS = "http://schemas.openxmlformats.org/officeDocument/2006/relationships"
+_SHEET_TAIL = "</sheetData>\n</worksheet>"
+
+
+def _write_package_parts(zf, sheet_names: list, date1904: bool) -> None:
+    """Write the members every workbook of this writer shares, in order:
+    content types, root rels, workbook, workbook rels, styles. Sheet
+    ``i`` is ``xl/worksheets/sheet{i + 1}.xml`` with relationship
+    ``rId{i + 1}``; styles and shared strings follow them."""
+    n = len(sheet_names)
+    overrides = "\n".join(
+        f'<Override PartName="/xl/worksheets/sheet{i + 1}.xml" '
+        f'ContentType="application/vnd.openxmlformats-officedocument.spreadsheetml.worksheet+xml"/>'
+        for i in range(n)
+    )
+    sheets = "".join(
+        f'<sheet name="{escape(name, {chr(34): "&quot;"})}" sheetId="{i + 1}" r:id="rId{i + 1}"/>'
+        for i, name in enumerate(sheet_names)
+    )
+    wb_pr = '<workbookPr date1904="1"/>' if date1904 else ""
+    rels = "".join(
+        f'<Relationship Id="rId{i + 1}" Type="{_REL_NS}/worksheet" '
+        f'Target="worksheets/sheet{i + 1}.xml"/>'
+        for i in range(n)
+    )
+    zf.writestr("[Content_Types].xml", _CONTENT_TYPES.format(sheet_overrides=overrides))
+    zf.writestr("_rels/.rels", _ROOT_RELS)
+    zf.writestr(
+        "xl/workbook.xml",
+        f'{_XML_DECL}<workbook xmlns="{_MAIN_NS}" xmlns:r="{_REL_NS}">'
+        f"{wb_pr}<sheets>{sheets}</sheets></workbook>",
+    )
+    zf.writestr(
+        "xl/_rels/workbook.xml.rels",
+        f'{_XML_DECL}<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">'
+        f'{rels}<Relationship Id="rId{n + 1}" Type="{_REL_NS}/styles" Target="styles.xml"/>'
+        f'<Relationship Id="rId{n + 2}" Type="{_REL_NS}/sharedStrings" '
+        'Target="sharedStrings.xml"/></Relationships>',
+    )
+    zf.writestr("xl/styles.xml", _STYLES)
+
+
+def _sheet_head(n_rows: int, n_cols: int) -> str:
+    """A worksheet's bytes up to its first row: the ``<dimension>`` span
+    (none for an empty sheet) and the sheetData opener."""
+    dim = (
+        f'<dimension ref="A1:{_col_letter(n_cols - 1)}{n_rows}"/>'
+        if n_rows and n_cols
+        else ""
+    )
+    return f'{_XML_DECL}<worksheet xmlns="{_MAIN_NS}">\n{dim}<sheetData>'
+
+
+def _sst_chunks(sst: list):
+    """The shared-strings member as encoded chunks of whole entries (about
+    256 KB each), so no ``</si>`` straddles two and every entry end can
+    be a flush point of ``_write_indexed_member``."""
+    yield (
+        f'{_XML_DECL}<sst xmlns="{_MAIN_NS}" '
+        f'count="{len(sst)}" uniqueCount="{len(sst)}">'
+    ).encode("utf-8")
+    batch: list[str] = []
+    size = 0
+    for s in sst:
+        e = f'<si><t xml:space="preserve">{escape(_xstring(s))}</t></si>'
+        batch.append(e)
+        size += len(e)
+        if size >= (256 << 10):
+            yield "".join(batch).encode("utf-8")
+            batch, size = [], 0
+    if batch:
+        yield "".join(batch).encode("utf-8")
+    yield b"</sst>"
+
+
 _EPOCH = dt.date(1970, 1, 1)
 
 
@@ -552,16 +629,7 @@ def write_xlsx(
 
     sheet_xmls: list[str] = []
     for rows in sheets.values():
-        n_rows = len(rows)
-        n_cols = max((len(r) for r in rows), default=0)
-        dim = (
-            f'<dimension ref="A1:{_col_letter(max(0, n_cols - 1))}{max(1, n_rows)}"/>'
-            if n_rows and n_cols
-            else ""
-        )
-        parts = ['<?xml version="1.0" encoding="UTF-8" standalone="yes"?>\n'
-                 '<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main">\n'
-                 f"{dim}<sheetData>"]
+        parts = [_sheet_head(len(rows), max((len(r) for r in rows), default=0))]
         for r_idx, row in enumerate(rows, start=1):
             parts.append(f'<row r="{r_idx}">')
             for c_idx, v in enumerate(row):
@@ -569,62 +637,15 @@ def write_xlsx(
                 if cell:
                     parts.append(cell)
             parts.append("</row>\n")
-        parts.append("</sheetData>\n</worksheet>")
+        parts.append(_SHEET_TAIL)
         sheet_xmls.append("".join(parts))
 
-    n = len(sheets)
-    sheet_overrides = "\n".join(
-        f'<Override PartName="/xl/worksheets/sheet{i + 1}.xml" '
-        f'ContentType="application/vnd.openxmlformats-officedocument.spreadsheetml.worksheet+xml"/>'
-        for i in range(n)
-    )
-    wb_sheets = "".join(
-        f'<sheet name="{escape(name, {chr(34): "&quot;"})}" sheetId="{i + 1}" r:id="rId{i + 1}"/>'
-        for i, name in enumerate(sheets)
-    )
-    wb_pr = '<workbookPr date1904="1"/>' if date1904 else ""
-    workbook = (
-        '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>\n'
-        '<workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main" '
-        'xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships">'
-        f"{wb_pr}<sheets>{wb_sheets}</sheets></workbook>"
-    )
-    wb_rels_items = "".join(
-        f'<Relationship Id="rId{i + 1}" '
-        'Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/worksheet" '
-        f'Target="worksheets/sheet{i + 1}.xml"/>'
-        for i in range(n)
-    )
-    wb_rels_items += (
-        f'<Relationship Id="rId{n + 1}" '
-        'Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/styles" Target="styles.xml"/>'
-        f'<Relationship Id="rId{n + 2}" '
-        'Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/sharedStrings" Target="sharedStrings.xml"/>'
-    )
-    wb_rels = (
-        '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>\n'
-        '<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">'
-        f"{wb_rels_items}</Relationships>"
-    )
-    sst_xml = (
-        '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>\n'
-        f'<sst xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main" '
-        f'count="{len(sst)}" uniqueCount="{len(sst)}">'
-        + "".join(f"<si><t xml:space=\"preserve\">{escape(_xstring(s))}</t></si>" for s in sst)
-        + "</sst>"
-    )
-
     with zipfile.ZipFile(path, "w", zipfile.ZIP_DEFLATED) as zf:
-        zf.writestr("[Content_Types].xml", _CONTENT_TYPES.format(sheet_overrides=sheet_overrides))
-        zf.writestr("_rels/.rels", _ROOT_RELS)
-        zf.writestr("xl/workbook.xml", workbook)
-        zf.writestr("xl/_rels/workbook.xml.rels", wb_rels)
-        zf.writestr("xl/styles.xml", _STYLES)
+        _write_package_parts(zf, list(sheets), date1904)
         # The shared-strings heap writes with entry-boundary split points
         # like the incremental writer's (splitindex module doc).
         spts, n_si = _write_indexed_member(
-            zf, "xl/sharedStrings.xml",
-            iter([sst_xml.encode("utf-8")]), b"</si>", b"<si>",
+            zf, "xl/sharedStrings.xml", _sst_chunks(sst), b"</si>", b"<si>"
         )
         # Every sheet writes with split points (r11: multi-sheet workbooks
         # previously carried an index only for sheet 1 — a reader of
@@ -738,52 +759,10 @@ class IncrementalXlsxWriter:
         self._closed = True
         self._spool.flush()
 
-        sheet_overrides = (
-            '<Override PartName="/xl/worksheets/sheet1.xml" '
-            'ContentType="application/vnd.openxmlformats-officedocument.spreadsheetml.worksheet+xml"/>'
-        )
-        wb_pr = '<workbookPr date1904="1"/>' if self.date1904 else ""
-        workbook = (
-            '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>\n'
-            '<workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main" '
-            'xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships">'
-            f"{wb_pr}<sheets>"
-            f'<sheet name="{escape(self.sheet_name, {chr(34): "&quot;"})}" sheetId="1" r:id="rId1"/>'
-            "</sheets></workbook>"
-        )
-        wb_rels = (
-            '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>\n'
-            '<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">'
-            '<Relationship Id="rId1" '
-            'Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/worksheet" '
-            'Target="worksheets/sheet1.xml"/>'
-            '<Relationship Id="rId2" '
-            'Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/styles" Target="styles.xml"/>'
-            '<Relationship Id="rId3" '
-            'Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/sharedStrings" Target="sharedStrings.xml"/>'
-            "</Relationships>"
-        )
         try:
             with zipfile.ZipFile(self.path, "w", zipfile.ZIP_DEFLATED) as zf:
-                zf.writestr(
-                    "[Content_Types].xml",
-                    _CONTENT_TYPES.format(sheet_overrides=sheet_overrides),
-                )
-                zf.writestr("_rels/.rels", _ROOT_RELS)
-                zf.writestr("xl/workbook.xml", workbook)
-                zf.writestr("xl/_rels/workbook.xml.rels", wb_rels)
-                zf.writestr("xl/styles.xml", _STYLES)
-                dim = (
-                    f'<dimension ref="A1:{_col_letter(max(0, self._n_cols - 1))}'
-                    f'{max(1, self.n_rows)}"/>'
-                    if self.n_rows and self._n_cols
-                    else ""
-                )
-                head = (
-                    '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>\n'
-                    '<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main">\n'
-                    f"{dim}<sheetData>"
-                ).encode("utf-8")
+                _write_package_parts(zf, [self.sheet_name], self.date1904)
+                head = _sheet_head(self.n_rows, self._n_cols).encode("utf-8")
 
                 def _sheet_chunks():
                     yield head
@@ -795,7 +774,7 @@ class IncrementalXlsxWriter:
                             if not c:
                                 break
                             yield c
-                    yield b"</sheetData>\n</worksheet>"
+                    yield _SHEET_TAIL.encode("utf-8")
 
                 coll = None
                 if self.stats:
@@ -820,32 +799,14 @@ class IncrementalXlsxWriter:
                     _resolve_deferred_strings(
                         [coll], self._sst, expected_n=len(self._sst)
                     )
-                def _sst_chunks():
-                    yield (
-                        '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>\n'
-                        '<sst xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main" '
-                        f'count="{len(self._sst)}" uniqueCount="{len(self._sst)}">'
-                    ).encode("utf-8")
-                    batch: list[str] = []
-                    size = 0
-                    for s in self._sst:
-                        e = f'<si><t xml:space="preserve">{escape(_xstring(s))}</t></si>'
-                        batch.append(e)
-                        size += len(e)
-                        if size >= (256 << 10):
-                            yield "".join(batch).encode("utf-8")
-                            batch, size = [], 0
-                    if batch:
-                        yield "".join(batch).encode("utf-8")
-                    yield b"</sst>"
-
                 # Entry-boundary flush points in the heap too: sharded
                 # readers then inflate only the heap intervals their rows
                 # reference instead of the whole sst per task (splitindex
                 # module doc; the string-heavy partsupp witness pays ~1 s
                 # of inflate+offset-scan per shard without this).
                 spts, n_si = _write_indexed_member(
-                    zf, "xl/sharedStrings.xml", _sst_chunks(), b"</si>", b"<si>"
+                    zf, "xl/sharedStrings.xml", _sst_chunks(self._sst), b"</si>",
+                    b"<si>",
                 )
                 _publish_index(
                     zf, "xl/worksheets/sheet1.xml",

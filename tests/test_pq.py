@@ -264,7 +264,7 @@ def test_ivfpq_candidates_respect_probed_cells(emb, books):
     cell must be the query's single probed (top-scoring) cell."""
     from sheetreader_duckdb_spark.operators.similarity import (
         _centroid_table,
-        ivf_assign_join,
+        ivf_assign_carrier,
         ivf_centroids,
         ivfpq_topk,
     )
@@ -273,7 +273,7 @@ def test_ivfpq_candidates_respect_probed_cells(emb, books):
     centroids = ivf_centroids(emb, n_cells=16, n_iters=2)
     assign = {
         r["vec_id"]: r["cell"]
-        for r in ivf_assign_join(emb, centroids).collect()
+        for r in ivf_assign_carrier(emb, centroids).collect()
     }
     q = emb.filter(F.col("vec_id") < 10)
     cdf = _centroid_table(emb.sparkSession, centroids)

@@ -222,42 +222,6 @@ def test_ivf_recall_on_id_skewed_corpus(spark, sf_dir):
     assert recall >= 0.7, f"skewed-corpus IVF recall@5 = {recall:.3f}"
 
 
-def test_ivf_assign_join_matches_literal_argmax(spark, sf_dir):
-    """The broadcast-join cell assignment (large-K form, constant plan size)
-    must produce bit-identical assignments to the literal-embedded argmax —
-    same fold arithmetic, same lowest-cell tie-break — including on the
-    Lloyd-refined centroids the real index uses."""
-    e = T(spark, sf_dir, "embeddings")
-    centroids = S.ivf_centroids(e, n_cells=16, n_iters=2)
-    via_literal = {
-        (r["vec_id"], r["cell"])
-        for r in e.select(
-            "vec_id", S._argmax_cell(F.col("embedding"), centroids).alias("cell")
-        ).collect()
-    }
-    via_join = {
-        (r["vec_id"], r["cell"]) for r in S.ivf_assign_join(e, centroids).collect()
-    }
-    assert via_join == via_literal
-
-
-def test_ivf_assign_join_tie_break(spark):
-    """Duplicate centroids score identically: both forms must pick the
-    LOWEST cell id."""
-    df = spark.createDataFrame(
-        [(0, [1.0, 0.0]), (1, [0.0, 1.0])], "vec_id long, embedding array<double>"
-    )
-    cents = [[3.0, 0.5], [3.0, 0.5], [0.5, 3.0]]  # cells 0 and 1 identical
-    lit = {
-        (r["vec_id"], r["cell"])
-        for r in df.select(
-            "vec_id", S._argmax_cell(F.col("embedding"), cents).alias("cell")
-        ).collect()
-    }
-    jn = {(r["vec_id"], r["cell"]) for r in S.ivf_assign_join(df, cents).collect()}
-    assert jn == lit == {(0, 0), (1, 2)}
-
-
 def test_ivf_join_form_at_large_k_sf01(spark):
     """VERDICT r3 item 5: the join-form IVF exists precisely for large K —
     witness it there. At sf0.1 (2000 vectors) with K=256 cells:
@@ -317,8 +281,9 @@ def test_quantized_topk_at_sf01(spark):
 def test_ivf_assign_carrier_matches_both_forms(spark, sf_dir):
     """The 1-row-carrier assignment (constant plan AND amplification-free —
     the index-build hot path) must be bit-identical to the literal argmax
-    and the K-row join form on Lloyd-refined centroids, and its plan must
-    contain no shuffle (the whole point vs ivf_assign_join's max_by)."""
+    on Lloyd-refined centroids (same fold arithmetic, same lowest-cell
+    tie-break), and its plan must contain no shuffle (no max_by
+    aggregation over n·K rows)."""
     e = T(spark, sf_dir, "embeddings")
     centroids = S.ivf_centroids(e, n_cells=16, n_iters=2)
     via_literal = {
@@ -329,22 +294,27 @@ def test_ivf_assign_carrier_matches_both_forms(spark, sf_dir):
     }
     carrier_df = S.ivf_assign_carrier(e, centroids)
     via_carrier = {(r["vec_id"], r["cell"]) for r in carrier_df.collect()}
-    via_join = {
-        (r["vec_id"], r["cell"]) for r in S.ivf_assign_join(e, centroids).collect()
-    }
-    assert via_carrier == via_literal == via_join
+    assert via_carrier == via_literal
     plan = carrier_df._jdf.queryExecution().executedPlan().toString()
     assert "Exchange hashpartitioning" not in plan, plan[:1500]
     assert "HashAggregate" not in plan, plan[:1500]
 
 
 def test_ivf_assign_carrier_tie_break(spark):
+    """Duplicate centroids score identically: the carrier and the literal
+    argmax both pick the LOWEST cell id."""
     df = spark.createDataFrame(
         [(0, [1.0, 0.0]), (1, [0.0, 1.0])], "vec_id long, embedding array<double>"
     )
     cents = [[3.0, 0.5], [3.0, 0.5], [0.5, 3.0]]  # cells 0 and 1 identical
+    lit = {
+        (r["vec_id"], r["cell"])
+        for r in df.select(
+            "vec_id", S._argmax_cell(F.col("embedding"), cents).alias("cell")
+        ).collect()
+    }
     got = {(r["vec_id"], r["cell"]) for r in S.ivf_assign_carrier(df, cents).collect()}
-    assert got == {(0, 0), (1, 2)}
+    assert got == lit == {(0, 0), (1, 2)}
 
 
 def test_ivf_assign_vectorized_matches_carrier(spark, sf_dir):

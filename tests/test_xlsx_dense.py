@@ -1803,21 +1803,26 @@ def test_inline_book_reads_equal_oracle(reader_books, monkeypatch, book, threads
             _read(reader_books[book], threads=threads)
 
 
-@pytest.mark.parametrize("opt", ["coerce_to_string", "inline_strings"])
-def test_skipped_irregular_row_sends_read_to_tier3(tmp_path, monkeypatch, opt):
-    """Rows before ``skip_rows`` lie outside the dense template's proof, so
-    chunk 0 checks them as ``iter_rows`` does: an irregular one (here a
-    formula) sends every shard to tier 3. On an indexed copy the fast
-    tier would shard by interval, so the partition order shows the tier."""
-    from sheetreader_duckdb_spark.sources.xlsx.indexer import index_xlsx
-
+def _tier3_book(path):
+    """A sparse book whose chunk-0 formula sends coerce and inline reads
+    to tier 3."""
     formula = (
         '<row r="{r}"><c r="A{r}" t="s"><v>3</v></c>'
         '<c r="B{r}"><f>1+1</f><v>2</v></c></row>'
     )
-    src = _sparse_workbook(
-        str(tmp_path / "f.xlsx"), plants={1: formula, 2: _FULL_ROW, 3: _FULL_ROW}
+    return _sparse_workbook(
+        path, plants={1: formula, 2: _FULL_ROW, 3: _FULL_ROW}
     )
+
+
+@pytest.mark.parametrize("opt", ["coerce_to_string", "inline_strings"])
+def test_skipped_irregular_row_sends_read_to_tier3(tmp_path, monkeypatch, opt):
+    """Rows before ``skip_rows`` lie outside the dense template's proof, so
+    chunk 0 checks them as ``iter_rows`` does: an irregular one (here a
+    formula) sends every shard to tier 3."""
+    from sheetreader_duckdb_spark.sources.xlsx.indexer import index_xlsx
+
+    src = _tier3_book(str(tmp_path / "f.xlsx"))
     path = str(tmp_path / "f_idx.xlsx")
     assert index_xlsx(src, out_path=path)["indexed"]
     opts = {"threads": "4", "skip_rows": "3", opt: "true"}
@@ -1839,8 +1844,9 @@ def test_skipped_irregular_row_sends_read_to_tier3(tmp_path, monkeypatch, opt):
 @pytest.mark.parametrize("threads", ["1", "4"])
 def test_mixed_prefix_chunk0_drives_chunks_once(tmp_path, monkeypatch, threads):
     """A document that defeats the scan on chunk 0 enters
-    ``_drive_chunks`` once per partition (plus the schema probe's own
-    ``iter_rows``), then reads through tier 3."""
+    ``_drive_chunks`` once per partition for the fast tier (plus the
+    schema probe's own ``iter_rows``), then reads through tier 3, whose
+    sharded walk is one more drive per partition."""
     import sys
 
     p = str(tmp_path / "mixed.xlsx")
@@ -1864,8 +1870,65 @@ def test_mixed_prefix_chunk0_drives_chunks_once(tmp_path, monkeypatch, threads):
         r for part in parts for b in reader.read(part)
         for r in zip(*[c.to_pylist() for c in b.columns])
     ]
-    assert calls[0] == len(parts)
+    assert calls[0] == len(parts) * (2 if threads == "4" else 1)
     assert sorted(rows) == [(float(i), float(2 * i)) for i in range(1, n_rows + 1)]
+
+
+@pytest.mark.parametrize("skip", [0, 501, 12_001])
+def test_sharded_tier3_seeks_split_index(tmp_path, monkeypatch, skip):
+    """A sharded tier-3 walk of an indexed file seeks its intervals and
+    never streams the worksheet member; its rows equal the unindexed
+    copy's, and every shard reads some."""
+    from sheetreader_duckdb_spark.sources.xlsx import writer as W
+    from sheetreader_duckdb_spark.sources.xlsx.indexer import index_xlsx
+
+    src = _tier3_book(str(tmp_path / "t3.xlsx"))
+    idx = str(tmp_path / "t3_idx.xlsx")
+    monkeypatch.setattr(W, "SPLIT_INTERVAL", 512 << 10)  # ~12 intervals
+    assert index_xlsx(src, out_path=idx)["indexed"]
+
+    def shard_rows(path, forbid_stream):
+        out = []
+        with P.XlsxWorkbook(path) as wb:
+            sheet = wb.resolve_sheet(None, None)
+            if forbid_stream:
+                zopen = wb.zf.open
+
+                def spy(name, *a, **k):
+                    assert name != sheet.path, "worksheet streamed"
+                    return zopen(name, *a, **k)
+
+                wb.zf.open = spy
+            for s in range(4):
+                out.append(list(wb._iter_rows_expat_sharded(
+                    sheet, skip, P._chunk_bytes(4), s, 4,
+                )))
+        return out
+
+    want = shard_rows(src, False)
+    got = shard_rows(idx, True)
+    assert all(got), [len(r) for r in got]
+    flat = lambda parts: sorted(map(repr, (r for p in parts for r in p)))  # noqa: E731
+    assert flat(got) == flat(want)
+    assert len(flat(got)) == SPARSE_ROWS + 1 - skip
+
+
+def test_tier3_without_sheetdata_opener_reads_each_row_once(tmp_path):
+    """Mixed prefixes in chunk 0 and no sheetData opener: at threads 4,
+    shard 0 alone walks the whole member, so every row comes back once."""
+    import zipfile
+
+    src = str(tmp_path / "mixed.xlsx")
+    n = _mixed_prefix_xlsx(src, 40_000)  # past one 1 MB chunk
+    p = str(tmp_path / "no_opener.xlsx")
+    with zipfile.ZipFile(src) as zi, zipfile.ZipFile(p, "w", zipfile.ZIP_DEFLATED) as zo:
+        for info in zi.infolist():
+            data = zi.read(info.filename)
+            if info.filename == "xl/worksheets/sheet1.xml":
+                data = data.replace(b"<sheetData>", b"").replace(b"</sheetData>", b"")
+            zo.writestr(info.filename, data)
+    rows = _collect_mixed(p, "4")
+    assert sorted(rows) == [(float(i), float(2 * i)) for i in range(1, n + 1)]
 
 
 def test_sharded_typed_read_keeps_lazy_heap(reader_books, monkeypatch):
