@@ -6,7 +6,7 @@
 # shard 2 the ANN/similarity family (the heaviest operator suites);
 # shard 3 the rest of the operator library. Fails if any shard fails.
 # Serial fallback: `python -m pytest tests/ -q`, which runs the same
-# fast tier (pytest.ini deselects @slow): 691 passed, 3 skipped in about
+# fast tier (pytest.ini deselects @slow): 741 passed, 3 skipped in about
 # 20 min on 4 cores. Slow tier included: add `-m ""`.
 set -u
 cd "$(dirname "$0")/.."

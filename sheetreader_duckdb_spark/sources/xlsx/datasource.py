@@ -1178,10 +1178,12 @@ class SheetReaderReader(DataSourceReader):
         by one findall under any option. Off it, typed reads scan raw cell
         bytes per row (irregular chunks and rows through the expat walker,
         ``parser._fragment_rows``); coerce and inline reads take
-        ``parser._scan_chunk``. Chunk-0 shapes the scan cannot read go to
-        tier 3 (``_iter_rows_expat_sharded``), whose expat step runs on
-        ``_drive_chunks`` too, split-index seeks included. Row-shaped
-        results become Arrow through ``_rows_to_batches``.
+        ``parser._scan_chunk``. Chunk 0 is one more chunk: ``_drive_chunks``
+        hands it over past the sheetData opener, and a shard that does not
+        own it only builds the template and counts its rows. A member the
+        driver cannot cut (no sheetData opener) is walked whole by shard 0
+        (``_iter_rows_expat``). Row-shaped results become Arrow through
+        ``_rows_to_batches``.
 
         ``keep`` maps file column index → output slot (None = pruned). A
         pruned column's cells are dropped at the raw-bytes stage: no shared-
@@ -1335,17 +1337,22 @@ class SheetReaderReader(DataSourceReader):
                     batch_rows -= take
                     yield finalize(head)
 
-            def scan(work: bytes, pfx: bytes, first: bool, assigned: bool, ordinal: int):
-                """A coerce or inline read's chunk off the dense path:
-                ``iter_rows``' chunk scan, its rows into the builder."""
+            def scan(work: bytes, pfx: bytes, ordinal: int):
+                """A coerce or inline read's owned chunk off the dense
+                path: ``iter_rows``' chunk scan, its rows into the
+                builder. A chunk wholly below ``skip_rows`` is counted,
+                never scanned."""
+                if ordinal < skip_n:
+                    n = P._chunk_rows(work, pfx)
+                    if ordinal + n <= skip_n:
+                        return n
                 if batch_rows:
                     yield flush()
                 rows = P._scan_chunk(
-                    work, colmap, date_styles, first, wb.date1904,
+                    work, colmap, date_styles, wb.date1904,
                     opts.inline_strings, pfx,
                 )
-                if assigned:
-                    yield from build(rows[max(0, skip_n - ordinal):])
+                yield from build(rows[max(0, skip_n - ordinal):])
                 return len(rows)
 
             def step(work: bytes, pr, first: bool, assigned: bool, ordinal: int):
@@ -1383,22 +1390,13 @@ class SheetReaderReader(DataSourceReader):
                         yield from take_dense(dm)
                         return n
                 if rowwise and not first:
-                    return (yield from scan(work, pfx, False, assigned, ordinal))
+                    return (yield from scan(work, pfx, ordinal))
                 row_matches = pr.row_re.findall(work)
                 # Mixed-prefix chunks get the exact any-prefix count, which
-                # routes them to the fragment walk (mid-file) or tier 3
-                # (chunk 0) instead of silently dropping foreign rows.
+                # routes them to the fragment walk instead of silently
+                # dropping foreign rows.
                 n = P._chunk_rows(work, pfx)
                 if first:
-                    if len(row_matches) != n or (
-                        not row_matches and P._ANY_ROW_RE.search(work)
-                    ):
-                        # Second arm: row tags exist but the detected
-                        # prefix's scanner sees none (mixed/undetected
-                        # prefixes) — without it such documents would
-                        # silently read as EMPTY (mirrored in
-                        # parser._scan_chunk).
-                        raise P._FastPathUnsupported
                     # Template = chunk 0's last row that compiles (every
                     # shard sees chunk 0, so the compiled pattern is
                     # identical across shards).
@@ -1406,11 +1404,13 @@ class SheetReaderReader(DataSourceReader):
                         P.build_dense_row_re(b, keep, exp_codes, date_styles, pfx)
                         for b in reversed(row_matches)
                     )), None)
-                    # Dense-extract chunk 0 itself (only the owning shard
-                    # emits it): findall from the first kept row's byte
-                    # offset. A non-matching row drops to the per-row
-                    # loop below, which produces identical cells.
-                    if (assigned or rowwise) and dense and skip_n < n:
+                    if not assigned:
+                        return n
+                    # Dense-extract chunk 0 itself: findall from the first
+                    # kept row's byte offset, only when the scan saw every
+                    # row. A non-matching row drops to the paths below,
+                    # which produce identical cells.
+                    if dense and skip_n < n and len(row_matches) == n:
                         off = 0
                         if skip_n:
                             it = pr.row_count_re.finditer(work)
@@ -1419,22 +1419,12 @@ class SheetReaderReader(DataSourceReader):
                             off = next(it).start()
                         dm = dense[0].findall(work, off)
                         if len(dm) == n - skip_n:
-                            if rowwise and off:
-                                # Skipped rows: checked as iter_rows does,
-                                # so the tier (and shard plan) is its own.
-                                P._scan_chunk(
-                                    work[:off], colmap, date_styles, True,
-                                    wb.date1904, opts.inline_strings, pfx,
-                                )
-                            if assigned:
-                                yield from take_dense(dm)
+                            yield from take_dense(dm)
                             return n
                     if rowwise:
-                        return (yield from scan(work, pfx, True, assigned, ordinal))
-                if not assigned:
-                    return n
+                        return (yield from scan(work, pfx, ordinal))
                 if len(row_matches) != n:
-                    # Irregular mid-file chunk owned by this shard.
+                    # Irregular chunk owned by this shard.
                     if batch_rows:
                         yield flush()
                     rows = P._fragment_rows(work, date_styles, wb.date1904)
@@ -1506,10 +1496,10 @@ class SheetReaderReader(DataSourceReader):
                     sheet, step, shard, n_shards, skip_ivals, skip_rows=skip_n
                 )
             except P._FastPathUnsupported:
-                # Raised before any row: tier 3 reads the whole partition.
-                yield from build(wb._iter_rows_expat_sharded(
-                    sheet, skip_n, P._chunk_bytes(n_shards), shard, n_shards,
-                ))
+                # Raised before any row, alike on every shard: shard 0
+                # alone walks the whole member.
+                if shard == 0:
+                    yield from build(wb._iter_rows_expat(sheet, skip_n))
                 return
             if batch_rows:
                 yield finalize(raw_cols)

@@ -862,21 +862,19 @@ class XlsxWorkbook:
         Empty rows between data rows yield empty lists; absent cells are
         simply not present (NULL semantics, SURVEY.md §1.4).
 
-        Three tiers, fastest applicable first, one set of cell semantics
-        (the Spark answer to the reference core's specialized C++ scanner,
-        SURVEY.md §4.2):
-        1. ``_scan_chunk``'s regex scan over the ``</row>``-aligned chunks
-           of ``_drive_chunks`` — conventional attribute order (r, s, t),
-           cells with only ``<v>`` children, any single element prefix
-           (``<x:row>`` scans through per-prefix compiled patterns);
-        2. inside a chunk the regex cannot read (formulas, reordered
-           attributes, inline strings, rows under a second prefix), the
-           expat walker ``_walk_cells`` over that chunk as a fragment;
-        3. when chunk 0 defeats the regex scan (mixed prefixes, no
-           detectable opener), ``_iter_rows_expat_sharded``: the same
-           walker as the chunk step of a second ``_drive_chunks`` pass, or
-           over the whole member when sequential or when the member has
-           no sheetData opener.
+        Two paths, one set of cell semantics (the Spark answer to the
+        reference core's specialized C++ scanner, SURVEY.md §4.2):
+        1. ``_scan_chunk`` over the ``</row>``-aligned chunks of
+           ``_drive_chunks`` (chunk 0 starts past the sheetData opener):
+           a regex scan for conventional attribute order (r, s, t),
+           cells with only ``<v>`` children and any single element
+           prefix (``<x:row>`` scans through per-prefix compiled
+           patterns); a chunk the regex cannot read (formulas, reordered
+           attributes, inline strings, rows under a second prefix) goes
+           to the expat walker ``_walk_cells`` as a fragment;
+        2. when the member has no sheetData opener or no row boundary
+           within ``_MAX_ROW_BYTES``, ``_iter_rows_expat``: the same
+           walker over the whole member, on shard 0 alone.
 
         ``shard``/``n_shards``: chunk round-robin sharding. This shard
         cell-parses only its assigned chunks and row-counts the others
@@ -895,12 +893,17 @@ class XlsxWorkbook:
         colmap: dict[bytes, int] = {}
 
         def step(work, pr, first, assigned, ordinal):
+            if not assigned:
+                return _chunk_rows(work, pr.pfx)  # another shard's chunk 0
+            if ordinal < skip_rows:
+                n = _chunk_rows(work, pr.pfx)
+                if ordinal + n <= skip_rows:
+                    return n  # wholly skipped: counted, never scanned
             rows = _scan_chunk(
-                work, colmap, date_styles, first, self.date1904,
-                self.allow_inline, pr.pfx,
+                work, colmap, date_styles, self.date1904, self.allow_inline,
+                pr.pfx,
             )
-            if assigned:
-                yield from rows[max(0, skip_rows - ordinal):]
+            yield from rows[max(0, skip_rows - ordinal):]
             return len(rows)
 
         try:
@@ -908,13 +911,11 @@ class XlsxWorkbook:
                 sheet, step, shard, n_shards, skip_intervals, chunk_bytes,
                 skip_rows,
             )
-            return
         except _FastPathUnsupported:
-            pass  # raised only before the first row is yielded
-        yield from self._iter_rows_expat_sharded(
-            sheet, skip_rows, chunk_bytes or _chunk_bytes(n_shards), shard,
-            n_shards,
-        )
+            # Raised before any row, alike on every shard: shard 0 alone
+            # walks the whole member.
+            if shard == 0:
+                yield from self._iter_rows_expat(sheet, skip_rows)
 
     def _drive_chunks(
         self,
@@ -933,13 +934,20 @@ class XlsxWorkbook:
 
         ``step(work, pr, first, assigned, ordinal)`` is a generator over
         one chunk: ``pr`` is the document's ``_PrefixRes``, ``first`` marks
-        chunk 0 (scanned by EVERY shard, so the fallback decision and any
-        template built from it agree across shards), ``ordinal`` is the
-        global row ordinal at the chunk start — exact below ``skip_rows``;
-        past it, unowned chunks count 0, which skip arithmetic cannot
-        tell apart — and its ``return`` value is the chunk's parsed row
-        count. It raises ``_FastPathUnsupported`` only on chunk 0; so does
-        this method, only before the first row.
+        chunk 0 (handed to EVERY shard, so a template built from it agrees
+        across shards; a shard that does not own it only counts its
+        rows), ``ordinal`` is the global row ordinal at the chunk start —
+        exact below ``skip_rows``; past it, unowned chunks count 0, which
+        skip arithmetic cannot tell apart — and its ``return`` value is
+        the chunk's parsed row count.
+
+        Chunk 0 (the streamed one or split-index interval 0) reaches
+        ``step`` past the sheetData opener, without the XML prolog and
+        worksheet opener, so it scans and fragment-walks like any chunk;
+        ``<sheetData/>`` leaves it empty. Only this method raises
+        ``_FastPathUnsupported``, alike on every shard and before the
+        first row: the member has no sheetData opener, or no row boundary
+        within ``_MAX_ROW_BYTES``.
 
         Acquisition: with a split index in the archive comment and either
         several shards or intervals to prune, each shard seeks and
@@ -959,6 +967,14 @@ class XlsxWorkbook:
             first = chunk_idx == 0
             assigned = chunk_idx % n_shards == shard
             chunk_idx += 1
+            if first:
+                # Past the opener: the XML prolog and worksheet opener would
+                # break a fragment walk. <sheetData/> holds no rows.
+                m = _SHEETDATA_OPEN_RE.search(work)
+                if m is None:
+                    raise _FastPathUnsupported  # no sheetData opener
+                end = m.end()
+                work = b"" if work[end - 2 : end] == b"/>" else work[end:]
             if assigned or first:
                 n = yield from step(work, pr, first, assigned, ordinal)
             else:
@@ -1027,64 +1043,13 @@ class XlsxWorkbook:
                     work, buf = buf[:end], buf[end:]
                 else:
                     if pr is None:
-                        # Tiny sheet fully buffered before detection, or
-                        # no opener at all: no rows under any prefix.
-                        pr = prefix_res(detect_row_prefix(buf) or b"")
+                        raise _FastPathUnsupported  # no opener
                     work, buf = buf, b""
                 yield from run(work)
                 if not data:
                     return
 
-    # -- tier 3: the expat walker as a step of _drive_chunks --------------
-    def _iter_rows_expat_sharded(
-        self,
-        sheet: SheetInfo,
-        skip_rows: int = 0,
-        chunk_bytes: int = 4 << 20,
-        shard: int = 0,
-        n_shards: int = 1,
-    ) -> Iterator[list[tuple[int, int, object]]]:
-        """Tier 3 for the documents that defeat the regex scan (mixed or
-        undetectable prefixes). Sharded reads run ``_drive_chunks`` (split-
-        index seeks with their row-count check, or the ``</row>``-cut
-        stream) with an expat step: owned chunks walk as wrapped fragments
-        (``_fragment_rows``), the others row-count under any prefix. Every
-        shard strips chunk 0's preamble (XML prolog and worksheet opener,
-        illegal inside the wrapper) through the sheetData opener, so all
-        shards decide alike: ``<sheetData/>`` holds no rows, and no opener
-        sends shard 0 to the whole-member walk. Sequential reads walk the
-        whole member."""
-        if n_shards <= 1:
-            yield from self._iter_rows_expat(sheet, skip_rows)
-            return
-        date_styles = self.date_styles
-
-        def step(work, pr, first, assigned, ordinal):
-            if first:
-                m = _SHEETDATA_OPEN_RE.search(work)
-                if m is None:
-                    raise _FastPathUnsupported
-                if work[m.end() - 2 : m.end()] == b"/>":
-                    return 0  # <sheetData/>: an empty sheet
-                work = work[m.end():]
-            if not assigned:
-                return _chunk_rows(work, pr.pfx)
-            rows = _fragment_rows(work, date_styles, self.date1904, self.allow_inline)
-            yield from rows[max(0, skip_rows - ordinal):]
-            return len(rows)
-
-        try:
-            yield from self._drive_chunks(
-                sheet, step, shard, n_shards, chunk_bytes=chunk_bytes,
-                skip_rows=skip_rows,
-            )
-        except _FastPathUnsupported:
-            # Raised before any row, alike on every shard: shard 0 alone
-            # walks the whole member.
-            if shard == 0:
-                yield from self._iter_rows_expat(sheet, skip_rows)
-
-    # -- tier 3 sequential: the expat walker streaming the whole member -----
+    # -- the fallback: the expat walker streaming the whole member ---------
     def _iter_rows_expat(self, sheet: SheetInfo, skip_rows: int = 0) -> Iterator[list[tuple[int, int, object]]]:
         with self.zf.open(sheet.path) as f:
             yield from itertools.islice(
@@ -1094,7 +1059,8 @@ class XlsxWorkbook:
 
 
 class _FastPathUnsupported(Exception):
-    """Document shape defeats the regex scanner (detected before any output)."""
+    """The worksheet has no sheetData opener, or no row boundary within
+    ``_MAX_ROW_BYTES`` of its start (``_drive_chunks``, before any row)."""
 
 
 _DIMENSION_RE = re.compile(
@@ -1207,14 +1173,10 @@ def prefix_res(pfx: bytes) -> _PrefixRes:
     return r
 
 
-# Any row-shaped opener under ANY prefix — the zero-match guard that sends
-# chunk 0 to the whole-file expat walk when the detected prefix's scanner
-# sees no rows but row tags exist (mixed/undetected prefixes; previously
-# such documents could silently read as EMPTY — r9). Canonical home is
-# rowstream (r12 counter consolidation); re-imported here because every
-# scan tier and the indexer reference it through this module.
+# The mixed-prefix row counters live in rowstream (r12 counter
+# consolidation); re-imported here because every scan tier and the
+# indexer reference them through this module.
 from .rowstream import (  # noqa: E402  (grouped with its siblings below)
-    _ANY_ROW_RE,
     MixedAwareRowCounter,
     count_any_row_starts,
     foreign_row_evidence,
@@ -1347,48 +1309,26 @@ def _scan_chunk(
     work: bytes,
     colmap: dict[bytes, int],
     date_styles: frozenset[int],
-    first_chunk: bool,
     date1904: bool = False,
     allow_inline: bool = False,
     pfx: bytes = b"",
 ) -> list[list[tuple[int, int, object]]]:
     """Parse one `</row>`-aligned chunk into rows of (col, ctype, value).
 
-    Regex fast path with a per-chunk expat fragment fallback; on the first
-    chunk an unscannable shape raises _FastPathUnsupported instead (the
-    caller restarts on tier 3). ``pfx`` is the document's detected
-    element prefix: prefixed worksheets scan through per-prefix compiled
-    patterns."""
+    Regex fast path with a per-chunk expat fragment fallback. ``pfx`` is
+    the document's detected element prefix: prefixed worksheets scan
+    through per-prefix compiled patterns."""
     pr = prefix_res(pfx)
     row_matches = pr.row_re.findall(work)
-    if first_chunk and not row_matches and _ANY_ROW_RE.search(work):
-        # Row tags exist but the detected prefix's scanner sees none
-        # (mixed or undetected prefixes): defeat to the namespace-
-        # insensitive expat walk rather than silently reading the
-        # document as EMPTY (r9; generalized for prefix support in r10).
-        # A false positive (a row-shaped marker inside an inline string)
-        # only costs the expat parse — results are identical either way.
-        raise _FastPathUnsupported
-    # Rows under ANOTHER prefix make the exact any-prefix count
-    # disagree with the matches, routing the chunk to the fragment walk
-    # (mid-file) or the sharded tier-3 walk (chunk 0) — never a silent drop.
+    # Rows under ANOTHER prefix make the exact any-prefix count disagree
+    # with the matches (also when the detected prefix's scanner sees none),
+    # routing the chunk to the fragment walk — never a silent drop.
     if len(row_matches) != _chunk_rows(work, pfx):
-        if first_chunk:
-            raise _FastPathUnsupported
         return _fragment_rows(work, date_styles, date1904, allow_inline)
     rows: list[list[tuple[int, int, object]]] = []
     for body in row_matches:
         cell_matches = pr.cell_re.findall(body)
         if len(cell_matches) != len(pr.cell_count_re.findall(body)):
-            if first_chunk:
-                # Chunk 0 carries the XML prolog + <worksheet> opener —
-                # handing it to the fragment parser fails on the
-                # declaration-not-at-start. Nothing from this chunk has
-                # been yielded yet, so defeating to the whole-file expat
-                # walk is lossless (r9; previously only an irregular
-                # FIRST ROW took this branch and a later irregular row
-                # in chunk 0 crashed the fragment parse).
-                raise _FastPathUnsupported
             return _fragment_rows(work, date_styles, date1904, allow_inline)
         cells: list[tuple[int, int, object]] = []
         for letters, s_attr, t_attr, v in cell_matches:

@@ -35,8 +35,7 @@ from __future__ import annotations
 
 import re
 
-# Any row-shaped opener under ANY element prefix — shared by the scan
-# tiers' zero-match guard (parser re-exports it) and the exact any-prefix
+# Any row-shaped opener under ANY element prefix: the exact any-prefix
 # counters here. The one other worksheet element the pattern's ``<…row``
 # stem could collide with (``<rowBreaks``) is excluded by the terminator
 # class.

@@ -106,7 +106,7 @@ def test_truth_rule_agrees_across_tiers_and_author(tmp_path):
     path = _workbook(str(tmp_path / "bools.xlsx"), rows)
     with P.XlsxWorkbook(path) as wb:
         expat = _values(wb._iter_rows_expat(wb.resolve_sheet(None, None)))
-    scan = _values(P._scan_chunk(rows, {}, frozenset(), first_chunk=False))
+    scan = _values(P._scan_chunk(rows, {}, frozenset()))
     fragment = _values(P._fragment_rows(rows, frozenset()))
     columnar = _read(path, StructType([StructField("f", BooleanType())]))
     author = []
@@ -129,7 +129,7 @@ def test_scan_chunk_rejects_non_utf8_boolean_payload():
     # Used to decode with errors="replace" and return False, while the
     # fragment parser and the columnar path raise on the same bytes.
     with pytest.raises(ValueError, match="malformed sheet XML"):
-        P._scan_chunk(BAD, {}, frozenset(), first_chunk=False)
+        P._scan_chunk(BAD, {}, frozenset())
     with pytest.raises(ValueError):
         P._fragment_rows(BAD, frozenset())
 

@@ -21,6 +21,7 @@ from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 from sheetreader_duckdb_spark.sources.xlsx import datasource as DS
 from sheetreader_duckdb_spark.sources.xlsx import parser as P
+from sheetreader_duckdb_spark.sources.xlsx import splitindex as SI
 from sheetreader_duckdb_spark.sources.xlsx.writer import IncrementalXlsxWriter
 
 N_ROWS = 60_000  # ~7 MB of sheet XML -> 2-3 chunks at the 4 MB chunk size
@@ -1160,12 +1161,14 @@ def test_mixed_prefix_rows_not_dropped(tmp_path):
     assert sorted(got) == [(float(i), float(2 * i)) for i in range(1, n + 1)]
 
 
-def test_mixed_prefix_sharded_equals_single_tier3(tmp_path):
-    """Mixed rows IN CHUNK 0 defeat the fast tiers -> the r11 SHARDED
-    tier-3 walk: every shard yields rows (not just shard 0), union equals
-    the single-thread read."""
+def test_mixed_prefix_sharded_equals_single_tier3(tmp_path, monkeypatch):
+    """Mixed rows IN CHUNK 0 defeat the regex scan: chunk 0 goes to the
+    fragment walk like any chunk, so every shard yields rows (not just
+    shard 0), no shard walks the whole member, and the union equals the
+    single-thread read."""
     p = str(tmp_path / "mixed_t3.xlsx")
     n = _mixed_prefix_xlsx(p, 4000)
+    walks = _whole_member_walks(monkeypatch)
     single = sorted(_collect_mixed(p, "1"))
     sharded = sorted(_collect_mixed(p, "4"))
     assert len(single) == n
@@ -1182,6 +1185,7 @@ def test_mixed_prefix_sharded_equals_single_tier3(tmp_path):
             )
     assert all(c > 0 for c in per_shard), per_shard
     assert sum(per_shard) == n
+    assert walks() == 0
 
 
 def test_mixed_prefix_midfile_stays_on_fast_tier_with_fragments(tmp_path):
@@ -1417,7 +1421,9 @@ _SPARSE_STRINGS = [*"ABCDEF", *(f"w{j} &amp; {j % 7}" for j in range(50))]
 _NS = "http://schemas.openxmlformats.org/spreadsheetml/2006/main"
 
 
-def _sparse_workbook(path, plants=None, trailing_gap=False, n_rows=SPARSE_ROWS):
+def _sparse_workbook(
+    path, plants=None, trailing_gap=False, n_rows=SPARSE_ROWS, ascending_e=False
+):
     """A header row and ``n_rows`` data rows of columns A (t="s"),
     B (number), C (date style), D (t="b"), E (number), F (t="s"). Past
     the two rows the schema probe reads, each
@@ -1425,7 +1431,9 @@ def _sparse_workbook(path, plants=None, trailing_gap=False, n_rows=SPARSE_ROWS):
     every 2,500th row is an empty ``<row r="n"></row>``. ``plants`` maps
     a data row index to replacement row XML (``{r}`` = row number);
     ``trailing_gap`` drops F from every row past the probe rows, so the
-    last row of chunk 0 cannot serve as the template."""
+    last row of chunk 0 cannot serve as the template. ``ascending_e``
+    writes the data row index into E, so interval statistics can prune a
+    range filter on it."""
     import random
     import zipfile
 
@@ -1446,7 +1454,7 @@ def _sparse_workbook(path, plants=None, trailing_gap=False, n_rows=SPARSE_ROWS):
             "B": f"><v>{rng.randrange(1000)}.5</v>",
             "C": f' s="1"><v>{34700 + rng.randrange(2500)}</v>',
             "D": f' t="b"><v>{rng.randrange(2)}</v>',
-            "E": f"><v>{rng.randrange(10**6) / 4}</v>",
+            "E": f"><v>{i if ascending_e else rng.randrange(10**6) / 4}</v>",
             "F": f' t="s"><v>{6 + rng.randrange(50)}</v>',
         }
         absent = {c for c in cells if rng.random() < 0.05}
@@ -1534,25 +1542,19 @@ def _read(path, **opts):
     return rows, batches
 
 
-def _oracle(path, **opts):
-    """Rows of a schema-inferring read, by a path independent of the
-    reader's chunk step: ``XlsxWorkbook.iter_rows`` per partition (the
-    reader's own shard plan, so row order is exact) and the per-cell
-    dispatch below (NULL on type mismatch; under ``coerce_to_string`` a
-    VARCHAR cell formats numbers ``%.6f``, booleans TRUE/FALSE and dates
-    ISO)."""
+def _decode(reader, cols, rows, heap):
+    """Parser rows of (col, ctype, value) cells as the read's tuples, by
+    a per-cell dispatch independent of the reader's: NULL on type
+    mismatch; under ``coerce_to_string`` a VARCHAR cell formats numbers
+    ``%.6f``, booleans TRUE/FALSE and dates ISO. ``cols`` maps each
+    output column to its file column."""
     import datetime as dt
 
-    opts = {"path": path, "batch_size": str(SPARSE_BATCH), **opts}
-    src = DS.SheetReaderDataSource(opts)
-    schema = src.schema()
-    reader = src.reader(schema)
     o = reader.opts
-    names = [f.name for f in schema.fields]
     day = lambda secs: dt.date(1970, 1, 1) + dt.timedelta(days=int(secs / 86400.0))  # noqa: E731
     typed = {"DOUBLE": P.T_NUMERIC, "BOOLEAN": P.T_BOOLEAN, "DATE": P.T_DATE}
 
-    def cell(sql, ctype, val, heap):
+    def cell(sql, ctype, val):
         if sql == "VARCHAR":
             if ctype == P.T_STRING_REF:
                 return heap[val]
@@ -1569,6 +1571,27 @@ def _oracle(path, **opts):
             return None
         return day(val) if sql == "DATE" else val
 
+    out = []
+    for cells in rows:
+        by_col = {c: (t, v) for c, t, v in cells}
+        out.append(tuple(
+            cell(sql, *by_col.get(c, (P.T_NONE, None)))
+            for sql, c in zip(reader.col_types, cols)
+        ))
+    return out
+
+
+def _oracle(path, **opts):
+    """Rows of a schema-inferring read, by a path independent of the
+    reader's chunk step: ``XlsxWorkbook.iter_rows`` per partition (the
+    reader's own shard plan, so row order is exact) and ``_decode``'s
+    cell rule."""
+    opts = {"path": path, "batch_size": str(SPARSE_BATCH), **opts}
+    src = DS.SheetReaderDataSource(opts)
+    schema = src.schema()
+    reader = src.reader(schema)
+    o = reader.opts
+    names = [f.name for f in schema.fields]
     rows = []
     for part in reader.partitions():
         for path in part.paths:
@@ -1576,16 +1599,30 @@ def _oracle(path, **opts):
             cols = [fs.names.index(n) for n in names]
             with P.XlsxWorkbook(path, allow_inline=o.inline_strings) as wb:
                 sheet = wb.resolve_sheet(o.sheet_name, o.sheet_index)
-                for cells in wb.iter_rows(
+                rows += _decode(reader, cols, wb.iter_rows(
                     sheet, skip_rows=fs.skip_rows,
                     shard=part.shard, n_shards=part.n_shards,
-                ):
-                    by_col = {c: (t, v) for c, t, v in cells}
-                    rows.append(tuple(
-                        cell(sql, *by_col.get(c, (P.T_NONE, None)), wb.shared_strings)
-                        for sql, c in zip(reader.col_types, cols)
-                    ))
+                ), wb.shared_strings)
     return rows
+
+
+def _reference(path, **opts):
+    """Sorted rows of a schema-inferring read by the whole-member expat
+    walk (``XlsxWorkbook._iter_rows_expat``: no chunk driver, no
+    ``_scan_chunk``) and ``_decode``'s cell rule."""
+    src = DS.SheetReaderDataSource({"path": path, **opts})
+    schema = src.schema()
+    reader = src.reader(schema)
+    o = reader.opts
+    names = [f.name for f in schema.fields]
+    fs = DS._infer_or_declared(path, o, lambda: (names, reader.col_types))
+    with P.XlsxWorkbook(path, allow_inline=o.inline_strings) as wb:
+        sheet = wb.resolve_sheet(o.sheet_name, o.sheet_index)
+        rows = _decode(
+            reader, [fs.names.index(n) for n in names],
+            wb._iter_rows_expat(sheet, fs.skip_rows), wb.shared_strings,
+        )
+    return sorted(rows, key=repr)
 
 
 def _row_scans(monkeypatch, pfx=b""):
@@ -1677,9 +1714,11 @@ def test_sparse_cell_past_template_still_raises(sparse_books, threads):
 
 # -- One partition reader ----------------------------------------------------
 # Coerce and inline reads go through the same chunk step as typed reads:
-# the dense template on regular chunks, ``parser._scan_chunk`` off it, and
-# tier 3 (``_iter_rows_expat_sharded``) when chunk 0 defeats the scan.
-# Every row-shaped result becomes Arrow through one builder.
+# the dense template on regular chunks and ``parser._scan_chunk`` off it,
+# chunk 0 included (``_drive_chunks`` hands it over past the sheetData
+# opener). Only a member with no sheetData opener is walked whole
+# (``_iter_rows_expat``, shard 0). Every row-shaped result becomes Arrow
+# through one builder.
 
 _FULL_ROW = (
     '<row r="{r}"><c r="A{r}" t="s"><v>6</v></c><c r="B{r}"><v>1.5</v></c>'
@@ -1744,13 +1783,16 @@ def reader_books(tmp_path_factory):
 
 
 def _chunk_scans(monkeypatch):
-    """Count ``parser._scan_chunk`` calls past chunk 0."""
+    """Count the partition reader's ``parser._scan_chunk`` calls (the
+    schema probe's ``iter_rows`` scans chunk 0 from the parser)."""
+    import sys
+
     n = [0]
     scan = P._scan_chunk
 
-    def counting(work, colmap, date_styles, first_chunk, *a):
-        n[0] += not first_chunk
-        return scan(work, colmap, date_styles, first_chunk, *a)
+    def counting(*a):
+        n[0] += sys._getframe(1).f_globals["__name__"] == DS.__name__
+        return scan(*a)
 
     monkeypatch.setattr(P, "_scan_chunk", counting)
     return lambda: n[0]
@@ -1763,7 +1805,7 @@ def test_coerce_and_inline_reads_take_dense_path(
     sparse_books, monkeypatch, threads, opt, book
 ):
     """Regular chunks of coerce and inline reads stay on the dense
-    template: no ``_scan_chunk`` call past chunk 0. Chunks holding a
+    template: the reader makes no ``_scan_chunk`` call. Chunks holding a
     deviating row take ``_scan_chunk``, and both equal the oracle."""
     want = _oracle(sparse_books[book], threads=threads, **{opt: "true"})
     scans = _chunk_scans(monkeypatch)
@@ -1779,74 +1821,98 @@ def test_coerce_and_inline_reads_take_dense_path(
 @pytest.mark.parametrize("threads", ["1", "4"])
 @pytest.mark.parametrize("book", ["inline_mid", "inline_chunk0"])
 def test_inline_book_reads_equal_oracle(reader_books, monkeypatch, book, threads, skip):
-    """``t="str"`` and ``inlineStr`` cells in several chunks read through
-    ``_scan_chunk``; one more in chunk 0 sends every shard to tier 3."""
+    """``t="str"`` and ``inlineStr`` cells in several chunks, chunk 0
+    included, read through ``_scan_chunk``: no shard walks the whole
+    member."""
     want = _oracle(
         reader_books[book], threads=threads, skip_rows=skip, inline_strings="true"
     )
-    n = [0]
-    walk = P.XlsxWorkbook._iter_rows_expat_sharded
-
-    def counting(self, *a):
-        n[0] += 1
-        return walk(self, *a)
-
-    monkeypatch.setattr(P.XlsxWorkbook, "_iter_rows_expat_sharded", counting)
+    walks = _whole_member_walks(monkeypatch)
     rows, _ = _read(
         reader_books[book], threads=threads, skip_rows=skip, inline_strings="true"
     )
     assert rows == want
-    assert (n[0] > 0) is (book == "inline_chunk0")
+    assert walks() == 0
     if skip == "0":
         assert ("lit 22002 & x", 2.5, None, True, None, "inl22002") in rows
         with pytest.raises(ValueError, match="Inline & dynamic String"):
             _read(reader_books[book], threads=threads)
 
 
-def _tier3_book(path):
-    """A sparse book whose chunk-0 formula sends coerce and inline reads
-    to tier 3."""
-    formula = (
-        '<row r="{r}"><c r="A{r}" t="s"><v>3</v></c>'
-        '<c r="B{r}"><f>1+1</f><v>2</v></c></row>'
-    )
-    return _sparse_workbook(
-        path, plants={1: formula, 2: _FULL_ROW, 3: _FULL_ROW}
-    )
-
-
-@pytest.mark.parametrize("opt", ["coerce_to_string", "inline_strings"])
-def test_skipped_irregular_row_sends_read_to_tier3(tmp_path, monkeypatch, opt):
-    """Rows before ``skip_rows`` lie outside the dense template's proof, so
-    chunk 0 checks them as ``iter_rows`` does: an irregular one (here a
-    formula) sends every shard to tier 3."""
-    from sheetreader_duckdb_spark.sources.xlsx.indexer import index_xlsx
-
-    src = _tier3_book(str(tmp_path / "f.xlsx"))
-    path = str(tmp_path / "f_idx.xlsx")
-    assert index_xlsx(src, out_path=path)["indexed"]
-    opts = {"threads": "4", "skip_rows": "3", opt: "true"}
-    want = _oracle(path, **opts)
+def _whole_member_walks(monkeypatch):
+    """Count ``XlsxWorkbook._iter_rows_expat`` calls (whole-member walks)."""
     n = [0]
-    walk = P.XlsxWorkbook._iter_rows_expat_sharded
+    walk = P.XlsxWorkbook._iter_rows_expat
 
     def counting(self, *a):
         n[0] += 1
         return walk(self, *a)
 
-    monkeypatch.setattr(P.XlsxWorkbook, "_iter_rows_expat_sharded", counting)
+    monkeypatch.setattr(P.XlsxWorkbook, "_iter_rows_expat", counting)
+    return lambda: n[0]
+
+
+def _materialized_intervals(monkeypatch):
+    """Record the split-index intervals each read inflates, as
+    ``(shard, interval)`` pairs."""
+    seen = set()
+    walk = SI.iter_intervals
+
+    def spy(path, zf, entry, points, shard, *a, **k):
+        for i, work, rows_in in walk(path, zf, entry, points, shard, *a, **k):
+            if work is not None:
+                seen.add((shard, i))
+            yield i, work, rows_in
+
+    monkeypatch.setattr(SI, "iter_intervals", spy)
+    return seen
+
+
+_FORMULA_ROW = (
+    '<row r="{r}"><c r="A{r}" t="s"><v>3</v></c>'
+    '<c r="B{r}"><f>1+1</f><v>2</v></c></row>'
+)
+
+
+def _chunk0_formula_book(path, **kw):
+    """A sparse book with a formula in chunk 0 (the first data row), a
+    row the regex scan cannot read."""
+    return _sparse_workbook(
+        path, plants={1: _FORMULA_ROW, 2: _FULL_ROW, 3: _FULL_ROW}, **kw
+    )
+
+
+@pytest.mark.parametrize("opt", ["coerce_to_string", "inline_strings"])
+def test_skipped_irregular_row_sends_read_to_tier3(tmp_path, monkeypatch, opt):
+    """An irregular row before ``skip_rows`` (here a formula) is a chunk-0
+    row like any other: the read stays on ``_drive_chunks``, every
+    partition seeks its own intervals of the indexed copy, and no shard
+    walks the whole member."""
+    from sheetreader_duckdb_spark.sources.xlsx import writer as W
+    from sheetreader_duckdb_spark.sources.xlsx.indexer import index_xlsx
+
+    src = _chunk0_formula_book(str(tmp_path / "f.xlsx"))
+    path = str(tmp_path / "f_idx.xlsx")
+    monkeypatch.setattr(W, "SPLIT_INTERVAL", 512 << 10)  # ~12 intervals
+    assert index_xlsx(src, out_path=path)["indexed"]
+    opts = {"threads": "4", "skip_rows": "3", opt: "true"}
+    want = _oracle(path, **opts)
+    walks = _whole_member_walks(monkeypatch)
+    seen = _materialized_intervals(monkeypatch)
     rows, _ = _read(path, **opts)
     assert rows == want
-    # the schema probe, then each of the four partitions' probe and read
-    assert n[0] == 1 + 4 + 4
+    assert walks() == 0
+    # every shard inflates interval 0 and only its own others
+    assert {s for s, _ in seen} == {0, 1, 2, 3}
+    assert all(i == 0 or i % 4 == s for s, i in seen)
 
 
 @pytest.mark.parametrize("threads", ["1", "4"])
 def test_mixed_prefix_chunk0_drives_chunks_once(tmp_path, monkeypatch, threads):
-    """A document that defeats the scan on chunk 0 enters
-    ``_drive_chunks`` once per partition for the fast tier (plus the
-    schema probe's own ``iter_rows``), then reads through tier 3, whose
-    sharded walk is one more drive per partition."""
+    """Mixed prefixes in chunk 0 read through the fragment walk of the
+    one chunk driver: the reader enters ``_drive_chunks`` once per
+    partition (the schema probe's own ``iter_rows`` drives from the
+    parser)."""
     import sys
 
     p = str(tmp_path / "mixed.xlsx")
@@ -1870,19 +1936,19 @@ def test_mixed_prefix_chunk0_drives_chunks_once(tmp_path, monkeypatch, threads):
         r for part in parts for b in reader.read(part)
         for r in zip(*[c.to_pylist() for c in b.columns])
     ]
-    assert calls[0] == len(parts) * (2 if threads == "4" else 1)
+    assert calls[0] == len(parts)
     assert sorted(rows) == [(float(i), float(2 * i)) for i in range(1, n_rows + 1)]
 
 
 @pytest.mark.parametrize("skip", [0, 501, 12_001])
 def test_sharded_tier3_seeks_split_index(tmp_path, monkeypatch, skip):
-    """A sharded tier-3 walk of an indexed file seeks its intervals and
-    never streams the worksheet member; its rows equal the unindexed
-    copy's, and every shard reads some."""
+    """A sharded ``iter_rows`` of an indexed file whose chunk 0 holds a
+    formula seeks its intervals and never streams the worksheet member;
+    its rows equal the unindexed copy's, and every shard reads some."""
     from sheetreader_duckdb_spark.sources.xlsx import writer as W
     from sheetreader_duckdb_spark.sources.xlsx.indexer import index_xlsx
 
-    src = _tier3_book(str(tmp_path / "t3.xlsx"))
+    src = _chunk0_formula_book(str(tmp_path / "t3.xlsx"))
     idx = str(tmp_path / "t3_idx.xlsx")
     monkeypatch.setattr(W, "SPLIT_INTERVAL", 512 << 10)  # ~12 intervals
     assert index_xlsx(src, out_path=idx)["indexed"]
@@ -1900,8 +1966,8 @@ def test_sharded_tier3_seeks_split_index(tmp_path, monkeypatch, skip):
 
                 wb.zf.open = spy
             for s in range(4):
-                out.append(list(wb._iter_rows_expat_sharded(
-                    sheet, skip, P._chunk_bytes(4), s, 4,
+                out.append(list(wb.iter_rows(
+                    sheet, skip_rows=skip, shard=s, n_shards=4,
                 )))
         return out
 
@@ -1916,19 +1982,185 @@ def test_sharded_tier3_seeks_split_index(tmp_path, monkeypatch, skip):
 def test_tier3_without_sheetdata_opener_reads_each_row_once(tmp_path):
     """Mixed prefixes in chunk 0 and no sheetData opener: at threads 4,
     shard 0 alone walks the whole member, so every row comes back once."""
-    import zipfile
-
     src = str(tmp_path / "mixed.xlsx")
     n = _mixed_prefix_xlsx(src, 40_000)  # past one 1 MB chunk
-    p = str(tmp_path / "no_opener.xlsx")
-    with zipfile.ZipFile(src) as zi, zipfile.ZipFile(p, "w", zipfile.ZIP_DEFLATED) as zo:
+    p = _rewrite_sheet(
+        src, str(tmp_path / "no_opener.xlsx"),
+        lambda b: b.replace(b"<sheetData>", b"").replace(b"</sheetData>", b""),
+    )
+    rows = _collect_mixed(p, "4")
+    assert sorted(rows) == [(float(i), float(2 * i)) for i in range(1, n + 1)]
+
+
+def test_chunks_below_skip_rows_are_not_scanned(reader_books, monkeypatch):
+    """A chunk that lies wholly below ``skip_rows`` is row-counted, never
+    scanned: not by the schema probes (``iter_rows``) and not by the
+    reader's coerce and inline scan."""
+    import sys
+
+    path = reader_books["inline_mid"]
+    scan = P._scan_chunk
+    for threads in ("1", "4"):
+        opts = {"threads": threads, "skip_rows": "45001", "inline_strings": "true"}
+        want = _oracle(path, **opts)
+        scanned = []
+
+        def spy(work, colmap, date_styles, date1904, allow_inline, pfx):
+            ordinal = sys._getframe(1).f_locals["ordinal"]
+            scanned.append((ordinal, P._chunk_rows(work, pfx)))
+            return scan(work, colmap, date_styles, date1904, allow_inline, pfx)
+
+        monkeypatch.setattr(P, "_scan_chunk", spy)
+        rows, _ = _read(path, **opts)
+        monkeypatch.setattr(P, "_scan_chunk", scan)
+        assert rows == want
+        assert scanned
+        assert all(ordinal + n > 45_001 for ordinal, n in scanned), scanned
+
+
+def test_chunk0_formula_read_takes_filter_interval_skips(tmp_path, monkeypatch):
+    """A filtered read of an indexed book with a formula in chunk 0
+    inflates the same intervals under ``inline_strings`` as a typed read
+    (the filter's interval skips apply to both), and returns the same
+    rows: exactly the matching rows of an unfiltered read."""
+    import zipfile
+
+    from pyspark.sql.datasource import GreaterThanOrEqual, LessThanOrEqual
+
+    from sheetreader_duckdb_spark.sources.xlsx import writer as W
+    from sheetreader_duckdb_spark.sources.xlsx.indexer import index_xlsx
+
+    src = _chunk0_formula_book(str(tmp_path / "e.xlsx"), ascending_e=True)
+    path = str(tmp_path / "e_idx.xlsx")
+    monkeypatch.setattr(W, "SPLIT_INTERVAL", 512 << 10)  # ~12 intervals
+    assert index_xlsx(src, out_path=path)["indexed"]
+    lo, hi = 10_000.0, 10_500.0  # E BETWEEN 10000 AND 10500
+    seen = _materialized_intervals(monkeypatch)
+
+    def read(**opts):
+        seen.clear()
+        ds = DS.SheetReaderDataSource(
+            {"path": path, "threads": "4", "filter_pushdown": "true", **opts}
+        )
+        reader = ds.reader(ds.schema())
+        assert reader.pushFilters([
+            GreaterThanOrEqual(("E",), lo), LessThanOrEqual(("E",), hi),
+        ]) == []
+        rows = [
+            r for part in reader.partitions() for b in reader.read(part)
+            for r in zip(*[c.to_pylist() for c in b.columns])
+        ]
+        return sorted(rows, key=repr), set(seen)
+
+    typed, typed_seen = read()
+    inline, inline_seen = read(inline_strings="true")
+    everything, _ = _read(path, threads="4")
+    with zipfile.ZipFile(path) as zf:
+        n_intervals = len(SI.decode_split_index(zf, "xl/worksheets/sheet1.xml"))
+    assert inline_seen == typed_seen
+    assert inline == typed
+    assert typed == sorted(
+        (r for r in everything if r[4] is not None and lo <= r[4] <= hi), key=repr
+    )
+    assert len(typed) > 400
+    assert len({i for _, i in typed_seen}) < n_intervals, typed_seen
+
+
+_BOOK_ROWS = {500: _FULL_ROW, 501: _FULL_ROW}  # the probe rows at skip 501
+_MIXED_ROW = (
+    '<x:row r="{r}"><x:c r="A{r}" t="s"><x:v>10</x:v></x:c>'
+    '<x:c r="F{r}" t="s"><x:v>11</x:v></x:c></x:row>'
+)
+
+
+def _rewrite_sheet(src, dst, fn):
+    """``src`` with its worksheet member's bytes passed through ``fn``."""
+    import zipfile
+
+    with zipfile.ZipFile(src) as zi, zipfile.ZipFile(dst, "w", zipfile.ZIP_DEFLATED) as zo:
         for info in zi.infolist():
             data = zi.read(info.filename)
             if info.filename == "xl/worksheets/sheet1.xml":
-                data = data.replace(b"<sheetData>", b"").replace(b"</sheetData>", b"")
+                data = fn(data)
             zo.writestr(info.filename, data)
-    rows = _collect_mixed(p, "4")
-    assert sorted(rows) == [(float(i), float(2 * i)) for i in range(1, n + 1)]
+    return dst
+
+
+_CHUNK0_BOOK_ROWS = 12_000  # ~2.4 MB of sheet XML: 3 chunks at 1 MB
+
+
+@pytest.fixture(scope="module")
+def chunk0_books(tmp_path_factory):
+    """Books whose chunk 0 holds a row the regex scan cannot read, in the
+    skipped rows at skip 501 and past them; and one with no sheetData
+    opener."""
+    d = tmp_path_factory.mktemp("chunk0")
+
+    def book(name, plants):
+        return _sparse_workbook(
+            str(d / name), plants={**_BOOK_ROWS, **plants},
+            n_rows=_CHUNK0_BOOK_ROWS,
+        )
+
+    formula = book("formula.xlsx", {300: _FORMULA_ROW, 600: _FORMULA_ROW})
+    mixed = book("mixed_src.xlsx", {300: _MIXED_ROW, 600: _MIXED_ROW})
+    return {
+        "formula": formula,
+        # past the skip only: the reference walk parses skipped rows too
+        "inline": book("inline.xlsx", {600: _INLINE_ROW}),
+        "mixed": _rewrite_sheet(
+            mixed, str(d / "mixed.xlsx"),
+            lambda b: b.replace(b"<worksheet ", b'<worksheet xmlns:x="%s" ' % _NS.encode(), 1),
+        ),
+        "no_opener": _rewrite_sheet(
+            formula, str(d / "no_opener.xlsx"),
+            lambda b: b.replace(b"<sheetData>", b"").replace(b"</sheetData>", b""),
+        ),
+    }
+
+
+def _outcome(fn):
+    """``fn()``'s sorted rows, or the message of the ValueError it raises."""
+    try:
+        return sorted(fn(), key=repr)
+    except ValueError as e:
+        return str(e)
+
+
+@pytest.fixture(scope="module")
+def chunk0_reference(chunk0_books):
+    """The whole-member walk's outcome per book and options, computed
+    once: it does not depend on the thread count."""
+    cache = {}
+
+    def outcome(book, **opts):
+        key = (book, tuple(sorted(opts.items())))
+        if key not in cache:
+            cache[key] = _outcome(lambda: _reference(chunk0_books[book], **opts))
+        return cache[key]
+
+    return outcome
+
+
+@pytest.mark.parametrize("skip", ["0", "501"])
+@pytest.mark.parametrize("threads", ["1", "4"])
+@pytest.mark.parametrize("opt", ["typed", "coerce_to_string", "inline_strings"])
+@pytest.mark.parametrize("book", ["formula", "inline", "mixed", "no_opener"])
+def test_chunk0_irregular_reads_equal_whole_member_walk(
+    chunk0_books, chunk0_reference, book, opt, threads, skip
+):
+    """``_oracle`` shares ``_scan_chunk`` with the reader, so this
+    differential reads against the whole-member expat walk instead: every
+    read of a chunk-0-irregular book returns its rows (or raises its
+    error)."""
+    opts = {"skip_rows": skip} if opt == "typed" else {"skip_rows": skip, opt: "true"}
+    want = chunk0_reference(book, **opts)
+    got = _outcome(lambda: _read(chunk0_books[book], threads=threads, **opts)[0])
+    assert got == want
+    if book == "inline" and opt != "inline_strings":
+        assert "Inline & dynamic String" in got
+    else:
+        assert len(got) > _CHUNK0_BOOK_ROWS - 600
 
 
 def test_sharded_typed_read_keeps_lazy_heap(reader_books, monkeypatch):
