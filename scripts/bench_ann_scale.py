@@ -43,7 +43,7 @@ TRAIN_FRACTION = (
     if os.environ.get("ANN_TRAIN_FRACTION")
     else None
 )
-# 'carrier' (expression form), 'vectorized' (Arrow GEMM), or 'auto'
+# 'carrier' (expression form), 'gemm' (Arrow BLAS form), or 'auto'
 # (r8 production defaults: size-resolved strategies + capped training —
 # build_* called with NO knobs beyond n_cells).
 ASSIGN = os.environ.get("ANN_ASSIGN", "carrier")
@@ -141,7 +141,7 @@ def main() -> int:
         build_ivfpq_index(
             corpus, ivfpq_path, n_cells=N_CELLS, n_iters=2,
             train_fraction=TRAIN_FRACTION, assign=ASSIGN,
-            encode="vectorized" if ASSIGN == "vectorized" else "join",
+            encode="gemm" if ASSIGN == "gemm" else "join",
         )
     ivfpq_build = round(time.perf_counter() - t0, 3)
 

@@ -138,7 +138,7 @@ schema = StructType([
     StructField("price", DoubleType()), StructField("key", StringType()),
 ])
 reader = DS.SheetReaderReader({{"path": {path!r}}}, schema)
-part = DS._SheetPartition({path!r}, shard=0, n_shards={n_shards}, filters=())
+part = DS._SheetPartition(({path!r},), shard=0, n_shards={n_shards}, filters=())
 rows = 0
 for batch in reader.read(part):
     rows += batch.num_rows

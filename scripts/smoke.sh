@@ -6,15 +6,16 @@
 # shard 2 the ANN/similarity family (the heaviest operator suites);
 # shard 3 the rest of the operator library. Fails if any shard fails.
 # Serial fallback: `python -m pytest tests/ -q`, which runs the same
-# fast tier (pytest.ini deselects @slow): 741 passed, 3 skipped in about
-# 20 min on 4 cores. Slow tier included: add `-m ""`.
+# fast tier (pytest.ini deselects @slow): 764 passed, 3 skipped in about
+# 15 min on 4 cores. Slow tier included: add `-m ""`.
 set -u
 cd "$(dirname "$0")/.."
 
 SHARD1=(tests/test_queries_oracle.py tests/test_xlsx_*.py)
 SHARD2=(tests/test_similarity.py tests/test_pq.py
         tests/test_ivf_index.py tests/test_ivfpq_index.py
-        tests/test_semantic_dedup.py)
+        tests/test_semantic_dedup.py tests/test_gemm_score.py
+        tests/test_auto_select.py)
 
 IGNORES=()
 for f in "${SHARD1[@]}" "${SHARD2[@]}"; do IGNORES+=("--ignore=$f"); done

@@ -25,21 +25,24 @@ from pyspark.sql.functions import broadcast
 
 
 # -- 'auto' strategy resolution ---------------------------------------------
-# Every compute-bound family here has two bit-identical forms: an
-# interpreted expression fold (~dim lambda steps per scoring cell — a
-# row×centroid, row×query, or same-cell pair) and an Arrow/GEMM form that
-# replays the identical IEEE arithmetic at vectorized rates. Measured
-# crossovers (BENCHNOTES round 7): at 20M cells the int8 coarse pass took
-# 170.3 s expression vs 4.82 s vectorized; IVF assignment 182 s at 25.6M;
-# SemDeDup cell scoring DNF'd (>10 min) at 20M pair-cells where the GEMM
-# form took 136 s. Below ~1M cells the expression forms win on fixed cost
-# (no driver collect / broadcast / Arrow worker spin-up, typically ~1-2 s)
-# and are the declared oracle-witness plan shapes — so 'auto', the default
-# on every entry point, picks the expression form under the threshold and
-# the vectorized form at or above it. The vectorized forms assume NaN-free
-# embeddings (zero-norm vectors rank differently in numpy's local sort
-# than in Spark's NaN-greatest window ordering); pass the expression form
-# explicitly for NaN-bearing data.
+# Every compute-bound family here has two forms: an interpreted expression
+# fold (~dim lambda steps per scoring cell — a row×centroid, row×query, or
+# same-cell pair) and an Arrow form scoring whole record batches at BLAS
+# rates ('gemm': one matmul per block, float-associative — scores agree
+# with the fold to ~1e-12 relative, and argmax/threshold decisions differ
+# only on last-ulp ties, tolerance-pinned in tests/test_gemm_score.py;
+# quantized_topk's Arrow form, 'vectorized', is integer-exact instead).
+# Measured crossovers (BENCHNOTES round 7): at 20M cells the int8 coarse
+# pass took 170.3 s expression vs 4.82 s Arrow; IVF assignment 182 s
+# at 25.6M; SemDeDup cell scoring DNF'd (>10 min) at 20M pair-cells where
+# the Arrow form took 136 s. Below ~1M cells the expression forms win on
+# fixed cost (no driver collect / broadcast / Arrow worker spin-up,
+# typically ~1-2 s) and are the declared oracle-witness plan shapes — so
+# 'auto', the default on every entry point, picks the expression form
+# under the threshold and the Arrow form at or above it. The Arrow forms
+# assume NaN-free embeddings (zero-norm vectors rank differently in
+# numpy's local sort than in Spark's NaN-greatest window ordering); pass
+# the expression form explicitly for NaN-bearing data.
 #
 # Iterative trainers (Lloyd loops) pass cells×n_iters — the expression
 # cost repeats per iteration, and an 800k-cells-per-iteration PQ training
@@ -58,12 +61,12 @@ _AUTO_VECTORIZE_CELLS = 500_000
 _AUTO_LITERAL_DOUBLES = 16_384
 
 # Cap on the per-chunk score block (doubles) inside semantic_dedup_pairs'
-# vectorized cell scoring: chunk_rows = _CELL_PAIR_BLOCK // occupancy, so
+# 'gemm' cell scoring: chunk_rows = _CELL_PAIR_BLOCK // occupancy, so
 # task memory is O(block + cell vectors) instead of O(occupancy²). 4M
-# doubles = 32 MB per block (plus one same-sized per-dimension temporary).
+# doubles = 32 MB per block (plus one same-sized temporary).
 _CELL_PAIR_BLOCK = 4_000_000
 
-# Row cap per applyInPandas group in semantic_dedup_pairs' vectorized/gemm
+# Row cap per applyInPandas group in semantic_dedup_pairs' 'gemm'
 # scoring (VERDICT r9 task 1): the score matrix was already block-chunked,
 # but the GROUP itself — pandas frame + stacked vector matrix — was
 # O(cell_size × dim) in one task, so a pathologically skewed cell (exactly
@@ -93,8 +96,8 @@ _TRAIN_CAP_PER_CELL = 25
 
 def _resolve_auto(requested: str, cells: int, small: str, large: str) -> str:
     """Resolve an 'auto' strategy knob by estimated scoring-cell count:
-    the expression form under ``_AUTO_VECTORIZE_CELLS``, the bit-identical
-    vectorized form at or above it. Explicit values pass through."""
+    the expression form under ``_AUTO_VECTORIZE_CELLS``, the Arrow form at
+    or above it. Explicit values pass through."""
     if requested != "auto":
         return requested
     return large if cells >= _AUTO_VECTORIZE_CELLS else small
@@ -185,10 +188,10 @@ def brute_force_topk_blocked(
 ) -> DataFrame:
     """``brute_force_topk``'s exact result via Arrow-blocked scoring —
     same (qid, cid, cosine, rn) rows, BIT-IDENTICAL cosines (the dot and
-    norm folds replay as one vectorized numpy op per dimension, the
-    proven ``ivf_assign_vectorized`` recipe), for query batches small
-    enough to collect (the same ≪-corpus assumption the broadcast form
-    makes).
+    norm folds replay as one vectorized numpy op per dimension, so every
+    IEEE operation and its order match ``dot``/``l2_norm``'s left-to-right
+    fold), for query batches small enough to collect (the same ≪-corpus
+    assumption the broadcast form makes).
 
     Why: the expression form pays q·dim interpreted lambda steps per
     corpus ROW and shuffles all n·q scored pairs into the top-k window —
@@ -201,7 +204,7 @@ def brute_force_topk_blocked(
     not approximate — candidate pruning by total-order dominance, the
     classic distributed exact-knn merge.
 
-    Caveat (same as ``pq_encode_vectorized``): NaN cosines (zero-norm
+    Caveat (same as every Arrow form here): NaN cosines (zero-norm
     vectors) rank last in the local numpy sort where Spark's window
     ranks NaN greatest — feed NaN-free embeddings, or use the
     expression form.
@@ -754,15 +757,15 @@ def ivf_centroids(
 ) -> list[list[float]]:
     """K coarse centroids via mini Lloyd iterations.
 
-    ``assign='vectorized'`` runs each iteration's cell assignment through
-    the GEMM pandas_udf instead of the literal expression — bit-identical
-    assignments (pinned), so the trained centroids are byte-equal; the
+    ``assign='gemm'`` runs each iteration's cell assignment through the
+    true-BLAS pandas_udf instead of the ``'literal'`` expression — the
     literal form's K·dim interpreted lambda steps per row make it the
     training bottleneck at large K (measured: K=2000 training on a 10k
-    slice ≈ 5.5 min expression vs seconds GEMM — BENCHNOTES round 7).
-    ``assign='auto'`` (default) picks by n·K scoring cells per iteration
-    (``_resolve_auto``); ``n_rows`` is an optional size hint that skips
-    the count-star 'auto' otherwise runs.
+    slice ≈ 5.5 min expression vs seconds GEMM — BENCHNOTES round 7);
+    the trained centroids agree within float tolerance
+    (tests/test_gemm_score.py). ``assign='auto'`` (default) picks by n·K
+    scoring cells per iteration (``_resolve_auto``); ``n_rows`` is an
+    optional size hint that skips the count-star 'auto' otherwise runs.
 
     Seeds = one vector per hash stratum: rows are bucketed by
     ``pmod(xxhash64(id), n_cells)`` and the min-hash row of each stratum
@@ -777,6 +780,10 @@ def ivf_centroids(
     """
     from pyspark.sql import Window
 
+    if assign not in ("auto", "literal", "gemm"):
+        raise ValueError(
+            f"assign must be 'auto', 'literal' or 'gemm', got {assign!r}"
+        )
     h = F.xxhash64(F.concat(F.lit("ivf-seed:"), F.col(id_col).cast("string")))
     w = Window.partitionBy(F.pmod(h, F.lit(n_cells))).orderBy(h, F.col(id_col))
     seeds = (
@@ -791,16 +798,8 @@ def ivf_centroids(
     if assign == "auto":
         n = n_rows if n_rows is not None else corpus.count()
         # ×n_iters: the assignment cost repeats every Lloyd iteration.
-        # Large form 'gemm' (r9): training is a build-time job — the
-        # no-knob call gets BLAS rates; assign='vectorized' keeps the
-        # bit-identical replay for hash-exactness callers.
         assign = _resolve_auto(
             "auto", n * n_cells * max(1, n_iters), "literal", "gemm"
-        )
-    if assign not in ("literal", "vectorized", "gemm"):
-        raise ValueError(
-            f"assign must be 'auto', 'literal', 'vectorized' or 'gemm',"
-            f" got {assign!r}"
         )
     centroids = [[float(x) for x in r[0]] for r in seeds]
     if not centroids:
@@ -809,10 +808,9 @@ def ivf_centroids(
         # literal zip_with the analyzer rejects (ADVICE r9).
         return []
     for _ in range(n_iters):
-        if assign in ("vectorized", "gemm"):
-            cell = _vectorized_cell_udf(
-                corpus.sparkSession, centroids, gemm=assign == "gemm"
-            )(F.col(vec_col))
+        if assign == "gemm":
+            cell_udf = _vectorized_cell_udf(corpus.sparkSession, centroids)
+            cell = cell_udf(F.col(vec_col))
         else:
             cell = _argmax_cell(F.col(vec_col), centroids)
         # Two-step select: the cell assignment MUST be projected below the
@@ -971,24 +969,26 @@ def ivf_assign_carrier(
     )
 
 
-def _vectorized_cell_udf(spark, centroids: list[list[float]], gemm: bool = False):
-    """The vectorized cell-assignment as a reusable pandas_udf column
-    function — see ``ivf_assign_vectorized`` for the bit-identity argument.
-    Shared by the corpus assignment, the Lloyd training loop
-    (``ivf_centroids`` ``assign='vectorized'``), and SemDeDup's vectorized
-    path.
+def _vectorized_cell_udf(spark, centroids: list[list[float]]):
+    """The Arrow cell assignment as a reusable pandas_udf column function:
+    ONE true BLAS matmul (``M @ C.T``) per record batch, then the first
+    index of the max. Shared by the corpus assignment (``_assign_fn``),
+    the Lloyd training loop (``ivf_centroids`` ``assign='gemm'``),
+    ``ivf_topk`` and SemDeDup's 'gemm' path.
 
-    ``gemm=True`` scores with ONE true BLAS matmul (``M @ C.T``) instead
-    of the dim sequential per-dimension passes the bit-identity invariant
-    requires. Float addition is not associative, so scores can differ
-    from the fold in the last ulp — argmax cells are therefore identical
-    except for vectors whose top-2 centroid scores are within that ulp
-    (adversarially constructible, vanishing for real embeddings). NEVER
-    used by declared hash witnesses; tolerance-pinned in
-    tests/test_gemm_score.py. This is the mode's entire point: the
-    sequential replay costs dim passes over every score block — measured
-    ~136 s of the 181 s default SemDeDup run at 200k×K=2000 (BENCHNOTES
-    r8, VERDICT r8 'what's wrong #1')."""
+    The expression forms (literal/carrier) evaluate K·dim interpreted
+    lambda steps PER ROW — measured 182 s for 200k rows at K=128, dim=64,
+    ~85% of an index build's wall-clock (BENCHNOTES round 7); the batched
+    ``(n×dim) @ (dim×K)`` matmul is milliseconds. This is the sanctioned
+    Pandas-UDF case: the built-in operators express the semantics but not
+    the arithmetic intensity. Centroids travel as a SparkContext broadcast
+    (same bytes a carrier row would ship), norms with the expression
+    forms' zero-norm → 1.0 guard. Float addition is not associative, so
+    scores can differ from the fold in the last ulp — argmax cells are
+    identical except for vectors whose top-2 centroid scores are within
+    that ulp (adversarially constructible, vanishing for real embeddings;
+    tolerance-pinned in tests/test_gemm_score.py). NEVER used by declared
+    hash witnesses."""
     import math
 
     import numpy as np
@@ -1001,19 +1001,9 @@ def _vectorized_cell_udf(spark, centroids: list[list[float]], gemm: bool = False
 
     def _cell(v):
         Cb, cnb = bc.value
-        dim = Cb.shape[1]
         M = np.stack([np.asarray(x, dtype=np.float64) for x in v])
-        if gemm:
-            dots = M @ Cb.T
-            vn2 = np.einsum("ij,ij->i", M, M)
-        else:
-            # Sequential per-dimension accumulation: the fold's exact
-            # IEEE op sequence (bit-identical to the expression forms).
-            dots = np.zeros((M.shape[0], Cb.shape[0]))
-            vn2 = np.zeros(M.shape[0])
-            for d in range(dim):
-                dots += M[:, d, None] * Cb[None, :, d]
-                vn2 += M[:, d] * M[:, d]
+        dots = M @ Cb.T
+        vn2 = np.einsum("ij,ij->i", M, M)
         with np.errstate(divide="ignore", invalid="ignore"):
             s = dots / (np.sqrt(vn2)[:, None] * cnb[None, :])
         return pd.Series(np.argmax(s, axis=1).astype("int32"))
@@ -1022,56 +1012,18 @@ def _vectorized_cell_udf(spark, centroids: list[list[float]], gemm: bool = False
     return pandas_udf(_cell, "int")
 
 
-def ivf_assign_vectorized(
-    corpus: DataFrame,
-    centroids: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    gemm: bool = False,
-) -> DataFrame:
-    """Arrow-vectorized cell assignment: one numpy GEMM per record batch.
-    Returns (id_col, cell).
-
-    The expression forms (literal/carrier/join) all evaluate K·dim
-    interpreted lambda steps PER ROW inside Catalyst's higher-order
-    functions — measured 182 s for 200k rows at K=128, dim=64, which made
-    the assignment pass ~85% of an index build's wall-clock (BENCHNOTES
-    round 7). The identical mathematics as a batched
-    ``(n×dim) @ (dim×K)`` matmul is milliseconds. This is the sanctioned
-    Pandas-UDF case: the built-in operators express the semantics but not
-    the arithmetic intensity. Centroids travel as a SparkContext broadcast
-    (same bytes a carrier row would ship).
-
-    Equivalence: BIT-IDENTICAL to the expression forms, by construction —
-    the dot and norm folds are replayed as one vectorized numpy op PER
-    DIMENSION (dim chunky ops instead of n·K·dim interpreted lambda
-    steps), so every IEEE operation and its order match ``dot``/
-    ``l2_norm``'s left-to-right fold exactly; ties take the first index
-    of the max in both (np.argmax / array_position-of-array_max, NaN
-    greatest in both; sequential per-dimension accumulation replays the
-    fold's exact IEEE sequence, and driver-side norms use python sum's
-    identical left-to-right fold with the zero-norm → 1.0 guard; zero
-    vectors give all-NaN score rows whose np.argmax is 0, matching
-    array_position-of-array_max under NaN-greatest). Pinned in
-    tests/test_similarity.py. Use for BUILDS at scale
-    (``assign='vectorized'`` on the build functions); query-time paths
-    keep the expression forms."""
-    cell_udf = _vectorized_cell_udf(corpus.sparkSession, centroids, gemm=gemm)
-    return corpus.select(id_col, cell_udf(F.col(vec_col)).alias("cell"))
-
-
 def _assign_fn(assign: str):
+    """The corpus cell assignment of a build: ``(id_col, cell)``."""
     if assign == "carrier":
         return ivf_assign_carrier
-    if assign == "vectorized":
-        return ivf_assign_vectorized
-    if assign == "gemm":
-        return lambda corpus, cents, id_col="vec_id", vec_col="embedding": (
-            ivf_assign_vectorized(corpus, cents, id_col, vec_col, gemm=True)
-        )
-    raise ValueError(
-        f"assign must be 'carrier', 'vectorized' or 'gemm', got {assign!r}"
-    )
+    if assign != "gemm":
+        raise ValueError(f"assign must be 'carrier' or 'gemm', got {assign!r}")
+
+    def gemm(corpus, cents, id_col="vec_id", vec_col="embedding"):
+        cell_udf = _vectorized_cell_udf(corpus.sparkSession, cents)
+        return corpus.select(id_col, cell_udf(F.col(vec_col)).alias("cell"))
+
+    return gemm
 
 
 def ivf_topk(
@@ -1149,9 +1101,7 @@ def ivf_topk(
         from sheetreader_duckdb_spark.operators.exprutil import bind_once
 
         if assign == "gemm":
-            cell_udf = _vectorized_cell_udf(
-                corpus.sparkSession, centroids, gemm=True
-            )
+            cell_udf = _vectorized_cell_udf(corpus.sparkSession, centroids)
             c = corpus.select(
                 F.col(id_col).alias("cid"),
                 F.col(vec_col).alias("cv"),
@@ -1299,52 +1249,43 @@ def semantic_dedup_pairs(
     cosine-verified; assignment and pair scoring always cover the full
     corpus.
 
-    ``score='vectorized'`` replaces the within-cell self-join + per-pair
-    expression fold with ONE ``applyInPandas`` over the same cell
-    shuffle: each cell's pair block computes as sequential per-dimension
-    numpy ops (the fold's exact IEEE sequence — bit-identical pairs AND
-    cosines, test-pinned), so the n²/K candidate volume pays GEMM rates
-    instead of dim interpreted lambda steps per pair, and the corpus
-    shuffles ONCE (the join form shuffles both join sides). Task memory
-    is bounded on BOTH axes: the score block is row-chunked to at most
-    ``_CELL_PAIR_BLOCK`` doubles (ADVICE r7), and cells larger than
-    ``_CELL_SPLIT_ROWS`` split into hash sub-buckets whose pair-groups
-    each hold at most two buckets (VERDICT r9 task 1 — previously the
-    WHOLE cell materialized in one task, so a pathologically skewed cell,
-    exactly what duplicate-heavy corpora produce, could OOM an executor;
-    now skew only adds ceil(csz/cap)× replication for the hot cell's own
-    rows). The split is driven by a lazy broadcast K-row cell histogram —
-    no driver collect, and unsplit cells score exactly as before.
-
-    ``score='gemm'`` is the production scoring form: the same
-    applyInPandas cell shuffle and row-chunked blocks, but each block
-    scores as ONE true BLAS matmul (``A @ B.T``) instead of the dim
-    sequential per-dimension passes the bit-identity invariant costs.
-    Float addition is non-associative, so cosines are NOT hash-identical
-    to the fold — they agree to ~1e-12 relative, and pair membership can
-    differ only for cosines within an ulp of the threshold
-    (tolerance + planted-recall pinned in tests/test_gemm_score.py).
-    The sequential replay was measured as ~136 s of the 181 s default
-    run at 200k×K=2000 — the engine's largest constant factor
-    (VERDICT r8); 'gemm' removes it.
+    ``score='gemm'`` is the production scoring form: it replaces the
+    within-cell self-join + per-pair expression fold with ONE
+    ``applyInPandas`` over the same cell shuffle, each cell's pair block
+    scoring as one true BLAS matmul (``A @ B.T``), so the n²/K candidate
+    volume pays GEMM rates instead of dim interpreted lambda steps per
+    pair, and the corpus shuffles ONCE (the join form shuffles both join
+    sides). Float addition is non-associative, so cosines are NOT
+    hash-identical to the fold — they agree to ~1e-12 relative, and pair
+    membership can differ only for cosines within an ulp of the
+    threshold (tolerance + planted-recall pinned in
+    tests/test_gemm_score.py). Task memory is bounded on BOTH axes: the
+    score block is row-chunked to at most ``_CELL_PAIR_BLOCK`` doubles
+    (ADVICE r7), and cells larger than ``_CELL_SPLIT_ROWS`` split into
+    hash sub-buckets whose pair-groups each hold at most two buckets
+    (VERDICT r9 task 1 — previously the WHOLE cell materialized in one
+    task, so a pathologically skewed cell, exactly what duplicate-heavy
+    corpora produce, could OOM an executor; now skew only adds
+    ceil(csz/cap)× replication for the hot cell's own rows). The split
+    is driven by a lazy broadcast K-row cell histogram — no driver
+    collect, and unsplit cells score exactly as before.
 
     ``score='auto'`` (default) picks by estimated scoring cells —
     max(assignment n·K, expected same-cell pairs n·(n/K)) — expression
     form below the crossover (the nx witness's declared plan shape),
     'gemm' at or above it. Every declared hash witness is below the
-    crossover by size, so 'auto' never changes a witnessed hash; callers
-    that need the bit-identical Arrow form at scale pass
-    ``score='vectorized'`` explicitly.
+    crossover by size, so 'auto' never changes a witnessed hash.
     ``n_rows`` is an optional corpus-size hint that skips the count-star
     'auto' otherwise runs.
 
-    Assignment uses the inline carrier form (``ivf_assign_carrier``'s
-    expression over the 1-row broadcast centroid carrier — plan size
-    constant in K, bit-identical scores/tie-break to the join form,
-    test-pinned): the cell id is computed map-side IN the same select as
-    the vector and its norm, so the only shuffle before pair generation
-    is the cell equi-join itself (the earlier broadcast-join assignment
-    paid an n·K-row argmax shuffle plus an id-keyed join-back first).
+    The 'expr' assignment uses the inline carrier form
+    (``ivf_assign_carrier``'s expression over the 1-row broadcast centroid
+    carrier — plan size constant in K, bit-identical scores/tie-break to
+    the join form, test-pinned): the cell id is computed map-side IN the
+    same select as the vector and its norm, so the only shuffle before
+    pair generation is the cell equi-join itself (the earlier
+    broadcast-join assignment paid an n·K-row argmax shuffle plus an
+    id-keyed join-back first).
     With balanced cells the candidate volume is n²/K instead of n².
     Precision is exact (every
     emitted pair is cosine-verified); recall misses only near-dup pairs
@@ -1360,6 +1301,10 @@ def semantic_dedup_pairs(
     """
     from sheetreader_duckdb_spark.session import defer_unpersist
 
+    if score not in ("auto", "expr", "gemm"):
+        raise ValueError(
+            f"score must be 'auto', 'expr' or 'gemm', got {score!r}"
+        )
     need_n = score == "auto" or (
         centroids is None and train_fraction == "auto"
     )
@@ -1368,12 +1313,8 @@ def semantic_dedup_pairs(
         n = n_rows if n_rows is not None else corpus.count()
     if score == "auto":
         occupancy = max(1, n // max(1, n_cells))
-        # Above the crossover 'auto' now picks 'gemm' — the true-BLAS
-        # scoring form (VERDICT r8 task 1). No declared hash witness
-        # sits above the crossover (all sf0.01/sf0.1 SemDeDup witnesses
-        # are 'expr'-shaped by size), so hash-exactness callers are
-        # untouched; a caller that needs the bit-identical Arrow form AT
-        # scale opts into score='vectorized' explicitly.
+        # No declared hash witness sits above the crossover (all
+        # sf0.01/sf0.1 SemDeDup witnesses are 'expr'-shaped by size).
         score = _resolve_auto(
             "auto", max(n * n_cells, n * occupancy), "expr", "gemm"
         )
@@ -1389,11 +1330,10 @@ def semantic_dedup_pairs(
             train, n_train = corpus, n
         centroids = ivf_centroids(
             train, id_col, vec_col, n_cells=n_cells,
-            assign=score if score in ("vectorized", "gemm") else "literal",
+            assign="gemm" if score == "gemm" else "literal",
             n_rows=n_train,
         )
-    if score in ("vectorized", "gemm"):
-        use_gemm = score == "gemm"
+    if score == "gemm":
         import numpy as np
         import pandas as pd
 
@@ -1405,12 +1345,7 @@ def semantic_dedup_pairs(
             return np.stack([np.asarray(x, dtype=np.float64) for x in col])
 
         def _norms(M: "np.ndarray") -> "np.ndarray":
-            if use_gemm:
-                return np.sqrt(np.einsum("ij,ij->i", M, M))
-            n2 = np.zeros(len(M))
-            for d in range(M.shape[1]):
-                n2 += M[:, d] * M[:, d]
-            return np.sqrt(n2)
+            return np.sqrt(np.einsum("ij,ij->i", M, M))
 
         _EMPTY = {"id_a": [], "id_b": [], "cell": [], "cosine": []}
 
@@ -1441,28 +1376,16 @@ def semantic_dedup_pairs(
             nml = _norms(Ml)
             nmr = nml if g1 == g2 else _norms(Mr)
             # Row-chunked scoring: each block is chunk×nr doubles (capped
-            # at _CELL_PAIR_BLOCK), never the full nl×nr matrix. The
-            # per-dimension accumulation order inside a block is the
-            # fold's exact IEEE sequence, so every (i, j) cosine is
-            # bit-identical to the unchunked form (each entry's
-            # arithmetic is independent of the blocking).
+            # at _CELL_PAIR_BLOCK), never the full nl×nr matrix, scored
+            # by one BLAS matmul. BLAS may reassociate per block shape,
+            # so cosines can move in the last ulp with the blocking; pair
+            # membership cannot, away from the threshold.
             chunk = max(1, _CELL_PAIR_BLOCK // nr)
             outs = []
             stop = nl - 1 if g1 == g2 else nl
             for r0 in range(0, stop, chunk):
                 r1 = min(nl, r0 + chunk)
-                if use_gemm:
-                    # One BLAS matmul per block: ~dim× fewer memory
-                    # passes than the sequential replay. Cosines are
-                    # float-associative (NOT hash-identical) — pair
-                    # membership can differ from the fold only when a
-                    # cosine sits within an ulp of the threshold
-                    # (tolerance-pinned in tests/test_gemm_score.py).
-                    dots = Ml[r0:r1] @ Mr.T
-                else:
-                    dots = np.zeros((r1 - r0, nr))
-                    for d in range(Ml.shape[1]):
-                        dots += Ml[r0:r1, d, None] * Mr[None, :, d]
+                dots = Ml[r0:r1] @ Mr.T
                 with np.errstate(divide="ignore", invalid="ignore"):
                     s = dots / (nml[r0:r1, None] * nmr[None, :])
                 if g1 == g2:
@@ -1499,12 +1422,9 @@ def semantic_dedup_pairs(
                 return pd.DataFrame(_EMPTY)
             return pd.concat(outs, ignore_index=True)
 
-        # Assignment rides the GEMM udf too (bit-identical to the carrier
-        # expression, pinned): at large K the expression's K·dim lambda
-        # steps per row dominate the whole job.
-        cell_udf = _vectorized_cell_udf(
-            corpus.sparkSession, centroids, gemm=use_gemm
-        )
+        # Assignment rides the GEMM udf too: at large K the expression's
+        # K·dim lambda steps per row dominate the whole job.
+        cell_udf = _vectorized_cell_udf(corpus.sparkSession, centroids)
         assigned = corpus.select(
             F.col(id_col).alias("__id"),
             F.col(vec_col).alias("__v"),
@@ -1578,11 +1498,6 @@ def semantic_dedup_pairs(
         )
         return sub.groupBy("cell", "__g1", "__g2").applyInPandas(
             _group_pairs, grouped_schema
-        )
-    if score != "expr":
-        raise ValueError(
-            f"score must be 'auto', 'expr', 'vectorized' or 'gemm',"
-            f" got {score!r}"
         )
     from sheetreader_duckdb_spark.operators.exprutil import bind_once
 
@@ -1669,21 +1584,12 @@ def semantic_dedup_keep(
 # top-(k·refine) survivors recovers recall, same two-stage shape as
 # quantized_topk.
 # --------------------------------------------------------------------------
-def _vectorized_codes_udf(
-    spark, codebooks: list[list[list[float]]], gemm: bool = False
-):
+def _vectorized_codes_udf(spark, codebooks: list[list[list[float]]]):
     """PQ code assignment as a pandas_udf returning the m-code array —
-    ``pq_encode_vectorized``'s distance arithmetic (sequential
-    per-sub-dimension accumulation, first-index-of-min), codes only.
-    Used by the Lloyd training loop at large n_codes, where the
-    expression form's m·n_codes·dsub = dim·n_codes interpreted lambda
-    steps per row dominate the iteration.
-
-    ``gemm=True``: per subspace, argmin over ``-2·x@C.T + ‖C‖²`` — one
-    BLAS matmul instead of dsub passes (the per-row ‖x‖² term is constant
-    across codes and dropped). Float-associative: codes can differ from
-    the exact squared-diff fold only on last-ulp distance ties
-    (tests/test_gemm_score.py). Never used by declared witnesses."""
+    ``pq_encode_vectorized``'s distance arithmetic, codes only. Used by
+    the Lloyd training loop at large n_codes, where the expression
+    form's m·n_codes·dsub = dim·n_codes interpreted lambda steps per row
+    dominate the iteration."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -1702,17 +1608,8 @@ def _vectorized_codes_udf(
         n = M.shape[0]
         out = np.empty((n, m), dtype=np.int32)
         for j in range(m):
-            if gemm:
-                sub = M[:, j * dsub : (j + 1) * dsub]
-                out[:, j] = np.argmin(
-                    sub @ (-2.0 * Bb[j].T) + bn2[j], axis=1
-                )
-                continue
-            dist = np.zeros((n, Bb.shape[1]))
-            for d in range(dsub):
-                diff = M[:, j * dsub + d, None] - Bb[j, None, :, d]
-                dist += diff * diff
-            out[:, j] = np.argmin(dist, axis=1)
+            sub = M[:, j * dsub : (j + 1) * dsub]
+            out[:, j] = np.argmin(sub @ (-2.0 * Bb[j].T) + bn2[j], axis=1)
         return pd.Series(list(out))
 
     _codes.__annotations__ = {"v": pd.Series, "return": pd.Series}
@@ -1738,11 +1635,18 @@ def pq_codebooks(
     only the m·n_codes·(dim/m) = dim·n_codes codebook doubles. Seeds are
     the sub-vectors of ``n_codes`` hash-strata rows (deterministic,
     order-uncorrelated — the ivf_centroids seeding applied per subspace).
+    ``assign`` is ``'expr'`` (the broadcast-codebook expression) or
+    ``'gemm'`` (the BLAS udf, books within float tolerance); ``'auto'``
+    (default) picks by n·n_codes scoring cells per iteration.
     """
     from pyspark.sql import Window
 
     if dim % m:
         raise ValueError(f"dim={dim} must split evenly into m={m} subspaces")
+    if assign not in ("auto", "expr", "gemm"):
+        raise ValueError(
+            f"assign must be 'auto', 'expr' or 'gemm', got {assign!r}"
+        )
     dsub = dim // m
     h = F.xxhash64(F.concat(F.lit("pq-seed:"), F.col(id_col).cast("string")))
     w = Window.partitionBy(F.pmod(h, F.lit(n_codes))).orderBy(h, F.col(id_col))
@@ -1775,18 +1679,10 @@ def pq_codebooks(
         # dim total steps — the same unit as the other knobs (measured:
         # 97.7 s expr vs 7.5 s GEMM at production book sizes, r7).
         n = n_rows if n_rows is not None else corpus.count()
-        # Large form is 'gemm' like every other trainer's auto (ADVICE r9:
-        # this one still said 'vectorized', so ivfpq_topk's no-knob call
-        # trained codebooks through the ~dim-pass bit-identity replay
-        # above the crossover). Tolerance + trained-book closeness are
-        # pinned in tests/test_gemm_score.py::test_pq_codebooks_gemm_*.
+        # Trained-book closeness to 'expr' is pinned in
+        # tests/test_gemm_score.py::test_pq_codebooks_gemm_training_close.
         assign = _resolve_auto(
             "auto", n * n_codes * max(1, n_iters), "expr", "gemm"
-        )
-    if assign not in ("expr", "vectorized", "gemm"):
-        raise ValueError(
-            f"assign must be 'auto', 'expr', 'vectorized' or 'gemm',"
-            f" got {assign!r}"
         )
     for _ in range(n_iters):
         # Per-iteration codebooks travel as a 1-row broadcast table, not
@@ -1795,9 +1691,9 @@ def pq_codebooks(
         # PER ITERATION at production book sizes). The assignment
         # arithmetic is _pq_code_expr's exactly, so trained books are
         # bit-identical to the literal path (pinned in tests/test_pq.py).
-        # assign='vectorized' computes the same codes via the GEMM udf
-        # (bit-identical, pinned) — the expression's dim·n_codes lambda
-        # steps per row dominate training at production book sizes.
+        # assign='gemm' computes the codes via the GEMM udf — the
+        # expression's dim·n_codes lambda steps per row dominate training
+        # at production book sizes.
         def _assign_struct(cs):
             return F.transform(
                 F.sequence(F.lit(0), F.lit(m - 1)),
@@ -1808,10 +1704,8 @@ def pq_codebooks(
                 ),
             )
 
-        if assign in ("vectorized", "gemm"):
-            codes_udf = _vectorized_codes_udf(
-                corpus.sparkSession, books, gemm=assign == "gemm"
-            )
+        if assign == "gemm":
+            codes_udf = _vectorized_codes_udf(corpus.sparkSession, books)
             # The UDF evaluates once in its own ArrowEvalPython operator;
             # the m element_at references read the materialized column.
             staged = corpus.select(
@@ -1986,17 +1880,15 @@ def pq_encode_vectorized(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     code_col: str = "pq_codes",
-    gemm: bool = False,
 ) -> DataFrame:
     """Arrow-vectorized PQ encode — ``pq_encode_join``'s output
-    (id, pq_codes, pq_norm) computed batch-wise in numpy, BIT-IDENTICAL by
-    construction: per-subspace distances accumulate one vectorized op per
-    sub-dimension (the fold's exact IEEE sequence: acc + (v_d − w_d)², in
-    order, from 0.0), codes take the first index of the min in both
-    (np.argmin / array_position-of-array_min), and the reconstructed norm
-    accumulates the driver-side bn2 entries sequentially over subspaces —
-    the same addends in the same order as the expression fold. Pinned in
-    tests/test_pq.py.
+    (id, pq_codes, pq_norm) computed batch-wise in numpy: per subspace,
+    the code is the argmin over ``-2·x@C.T + ‖C‖²`` (one BLAS matmul; the
+    per-row ‖x‖² term is constant across codes and dropped), and the
+    reconstructed norm accumulates the driver-side bn2 entries (the same
+    addends in the same order as the expression fold). Float-associative:
+    a code can differ from the exact squared-diff fold only on last-ulp
+    distance ties (tests/test_gemm_score.py).
 
     The expression form pays m·n_codes·(dim/m) interpreted lambda steps
     per row (≈ dim·n_codes = 1024 at 64-dim × 16 codes); at index-build
@@ -2025,20 +1917,8 @@ def pq_encode_vectorized(
         codes = np.empty((n, m), dtype=np.int32)
         norm2 = np.zeros(n)
         for j in range(m):
-            if gemm:
-                # One BLAS matmul per subspace: argmin over
-                # -2·x@C.T + ‖C‖² (per-row ‖x‖² constant dropped).
-                # Float-associative — code choice can move only on
-                # last-ulp distance ties; the reconstructed norm is the
-                # same bn2 lookup either way.
-                sub = M[:, j * dsub : (j + 1) * dsub]
-                cj = np.argmin(sub @ (-2.0 * Bb[j].T) + bn2[j], axis=1)
-            else:
-                dist = np.zeros((n, Bb.shape[1]))
-                for d in range(dsub):
-                    diff = M[:, j * dsub + d, None] - Bb[j, None, :, d]
-                    dist += diff * diff
-                cj = np.argmin(dist, axis=1)
+            sub = M[:, j * dsub : (j + 1) * dsub]
+            cj = np.argmin(sub @ (-2.0 * Bb[j].T) + bn2[j], axis=1)
             codes[:, j] = cj
             norm2 += bn2[j][cj]
         return pd.DataFrame(
@@ -2250,8 +2130,7 @@ def ivfpq_topk(
     the expression forms ('carrier'/'join', the pinned witness shapes)
     below the scoring-cell crossover, the true-BLAS 'gemm' kernels above
     it, so a one-shot no-knob call at production size never pays the
-    interpreted n·K / n·n_codes folds; 'vectorized' keeps the
-    bit-identical Arrow forms. Training autos resolve independently
+    interpreted n·K / n·n_codes folds. Training autos resolve independently
     inside the trainers. ``n_rows`` is an optional corpus-size hint
     shared by all the autos (skips their count-stars).
     """
@@ -2261,15 +2140,13 @@ def ivfpq_topk(
     # assign (or ivf_topk vocabulary like 'literal'/'join') used to surface
     # as _assign_fn's error only after the expensive centroid + codebook
     # training already completed (ADVICE r9).
-    if assign not in ("auto", "carrier", "vectorized", "gemm"):
+    if assign not in ("auto", "carrier", "gemm"):
         raise ValueError(
-            f"assign must be 'auto', 'carrier', 'vectorized' or 'gemm',"
-            f" got {assign!r}"
+            f"assign must be 'auto', 'carrier' or 'gemm', got {assign!r}"
         )
-    if encode not in ("auto", "join", "vectorized", "gemm"):
+    if encode not in ("auto", "join", "gemm"):
         raise ValueError(
-            f"encode must be 'auto', 'join', 'vectorized' or 'gemm',"
-            f" got {encode!r}"
+            f"encode must be 'auto', 'join' or 'gemm', got {encode!r}"
         )
     n = n_rows
     if (assign == "auto" or encode == "auto") and n is None:
@@ -2290,25 +2167,19 @@ def ivfpq_topk(
     bdf = pq_books_df(corpus.sparkSession, codebooks)
 
     # The index relation: cell + m codes + reconstruction norm. No floats.
-    # Carrier-form assignment: map-side argmax, no K× row amplification.
+    # Map-side argmax (carrier expression or gemm udf), no K× rows.
     cells = _assign_fn(corpus_assign)(corpus, centroids, id_col, vec_col).select(
         F.col(id_col).alias("cid"), "cell"
     )
     renamed = corpus.select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cv"))
-    if corpus_encode in ("vectorized", "gemm"):
+    if corpus_encode == "gemm":
         enc = pq_encode_vectorized(
-            renamed, codebooks, id_col="cid", vec_col="cv",
-            gemm=corpus_encode == "gemm",
+            renamed, codebooks, id_col="cid", vec_col="cv"
         )
-    elif corpus_encode == "join":
+    else:
         enc = pq_encode_join(
             renamed, codebooks, vec_col="cv", books=bdf,
         ).select("cid", "pq_codes", "pq_norm")
-    else:
-        raise ValueError(
-            f"encode must be 'auto', 'join', 'vectorized' or 'gemm',"
-            f" got {encode!r}"
-        )
     index = enc.join(cells, "cid")
 
     # Query side: ADC lookup table + the n_probe closest cells, both from
@@ -2642,9 +2513,11 @@ def build_ivf_index(
     ``assign='auto'`` (default) resolves training and full-corpus
     assignment independently by their scoring-cell counts
     (``_resolve_auto``): the expression forms below the crossover (the
-    witness shapes), the bit-identical GEMM forms above it — a
+    witness shapes), the float-associative 'gemm' forms above it
+    (cells differ from the fold only on last-ulp score ties) — a
     production-size build gets the measured-32× faster path without
-    knowing the knob (VERDICT r7 task 1).
+    knowing the knob (VERDICT r7 task 1). ``assign='carrier'`` or
+    ``'gemm'`` forces one form for both passes.
 
     At 100 TB this is the operating mode ``ivf_topk`` only simulates:
     centroid training and corpus assignment run ONCE (one id-keyed shuffle
@@ -2661,10 +2534,9 @@ def build_ivf_index(
     # Fail-fast BEFORE any training job (same contract as ivfpq_topk's r9
     # early check): a typo'd assign used to coerce into 'literal' training
     # and only surface as _assign_fn's error after the Lloyd loop ran.
-    if assign not in ("auto", "carrier", "vectorized", "gemm"):
+    if assign not in ("auto", "carrier", "gemm"):
         raise ValueError(
-            f"assign must be 'auto', 'carrier', 'vectorized' or 'gemm',"
-            f" got {assign!r}"
+            f"assign must be 'auto', 'carrier' or 'gemm', got {assign!r}"
         )
     n_corpus = None
     if train_fraction == "auto" or assign == "auto":
@@ -2693,10 +2565,8 @@ def build_ivf_index(
         if n_train is None:
             n_train = n_corpus
         # Above the crossover 'auto' picks 'gemm' (r9): a build is a
-        # one-off production job — BLAS rates, not the bit-identity
-        # replay. Small builds keep the expression forms (byte-stable
-        # with every prior round); a caller needing the bit-identical
-        # Arrow forms at scale passes assign='vectorized'.
+        # one-off production job at BLAS rates. Small builds keep the
+        # expression forms (byte-stable with every prior round).
         train_assign = _resolve_auto(
             "auto", n_train * n_cells * max(1, n_iters), "literal", "gemm"
         )
@@ -2704,7 +2574,7 @@ def build_ivf_index(
             "auto", n_corpus * n_cells, "carrier", "gemm"
         )
     else:
-        train_assign = assign if assign in ("vectorized", "gemm") else "literal"
+        train_assign = "gemm" if assign == "gemm" else "literal"
         corpus_assign = assign
     centroids = ivf_centroids(
         train, id_col, vec_col, n_cells, n_iters,
@@ -2900,18 +2770,18 @@ def build_ivfpq_index(
     ``assign='auto'`` / ``encode='auto'`` (defaults) resolve training,
     full-corpus assignment, and full-corpus encoding independently by
     scoring-cell count (``_resolve_auto``): witness-shaped expression
-    forms below the crossover, the bit-identical GEMM forms above it."""
+    forms below the crossover, the float-associative 'gemm' forms above
+    it. An explicit value forces one form for training and the corpus
+    pass alike."""
     # Fail-fast BEFORE the (much longer) two-quantizer training — the same
     # early-validation contract as ivfpq_topk and build_ivf_index.
-    if assign not in ("auto", "carrier", "vectorized", "gemm"):
+    if assign not in ("auto", "carrier", "gemm"):
         raise ValueError(
-            f"assign must be 'auto', 'carrier', 'vectorized' or 'gemm',"
-            f" got {assign!r}"
+            f"assign must be 'auto', 'carrier' or 'gemm', got {assign!r}"
         )
-    if encode not in ("auto", "join", "vectorized", "gemm"):
+    if encode not in ("auto", "join", "gemm"):
         raise ValueError(
-            f"encode must be 'auto', 'join', 'vectorized' or 'gemm',"
-            f" got {encode!r}"
+            f"encode must be 'auto', 'join' or 'gemm', got {encode!r}"
         )
     spark = corpus.sparkSession
     n_corpus = None
@@ -2952,7 +2822,7 @@ def build_ivfpq_index(
             "auto", n_corpus * n_cells, "carrier", "gemm"
         )
     else:
-        train_assign = assign if assign in ("vectorized", "gemm") else "literal"
+        train_assign = "gemm" if assign == "gemm" else "literal"
         corpus_assign = assign
     if encode == "auto":
         book_assign = _resolve_auto(
@@ -2962,7 +2832,7 @@ def build_ivfpq_index(
             "auto", n_corpus * n_codes, "join", "gemm"
         )
     else:
-        book_assign = encode if encode in ("vectorized", "gemm") else "expr"
+        book_assign = "gemm" if encode == "gemm" else "expr"
         corpus_encode = encode
     if centroids is None:
         centroids = ivf_centroids(
@@ -3011,20 +2881,15 @@ def build_ivfpq_index(
     bdf = pq_books_df(spark, codebooks)
     bdf.coalesce(1).write.mode("overwrite").parquet(f"{path}/books")
     cells = _assign_fn(corpus_assign)(corpus, centroids, id_col, vec_col)
-    if corpus_encode in ("vectorized", "gemm"):
+    if corpus_encode == "gemm":
         enc = pq_encode_vectorized(
             corpus.select(id_col, vec_col), codebooks, id_col=id_col,
-            vec_col=vec_col, gemm=corpus_encode == "gemm",
+            vec_col=vec_col,
         )
-    elif corpus_encode == "join":
+    else:
         enc = pq_encode_join(
             corpus.select(id_col, vec_col), codebooks, vec_col=vec_col, books=bdf
         ).select(id_col, "pq_codes", "pq_norm")
-    else:
-        raise ValueError(
-            f"encode must be 'auto', 'join', 'vectorized' or 'gemm',"
-            f" got {encode!r}"
-        )
     (
         enc.join(cells, id_col)
         .repartition(F.col("cell"))

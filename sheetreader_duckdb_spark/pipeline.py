@@ -108,8 +108,8 @@ def curate_corpus(
       an embedding row are kept (no evidence → no drop).
       ``semantic_cells=None`` derives the cell count from the embedded
       corpus size (auto_ivf_cells); ``semantic_score='auto'`` (default)
-      picks the scoring form by size — the Arrow per-cell GEMM path
-      (bit-identical, BENCHNOTES round 7) at production cell counts,
+      picks the scoring form by size — the Arrow per-cell 'gemm' path
+      (float-associative, BENCHNOTES round 7) at production cell counts,
       the expression form below the crossover — so a production call
       with defaults never hits the measured-DNF expression plan
       (VERDICT r7 task 1).

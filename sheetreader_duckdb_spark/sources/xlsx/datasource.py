@@ -1341,19 +1341,22 @@ class SheetReaderReader(DataSourceReader):
                 """A coerce or inline read's owned chunk off the dense
                 path: ``iter_rows``' chunk scan, its rows into the
                 builder. A chunk wholly below ``skip_rows`` is counted,
-                never scanned."""
-                if ordinal < skip_n:
+                never scanned; one straddling it is scanned from its
+                first kept row."""
+                cut = max(0, skip_n - ordinal)
+                if cut:
                     n = P._chunk_rows(work, pfx)
-                    if ordinal + n <= skip_n:
+                    if cut >= n:
                         return n
+                    work = work[P._row_offset(work, pfx, cut):]
                 if batch_rows:
                     yield flush()
                 rows = P._scan_chunk(
                     work, colmap, date_styles, wb.date1904,
                     opts.inline_strings, pfx,
                 )
-                yield from build(rows[max(0, skip_n - ordinal):])
-                return len(rows)
+                yield from build(rows)
+                return cut + len(rows)
 
             def step(work: bytes, pr, first: bool, assigned: bool, ordinal: int):
                 """One row-aligned chunk into the raw columns: the chunk
@@ -1411,12 +1414,7 @@ class SheetReaderReader(DataSourceReader):
                     # row. A non-matching row drops to the paths below,
                     # which produce identical cells.
                     if dense and skip_n < n and len(row_matches) == n:
-                        off = 0
-                        if skip_n:
-                            it = pr.row_count_re.finditer(work)
-                            for _ in range(skip_n):
-                                next(it)
-                            off = next(it).start()
+                        off = P._row_offset(work, pfx, skip_n) if skip_n else 0
                         dm = dense[0].findall(work, off)
                         if len(dm) == n - skip_n:
                             yield from take_dense(dm)
@@ -1424,11 +1422,15 @@ class SheetReaderReader(DataSourceReader):
                     if rowwise:
                         return (yield from scan(work, pfx, ordinal))
                 if len(row_matches) != n:
-                    # Irregular chunk owned by this shard.
+                    # Irregular chunk owned by this shard, walked from its
+                    # first kept row (past them all: an empty walk).
                     if batch_rows:
                         yield flush()
-                    rows = P._fragment_rows(work, date_styles, wb.date1904)
-                    yield from build(rows[max(0, skip_n - ordinal):])
+                    if ordinal < skip_n:
+                        work = work[P._row_offset(work, pfx, skip_n - ordinal):]
+                    yield from build(
+                        P._fragment_rows(work, date_styles, wb.date1904)
+                    )
                     return n
                 for body in row_matches[max(0, skip_n - ordinal):]:
                     ms = pr.cell_re.findall(body)

@@ -895,16 +895,20 @@ class XlsxWorkbook:
         def step(work, pr, first, assigned, ordinal):
             if not assigned:
                 return _chunk_rows(work, pr.pfx)  # another shard's chunk 0
-            if ordinal < skip_rows:
+            cut = max(0, skip_rows - ordinal)
+            if cut:
                 n = _chunk_rows(work, pr.pfx)
-                if ordinal + n <= skip_rows:
+                if cut >= n:
                     return n  # wholly skipped: counted, never scanned
+                # From the first kept row on: a skipped row never decides
+                # whether the read succeeds.
+                work = work[_row_offset(work, pr.pfx, cut):]
             rows = _scan_chunk(
                 work, colmap, date_styles, self.date1904, self.allow_inline,
                 pr.pfx,
             )
-            yield from rows[max(0, skip_rows - ordinal):]
-            return len(rows)
+            yield from rows
+            return cut + len(rows)
 
         try:
             yield from self._drive_chunks(
@@ -1052,9 +1056,9 @@ class XlsxWorkbook:
     # -- the fallback: the expat walker streaming the whole member ---------
     def _iter_rows_expat(self, sheet: SheetInfo, skip_rows: int = 0) -> Iterator[list[tuple[int, int, object]]]:
         with self.zf.open(sheet.path) as f:
-            yield from itertools.islice(
-                _walk_cells(f, self.date_styles, self.date1904, self.allow_inline),
-                skip_rows, None,
+            yield from _walk_cells(
+                f, self.date_styles, self.date1904, self.allow_inline,
+                skip_rows,
             )
 
 
@@ -1177,6 +1181,7 @@ def prefix_res(pfx: bytes) -> _PrefixRes:
 # consolidation); re-imported here because every scan tier and the
 # indexer reference them through this module.
 from .rowstream import (  # noqa: E402  (grouped with its siblings below)
+    _ANY_ROW_RE,
     MixedAwareRowCounter,
     count_any_row_starts,
     foreign_row_evidence,
@@ -1218,6 +1223,19 @@ def _chunk_rows(work: bytes, pfx: bytes) -> int:
     if foreign_row_evidence(work, pfx):
         return count_any_row_starts(work)
     return count_row_starts(work, pfx)
+
+
+def _row_offset(work: bytes, pfx: bytes, k: int) -> int:
+    """Byte offset of row ``k`` (0-based) of a ``</row>``-aligned chunk,
+    counting rows as ``_chunk_rows`` does; ``len(work)`` past the last
+    row. Readers cut a chunk here at its first row past ``skip_rows``, so
+    no skipped row is scanned or fragment-walked."""
+    if foreign_row_evidence(work, pfx):
+        starts = _ANY_ROW_RE.finditer(work)
+    else:
+        starts = prefix_res(pfx).row_count_re.finditer(work)
+    m = next(itertools.islice(starts, k, None), None)
+    return len(work) if m is None else m.start()
 
 
 def build_dense_row_re(
@@ -1396,12 +1414,16 @@ def _walk_cells(
     date_styles: frozenset[int],
     date1904: bool = False,
     allow_inline: bool = False,
+    skip_rows: int = 0,
 ) -> Iterator[list[tuple[int, int, object]]]:
     """The expat cell walker: yield the rows of a SpreadsheetML byte
     stream as lists of (col, ctype, value), with the cell semantics of the
     regex scanner. Tags are matched by local name, so any namespace
-    prefix (or a mix of them) reads alike. Callers: ``_fragment_rows``
-    (one chunk) and ``XlsxWorkbook._iter_rows_expat`` (a whole member)."""
+    prefix (or a mix of them) reads alike. The first ``skip_rows`` rows
+    are walked but not yielded, and an inline cell among them does not
+    raise. Callers: ``_fragment_rows`` (one chunk) and
+    ``XlsxWorkbook._iter_rows_expat`` (a whole member)."""
+    row_no = 0
     cells: list[tuple[int, int, object]] = []
     cur_type: int | None = None
     cur_col = -1
@@ -1425,7 +1447,7 @@ def _walk_cells(
                 elif t == "e":
                     cur_type = T_ERROR
                 elif t in ("str", "inlineStr"):
-                    if not allow_inline:
+                    if not allow_inline and row_no >= skip_rows:
                         # reference: src/sheetreader_extension.cpp:572-575
                         raise ValueError(UNSUPPORTED_STRING_ERROR)
                     cur_type = T_STRING_LIT
@@ -1469,7 +1491,9 @@ def _walk_cells(
                 cells.append((cur_col, T_ERROR, None))
             el.clear()
         elif tag == "row":
-            yield cells
+            if row_no >= skip_rows:
+                yield cells
+            row_no += 1
             el.clear()
 
 

@@ -111,7 +111,6 @@ _SLOW_TESTS = {
     "test_auto_select.py::test_index_builds_auto_train_cap",            # 13s; one auto_select witness stays
     "test_ivfpq_index.py::test_codes_scan_is_partition_pruned",         # 11s
     "test_ivfpq_index.py::test_adc_only_mode_reads_no_floats_and_ranks_sanely",  # 11s
-    "test_semantic_dedup.py::test_vectorized_score_bit_identical_to_expr",  # 11s; keep-set twin stays
     "test_ivfpq_index.py::test_vectorized_build_is_searchable_and_complete",  # 10s; full-probe + rescore stay
     "test_queries_oracle.py::test_query_matches_oracle[n20_dedup_clusters]",  # 9s; CC fast witnesses + driver sweep stay
     "test_xlsx_dense.py::test_cluster_cap_travels_through_real_spark_read",  # 8s; unit cluster-cap witnesses stay

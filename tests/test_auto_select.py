@@ -1,11 +1,10 @@
-"""'auto' strategy resolution (VERDICT r7 task 1): the scale-safe
-vectorized/GEMM forms are now the AUTOMATIC choice above a measured
-scoring-cell crossover, the expression forms (the declared witness plan
-shapes) below it. These tests pin the selection boundary BOTH ways —
-below-threshold calls must produce the expression plan, above-threshold
-calls the Arrow plan — and that both selections return identical rows
-(bit-identity of the two forms is separately pinned in
-tests/test_similarity.py / test_pq.py / test_semantic_dedup.py)."""
+"""'auto' strategy resolution (VERDICT r7 task 1): the scale-safe Arrow
+forms are the AUTOMATIC choice above a measured scoring-cell crossover,
+the expression forms (the declared witness plan shapes) below it. These
+tests pin the selection boundary BOTH ways — below-threshold calls must
+produce the expression plan, above-threshold calls the Arrow plan — and
+that both selections return the same rows (within float tolerance for
+the 'gemm' forms, tests/test_gemm_score.py)."""
 
 from __future__ import annotations
 
@@ -29,11 +28,11 @@ def _emb(spark, n=40, dim=8):
 
 def test_resolve_auto_boundary():
     t = S._AUTO_VECTORIZE_CELLS
-    assert S._resolve_auto("auto", t - 1, "expr", "vectorized") == "expr"
-    assert S._resolve_auto("auto", t, "expr", "vectorized") == "vectorized"
+    assert S._resolve_auto("auto", t - 1, "expr", "gemm") == "expr"
+    assert S._resolve_auto("auto", t, "expr", "gemm") == "gemm"
     # explicit values pass through untouched, on either side of the bar
-    assert S._resolve_auto("expr", t * 10, "expr", "vectorized") == "expr"
-    assert S._resolve_auto("vectorized", 1, "expr", "vectorized") == "vectorized"
+    assert S._resolve_auto("expr", t * 10, "expr", "gemm") == "expr"
+    assert S._resolve_auto("gemm", 1, "expr", "gemm") == "gemm"
 
 
 def test_quantized_topk_auto_both_sides(spark, monkeypatch):
@@ -51,11 +50,10 @@ def test_quantized_topk_auto_both_sides(spark, monkeypatch):
 
 
 def test_semantic_dedup_pairs_auto_both_sides(spark, monkeypatch):
-    """'auto' above the crossover now selects 'gemm' (VERDICT r8 task 1):
-    same applyInPandas plan shape, same pair set, cosines
-    float-associative rather than bit-identical — compare with
-    tolerance (exact bit-identity of 'vectorized' is pinned in
-    tests/test_semantic_dedup.py; gemm tolerance in test_gemm_score.py)."""
+    """'auto' above the crossover selects 'gemm' (VERDICT r8 task 1):
+    applyInPandas plan shape, same pair set, cosines float-associative
+    rather than bit-identical — compare with tolerance (gemm tolerance
+    is pinned in test_gemm_score.py)."""
     import math
 
     e = _emb(spark)
@@ -73,18 +71,6 @@ def test_semantic_dedup_pairs_auto_both_sides(spark, monkeypatch):
     }
     a, b = cs(small), cs(big)
     assert all(math.isclose(a[p], b[p], rel_tol=1e-9, abs_tol=1e-12) for p in a)
-
-
-def test_semantic_dedup_pairs_vectorized_chunked_identical(spark, monkeypatch):
-    """ADVICE r7: the vectorized cell scoring is row-chunked (task memory
-    O(chunk×occupancy), not occupancy²). A 1-row chunk must emit the
-    exact same pairs and cosines as one-block scoring."""
-    e = _emb(spark, n=30)
-    whole = S.semantic_dedup_pairs(e, n_cells=2, threshold=0.2, score="vectorized")
-    monkeypatch.setattr(S, "_CELL_PAIR_BLOCK", 1)  # chunk = 1 row per block
-    chunked = S.semantic_dedup_pairs(e, n_cells=2, threshold=0.2, score="vectorized")
-    rows = lambda df: sorted(map(tuple, df.collect()))  # noqa: E731
-    assert rows(whole) == rows(chunked)
 
 
 def test_ivf_topk_auto_literal_vs_join(spark, monkeypatch):
@@ -110,7 +96,7 @@ def test_ivf_centroids_auto_matches_explicit(spark, monkeypatch):
     assert auto_small == lit
     monkeypatch.setattr(S, "_AUTO_VECTORIZE_CELLS", 1)
     auto_big = S.ivf_centroids(e, n_cells=4, assign="auto")
-    assert auto_big == lit  # GEMM form is bit-identical (pinned elsewhere)
+    assert auto_big == lit  # no last-ulp score ties in this corpus
 
 
 def test_pq_codebooks_auto_matches_explicit(spark, monkeypatch):
@@ -118,9 +104,8 @@ def test_pq_codebooks_auto_matches_explicit(spark, monkeypatch):
     expr = S.pq_codebooks(e, dim=8, m=2, n_codes=4, assign="expr")
     assert S.pq_codebooks(e, dim=8, m=2, n_codes=4, assign="auto") == expr
     # Above the crossover 'auto' resolves to 'gemm' like every other
-    # trainer (ADVICE r9 — it used to pick 'vectorized', leaving
-    # ivfpq_topk's no-knob call on the ~dim-pass replay): identical to an
-    # explicit gemm call; closeness to expr training is pinned in
+    # trainer (ADVICE r9): identical to an explicit gemm call; closeness
+    # to expr training is pinned in
     # tests/test_gemm_score.py::test_pq_codebooks_gemm_training_close.
     gemm = S.pq_codebooks(e, dim=8, m=2, n_codes=4, assign="gemm")
     monkeypatch.setattr(S, "_AUTO_VECTORIZE_CELLS", 1)

@@ -1,13 +1,15 @@
-"""score='gemm' — the true-BLAS scoring mode (VERDICT r8 task 1).
+"""'gemm' — the true-BLAS Arrow form of every similarity kernel, the one
+'auto' selects above the scoring-cell crossover (VERDICT r8 task 1).
 
-The bit-identity invariant (vectorized forms replay the fold's exact IEEE
-sequence) is right for declared hash witnesses but costs dim sequential
-passes over every score block — measured ~136 s of the 181 s default
-SemDeDup run at 200k×K=2000 (BENCHNOTES r8). 'gemm' scores each block as
-one A @ B.T matmul: float-associative, NOT hash-identical. These tests pin
-the contract: identical pair/neighbor SETS away from ulp-level threshold
-ties, cosines within float tolerance of the exact fold, planted-duplicate
-recall intact, and 'auto' selecting gemm above the crossover."""
+An Arrow form that replays the fold's exact IEEE sequence costs dim
+sequential passes over every score block — measured ~136 s of the 181 s
+default SemDeDup run at 200k×K=2000 (BENCHNOTES r8) — so the only Arrow
+form is 'gemm': one A @ B.T matmul per block, float-associative, NOT
+hash-identical to the expression forms. These tests pin the contract
+against the exact expression forms: identical pair/neighbor SETS away
+from ulp-level threshold ties, cosines within float tolerance of the
+exact fold, planted-duplicate recall intact, 'auto' selecting gemm above
+the crossover, and the removed 'vectorized' value rejected."""
 
 from __future__ import annotations
 
@@ -125,12 +127,12 @@ def test_auto_selects_gemm_above_crossover(spark, monkeypatch):
 
 
 def test_gemm_cell_assignment_matches_fold(spark):
-    """gemm argmax cells equal the bit-exact fold's cells on ordinary
+    """gemm argmax cells equal the exact carrier fold's cells on ordinary
     embeddings (they can differ only on last-ulp top-2 ties)."""
     e = _emb(spark, n=80)
     cents = S.ivf_centroids(e, n_cells=6, assign="literal")
-    fold = S.ivf_assign_vectorized(e, cents)
-    gemm_udf = S._vectorized_cell_udf(spark, cents, gemm=True)
+    fold = S.ivf_assign_carrier(e, cents)
+    gemm_udf = S._vectorized_cell_udf(spark, cents)
     gm = e.select("vec_id", gemm_udf(F.col("embedding")).alias("cell"))
     a = {r["vec_id"]: r["cell"] for r in fold.collect()}
     b = {r["vec_id"]: r["cell"] for r in gm.collect()}
@@ -170,12 +172,13 @@ def test_brute_force_blocked_gemm(spark):
 
 def test_pq_encode_gemm_matches_exact(spark):
     """gemm PQ encode (one matmul per subspace via -2x·C+‖C‖²) picks the
-    same codes as the exact squared-diff fold on ordinary embeddings
-    (differs only on last-ulp distance ties), hence identical norms."""
+    same codes as the exact squared-diff fold (``pq_encode_join``) on
+    ordinary embeddings (differs only on last-ulp distance ties), hence
+    identical norms."""
     e = _emb(spark, n=60, dim=16)
     books = S.pq_codebooks(e, dim=16, m=4, n_codes=4, assign="expr")
-    exact = S.pq_encode_vectorized(e, books)
-    gm = S.pq_encode_vectorized(e, books, gemm=True)
+    exact = S.pq_encode_join(e, books).select("vec_id", "pq_codes", "pq_norm")
+    gm = S.pq_encode_vectorized(e, books)
     ex = {r["vec_id"]: (list(r["pq_codes"]), r["pq_norm"]) for r in exact.collect()}
     gg = {r["vec_id"]: (list(r["pq_codes"]), r["pq_norm"]) for r in gm.collect()}
     assert ex == gg
@@ -220,3 +223,71 @@ def test_gemm_rejects_unknown_score(spark):
     e = _emb(spark, n=10)
     with pytest.raises(ValueError, match="score must be"):
         S.semantic_dedup_pairs(e, n_cells=2, score="blas")
+
+
+def _rebuild_vectorized(spark, e, tmp_path):
+    path = str(tmp_path / "ivf")
+    S.build_ivf_index(e, path, n_cells=2)
+    # skew_threshold=0: any occupancy recommends the rebuild.
+    return S.rebuild_if_drifted(
+        spark, path, dest_path=str(tmp_path / "rebuilt"),
+        skew_threshold=0.0, assign="vectorized",
+    )
+
+
+def _curate_vectorized(spark, e, tmp_path):
+    from sheetreader_duckdb_spark.pipeline import curate_corpus
+
+    docs = spark.createDataFrame(
+        [(i, f"document {i} " + " ".join(f"w{i}x{j}" for j in range(8)), "s")
+         for i in range(4)],
+        "doc_id long, text string, source string",
+    )
+    return curate_corpus(
+        docs, quality_rules={}, embeddings_df=e.filter(F.col("vec_id") < 4),
+        semantic_cells=2, semantic_score="vectorized", temperature=False,
+        seed="t",
+    )
+
+
+_VECTORIZED = {
+    "ivf_centroids": lambda sp, e, d: S.ivf_centroids(
+        e, n_cells=2, assign="vectorized"
+    ),
+    "pq_codebooks": lambda sp, e, d: S.pq_codebooks(
+        e, dim=16, m=4, n_codes=4, assign="vectorized"
+    ),
+    "semantic_dedup_pairs": lambda sp, e, d: S.semantic_dedup_pairs(
+        e, n_cells=2, score="vectorized"
+    ),
+    "semantic_dedup_keep": lambda sp, e, d: S.semantic_dedup_keep(
+        e, n_cells=2, score="vectorized"
+    ),
+    "curate_corpus": _curate_vectorized,
+    "ivfpq_topk_assign": lambda sp, e, d: S.ivfpq_topk(
+        e, e, dim=16, m=4, n_codes=4, assign="vectorized"
+    ),
+    "ivfpq_topk_encode": lambda sp, e, d: S.ivfpq_topk(
+        e, e, dim=16, m=4, n_codes=4, encode="vectorized"
+    ),
+    "build_ivf_index": lambda sp, e, d: S.build_ivf_index(
+        e, str(d / "a"), n_cells=2, assign="vectorized"
+    ),
+    "build_ivfpq_index_assign": lambda sp, e, d: S.build_ivfpq_index(
+        e, str(d / "b"), dim=16, m=4, n_codes=4, assign="vectorized"
+    ),
+    "build_ivfpq_index_encode": lambda sp, e, d: S.build_ivfpq_index(
+        e, str(d / "c"), dim=16, m=4, n_codes=4, encode="vectorized"
+    ),
+    "rebuild_if_drifted": _rebuild_vectorized,
+}
+
+
+@pytest.mark.parametrize("entry", sorted(_VECTORIZED))
+def test_vectorized_value_is_rejected(spark, tmp_path, entry):
+    """The bit-identical 'vectorized' replay is gone: each knob that took
+    it raises its ValueError (``quantized_topk`` keeps its integer-exact
+    'vectorized' form)."""
+    e = _emb(spark, n=40, dim=16)
+    with pytest.raises(ValueError, match="must be 'auto'"):
+        _VECTORIZED[entry](spark, e, tmp_path)

@@ -154,12 +154,11 @@ def test_undersized_training_slice_raises(spark, sf_dir, tmp_path):
 
 
 def test_vectorized_build_is_searchable_and_complete(spark, sf_dir, tmp_path):
-    """assign='vectorized' + encode='vectorized' (the Arrow build path —
-    both stages bit-identical to the expression forms) indexes every row
-    and serves queries; cell ids stay within [0, n_cells)."""
+    """assign='gemm' + encode='gemm' (the Arrow build path) indexes every
+    row and serves queries; cell ids stay within [0, n_cells)."""
     e = T(spark, sf_dir, "embeddings")
     path = str(tmp_path / "vecb")
-    build_ivfpq_index(e, path, n_cells=8, assign="vectorized", encode="vectorized")
+    build_ivfpq_index(e, path, n_cells=8, assign="gemm", encode="gemm")
     codes = spark.read.parquet(f"{path}/codes")
     assert codes.count() == e.count()
     cells = {r["cell"] for r in codes.select("cell").distinct().collect()}

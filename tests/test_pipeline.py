@@ -215,7 +215,7 @@ def test_semantic_dedup_stage_planted(spark):
     """SemDeDup stage (5b): docs with near-identical embeddings collapse
     to one representative (min id), docs WITHOUT embeddings are kept, the
     stage slots between near_dedup and dupspan in the report, and
-    score='vectorized' drops the identical set."""
+    score='gemm' drops the identical set."""
     docs = _docs(
         spark,
         [
@@ -234,7 +234,7 @@ def test_semantic_dedup_stage_planted(spark):
         ],
         "vec_id long, embedding array<double>",
     )
-    for score in ("expr", "vectorized"):
+    for score in ("expr", "gemm"):
         cur, report = curate_corpus(
             docs, quality_rules={}, eval_df=None, embeddings_df=emb,
             semantic_cells=2, semantic_threshold=0.95, semantic_score=score,

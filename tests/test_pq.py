@@ -304,38 +304,3 @@ def test_ivfpq_candidates_respect_probed_cells(emb, books):
             f"cid {r['cid']} (cell {assign[r['cid']]}) outside query "
             f"{r['qid']}'s probed cell {top_cell[r['qid']]}"
         )
-
-
-def test_vectorized_encode_bit_identical_to_join_form(emb, books):
-    """pq_encode_vectorized replays the expression fold's IEEE sequence
-    (per-sub-dimension accumulation, first-index-of-min codes, sequential
-    bn2 norm) — codes AND pq_norm doubles must match pq_encode_join bit
-    for bit on every row."""
-    from sheetreader_duckdb_spark.operators.similarity import (
-        pq_encode_join,
-        pq_encode_vectorized,
-    )
-
-    want = {
-        r["vec_id"]: (list(r["pq_codes"]), r["pq_norm"])
-        for r in pq_encode_join(
-            emb.select("vec_id", "embedding"), books
-        ).select("vec_id", "pq_codes", "pq_norm").collect()
-    }
-    got = {
-        r["vec_id"]: (list(r["pq_codes"]), r["pq_norm"])
-        for r in pq_encode_vectorized(emb, books).collect()
-    }
-    assert got == want
-
-
-def test_vectorized_codebook_training_bit_identical(emb):
-    """pq_codebooks(assign='vectorized') must train byte-equal books to
-    the expression form: per-iteration code assignment is bit-identical
-    (same diff² accumulation sequence, first-index-of-min), so every
-    Lloyd average sees the same members."""
-    from sheetreader_duckdb_spark.operators.similarity import pq_codebooks
-
-    expr = pq_codebooks(emb, dim=64, m=8, n_codes=8, n_iters=2)
-    vec = pq_codebooks(emb, dim=64, m=8, n_codes=8, n_iters=2, assign="vectorized")
-    assert vec == expr

@@ -317,33 +317,6 @@ def test_ivf_assign_carrier_tie_break(spark):
     assert got == lit == {(0, 0), (1, 2)}
 
 
-def test_ivf_assign_vectorized_matches_carrier(spark, sf_dir):
-    """The Arrow assignment (the scale build path) is BIT-IDENTICAL to the
-    carrier expression form: its per-dimension sequential accumulation
-    replays the fold's exact IEEE sequence, so assignments must match on
-    any input, and duplicate-centroid ties resolve to the lowest cell in
-    both."""
-    e = T(spark, sf_dir, "embeddings")
-    centroids = S.ivf_centroids(e, n_cells=16, n_iters=2)
-    via_carrier = {
-        (r["vec_id"], r["cell"]) for r in S.ivf_assign_carrier(e, centroids).collect()
-    }
-    via_vec = {
-        (r["vec_id"], r["cell"])
-        for r in S.ivf_assign_vectorized(e, centroids).collect()
-    }
-    assert via_vec == via_carrier
-
-    df = spark.createDataFrame(
-        [(0, [1.0, 0.0]), (1, [0.0, 1.0])], "vec_id long, embedding array<double>"
-    )
-    cents = [[3.0, 0.5], [3.0, 0.5], [0.5, 3.0]]
-    got = {
-        (r["vec_id"], r["cell"]) for r in S.ivf_assign_vectorized(df, cents).collect()
-    }
-    assert got == {(0, 0), (1, 2)}
-
-
 def test_blocked_bruteforce_bit_identical(spark, sf_dir):
     """brute_force_topk_blocked must reproduce brute_force_topk exactly —
     qid/cid/rn AND the cosine doubles bit for bit (the blocked scorer
@@ -386,16 +359,6 @@ def test_blocked_bruteforce_ties_and_small_batches(spark):
     ]
     assert got == want
     assert all(c != 0 for (_, c, _, _) in got)  # self excluded
-
-
-def test_vectorized_training_bit_identical_centroids(spark, sf_dir):
-    """ivf_centroids(assign='vectorized') must train byte-equal centroids
-    to the literal form: the per-iteration assignment is bit-identical, so
-    every Lloyd average sees the same members."""
-    e = T(spark, sf_dir, "embeddings")
-    lit = S.ivf_centroids(e, n_cells=16, n_iters=2)
-    vec = S.ivf_centroids(e, n_cells=16, n_iters=2, assign="vectorized")
-    assert vec == lit
 
 
 def test_quantized_vectorized_bit_identical(spark, sf_dir):

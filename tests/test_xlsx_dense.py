@@ -1994,8 +1994,9 @@ def test_tier3_without_sheetdata_opener_reads_each_row_once(tmp_path):
 
 def test_chunks_below_skip_rows_are_not_scanned(reader_books, monkeypatch):
     """A chunk that lies wholly below ``skip_rows`` is row-counted, never
-    scanned: not by the schema probes (``iter_rows``) and not by the
-    reader's coerce and inline scan."""
+    scanned, and one straddling it is scanned from its first kept row: no
+    skipped row reaches the schema probes (``iter_rows``) or the reader's
+    coerce and inline scan."""
     import sys
 
     path = reader_books["inline_mid"]
@@ -2006,8 +2007,9 @@ def test_chunks_below_skip_rows_are_not_scanned(reader_books, monkeypatch):
         scanned = []
 
         def spy(work, colmap, date_styles, date1904, allow_inline, pfx):
-            ordinal = sys._getframe(1).f_locals["ordinal"]
-            scanned.append((ordinal, P._chunk_rows(work, pfx)))
+            # Global ordinal of the first row handed to the scan.
+            caller = sys._getframe(1).f_locals
+            scanned.append(caller["ordinal"] + caller["cut"])
             return scan(work, colmap, date_styles, date1904, allow_inline, pfx)
 
         monkeypatch.setattr(P, "_scan_chunk", spy)
@@ -2015,7 +2017,7 @@ def test_chunks_below_skip_rows_are_not_scanned(reader_books, monkeypatch):
         monkeypatch.setattr(P, "_scan_chunk", scan)
         assert rows == want
         assert scanned
-        assert all(ordinal + n > 45_001 for ordinal, n in scanned), scanned
+        assert all(first >= 45_001 for first in scanned), scanned
 
 
 def test_chunk0_formula_read_takes_filter_interval_skips(tmp_path, monkeypatch):
@@ -2161,6 +2163,55 @@ def test_chunk0_irregular_reads_equal_whole_member_walk(
         assert "Inline & dynamic String" in got
     else:
         assert len(got) > _CHUNK0_BOOK_ROWS - 600
+
+
+@pytest.fixture(scope="module")
+def skipped_inline_books(tmp_path_factory):
+    """An inline row at data row 300, below ``skip_rows=501``, and the
+    same book with that row made plain; each also with a second-prefix
+    row past the skip (chunk 0 is fragment-walked), and without its
+    sheetData opener (the read walks the whole member)."""
+    d = tmp_path_factory.mktemp("skipped_inline")
+    books = {}
+    for name, row in (("inline", _INLINE_ROW), ("plain", _FULL_ROW)):
+        plants = {**_BOOK_ROWS, 300: row}
+        path = _sparse_workbook(
+            str(d / f"{name}.xlsx"), plants=plants, n_rows=_CHUNK0_BOOK_ROWS
+        )
+        books[name, "chunked"] = path
+        books[name, "mixed"] = _rewrite_sheet(
+            _sparse_workbook(
+                str(d / f"{name}_mixed_src.xlsx"),
+                plants={**plants, 600: _MIXED_ROW}, n_rows=_CHUNK0_BOOK_ROWS,
+            ),
+            str(d / f"{name}_mixed.xlsx"),
+            lambda b: b.replace(
+                b"<worksheet ", b'<worksheet xmlns:x="%s" ' % _NS.encode(), 1
+            ),
+        )
+        books[name, "whole_member"] = _rewrite_sheet(
+            path, str(d / f"{name}_no_opener.xlsx"),
+            lambda b: b.replace(b"<sheetData>", b"").replace(b"</sheetData>", b""),
+        )
+    return books
+
+
+@pytest.mark.parametrize("threads", ["1", "4"])
+@pytest.mark.parametrize("opt", ["typed", "coerce_to_string", "inline_strings"])
+@pytest.mark.parametrize("layout", ["chunked", "mixed", "whole_member"])
+def test_row_below_skip_never_decides_the_read(
+    skipped_inline_books, layout, opt, threads
+):
+    """A row before ``skip_rows`` never decides whether a read succeeds:
+    the readers cut a chunk at its first kept row before scanning or
+    fragment-walking it, and the whole-member walk does not raise for a
+    skipped row. An inline row below the skip reads like a plain one."""
+    opts = {"skip_rows": "501", "threads": threads}
+    if opt != "typed":
+        opts[opt] = "true"
+    rows, _ = _read(skipped_inline_books["inline", layout], **opts)
+    assert rows == _read(skipped_inline_books["plain", layout], **opts)[0]
+    assert len(rows) == _CHUNK0_BOOK_ROWS - 500
 
 
 def test_sharded_typed_read_keeps_lazy_heap(reader_books, monkeypatch):
